@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from typing import Iterator
 
 
 class DSLSyntaxError(ValueError):
@@ -73,7 +72,3 @@ def tokenize(text: str) -> list[Token]:
         pos = m.end()
     tokens.append(Token("EOF", "", n))
     return tokens
-
-
-def iter_tokens(text: str) -> Iterator[Token]:  # pragma: no cover - convenience
-    yield from tokenize(text)

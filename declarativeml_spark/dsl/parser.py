@@ -94,23 +94,11 @@ Statement = Union[
     ir.ScheduleRetraining,
     ir.TrendAgent,
     ir.SetConfig,
+    ir.ExplainPrediction,
+    ir.ForecastModel,
+    ir.PublishEvent,
+    ir.RegisterAgent,
 ]
-
-
-# Keywords that BEGIN a statement (the parse() dispatch table) or a
-# THEN-chain action — the chain-AND splitter consults this so a
-# statement's own conjunctions never split the chain.
-_STATEMENT_STARTS = frozenset({
-    "TRAIN", "COMPUTE", "PREDICT", "EVALUATE", "CREATE", "DEPLOY",
-    "MONITOR", "RETRAIN", "WHEN", "EXPLAIN", "REGISTER", "PUBLISH",
-    "SUBSCRIBE", "DEDUPLICATE", "SEARCH", "SAMPLE", "DECODE",
-    "RESIZE", "LOAD", "DECONTAMINATE", "PACK", "REDACT", "CHUNK",
-    "SESSIONIZE", "QUANTIZE", "MIX", "PROFILE", "DETECT", "SHARD",
-    "COMPACT", "SHUFFLE", "SCORE", "WEIGH", "AUDIT", "CALIBRATE",
-    "DROP", "REFRESH", "SELECT", "WITH", "NOTIFY", "ALERT", "CALL",
-    "EXECUTE", "ON", "SET", "SCHEDULE", "TOKENIZE", "ARCHIVE",
-    "ROLLBACK", "BEGIN",
-})
 
 
 class _Parser:
@@ -2313,8 +2301,8 @@ class _Parser:
         [RECURSIVE | PARTITIONED] [AS <view>]`` — binaryFile ingest
         into the standard media frame (sources/io.py::read_media);
         PARTITIONED turns Hive-style directory keys (year=/month=)
-        into prunable columns. The caller has already consumed
-        ``LOAD``."""
+        into prunable columns."""
+        self.expect_keyword("LOAD")
         self.expect_keyword("MEDIA")
         self.expect_keyword("FROM")
         tok = self.advance()
@@ -2361,8 +2349,8 @@ class _Parser:
     def parse_sample_frames(self) -> "ir.SampleFrames":
         """``SAMPLE FRAMES FROM <source> EVERY n [USING <codec>]
         [PAYLOAD COLUMN c] [ID COLUMN c]`` — keyframe sampling
-        (operators/multimodal.py::sample_frames). The caller has
-        already consumed ``SAMPLE``."""
+        (operators/multimodal.py::sample_frames)."""
+        self.expect_keyword("SAMPLE")
         self.expect_keyword("FRAMES")
         self.expect_keyword("FROM")
         source = self.capture_source_until("EVERY")
@@ -2455,7 +2443,11 @@ class _Parser:
         )
 
     # -- SAMPLE (beyond-parity: SURVEY §7.5 / §2.11) ----------------------
-    def parse_sample(self) -> "ir.SampleCorpus":
+    def parse_sample(self) -> Union["ir.SampleCorpus", "ir.SampleFrames"]:
+        # SAMPLE FRAMES FROM ... is the multimodal twin; plain SAMPLE
+        # is corpus sampling
+        if self.at_keyword("FRAMES", offset=1):
+            return self.parse_sample_frames()
         self.expect_keyword("SAMPLE")
         source = self.capture_source_until("RATE", "TOP")
         if not source:
@@ -3044,120 +3036,6 @@ def _require_positive_int(value: Any, what: str) -> int:
     return value
 
 
-def parse(text: str) -> Statement:
-    """Parse one DSL statement into its IR dataclass."""
-    parser = _Parser(text)
-    tok = parser.peek()
-    if tok.kind != "NAME":
-        raise DSLSyntaxError(f"Expected statement keyword, got {tok.value!r}")
-    if tok.value == "TRAIN":
-        return parser.parse_train()
-    if tok.value == "COMPUTE":
-        return parser.parse_compute()
-    if tok.value == "PREDICT":
-        return parser.parse_predict()
-    if tok.value == "EVALUATE":
-        return parser.parse_evaluate()
-    if tok.value == "CREATE":
-        return parser.parse_create()
-    if tok.value == "DEPLOY":
-        return parser.parse_deploy()
-    if tok.value == "MONITOR":
-        return parser.parse_monitor()
-    if tok.value == "RETRAIN":
-        return parser.parse_retrain()
-    if tok.value == "WHEN":
-        return parser.parse_when()
-    if tok.value == "EXPLAIN":
-        return parser.parse_explain()
-    if tok.value == "REGISTER":
-        return parser.parse_register()
-    if tok.value == "PUBLISH":
-        return parser.parse_publish()
-    if tok.value == "SUBSCRIBE":
-        return parser.parse_subscribe()
-    if tok.value == "DEDUPLICATE":
-        return parser.parse_deduplicate()
-    if tok.value == "SEARCH":
-        return parser.parse_search()
-    if tok.value == "SAMPLE":
-        # SAMPLE FRAMES FROM ... is the multimodal twin; plain SAMPLE
-        # is corpus sampling
-        if parser.at_keyword("FRAMES", offset=1):
-            parser.advance()  # consume SAMPLE
-            return parser.parse_sample_frames()
-        return parser.parse_sample()
-    if tok.value == "DECODE":
-        return parser.parse_decode()
-    if tok.value == "RESIZE":
-        return parser.parse_resize()
-    if tok.value == "LOAD":
-        parser.advance()  # consume LOAD; MEDIA is checked inside
-        return parser.parse_load_media()
-    if tok.value == "DECONTAMINATE":
-        return parser.parse_decontaminate()
-    if tok.value == "PACK":
-        return parser.parse_pack()
-    if tok.value == "REDACT":
-        return parser.parse_redact()
-    if tok.value == "CHUNK":
-        return parser.parse_chunk()
-    if tok.value == "SESSIONIZE":
-        return parser.parse_sessionize()
-    if tok.value == "QUANTIZE":
-        return parser.parse_quantize()
-    if tok.value == "MIX":
-        return parser.parse_mix()
-    if tok.value == "PROFILE":
-        return parser.parse_profile()
-    if tok.value == "DETECT":
-        return parser.parse_detect()
-    if tok.value == "SHARD":
-        return parser.parse_shard()
-    if tok.value == "COMPACT":
-        return parser.parse_compact()
-    if tok.value == "SHUFFLE":
-        return parser.parse_shuffle()
-    if tok.value == "SCORE":
-        return parser.parse_score()
-    if tok.value == "WEIGH":
-        return parser.parse_weigh()
-    if tok.value == "AUDIT":
-        return parser.parse_audit()
-    if tok.value == "CALIBRATE":
-        return parser.parse_calibrate()
-    if tok.value == "DROP":
-        return parser.parse_drop()
-    if tok.value == "REFRESH":
-        return parser.parse_refresh()
-    if tok.value == "SELECT":
-        return parser.parse_select_function()
-    if tok.value == "WITH":
-        return _parse_cte_prefixed(parser)
-    if tok.value in ("NOTIFY", "ALERT"):
-        return parser.parse_notify()
-    if tok.value == "ARCHIVE":
-        return parser.parse_archive()
-    if tok.value in ("CALL", "EXECUTE"):
-        return parser.parse_call()
-    if tok.value == "ON":
-        return parser.parse_on_event()
-    if tok.value == "SET":
-        return parser.parse_set()
-    if tok.value == "SCHEDULE":
-        return parser.parse_schedule()
-    if tok.value == "TOKENIZE":
-        return parser.parse_tokenize()
-    raise DSLSyntaxError(
-        f"Unknown statement {tok.value!r}; expected TRAIN, COMPUTE, PREDICT,"
-        " EVALUATE, CREATE, DEPLOY, MONITOR, RETRAIN, WHEN, DEDUPLICATE,"
-        " SEARCH, SAMPLE, DECONTAMINATE, PACK, REDACT, CHUNK, SESSIONIZE,"
-        " QUANTIZE, MIX, PROFILE, DETECT, SHARD, COMPACT, SHUFFLE, SCORE,"
-        " WEIGH, AUDIT, CALIBRATE, TOKENIZE, DECODE, RESIZE, LOAD,"
-        " REFRESH, SELECT, or DROP"
-    )
-
-
 _CTE_HOST_KEYWORDS = frozenset(
     {
         "TRAIN", "PREDICT", "EVALUATE", "DEPLOY", "MONITOR", "RETRAIN",
@@ -3244,6 +3122,81 @@ def _parse_cte_prefixed(parser: "_Parser") -> Statement:
     stmt.source = f"({cte_text} SELECT * FROM {source}) __cte_src"
     stmt.source_is_identifier = False
     return stmt
+
+
+# The statement set, held once: leading keyword → parse method. Each
+# method consumes its own keyword(s); parse() dispatches here, and
+# _STATEMENT_STARTS and the unknown-statement error derive from it.
+_STATEMENTS = {
+    "TRAIN": _Parser.parse_train,
+    "COMPUTE": _Parser.parse_compute,
+    "PREDICT": _Parser.parse_predict,
+    "EVALUATE": _Parser.parse_evaluate,
+    "CREATE": _Parser.parse_create,
+    "DEPLOY": _Parser.parse_deploy,
+    "MONITOR": _Parser.parse_monitor,
+    "RETRAIN": _Parser.parse_retrain,
+    "WHEN": _Parser.parse_when,
+    "EXPLAIN": _Parser.parse_explain,
+    "REGISTER": _Parser.parse_register,
+    "PUBLISH": _Parser.parse_publish,
+    "SUBSCRIBE": _Parser.parse_subscribe,
+    "DEDUPLICATE": _Parser.parse_deduplicate,
+    "SEARCH": _Parser.parse_search,
+    "SAMPLE": _Parser.parse_sample,
+    "DECODE": _Parser.parse_decode,
+    "RESIZE": _Parser.parse_resize,
+    "LOAD": _Parser.parse_load_media,
+    "DECONTAMINATE": _Parser.parse_decontaminate,
+    "PACK": _Parser.parse_pack,
+    "REDACT": _Parser.parse_redact,
+    "CHUNK": _Parser.parse_chunk,
+    "SESSIONIZE": _Parser.parse_sessionize,
+    "QUANTIZE": _Parser.parse_quantize,
+    "MIX": _Parser.parse_mix,
+    "PROFILE": _Parser.parse_profile,
+    "DETECT": _Parser.parse_detect,
+    "SHARD": _Parser.parse_shard,
+    "COMPACT": _Parser.parse_compact,
+    "SHUFFLE": _Parser.parse_shuffle,
+    "SCORE": _Parser.parse_score,
+    "WEIGH": _Parser.parse_weigh,
+    "AUDIT": _Parser.parse_audit,
+    "CALIBRATE": _Parser.parse_calibrate,
+    "DROP": _Parser.parse_drop,
+    "REFRESH": _Parser.parse_refresh,
+    "SELECT": _Parser.parse_select_function,
+    "WITH": _parse_cte_prefixed,
+    "NOTIFY": _Parser.parse_notify,
+    "ALERT": _Parser.parse_notify,
+    "ARCHIVE": _Parser.parse_archive,
+    "CALL": _Parser.parse_call,
+    "EXECUTE": _Parser.parse_call,
+    "ON": _Parser.parse_on_event,
+    "SET": _Parser.parse_set,
+    "SCHEDULE": _Parser.parse_schedule,
+    "TOKENIZE": _Parser.parse_tokenize,
+}
+
+# Keywords that BEGIN a statement or a THEN-chain action — the
+# chain-AND splitter consults this so a statement's own conjunctions
+# never split the chain. ROLLBACK and BEGIN only open chain actions.
+_STATEMENT_STARTS = frozenset(_STATEMENTS) | {"ROLLBACK", "BEGIN"}
+
+
+def parse(text: str) -> Statement:
+    """Parse one DSL statement into its IR dataclass."""
+    parser = _Parser(text)
+    tok = parser.peek()
+    if tok.kind != "NAME":
+        raise DSLSyntaxError(f"Expected statement keyword, got {tok.value!r}")
+    method = _STATEMENTS.get(tok.value)
+    if method is None:
+        raise DSLSyntaxError(
+            f"Unknown statement {tok.value!r}; expected one of:"
+            f" {', '.join(_STATEMENTS)}"
+        )
+    return method(parser)
 
 
 def split_statements(text: str) -> list[str]:

@@ -8,7 +8,10 @@ one ``execute`` entry point, statement-type dispatch.
 
 from __future__ import annotations
 
-from typing import Any, Optional, Union
+import importlib
+import os
+import shutil
+from typing import Any, Callable, NamedTuple, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +28,31 @@ class ForeignRegistryTableError(ValueError):
     registry (wrong schema). Raised instead of reading or overwriting
     it; paths that merely WOULD have consulted the registry (session
     -only drops/rebuilds) treat it as 'no registry exists'."""
+
+
+class _SourceOp(NamedTuple):
+    """A statement that resolves its source relation(s) and forwards
+    IR fields to one operator. ``target`` is ``module:function`` under
+    the package, imported on first use so that importing the engine
+    loads no operator module; ``args`` maps the statement to the
+    operator's keyword arguments; ``sources`` names the IR fields
+    resolved (each with its ``<field>_is_identifier`` flag) into the
+    operator's leading DataFrame arguments."""
+
+    target: str
+    args: Callable[[Any], dict]
+    sources: tuple = ("source",)
+
+    def __call__(self, engine: "Engine", stmt) -> DataFrame:
+        module, name = self.target.split(":")
+        op = getattr(importlib.import_module(f"declarativeml_spark.{module}"), name)
+        frames = [
+            resolve_source(
+                engine.spark, getattr(stmt, f), getattr(stmt, f"{f}_is_identifier")
+            )
+            for f in self.sources
+        ]
+        return op(*frames, **self.args(stmt))
 
 
 class Engine:
@@ -63,6 +91,10 @@ class Engine:
         # long-lived session's storage memory is bounded by one
         # statement's working set instead of growing until LRU pressure.
         self._persisted: list[DataFrame] = []
+        # raw text of the statement being executed: TRAIN stores it in
+        # the registry so RETRAIN can re-parse it (read on handler
+        # entry, before a nested execute can replace it)
+        self._text: Optional[str] = None
 
     def release(self) -> None:
         """Unpersist every DataFrame cached by the last statement.
@@ -111,172 +143,82 @@ class Engine:
 
     def _execute(self, text: str) -> Union[TrainedModel, DataFrame, dict]:
         stmt = parse(text)
-        if isinstance(stmt, ir.TrainModel):
-            trained = train(
-                self.spark, stmt, model_dir=self.model_dir, statement=text
-            )
-            self._publish_converged(trained)
-            return trained
-        if isinstance(stmt, ir.ComputeKernel):
-            from declarativeml_spark.functions.kernels import execute_compute
+        handler = self._HANDLERS.get(type(stmt))
+        if handler is None:
+            raise ValueError(f"Unsupported statement: {type(stmt).__name__}")
+        self._text = text
+        return handler(self, stmt)
 
-            return execute_compute(stmt)
-        if isinstance(stmt, ir.PredictModel):
-            return self._predict(stmt)
-        if isinstance(stmt, ir.EvaluateModel):
-            return self._evaluate(stmt)
-        if isinstance(stmt, ir.FeatureTransformer):
-            return self._feature_transformer(stmt)
-        if isinstance(stmt, ir.Ensemble):
-            from declarativeml_spark.ml.ensemble import create_ensemble
+    def _train_model(self, stmt: ir.TrainModel) -> TrainedModel:
+        trained = train(
+            self.spark, stmt, model_dir=self.model_dir, statement=self._text
+        )
+        self._publish_converged(trained)
+        return trained
 
-            record = create_ensemble(
-                self.spark, stmt.name, stmt.models, stmt.method, base=self.model_dir
-            )
-            if stmt.validate_on:
-                # the parsed VALIDATE ON clause was previously dropped
-                # on the floor — the user believed the ensemble was
-                # scored on the holdout while nothing ran
-                record["validation_metrics"] = self._validate_ensemble(
-                    stmt.models, stmt.validate_on
-                )
-            return record
-        if isinstance(stmt, ir.DeployModel):
-            from declarativeml_spark.ml.ensemble import deploy_model
+    def _compute(self, stmt: ir.ComputeKernel):
+        from declarativeml_spark.functions.kernels import execute_compute
 
-            return deploy_model(
-                self.spark, stmt.model, stmt.version, stmt.config, base=self.model_dir
-            )
-        if isinstance(stmt, ir.DeployABTest):
-            return self._deploy_ab(stmt)
-        if isinstance(stmt, ir.MonitorModel):
-            return self._monitor(stmt)
-        if isinstance(stmt, ir.RetrainModel):
-            from declarativeml_spark.ml.models import version_statuses
+        return execute_compute(stmt)
 
-            retrained = self._retrain(stmt)
-            # a rolled-back retrain did NOT produce a serving model —
-            # announcing convergence would trigger deploy rules on it
-            rolled = (
-                version_statuses(retrained.name, self.model_dir).get(
-                    retrained.version
-                )
-                == "rolled_back"
-            )
-            if not rolled:
-                self._publish_converged(retrained)
-            return retrained
-        if isinstance(stmt, ir.WhenRule):
-            return self._register_rule(stmt)
-        if isinstance(stmt, ir.Agent):
-            return self._register_agent(stmt)
-        if isinstance(stmt, ir.TunerAgent):
-            return self._register_tuner(stmt)
-        if isinstance(stmt, ir.TrendAgent):
-            return self._register_trend_agent(stmt)
-        if isinstance(stmt, ir.ScheduleRetraining):
-            return self._schedule_retraining(stmt)
-        if isinstance(stmt, ir.ForecastModel):
-            from declarativeml_spark.ml.forecast import train_forecast
+    def _ensemble(self, stmt: ir.Ensemble) -> dict:
+        from declarativeml_spark.ml.ensemble import create_ensemble
 
-            trained, forecast_df = train_forecast(
-                self.spark, stmt, model_dir=self.model_dir
+        record = create_ensemble(
+            self.spark, stmt.name, stmt.models, stmt.method, base=self.model_dir
+        )
+        if stmt.validate_on:
+            # the parsed VALIDATE ON clause was previously dropped
+            # on the floor — the user believed the ensemble was
+            # scored on the holdout while nothing ran
+            record["validation_metrics"] = self._validate_ensemble(
+                stmt.models, stmt.validate_on
             )
-            trained.forecast = forecast_df  # type: ignore[attr-defined]
-            return trained
-        if isinstance(stmt, ir.ExplainPrediction):
-            return self._explain(stmt)
-        if isinstance(stmt, ir.RegisterAgent):
-            return self._register_agent_catalog(stmt)
-        if isinstance(stmt, ir.PublishEvent):
-            self.bus.publish(stmt.event_type, stmt.payload)
-            # deliver immediately so WHEN rules react in-session
-            return self.bus.dispatch_batch()
-        if isinstance(stmt, ir.Deduplicate):
-            return self._deduplicate(stmt)
-        if isinstance(stmt, ir.SimilaritySearch):
-            return self._similarity_search(stmt)
-        if isinstance(stmt, ir.SampleCorpus):
-            return self._sample(stmt)
-        if isinstance(stmt, ir.Decontaminate):
-            return self._decontaminate(stmt)
-        if isinstance(stmt, ir.PackSequences):
-            return self._pack(stmt)
-        if isinstance(stmt, ir.RedactPII):
-            return self._redact(stmt)
-        if isinstance(stmt, ir.ChunkWindows):
-            return self._chunk(stmt)
-        if isinstance(stmt, ir.Sessionize):
-            return self._sessionize(stmt)
-        if isinstance(stmt, ir.QuantizeEmbeddings):
-            return self._quantize(stmt)
-        if isinstance(stmt, ir.MixCorpus):
-            return self._mix(stmt)
-        if isinstance(stmt, ir.ProfileTable):
-            return self._profile(stmt)
-        if isinstance(stmt, ir.DetectAnomalies):
-            return self._detect_anomalies(stmt)
-        if isinstance(stmt, ir.ShardCorpus):
-            return self._shard(stmt)
-        if isinstance(stmt, ir.CompactTable):
-            return self._compact(stmt)
-        if isinstance(stmt, ir.ShuffleCorpus):
-            return self._shuffle(stmt)
-        if isinstance(stmt, ir.ScoreQuality):
-            return self._score_quality(stmt)
-        if isinstance(stmt, ir.WeighCorpus):
-            return self._weigh(stmt)
-        if isinstance(stmt, ir.AuditAnonymity):
-            return self._audit_anonymity(stmt)
-        if isinstance(stmt, ir.CalibrateDedup):
-            return self._calibrate_dedup(stmt)
-        if isinstance(stmt, ir.TrainTokenizer):
-            return self._train_tokenizer(stmt)
-        if isinstance(stmt, ir.Tokenize):
-            return self._tokenize(stmt)
-        if isinstance(stmt, ir.DropTokenizer):
-            return self._drop_tokenizer(stmt)
-        if isinstance(stmt, ir.DecodeMedia):
-            return self._decode_media(stmt)
-        if isinstance(stmt, ir.SampleFrames):
-            return self._sample_frames(stmt)
-        if isinstance(stmt, ir.ResizeMedia):
-            return self._resize_media(stmt)
-        if isinstance(stmt, ir.LoadMedia):
-            return self._load_media(stmt)
-        if isinstance(stmt, ir.CreateIndex):
-            return self._create_index(stmt)
-        if isinstance(stmt, ir.DropIndex):
-            return self._drop_index(stmt)
-        if isinstance(stmt, ir.RefreshIndex):
-            return self._refresh_index(stmt)
-        if isinstance(stmt, ir.SelectFunction):
-            return self._select_function(stmt)
-        if isinstance(stmt, ir.CreateType):
-            return self._create_type(stmt)
-        if isinstance(stmt, ir.Notify):
-            self.bus.publish(
-                "notification",
-                {"recipient": stmt.target, "message": stmt.message},
+        return record
+
+    def _deploy_model(self, stmt: ir.DeployModel) -> dict:
+        from declarativeml_spark.ml.ensemble import deploy_model
+
+        return deploy_model(
+            self.spark, stmt.model, stmt.version, stmt.config, base=self.model_dir
+        )
+
+    def _forecast(self, stmt: ir.ForecastModel) -> TrainedModel:
+        from declarativeml_spark.ml.forecast import train_forecast
+
+        trained, forecast_df = train_forecast(
+            self.spark, stmt, model_dir=self.model_dir
+        )
+        trained.forecast = forecast_df  # type: ignore[attr-defined]
+        return trained
+
+    def _publish_event(self, stmt: ir.PublishEvent):
+        self.bus.publish(stmt.event_type, stmt.payload)
+        # deliver immediately so WHEN rules react in-session
+        return self.bus.dispatch_batch()
+
+    def _notify(self, stmt: ir.Notify) -> dict:
+        self.bus.publish(
+            "notification",
+            {"recipient": stmt.target, "message": stmt.message},
+        )
+        self.bus.dispatch_batch()  # deliver to WHEN-rules in-session
+        return {"notified": stmt.target, "message": stmt.message}
+
+    def _set_config(self, stmt: ir.SetConfig) -> dict:
+        # the reference's extension configuration → session conf
+        self.spark.conf.set(stmt.key, str(stmt.value))
+        return {"set": stmt.key, "value": stmt.value}
+
+    def _call_procedure(self, stmt: ir.CallProcedure):
+        fn = self.procedures.get(stmt.name)
+        if fn is None:
+            raise ValueError(
+                f"Unknown procedure {stmt.name!r}; register one with"
+                " Engine.register_procedure(name, fn) — registered:"
+                f" {', '.join(sorted(self.procedures)) or 'none'}"
             )
-            self.bus.dispatch_batch()  # deliver to WHEN-rules in-session
-            return {"notified": stmt.target, "message": stmt.message}
-        if isinstance(stmt, ir.ArchiveVersion):
-            return self._archive_version(stmt)
-        if isinstance(stmt, ir.SetConfig):
-            # the reference's extension configuration → session conf
-            self.spark.conf.set(stmt.key, str(stmt.value))
-            return {"set": stmt.key, "value": stmt.value}
-        if isinstance(stmt, ir.CallProcedure):
-            fn = self.procedures.get(stmt.name)
-            if fn is None:
-                raise ValueError(
-                    f"Unknown procedure {stmt.name!r}; register one with"
-                    " Engine.register_procedure(name, fn) — registered:"
-                    f" {', '.join(sorted(self.procedures)) or 'none'}"
-                )
-            return fn(self)
-        raise ValueError(f"Unsupported statement: {type(stmt).__name__}")
+        return fn(self)
 
     def _search_from_index(
         self, stmt: "ir.SimilaritySearch", p: dict, k: int
@@ -377,9 +319,6 @@ class Engine:
                 f" {', '.join(unknown)}; accepted:"
                 f" {', '.join(sorted(allowed | {'id_col', 'vec_col'}))}"
             )
-        import os
-        import shutil
-
         storage_targets: list[str] = []
         wh = ""
         if stmt.stored_as is not None:
@@ -869,7 +808,7 @@ class Engine:
         A same-named table with a FOREIGN shape is never read as (or
         overwritten by) the registry — same never-clobber-user-data
         discipline as the STORED AS target checks."""
-        self._recover_index_registry_swap()
+        self._recover_swap(self.INDEX_REGISTRY_TABLE, self._is_registry)
         if not self.spark.catalog.tableExists(self.INDEX_REGISTRY_TABLE):
             return None
         # the relation cache is PER SESSION: another live session's
@@ -879,7 +818,7 @@ class Engine:
         # handful of rows — refresh unconditionally before reading.
         self.spark.sql(f"REFRESH TABLE {self.INDEX_REGISTRY_TABLE}")
         reg = self.spark.table(self.INDEX_REGISTRY_TABLE)
-        if dict(reg.dtypes) != self._INDEX_REGISTRY_DTYPES:
+        if not self._is_registry(reg):
             raise ForeignRegistryTableError(
                 f"Table {self.INDEX_REGISTRY_TABLE!r} exists but is not"
                 " the engine's index registry (schema"
@@ -894,33 +833,14 @@ class Engine:
             if r["index_name"] != name
         ]
 
-    def _recover_index_registry_swap(self) -> None:
-        """Crash recovery for the swap-rename window in
-        :meth:`_write_index_registry`: a failure between ``DROP TABLE
-        <registry>`` and ``ALTER TABLE <swap> RENAME`` leaves no
-        registry but a COMPLETE ``__swap`` table. Without recovery the
-        next write's ``_clean_tmp`` would delete that swap — silently
-        losing every stored-index row even though the data survived
-        the crash. Adopt a well-formed orphan by finishing the rename;
-        a foreign-shaped same-named table is left alone (the usual
-        never-clobber discipline — the write path's cleanup owns it)."""
-        t = self.INDEX_REGISTRY_TABLE
-        tmp = f"{t}__swap"
-        if self.spark.catalog.tableExists(t) or not self.spark.catalog.tableExists(tmp):
-            return
-        self.spark.sql(f"REFRESH TABLE {tmp}")
-        if dict(self.spark.table(tmp).dtypes) != self._INDEX_REGISTRY_DTYPES:
-            return
-        self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
-        self.spark.sql(f"REFRESH TABLE {t}")
+    @classmethod
+    def _is_registry(cls, df: DataFrame) -> bool:
+        return dict(df.dtypes) == cls._INDEX_REGISTRY_DTYPES
 
     def _write_index_registry(self, rows: list) -> None:
         # callers have already read (and so shape-validated) the
         # registry; only the existence check remains
-        import os
-        import shutil
-
-        self._recover_index_registry_swap()
+        self._recover_swap(self.INDEX_REGISTRY_TABLE, self._is_registry)
         t = self.INDEX_REGISTRY_TABLE
         frame = self.spark.createDataFrame(
             rows, schema=self._INDEX_REGISTRY_SCHEMA
@@ -936,36 +856,62 @@ class Engine:
                 shutil.rmtree(loc, ignore_errors=True)
             frame.write.saveAsTable(t)
             return
-        # swap-write (the _write_tokenizer_table pattern): a plain
-        # overwrite drops the table before rewriting, so a mid-write
-        # failure would lose EVERY stored index's row and leave their
-        # bucketed tables orphaned with no DSL path to reclaim them.
-        # The swap name is engine-internal by construction, so a
-        # leftover from an interrupted swap is always safe to clean.
-        tmp = f"{t}__swap"
+        # a plain overwrite drops the table before rewriting, so a
+        # mid-write failure would lose EVERY stored index's row and
+        # leave their bucketed tables orphaned with no DSL path to
+        # reclaim them
+        self._swap_write(frame, t)
 
-        def _clean_tmp() -> None:
-            try:
-                self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
-            shutil.rmtree(
-                os.path.join(self._warehouse_path(), tmp.lower()),
-                ignore_errors=True,
-            )
-
+    # -- crash-safe replacement of engine-managed tables ---------------------
+    def _clean_table(self, name: str) -> None:
+        """Drop a managed table (best effort) and its warehouse dir."""
         try:
-            _clean_tmp()  # leftover from an interrupted prior swap
+            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+        except Exception:  # noqa: BLE001 — best-effort cleanup
+            pass
+        shutil.rmtree(
+            os.path.join(self._warehouse_path(), name.lower()),
+            ignore_errors=True,
+        )
+
+    def _swap_write(self, frame: DataFrame, t: str) -> None:
+        """Replace existing table ``t`` with ``frame`` so that a failed
+        write leaves the good copy intact: save ``<t>__swap`` first,
+        then drop + rename. The swap name is engine-internal by
+        construction, so a leftover from an interrupted swap is always
+        safe to clean; a crash between the drop and the rename is
+        repaired by :meth:`_recover_swap`."""
+        tmp = f"{t}__swap"
+        try:
+            self._clean_table(tmp)  # leftover from an interrupted prior swap
             frame.write.saveAsTable(tmp)
         except BaseException:
-            _clean_tmp()
-            raise  # the existing good registry is untouched
+            self._clean_table(tmp)
+            raise  # the existing good table is untouched
         self.spark.sql(f"DROP TABLE IF EXISTS {t}")
         self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
         # the rename leaves stale cached file listings for the name in
         # OTHER live sessions sharing this catalog (their next read
         # fails FAILED_READ_FILE on the swapped-out part files);
         # refresh invalidates the shared relation cache
+        self.spark.sql(f"REFRESH TABLE {t}")
+
+    def _recover_swap(self, t: str, is_shape: Callable[[DataFrame], bool]) -> None:
+        """Crash recovery for the swap-rename window in
+        :meth:`_swap_write`: a failure between ``DROP TABLE <t>`` and
+        ``ALTER TABLE <t>__swap RENAME`` leaves no table but a COMPLETE
+        swap. Without recovery the data that survived the crash is lost
+        (the next swap-write cleans the swap) or blocks the next write.
+        Adopt an orphan that passes ``is_shape`` by finishing the
+        rename; a foreign-shaped same-named table is left alone (the
+        usual never-clobber discipline)."""
+        tmp = f"{t}__swap"
+        if self.spark.catalog.tableExists(t) or not self.spark.catalog.tableExists(tmp):
+            return
+        self.spark.sql(f"REFRESH TABLE {tmp}")
+        if not is_shape(self.spark.table(tmp)):
+            return
+        self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
         self.spark.sql(f"REFRESH TABLE {t}")
 
     # Explicit ownership marker on every stored-index table: the
@@ -1065,29 +1011,24 @@ class Engine:
         LIVE table missing those columns is skipped (never clobber
         presumed user data — an empty set always reclaims, for tables
         this statement itself just wrote). Returns the skipped names."""
-        import os
-        import shutil
-
         skipped = []
-        wh = self._warehouse_path()
         for t, required in shapes.items():
-            if self.spark.catalog.tableExists(t):
-                # both guards, not either: the required-column subset
-                # AND the engine's ownership property. A user table
-                # with coincidentally compatible columns is missing
-                # the mark; an empty `required` means the statement
-                # itself just wrote the name (reclaim unconditionally).
-                if required and (
+            # both guards, not either: the required-column subset AND
+            # the engine's ownership property. A user table with
+            # coincidentally compatible columns is missing the mark;
+            # an empty `required` means the statement itself just
+            # wrote the name (reclaim unconditionally).
+            if (
+                required
+                and self.spark.catalog.tableExists(t)
+                and (
                     not required <= set(self.spark.table(t).columns)
                     or not self._is_index_storage(t)
-                ):
-                    skipped.append(t)
-                    continue
-                try:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-                except Exception:  # noqa: BLE001 — best-effort cleanup
-                    pass
-            shutil.rmtree(os.path.join(wh, t.lower()), ignore_errors=True)
+                )
+            ):
+                skipped.append(t)
+                continue
+            self._clean_table(t)
             self._created_storage.discard(t)
         return skipped
 
@@ -1232,8 +1173,6 @@ class Engine:
         table this session didn't write is never silently
         overwritten), so ``TOKENIZE … USING <t>`` works in a FRESH
         session — unlike the session dict, the table survives."""
-        import os
-
         from declarativeml_spark.operators.bpe import bpe_merges
 
         df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
@@ -1314,90 +1253,39 @@ class Engine:
 
     _TOKENIZER_SHAPE = frozenset({"merge_round", "lhs", "rhs"})
 
-    def _recover_tokenizer_swap(self, t: str) -> None:
-        """Crash recovery for the swap-rename window in
-        :meth:`_write_tokenizer_table` (the
-        ``_recover_index_registry_swap`` analog): a failure between
-        ``DROP TABLE <t>`` and ``ALTER TABLE <t>__swap RENAME`` leaves
-        no table but a COMPLETE swap. Without recovery the new merges
-        are stranded AND the orphan swap trips the next retrain's
-        ownership guard ('remove it or pick another STORED AS name') —
-        the engine's own crash permanently blocking the retrain. Adopt
-        a merge-shaped orphan by finishing the rename; anything else
-        is left alone (the usual never-clobber discipline)."""
-        tmp = f"{t}__swap"
-        if self.spark.catalog.tableExists(t) or not self.spark.catalog.tableExists(
-            tmp
-        ):
-            return
-        self.spark.sql(f"REFRESH TABLE {tmp}")
-        if not self._TOKENIZER_SHAPE <= set(self.spark.table(tmp).columns):
-            return
-        self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
-        self.spark.sql(f"REFRESH TABLE {t}")
+    @classmethod
+    def _is_merge_table(cls, df: DataFrame) -> bool:
+        return cls._TOKENIZER_SHAPE <= set(df.columns)
 
     def _write_tokenizer_table(self, merges: DataFrame, t: str) -> None:
         """Persist a merge table ATOMICALLY with respect to an existing
-        good copy: a retrain writes to a swap table first and only then
-        drops + renames, so a failed write leaves the previous durable
-        table (and the session state pointing at it) fully intact — a
-        plain ``mode("overwrite")`` would destroy it on a mid-write
-        failure. Fresh targets write directly."""
-        import os
-        import shutil
-
-        self._recover_tokenizer_swap(t)
-
-        def _clean(name: str) -> None:
-            try:
-                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
-            shutil.rmtree(
-                os.path.join(self._warehouse_path(), name.lower()),
-                ignore_errors=True,
-            )
-
+        good copy (:meth:`_swap_write`): a failed retrain leaves the
+        previous durable table, and the session state pointing at it,
+        fully intact. Fresh targets write directly."""
+        # a prior crash may have stranded the merges in the swap; left
+        # there, the orphan would trip the retrain's ownership guard
+        self._recover_swap(t, self._is_merge_table)
         if self.spark.catalog.tableExists(t):
             tmp = f"{t}__swap"
-            if (
-                self.spark.catalog.tableExists(tmp)
-                and tmp not in self._created_storage
-            ):
+            if self.spark.catalog.tableExists(tmp):
                 # a crash between the swap save and the DROP of the old
                 # table leaves BOTH standing: the good table t plus an
                 # engine-written merge-shaped swap. That leftover is
-                # safe to clean (and _clean below does); only a
+                # safe to clean (and _swap_write does); only a
                 # foreign-shaped squatter on the swap name is refused.
                 self.spark.sql(f"REFRESH TABLE {tmp}")
-                if not self._TOKENIZER_SHAPE <= set(
-                    self.spark.table(tmp).columns
-                ):
+                if not self._is_merge_table(self.spark.table(tmp)):
                     raise ValueError(
-                        f"swap table {tmp!r} exists and is not"
-                        " session-owned — remove it or pick another"
-                        " STORED AS name"
+                        f"swap table {tmp!r} exists and is not a merge"
+                        " table — remove it or pick another STORED AS name"
                     )
-            try:
-                self._created_storage.add(tmp)
-                _clean(tmp)  # leftover from an interrupted prior swap
-                merges.write.saveAsTable(tmp)
-            except BaseException:
-                _clean(tmp)
-                self._created_storage.discard(tmp)
-                raise  # the existing good table is untouched
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-            self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
-            # invalidate other sessions' cached file listings for the
-            # name (same reason as the registry swap-write refresh)
-            self.spark.sql(f"REFRESH TABLE {t}")
-            self._created_storage.discard(tmp)
+            self._swap_write(merges, t)
         else:
             try:
                 merges.write.saveAsTable(t)
             except BaseException:
                 # no prior table to protect: unmark and clean partials
-                _clean(t)
+                self._clean_table(t)
                 self._created_storage.discard(t)
                 raise
         self._created_storage.add(t)
@@ -1434,8 +1322,8 @@ class Engine:
                 self.tokenizers[stmt.tokenizer] = merges
         if merges is None:
             # a prior session's crash may have stranded the merges in
-            # the swap (see _recover_tokenizer_swap)
-            self._recover_tokenizer_swap(stmt.tokenizer)
+            # the swap (see _recover_swap)
+            self._recover_swap(stmt.tokenizer, self._is_merge_table)
             if not self.spark.catalog.tableExists(stmt.tokenizer):
                 raise ValueError(
                     f"Unknown tokenizer {stmt.tokenizer!r}; train one with"
@@ -1444,7 +1332,7 @@ class Engine:
                 )
             self.spark.sql(f"REFRESH TABLE {stmt.tokenizer}")
             merges = self.spark.table(stmt.tokenizer)
-            missing = {"merge_round", "lhs", "rhs"} - set(merges.columns)
+            missing = self._TOKENIZER_SHAPE - set(merges.columns)
             if missing:
                 raise ValueError(
                     f"Table {stmt.tokenizer!r} is not a tokenizer merge"
@@ -1697,33 +1585,7 @@ class Engine:
             **p,
         )
 
-    # -- DECONTAMINATE / PACK (corpus prep; SURVEY §2.11) ------------------
-    def _decontaminate(self, stmt: ir.Decontaminate) -> DataFrame:
-        from declarativeml_spark.operators.corpus import benchmark_overlap
-
-        corpus = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        bench = resolve_source(
-            self.spark, stmt.benchmark, stmt.benchmark_is_identifier
-        )
-        return benchmark_overlap(
-            corpus,
-            bench,
-            text_col=stmt.column or "text",
-            min_overlap=stmt.threshold,
-        )
-
-    def _pack(self, stmt: ir.PackSequences) -> DataFrame:
-        from declarativeml_spark.operators.corpus import pack_chunks
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return pack_chunks(
-            df,
-            text_col=stmt.column or "text",
-            context=stmt.context,
-            buckets=stmt.buckets,
-        )
-
-    # -- REDACT / CHUNK (corpus prep; SURVEY §2.11) ------------------------
+    # -- REDACT (corpus prep; SURVEY §2.11) --------------------------------
     def _redact(self, stmt: "ir.RedactPII") -> DataFrame:
         """Mask PII in the text column in place; append per-class
         match counts so the caller can audit what was scrubbed."""
@@ -1736,47 +1598,6 @@ class Engine:
             *[c for c in df.columns if c != col],
             *counts,
             pii_redact(col).alias(col),
-        )
-
-    def _chunk(self, stmt: "ir.ChunkWindows") -> DataFrame:
-        from declarativeml_spark.operators.corpus import chunk_windows
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return chunk_windows(
-            df,
-            text_col=stmt.column or "text",
-            win=stmt.win,
-            stride=stmt.stride,
-        )
-
-    # -- SESSIONIZE / QUANTIZE (SURVEY §2.9 / §2.11) -----------------------
-    def _sessionize(self, stmt: "ir.Sessionize") -> DataFrame:
-        """Per-key session aggregation with native session_window —
-        batch form of streaming/pipeline.py::session_window_stats
-        (the oracle-checked twin is events_user_sessions)."""
-        from declarativeml_spark.streaming.pipeline import session_window_stats
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        gap = f"{stmt.gap_value} {stmt.gap_unit.lower()}"
-        return session_window_stats(
-            df,
-            ts_col=stmt.ts_column or "ts",
-            key_col=stmt.key,
-            value_col=stmt.value_column or "value",
-            gap=gap,
-            streaming=False,
-        )
-
-    def _quantize(self, stmt: "ir.QuantizeEmbeddings") -> DataFrame:
-        """int8 scalar quantization of an embedding column (the
-        oracle-checked twin is embedding_quantize_int8)."""
-        from declarativeml_spark.operators.dedup import quantize_int8
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return quantize_int8(
-            df,
-            id_col=stmt.id_column or "vec_id",
-            vec_col=stmt.column or "embedding",
         )
 
     # -- SAMPLE (deterministic hash sampling; SURVEY §7.5 family) ----------
@@ -1815,120 +1636,6 @@ class Engine:
             .orderBy(F.asc("__skey"), F.asc(col))
             .limit(stmt.top_n)
             .drop("__skey")
-        )
-
-    def _mix(self, stmt: "ir.MixCorpus") -> DataFrame:
-        """Temperature-scaled mixing weights per group (the
-        oracle-checked twin is corpus_temperature_mix)."""
-        from declarativeml_spark.operators.corpus import temperature_mix
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return temperature_mix(df, by_col=stmt.by)
-
-    def _profile(self, stmt: "ir.ProfileTable") -> DataFrame:
-        """Numeric column profiling (the oracle-checked twin is
-        lineitem_numeric_profile)."""
-        from declarativeml_spark.operators.profile import numeric_profile
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return numeric_profile(df, stmt.columns)
-
-    def _shard(self, stmt: "ir.ShardCorpus") -> DataFrame:
-        """Balanced round-robin shard assignment (the oracle-checked
-        audit twin is corpus_shard_assignment)."""
-        from declarativeml_spark.operators.layout import shard_round_robin
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return shard_round_robin(
-            df, n_shards=stmt.n_shards, id_col=stmt.id_column
-        )
-
-    def _shuffle(self, stmt: "ir.ShuffleCorpus") -> DataFrame:
-        """Deterministic per-epoch training-order shuffle (the
-        oracle-checked balance-audit twin is corpus_epoch_shuffle)."""
-        from declarativeml_spark.operators.layout import epoch_shuffle
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return epoch_shuffle(
-            df,
-            epochs=stmt.epochs,
-            n_shards=stmt.n_shards,
-            id_col=stmt.id_column,
-        )
-
-    def _score_quality(self, stmt: "ir.ScoreQuality") -> DataFrame:
-        """fastText-shaped linear quality margin per document (the
-        oracle-checked rollup twin is quality_linear_margin)."""
-        from declarativeml_spark.operators.textops import quality_margin
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return quality_margin(
-            df, buckets=stmt.buckets, text_col=stmt.text_column
-        )
-
-    def _weigh(self, stmt: "ir.WeighCorpus") -> DataFrame:
-        """DSIR importance weights per document (the oracle-checked
-        top-k twin is dsir_importance_weights)."""
-        from declarativeml_spark.operators.corpus import dsir_weights
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return dsir_weights(
-            df,
-            target_col=stmt.target_column,
-            target_value=stmt.target_value,
-            buckets=stmt.buckets,
-        )
-
-    def _audit_anonymity(self, stmt: "ir.AuditAnonymity") -> DataFrame:
-        """k-anonymity equivalence-class report over quasi-identifier
-        columns (the oracle-checked behavioural-profile twin is
-        events_k_anonymity)."""
-        from declarativeml_spark.operators.privacy import k_anonymity_report
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return k_anonymity_report(df, stmt.columns, risk=stmt.risk)
-
-    def _calibrate_dedup(self, stmt: "ir.CalibrateDedup") -> DataFrame:
-        """Dedup threshold calibration curve from one pair
-        materialization (the oracle-checked twin is
-        dedup_threshold_sweep)."""
-        from declarativeml_spark.operators.dedup import threshold_sweep
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return threshold_sweep(
-            df, stmt.thresholds, text_col=stmt.text_column
-        )
-
-    def _compact(self, stmt: "ir.CompactTable") -> DataFrame:
-        """Next-fit compaction grouping over a file manifest (the
-        oracle-checked twin is lakehouse_compaction_plan)."""
-        from declarativeml_spark.operators.layout import compaction_groups
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        return compaction_groups(
-            df,
-            stmt.target_bytes,
-            part_col=stmt.part_column,
-            file_col=stmt.file_column,
-            bytes_col=stmt.bytes_column,
-        )
-
-    def _detect_anomalies(self, stmt: "ir.DetectAnomalies") -> DataFrame:
-        """Trailing-window rate anomalies (the oracle-checked twin is
-        events_rate_anomalies; streaming_rate_anomalies the stream
-        form)."""
-        from declarativeml_spark.operators.anomaly import rate_anomalies
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        # min_full scales with the window (half of it, floor 2) so a
-        # short WINDOW can still flag — a fixed 12 would make any
-        # WINDOW < 12 statement silently never-anomalous.
-        return rate_anomalies(
-            df,
-            key_col=stmt.key,
-            ts_col=stmt.ts_column or "ts",
-            window_size=stmt.window,
-            min_full=max(2, stmt.window // 2),
         )
 
     def _similarity_search(self, stmt: ir.SimilaritySearch) -> DataFrame:
@@ -2909,6 +2616,10 @@ class Engine:
         if rolled_back:
             mark_version_status(stmt.model, new.version, "rolled_back", self.model_dir)
             new.stop_satisfied = False
+        else:
+            # a rolled-back retrain did NOT produce a serving model —
+            # announcing convergence would trigger deploy rules on it
+            self._publish_converged(new)
         return new
 
     # -- PREDICT USING MODEL m FROM src [STORE RESULTS IN t] ----------------
@@ -3011,3 +2722,138 @@ class Engine:
 
         rec = registry_meta(name, base=self.model_dir)
         return rec or None
+
+    # One handler per statement kind — the keys are exactly the
+    # parser's Statement union (tests/test_parser.py asserts it). The
+    # table holds methods and lazily imported operators, never a
+    # module-level function object such as ``train`` or ``parse``, so
+    # code that rebinds those at run time (timing shims) sees every call.
+    _HANDLERS: dict = {
+        ir.TrainModel: _train_model,
+        ir.ComputeKernel: _compute,
+        ir.PredictModel: _predict,
+        ir.EvaluateModel: _evaluate,
+        ir.FeatureTransformer: _feature_transformer,
+        ir.Ensemble: _ensemble,
+        ir.DeployModel: _deploy_model,
+        ir.DeployABTest: _deploy_ab,
+        ir.MonitorModel: _monitor,
+        ir.RetrainModel: _retrain,
+        ir.WhenRule: _register_rule,
+        ir.Agent: _register_agent,
+        ir.TunerAgent: _register_tuner,
+        ir.TrendAgent: _register_trend_agent,
+        ir.ScheduleRetraining: _schedule_retraining,
+        ir.ForecastModel: _forecast,
+        ir.ExplainPrediction: _explain,
+        ir.RegisterAgent: _register_agent_catalog,
+        ir.PublishEvent: _publish_event,
+        ir.Notify: _notify,
+        ir.SetConfig: _set_config,
+        ir.CallProcedure: _call_procedure,
+        ir.ArchiveVersion: _archive_version,
+        ir.SelectFunction: _select_function,
+        ir.CreateType: _create_type,
+        ir.Deduplicate: _deduplicate,
+        ir.SimilaritySearch: _similarity_search,
+        ir.SampleCorpus: _sample,
+        ir.RedactPII: _redact,
+        ir.TrainTokenizer: _train_tokenizer,
+        ir.Tokenize: _tokenize,
+        ir.DropTokenizer: _drop_tokenizer,
+        ir.DecodeMedia: _decode_media,
+        ir.SampleFrames: _sample_frames,
+        ir.ResizeMedia: _resize_media,
+        ir.LoadMedia: _load_media,
+        ir.CreateIndex: _create_index,
+        ir.DropIndex: _drop_index,
+        ir.RefreshIndex: _refresh_index,
+        # corpus prep (SURVEY §2.11); a trailing comment names the
+        # entry's oracle-checked twin query
+        ir.Decontaminate: _SourceOp(
+            "operators.corpus:benchmark_overlap",
+            lambda s: dict(text_col=s.column or "text", min_overlap=s.threshold),
+            sources=("source", "benchmark"),
+        ),
+        ir.PackSequences: _SourceOp(
+            "operators.corpus:pack_chunks",
+            lambda s: dict(
+                text_col=s.column or "text", context=s.context, buckets=s.buckets
+            ),
+        ),
+        ir.ChunkWindows: _SourceOp(
+            "operators.corpus:chunk_windows",
+            lambda s: dict(text_col=s.column or "text", win=s.win, stride=s.stride),
+        ),
+        ir.MixCorpus: _SourceOp(  # corpus_temperature_mix
+            "operators.corpus:temperature_mix", lambda s: dict(by_col=s.by)
+        ),
+        ir.WeighCorpus: _SourceOp(  # dsir_importance_weights
+            "operators.corpus:dsir_weights",
+            lambda s: dict(
+                target_col=s.target_column,
+                target_value=s.target_value,
+                buckets=s.buckets,
+            ),
+        ),
+        ir.ScoreQuality: _SourceOp(  # quality_linear_margin
+            "operators.textops:quality_margin",
+            lambda s: dict(buckets=s.buckets, text_col=s.text_column),
+        ),
+        ir.QuantizeEmbeddings: _SourceOp(  # embedding_quantize_int8
+            "operators.dedup:quantize_int8",
+            lambda s: dict(
+                id_col=s.id_column or "vec_id", vec_col=s.column or "embedding"
+            ),
+        ),
+        ir.CalibrateDedup: _SourceOp(  # dedup_threshold_sweep
+            "operators.dedup:threshold_sweep",
+            lambda s: dict(thresholds=s.thresholds, text_col=s.text_column),
+        ),
+        ir.ShardCorpus: _SourceOp(  # corpus_shard_assignment
+            "operators.layout:shard_round_robin",
+            lambda s: dict(n_shards=s.n_shards, id_col=s.id_column),
+        ),
+        ir.ShuffleCorpus: _SourceOp(  # corpus_epoch_shuffle
+            "operators.layout:epoch_shuffle",
+            lambda s: dict(epochs=s.epochs, n_shards=s.n_shards, id_col=s.id_column),
+        ),
+        ir.CompactTable: _SourceOp(  # lakehouse_compaction_plan
+            "operators.layout:compaction_groups",
+            lambda s: dict(
+                target_bytes=s.target_bytes,
+                part_col=s.part_column,
+                file_col=s.file_column,
+                bytes_col=s.bytes_column,
+            ),
+        ),
+        ir.ProfileTable: _SourceOp(  # lineitem_numeric_profile
+            "operators.profile:numeric_profile", lambda s: dict(cols=s.columns)
+        ),
+        ir.AuditAnonymity: _SourceOp(  # events_k_anonymity
+            "operators.privacy:k_anonymity_report",
+            lambda s: dict(qi_cols=s.columns, risk=s.risk),
+        ),
+        ir.DetectAnomalies: _SourceOp(  # events_rate_anomalies
+            "operators.anomaly:rate_anomalies",
+            # min_full scales with the window (half of it, floor 2) so
+            # a short WINDOW can still flag — a fixed 12 would make any
+            # WINDOW < 12 statement silently never-anomalous
+            lambda s: dict(
+                key_col=s.key,
+                ts_col=s.ts_column or "ts",
+                window_size=s.window,
+                min_full=max(2, s.window // 2),
+            ),
+        ),
+        ir.Sessionize: _SourceOp(  # events_user_sessions
+            "streaming.pipeline:session_window_stats",
+            lambda s: dict(
+                ts_col=s.ts_column or "ts",
+                key_col=s.key,
+                value_col=s.value_column or "value",
+                gap=f"{s.gap_value} {s.gap_unit.lower()}",
+                streaming=False,
+            ),
+        ),
+    }

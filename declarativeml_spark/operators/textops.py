@@ -124,11 +124,6 @@ def minhash_slice_duck(group_col: str, off: int) -> str:
     return f"list_min(list_transform({group_col}, h -> substr(h, {1 + 8 * off}, 8)))"
 
 
-def minhash_spark(shingles: str, k: int) -> str:
-    g, off = divmod(k, 4)
-    return minhash_slice_spark(minhash_md5_group_spark(shingles, g), off)
-
-
 def minhash_duck(shingles: str, k: int) -> str:
     g, off = divmod(k, 4)
     return minhash_slice_duck(minhash_md5_group_duck(shingles, g), off)

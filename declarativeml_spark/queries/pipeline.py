@@ -590,12 +590,6 @@ _DOT_D = (
 _NORM_D = "sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
 
-def _cos_s(a: str, b: str) -> str:
-    return (
-        f"{_DOT_S.format(a=a, b=b)} / ({_NORM_S.format(a=a)} * {_NORM_S.format(a=b)})"
-    )
-
-
 # zero-norm exclusion (no cosine direction; ANSI div-by-0 in Spark) —
 # mirrored wherever a cosine is computed in either engine
 _NZ_D = (

@@ -98,11 +98,6 @@ def save_bucketed_table(
     writer.saveAsTable(table)
 
 
-def append_results_table(df: DataFrame, table: str) -> None:
-    """``STORE RESULTS IN t`` sink (DSL.md:71): append to a table."""
-    df.write.mode("append").saveAsTable(table)
-
-
 # Extensions recognized by the media on-ramp; anything else still
 # loads (payload stays opaque) with format "application/octet-stream".
 _MEDIA_FORMATS = {

@@ -547,3 +547,36 @@ def test_lexer_sql_operator_passthrough_and_dangling_exponent():
     # valid exponents and the COMPUTE size suffixes still lex
     assert tokenize("1e5")[0].value == "1e5"
     assert [t.value for t in tokenize("64K")[:-1]] == ["64", "K"]
+
+
+def test_unknown_statement_error_names_every_statement_keyword():
+    """The unknown-statement error lists exactly the keywords parse()
+    dispatches on: every keyword that opens a statement is named, and
+    every named keyword is accepted (it fails on its own body, never
+    as an unknown statement)."""
+    import re
+
+    from declarativeml_spark.dsl.parser import _STATEMENT_STARTS
+
+    with pytest.raises(DSLSyntaxError, match="Unknown statement") as err:
+        parse("FROBNICATE the_corpus")
+    named = set(re.findall(r"\b[A-Z]+\b", str(err.value).split("expected", 1)[1]))
+    # ROLLBACK and BEGIN open THEN-chain actions, not statements
+    assert named == _STATEMENT_STARTS - {"ROLLBACK", "BEGIN"}
+    for kw in sorted(named):
+        try:
+            parse(kw)
+        except ValueError as e:  # DSLSyntaxError included
+            assert "Unknown statement" not in str(e), kw
+
+
+def test_every_statement_kind_has_one_engine_handler():
+    """A kind that parses but cannot execute (or the reverse) fails
+    here: the engine's handler table covers exactly the Statement
+    union."""
+    import typing
+
+    from declarativeml_spark.dsl.parser import Statement
+    from declarativeml_spark.engine import Engine
+
+    assert set(Engine._HANDLERS) == set(typing.get_args(Statement))
