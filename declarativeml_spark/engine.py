@@ -18,7 +18,13 @@ from pyspark.sql import functions as F
 
 from declarativeml_spark.dsl import ir
 from declarativeml_spark.dsl.parser import parse
-from declarativeml_spark.ml.models import registry_load
+from declarativeml_spark.ml.models import (
+    registry_load,
+    registry_meta,
+    registry_previous,
+    rollback_version,
+    stored_train_statement,
+)
 from declarativeml_spark.ml.training import TrainedModel, train
 from declarativeml_spark.plans.builder import resolve_source
 
@@ -1738,28 +1744,9 @@ class Engine:
     # -- EXPLAIN PREDICTION ----------------------------------------------------
     def _explain(self, stmt: ir.ExplainPrediction) -> DataFrame:
         from declarativeml_spark.ml.evaluate import explain_predictions
-        from declarativeml_spark.plans.builder import build_features
 
         meta = self._model_meta(stmt.model)
-        if meta is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
-        if stmt.source is None:
-            # the reference form names no source: explain rows selected
-            # out of the model's own stored TRAIN source
-            if not meta.get("statement"):
-                raise ValueError(
-                    f"Model {stmt.model!r} has no stored TRAIN statement"
-                    " — name a source explicitly (EXPLAIN PREDICTION FOR"
-                    " MODEL … FROM <source>)"
-                )
-            train_stmt = parse(meta["statement"])
-            df = resolve_source(
-                self.spark, train_stmt.source, train_stmt.source_is_identifier
-            )
-        else:
-            df = resolve_source(
-                self.spark, stmt.source, stmt.source_is_identifier
-            )
+        df = self._model_frame(meta, stmt.source, stmt.source_is_identifier)
         background = None
         if stmt.row_filter is not None:
             col, value = stmt.row_filter
@@ -1772,9 +1759,8 @@ class Engine:
             # filtered single row's own mean is the row itself, so
             # every linear contribution collapsed to coef*(x-x)=0 —
             # a vacuous all-zero explanation
-            background = build_features(df, meta["features"]).df
+            background = df
             df = df.filter(F.col(col) == F.lit(value))
-        df = build_features(df, meta["features"]).df
         return explain_predictions(
             self.spark,
             stmt.model,
@@ -1887,8 +1873,6 @@ class Engine:
                     " accepted: shap, native, impurity"
                 )
             meta = self._model_meta(model)
-            if meta is None:
-                raise ValueError(f"No registered model named {model!r}")
             return E.feature_importance(
                 self.spark, model, meta["features"], base=self.model_dir
             )
@@ -1914,8 +1898,6 @@ class Engine:
         frames = {}
         for m in models or ():
             meta = self._model_meta(m)
-            if meta is None:
-                raise ValueError(f"No registered model named {m!r}")
             specs.append(
                 {
                     "name": m,
@@ -1993,32 +1975,15 @@ class Engine:
         """Mark the model's previous registry version ``archived``
         (bookkeeping status — the current version keeps serving, and a
         pinned load of the archived version still works)."""
-        from declarativeml_spark.ml.models import (
-            mark_version_status,
-            version_statuses,
-        )
+        from declarativeml_spark.ml.models import mark_version_status
 
         meta = self._model_meta(stmt.model)
-        if meta is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
-        # "previous" means the newest OLDER live version — stamping
-        # version-1 blindly would overwrite a rolled_back status with
-        # archived, and the live filter (which only excludes
-        # rolled_back) would make the bad version servable again
-        statuses = version_statuses(stmt.model, self.model_dir)
-        prev = next(
-            (
-                v
-                for v in range(int(meta["version"]) - 1, 0, -1)
-                if statuses.get(v, "registered") != "rolled_back"
-            ),
-            None,
-        )
-        if prev is None:
+        prev = registry_previous(stmt.model, meta["version"], self.model_dir)
+        if not prev:
             return {"model": stmt.model, "archived": None,
                     "note": "no previous version"}
-        mark_version_status(stmt.model, prev, "archived", self.model_dir)
-        return {"model": stmt.model, "archived": prev}
+        mark_version_status(stmt.model, prev["version"], "archived", self.model_dir)
+        return {"model": stmt.model, "archived": prev["version"]}
 
     # -- WHEN ... THEN <statement(s)> -----------------------------------------
     def _register_rule(self, stmt: ir.WhenRule):
@@ -2048,15 +2013,10 @@ class Engine:
         metrics and ``previous_<metric>`` the prior registry version's
         — the variables the reference's IF guard reads
         (``IF retraining_accuracy < previous_accuracy * 0.95``).
-        Model-implicit IF actions (ROLLBACK) bind to the block's
-        latest trained model."""
-        from declarativeml_spark.ml.models import (
-            mark_version_status,
-            registry_meta,
-        )
-
+        Model-implicit IF actions (ROLLBACK) bind to the version the
+        block's latest (RE)TRAIN step produced."""
         context: dict[str, float] = {}
-        subject: Optional[str] = None
+        subject: Optional[TrainedModel] = None
         log: dict[str, Any] = {"steps": [], "conditions": []}
         for step in block.steps:
             if isinstance(step, ir.IfStep):
@@ -2077,14 +2037,15 @@ class Engine:
                                 " prior (RE)TRAIN step in the block to"
                                 " bind the model"
                             )
-                        meta = self._model_meta(subject)
-                        mark_version_status(
-                            subject,
-                            int(meta["version"]),
-                            "rolled_back",
-                            self.model_dir,
+                        # a version RETRAIN's own guard already rolled
+                        # back stays the only one rolled back
+                        done = rollback_version(
+                            subject.name, subject.version, self.model_dir
                         )
-                        log["steps"].append(f"rollback {subject}")
+                        log["steps"].append(
+                            f"rollback {subject.name} v{subject.version}"
+                            + ("" if done else " (already rolled back)")
+                        )
                     elif act[0] == "alert":
                         self.bus.publish(
                             "notification",
@@ -2099,21 +2060,17 @@ class Engine:
             result = self.execute(text)
             log["steps"].append(text.splitlines()[0][:60])
             if isinstance(result, TrainedModel):
-                subject = result.name
-                for k, v in result.metrics.items():
-                    if isinstance(v, (int, float)):
-                        context[f"retraining_{k}"] = float(v)
-                if result.version > 1:
-                    prev = registry_meta(
-                        result.name,
-                        version=result.version - 1,
-                        base=self.model_dir,
-                    )
-                    for k, v in (
-                        prev.get("performance_metrics") or {}
-                    ).items():
+                subject = result
+                prev = registry_previous(
+                    result.name, result.version, self.model_dir
+                )
+                for prefix, metrics in (
+                    ("retraining", result.metrics),
+                    ("previous", prev.get("performance_metrics") or {}),
+                ):
+                    for k, v in metrics.items():
                         if isinstance(v, (int, float)):
-                            context[f"previous_{k}"] = float(v)
+                            context[f"{prefix}_{k}"] = float(v)
         if self._bus is not None and self._bus._published:
             self._bus.dispatch_batch()
         return log
@@ -2192,14 +2149,7 @@ class Engine:
                 f"Unknown optimization method {stmt.method!r}; accepted:"
                 f" {', '.join(sorted(_KNOWN_METHODS))}"
             )
-        meta = self._model_meta(stmt.model)
-        if meta is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
-        if not meta.get("statement"):
-            raise ValueError(
-                f"Model {stmt.model!r} has no stored TRAIN statement for"
-                " the tuner to re-execute"
-            )
+        stored_train_statement(self._model_meta(stmt.model))
         self.tuners[stmt.name] = stmt
         return stmt
 
@@ -2216,11 +2166,8 @@ class Engine:
         tuner = self.tuners.get(name)
         if tuner is None:
             raise ValueError(f"Unknown tuner agent {name!r}")
-        meta = self._model_meta(tuner.model)
-        if meta is None:
-            raise ValueError(f"No registered model named {tuner.model!r}")
         trials_df, _best = run_search(
-            self.spark, tuner, meta, model_dir=self.model_dir
+            self.spark, tuner, self._model_meta(tuner.model), model_dir=self.model_dir
         )
         return trials_df
 
@@ -2276,8 +2223,7 @@ class Engine:
 
         from declarativeml_spark.ml.ensemble import _append_record
 
-        if self._model_meta(stmt.model) is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
+        self._model_meta(stmt.model)
         rec = {
             "model": stmt.model,
             "in_n": stmt.n,
@@ -2296,8 +2242,7 @@ class Engine:
 
     # -- trend agents (reference README.md:60-63) -------------------------------
     def _register_trend_agent(self, stmt: "ir.TrendAgent") -> "ir.TrendAgent":
-        if self._model_meta(stmt.model) is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
+        self._model_meta(stmt.model)
         # validate the WATCHED METRIC eagerly: an unknown metric is a
         # statement error at registration, not a surprise on every
         # subsequent tick (one monitor evaluation — registration is
@@ -2463,13 +2408,8 @@ class Engine:
         from declarativeml_spark.ml.ensemble import score_ensemble
         from declarativeml_spark.ml.registry import get_algorithm
         from declarativeml_spark.ml.training import _compute_metrics
-        from declarativeml_spark.plans.builder import build_features
 
         meta = self._model_meta(members[0][0])
-        if meta is None:
-            raise ValueError(
-                f"No registered model named {members[0][0]!r}"
-            )
         spec = get_algorithm(meta["algorithm"])
         if spec.kind == "clustering":
             # score_ensemble keeps only input columns + the combined
@@ -2486,8 +2426,7 @@ class Engine:
                 " averaged cluster indices have no silhouette —"
                 " validate each member with EVALUATE MODEL instead"
             )
-        df = resolve_source(self.spark, source, True)
-        df = build_features(df, meta["features"]).df
+        df = self._model_frame(meta, source, True)
         # clustering raised above, so a label always exists here
         label_col = "label"
         ttype = dict(df.dtypes).get(meta["target"])
@@ -2504,8 +2443,7 @@ class Engine:
         from declarativeml_spark.ml.ensemble import _append_record
 
         for m in stmt.models:
-            if self._model_meta(m) is None:
-                raise ValueError(f"No registered model named {m!r}")
+            self._model_meta(m)
         record = {
             "name": stmt.endpoint or "__ab__" + "_".join(stmt.models),
             "algorithm": "ab_test",
@@ -2523,30 +2461,9 @@ class Engine:
     # -- MONITOR MODEL -------------------------------------------------------------
     def _monitor(self, stmt: ir.MonitorModel, bus=None) -> dict:
         from declarativeml_spark.ml.ensemble import monitor_model
-        from declarativeml_spark.plans.builder import build_features
 
         meta = self._model_meta(stmt.model)
-        if meta is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
-        if stmt.source is None:
-            # the reference's FOR MODEL agent form names no data:
-            # monitor on the model's own stored TRAIN source, resolved
-            # at run time (the RETRAIN pattern)
-            if not meta.get("statement"):
-                raise ValueError(
-                    f"Model {stmt.model!r} has no stored TRAIN statement"
-                    " — name a source explicitly (MONITOR MODEL … ON"
-                    " <source>)"
-                )
-            train_stmt = parse(meta["statement"])
-            source, is_ident = (
-                train_stmt.source,
-                train_stmt.source_is_identifier,
-            )
-        else:
-            source, is_ident = stmt.source, stmt.source_is_identifier
-        df = resolve_source(self.spark, source, is_ident)
-        df = build_features(df, meta["features"]).df
+        df = self._model_frame(meta, stmt.source, stmt.source_is_identifier)
         return monitor_model(
             self.spark,
             stmt.model,
@@ -2560,17 +2477,8 @@ class Engine:
 
     # -- RETRAIN MODEL (with rollback, DSL.md:136-142) ---------------------------------
     def _retrain(self, stmt: ir.RetrainModel) -> TrainedModel:
-        from declarativeml_spark.ml.models import mark_version_status
-
         meta = self._model_meta(stmt.model)
-        if meta is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
-        if not meta.get("statement"):
-            raise ValueError(
-                f"Model {stmt.model!r} has no stored TRAIN statement to re-execute"
-            )
-        train_stmt = parse(meta["statement"])
-        assert isinstance(train_stmt, ir.TrainModel)
+        train_stmt = stored_train_statement(meta)
         if stmt.latest_n is not None:
             if not stmt.time_column:
                 raise ValueError(
@@ -2614,7 +2522,7 @@ class Engine:
                 if new.metrics["rmse"] * stmt.rollback_ratio > old_metrics["rmse"]:
                     rolled_back = True
         if rolled_back:
-            mark_version_status(stmt.model, new.version, "rolled_back", self.model_dir)
+            rollback_version(stmt.model, new.version, self.model_dir)
             new.stop_satisfied = False
         else:
             # a rolled-back retrain did NOT produce a serving model —
@@ -2624,29 +2532,29 @@ class Engine:
 
     # -- PREDICT USING MODEL m FROM src [STORE RESULTS IN t] ----------------
     def _predict(self, stmt: ir.PredictModel) -> DataFrame:
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
         meta = self._model_meta(stmt.model)
-        if meta is not None and meta.get("algorithm") == "ensemble":
+        if meta["algorithm"] == "ensemble":
             from declarativeml_spark.ml.ensemble import score_ensemble
 
             members = [
                 (m["model"], m["weight"]) for m in meta["ensemble_members"]
             ]
-            # member feature derivation: members share feature specs
-            member_meta = self._model_meta(members[0][0])
-            if member_meta is not None:
-                from declarativeml_spark.plans.builder import build_features
-
-                df = build_features(df, member_meta["features"]).df
+            # members share one feature spec (create_ensemble checks)
+            df = self._model_frame(
+                self._model_meta(members[0][0]),
+                stmt.source,
+                stmt.source_is_identifier,
+            )
             scored = score_ensemble(self.spark, members, df, base=self.model_dir)
         else:
-            model = registry_load(self.spark, stmt.model, base=self.model_dir)
-            # re-derive the feature columns the pipeline expects
-            if meta is not None:
-                from declarativeml_spark.plans.builder import build_features
-
-                df = build_features(df, meta["features"]).df
-            scored = model.transform(df)
+            # the artifact of the very version whose record built the
+            # features
+            model = registry_load(
+                self.spark, stmt.model, version=meta["version"], base=self.model_dir
+            )
+            scored = model.transform(
+                self._model_frame(meta, stmt.source, stmt.source_is_identifier)
+            )
         if stmt.sink:
             self._write_prediction_sink(scored, stmt.sink)
         return scored
@@ -2695,13 +2603,9 @@ class Engine:
         # the EVALUATE statement and the evaluate_model built-in must
         # stay behaviorally identical
         from declarativeml_spark.ml.evaluate import evaluate_model
-        from declarativeml_spark.plans.builder import build_features
 
         meta = self._model_meta(stmt.model)
-        if meta is None:
-            raise ValueError(f"No registered model named {stmt.model!r}")
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        df = build_features(df, meta["features"]).df
+        df = self._model_frame(meta, stmt.source, stmt.source_is_identifier)
         return evaluate_model(
             self.spark,
             stmt.model,
@@ -2712,16 +2616,27 @@ class Engine:
             base=self.model_dir,
         )
 
-    def _model_meta(self, name: str) -> Optional[dict[str, Any]]:
-        """Latest live (non-rolled-back) full registry record for a
-        model — the canonical lookup lives in ml/models.py so the
-        engine and the streaming serving path resolve metadata
-        identically (a second parsing loop here had drifted on
-        rollback handling)."""
-        from declarativeml_spark.ml.models import registry_meta
-
+    def _model_meta(self, name: str) -> dict[str, Any]:
+        """The registry record of the model's live version — the one
+        version rule lives in ml/models.py, shared with registry_load
+        and the streaming serving path."""
         rec = registry_meta(name, base=self.model_dir)
-        return rec or None
+        if not rec:
+            raise ValueError(f"No registered model named {name!r}")
+        return rec
+
+    def _model_frame(
+        self, meta: dict, source: Optional[str], is_identifier: bool
+    ) -> DataFrame:
+        """``source`` — or, when the statement names none, the model's
+        stored TRAIN source — with the model's feature columns built."""
+        from declarativeml_spark.plans.builder import build_features
+
+        if source is None:
+            train_stmt = stored_train_statement(meta)
+            source, is_identifier = train_stmt.source, train_stmt.source_is_identifier
+        df = resolve_source(self.spark, source, is_identifier)
+        return build_features(df, meta["features"]).df
 
     # One handler per statement kind — the keys are exactly the
     # parser's Statement union (tests/test_parser.py asserts it). The

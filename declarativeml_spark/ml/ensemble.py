@@ -189,17 +189,13 @@ def deploy_model(
     config: Optional[Dict[str, Any]] = None,
     base: Optional[str] = None,
 ) -> dict:
-    """Flip a model version to deployed status with serving config."""
-    from declarativeml_spark.ml.models import registry_meta
+    """Flip a model version to deployed status with serving config.
+    The version and its artifacts are resolved once, by the rule
+    ``registry_load`` serves with; the status record names that
+    version, never a null one."""
+    from declarativeml_spark.ml.models import registry_resolve
 
-    registry_load(spark, model, version=version, base=base)  # validate
-    if version is None:
-        # record the RESOLVED latest live version: a null version in
-        # the status record was read back as version 1 by
-        # registry_meta (marking the wrong version deployed, and
-        # resurrecting it if it was rolled back) and skipped entirely
-        # by version_statuses
-        version = int(registry_meta(model, base=base).get("version") or 1)
+    version = registry_resolve(model, version, base)[0]["version"]
     record = {
         "name": model,
         "version": version,
@@ -351,26 +347,13 @@ def monitor_model(
     ``model.alert`` event when an EventBus is supplied (the WHEN…THEN
     layer consumes those).
     """
+    from declarativeml_spark.ml.evaluate import _with_label
     from declarativeml_spark.ml.registry import get_algorithm
     from declarativeml_spark.ml.training import StopCondition, _compute_metrics
 
     spec = get_algorithm(algorithm)
     pipeline = registry_load(spark, model, base=base)
-    label_col = None
-    if spec.kind != "clustering":
-        label_col = "label"
-        # the MODEL decides label materialization, not the monitoring
-        # batch's dtype: a pipeline whose own stage (StringIndexer)
-        # builds `label` during transform must not get a second one
-        # ("label already exists"), and a pipeline trained on a
-        # numeric target needs the cast even when the batch's target
-        # arrives as a string
-        model_builds_label = any(
-            hasattr(st, "getOutputCol") and st.getOutputCol() == "label"
-            for st in pipeline.stages
-        )
-        if not model_builds_label:
-            df = df.withColumn(label_col, F.col(target).cast("double"))
+    df, label_col = _with_label(pipeline, df, spec, target)
     drift_needed = any(
         ("data_drift" in c) or ("drift_score" in c) for c in checks
     )

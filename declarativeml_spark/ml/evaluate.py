@@ -48,6 +48,25 @@ def _linear_coefficients(final) -> Optional[list]:
 LOWER_IS_BETTER = frozenset({"rmse", "mse", "mae"})
 
 
+def _with_label(
+    model: PipelineModel, df: DataFrame, spec, target: str
+) -> tuple[DataFrame, Optional[str]]:
+    """``df`` ready to score against ``model``, and its label column
+    (None for clustering). The MODEL decides label materialization,
+    not the batch's dtype: a pipeline whose own StringIndexer builds
+    ``label`` must not get a second one ("label already exists"), and a
+    numeric-trained model needs the cast even when the target arrives
+    as a string."""
+    if spec.kind == "clustering":
+        return df, None
+    if not any(
+        hasattr(st, "getOutputCol") and st.getOutputCol() == "label"
+        for st in model.stages
+    ):
+        df = df.withColumn("label", F.col(target).cast("double"))
+    return df, "label"
+
+
 def evaluate_model(
     spark: SparkSession,
     model_name: str,
@@ -63,24 +82,7 @@ def evaluate_model(
 
     spec = get_algorithm(algorithm)
     model = registry_load(spark, model_name, base=base)
-    label_col = None
-    if spec.kind != "clustering":
-        label_col = "label"
-        # the MODEL decides label materialization, not the test
-        # batch's dtype (the monitor_model convention): a pipeline
-        # whose own StringIndexer builds `label` must not get a
-        # second one ("label already exists" when a string-trained
-        # model met a numeric test column), and a numeric-trained
-        # model needs the cast even when the test target arrives as
-        # a string (the dtype branch silently produced NULL labels)
-        model_builds_label = any(
-            hasattr(st, "getOutputCol") and st.getOutputCol() == "label"
-            for st in model.stages
-        )
-        if not model_builds_label:
-            test_df = test_df.withColumn(
-                label_col, F.col(target).cast("double")
-            )
+    test_df, label_col = _with_label(model, test_df, spec, target)
     out = _compute_metrics(model, test_df, spec, label_col)
     if metrics:
         wanted = set(metrics)

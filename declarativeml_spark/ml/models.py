@@ -106,8 +106,6 @@ from pyspark.sql import DataFrame, SparkSession
 if TYPE_CHECKING:
     from declarativeml_spark.ml.training import TrainedModel
 
-DEFAULT_MODEL_DIR = os.environ.get("DML_MODEL_DIR", "/tmp/dml_models")
-
 # In-session PipelineModel handle cache, keyed by the version dir the
 # artifacts live in. PREDICT immediately after TRAIN (the DSL chain's
 # common shape) otherwise pays a full PipelineModel.load — several
@@ -134,10 +132,8 @@ def _pipeline_cache_put(path: str, model: PipelineModel) -> None:
 
 def _default_base() -> str:
     """The layout root, resolved at CALL time: $DML_MODEL_DIR set
-    after import must take effect (the import-time constant silently
-    ignored it); the module-level DEFAULT_MODEL_DIR stays as the
-    static fallback for existing importers."""
-    return os.environ.get("DML_MODEL_DIR", DEFAULT_MODEL_DIR)
+    after import must take effect."""
+    return os.environ.get("DML_MODEL_DIR", "/tmp/dml_models")
 
 
 def _registry_path(base: Optional[str] = None) -> str:
@@ -333,6 +329,15 @@ def mark_version_status(
     )
 
 
+def rollback_version(name: str, version: int, base: Optional[str] = None) -> bool:
+    """Mark ``version`` rolled back; returns False, appending nothing,
+    when it already is."""
+    if registry_meta(name, version, base).get("status") == "rolled_back":
+        return False
+    mark_version_status(name, version, "rolled_back", base)
+    return True
+
+
 def version_statuses(name: str, base: Optional[str] = None) -> dict[int, str]:
     """Latest status per version of a model."""
     base = base or _default_base()
@@ -343,42 +348,108 @@ def version_statuses(name: str, base: Optional[str] = None) -> dict[int, str]:
     return out
 
 
-def registry_load(
-    spark: SparkSession, name: str, version: Optional[int] = None, base: Optional[str] = None
-) -> PipelineModel:
-    """Load a model by name (latest non-rolled-back version unless pinned)."""
-    base = base or _default_base()
+def _model_versions(name: str, base: str) -> tuple[dict[int, dict], dict[int, str]]:
+    """One registry pass: each version's full record (the one carrying
+    ``algorithm``) and its latest status. Status-only records (deploy,
+    archive, rollback) override the status; they never make a version
+    exist."""
+    full: dict[int, dict] = {}
+    status: dict[int, str] = {}
+    for rec in _iter_registry(base):
+        if rec.get("name") != name:
+            continue
+        ver = rec.get("version") or 1
+        if "algorithm" in rec:
+            full[ver] = rec
+        if rec.get("status"):
+            status[ver] = rec["status"]
+    return full, status
+
+
+def _pick(
+    full: dict[int, dict],
+    status: dict[int, str],
+    version: Optional[int],
+    below: Optional[int] = None,
+) -> dict:
+    """THE version rule. Pinned: that version's record, whatever its
+    status. Unpinned: the newest live version — live meaning its
+    latest status is not ``rolled_back`` — optionally only among
+    versions older than ``below``. ``{}`` when nothing qualifies."""
     if version is None:
-        statuses = version_statuses(name, base)
-        live = [v for v, s in statuses.items() if s != "rolled_back"]
-        if statuses and not live:
-            # silently serving the very version that was rolled back
-            # would undo the rollback for every downstream scorer
-            raise ValueError(
-                f"Every version of model {name!r} is rolled back; pin a"
-                " version explicitly to override"
-            )
-        version = max(live) if live else next_version(name, base) - 1
-    if version < 1:
+        version = max(
+            (
+                v for v in full
+                if status.get(v) != "rolled_back" and (below is None or v < below)
+            ),
+            default=None,
+        )
+    if version not in full:
+        return {}
+    rec = dict(full[version])
+    rec["version"] = version
+    rec["status"] = status.get(version, rec.get("status", "registered"))
+    return rec
+
+
+def registry_meta(
+    name: str, version: Optional[int] = None, base: Optional[str] = None
+) -> dict:
+    """The full registry record for a model — feature expressions,
+    target, metrics, checkpoints — of the version :func:`registry_load`
+    serves: the newest live version unless pinned. Returns ``{}`` when
+    no such record exists."""
+    return _pick(*_model_versions(name, base or _default_base()), version)
+
+
+def registry_previous(name: str, version: int, base: Optional[str] = None) -> dict:
+    """The record of the version before ``version``: the newest OLDER
+    live version (``{}`` when there is none). ARCHIVE previous_version
+    marks it; a workflow's ``previous_<metric>`` reads its metrics."""
+    return _pick(*_model_versions(name, base or _default_base()), None, below=version)
+
+
+def registry_resolve(
+    name: str, version: Optional[int] = None, base: Optional[str] = None
+) -> tuple[dict, str]:
+    """The record :func:`registry_meta` picks and its artifact directory
+    ``<base>/<name>/v<N>``, or a typed error. A version directory
+    without a registry record (a save killed before its append) is
+    never served."""
+    base = base or _default_base()
+    full, status = _model_versions(name, base)
+    if not full:
         raise ValueError(f"No registered model named {name!r} in {base}")
-    path = os.path.join(base, name, f"v{version}")
-    if not os.path.isdir(path):
-        # typed error instead of an opaque Py4J crash deep in MLlib:
-        # artifact-less registry names (ensembles score through
-        # score_ensemble, not a PipelineModel) and pinned nonexistent
-        # versions both land here
-        meta = registry_meta(name, base=base)
-        if meta.get("algorithm") == "ensemble":
+    rec = _pick(full, status, version)
+    if not rec and version is None:
+        # silently serving the very version that was rolled back
+        # would undo the rollback for every downstream scorer
+        raise ValueError(
+            f"Every version of model {name!r} is rolled back; pin a"
+            " version explicitly to override"
+        )
+    v = rec.get("version", version)
+    path = os.path.join(base, name, f"v{v}")
+    if not rec or not os.path.isdir(path):
+        if rec.get("algorithm") == "ensemble":
             raise ValueError(
                 f"{name!r} is an ENSEMBLE (no stored PipelineModel) —"
                 " score it via PREDICT USING MODEL / score_ensemble,"
                 " not registry_load"
             )
         raise ValueError(
-            f"Model {name!r} version {version} has no stored artifacts"
-            f" under {base} — known versions:"
-            f" {sorted(version_statuses(name, base)) or 'none'}"
+            f"Model {name!r} version {v} has no stored artifacts under"
+            f" {base} — known versions: {sorted(full)}"
         )
+    return rec, path
+
+
+def registry_load(
+    spark: SparkSession, name: str, version: Optional[int] = None, base: Optional[str] = None
+) -> PipelineModel:
+    """Load the PipelineModel of the version :func:`registry_resolve`
+    picks (the newest live version unless pinned)."""
+    _, path = registry_resolve(name, version, base)
     cached = _PIPELINE_CACHE.get(os.path.abspath(path))
     if cached is not None:
         return cached
@@ -387,38 +458,21 @@ def registry_load(
     return model
 
 
-def registry_meta(
-    name: str, version: Optional[int] = None, base: Optional[str] = None
-) -> dict:
-    """The full registry record for a model — feature expressions,
-    target, metrics, checkpoints — resolved like :func:`registry_load`:
-    the latest NON-rolled-back version unless pinned. The registry is
-    append-only JSONL: full records carry ``algorithm``; status-only
-    records (deploy / rollback) override a version's status. Returns
-    ``{}`` when no live record exists."""
-    base = base or _default_base()
-    full: dict[int, dict] = {}
-    status: dict[int, str] = {}
-    for rec in _iter_registry(base):
-            if rec.get("name") != name:
-                continue
-            ver = rec.get("version") or 1
-            if "algorithm" in rec:
-                full[ver] = rec
-            if rec.get("status"):
-                status[ver] = rec["status"]
-    if version is not None:
-        pick = version if version in full else None
-    else:
-        live = [
-            v for v in full if status.get(v, "registered") != "rolled_back"
-        ]
-        pick = max(live) if live else None
-    if pick is None:
-        return {}
-    rec = dict(full[pick])
-    rec["status"] = status.get(pick, rec.get("status", "registered"))
-    return rec
+def stored_train_statement(meta: dict):
+    """The parsed TRAIN MODEL statement a registry record stores —
+    RETRAIN and the tuner re-execute it, EXPLAIN and MONITOR read its
+    source when they name none."""
+    from declarativeml_spark.dsl import ir
+    from declarativeml_spark.dsl.parser import parse
+
+    stmt = parse(meta["statement"]) if meta.get("statement") else None
+    if not isinstance(stmt, ir.TrainModel):
+        raise ValueError(
+            f"Model {meta.get('name')!r} has no stored TRAIN statement —"
+            " it was not registered by TRAIN MODEL; name a source"
+            " explicitly where the statement takes one"
+        )
+    return stmt
 
 
 def registry_table(spark: SparkSession, base: Optional[str] = None) -> DataFrame:

@@ -684,19 +684,26 @@ def _compute_metrics(
                 F.var_samp(F.col(label_col)).alias("vy"),
             ).collect()[0]
             n = float(row["n"] or 0)
-            if n > 0:
-                sse = float(row["sse"])
-                sstot = (
-                    float(row["vy"]) * (n - 1.0)
-                    if row["vy"] is not None
-                    else 0.0
+            if n == 0:
+                raise ValueError(
+                    "empty evaluation set: no rows with a non-NULL label"
+                    f" {label_col!r} to score"
                 )
-                out["mse"] = sse / n
-                out["rmse"] = out["mse"] ** 0.5
-                out["mae"] = float(row["sae"]) / n
-                out["r2"] = (
-                    1.0 - sse / sstot if sstot != 0.0 else float("nan")
-                )
+            sse = float(row["sse"])
+            sstot = (
+                float(row["vy"]) * (n - 1.0)
+                if row["vy"] is not None
+                else 0.0
+            )
+            out["mse"] = sse / n
+            out["rmse"] = out["mse"] ** 0.5
+            out["mae"] = float(row["sae"]) / n
+            if sstot != 0.0:
+                out["r2"] = 1.0 - sse / sstot
+            else:
+                # a constant label: MLlib's 1 − SSerr/SStot in IEEE
+                # arithmetic, −∞ for any error and NaN for none
+                out["r2"] = float("-inf") if sse > 0 else float("nan")
         else:
             try:
                 out["silhouette"] = float(ClusteringEvaluator().evaluate(pred))

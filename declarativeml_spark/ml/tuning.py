@@ -225,8 +225,11 @@ def run_search(
     chosen params), and every trial's metrics are appended to the
     registry metadata so the search is auditable after the fact.
     """
-    from declarativeml_spark.dsl.parser import parse
-    from declarativeml_spark.ml.models import registry_save, trial_log_append
+    from declarativeml_spark.ml.models import (
+        registry_save,
+        stored_train_statement,
+        trial_log_append,
+    )
     from declarativeml_spark.ml.training import (
         SEED,
         TrainedModel,
@@ -238,17 +241,7 @@ def run_search(
             f"Unknown optimization method {tuner.method!r}; accepted:"
             f" {', '.join(sorted(_KNOWN_METHODS))}"
         )
-    if not meta.get("statement"):
-        raise ValueError(
-            f"Model {tuner.model!r} has no stored TRAIN statement for the"
-            " tuner to re-execute"
-        )
-    train_stmt = parse(meta["statement"])
-    if not isinstance(train_stmt, TrainModel):
-        raise ValueError(
-            f"Model {tuner.model!r} was not trained by a TRAIN MODEL"
-            " statement — the tuner needs one to vary parameters over"
-        )
+    train_stmt = stored_train_statement(meta)
     spec = get_algorithm(train_stmt.algorithm)
     # validate the metric NAME eagerly: _make_evaluator silently falls
     # back to f1/rmse/silhouette for unknown keys, which would tune a

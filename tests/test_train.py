@@ -533,3 +533,164 @@ def test_registry_load_serves_in_session_handle(spark, engine):
         ).build_features(src, trained.features).df
     ).select("o_orderkey", "prediction").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+# --- one live-version rule: registry_meta and registry_load agree ------------
+
+_REGISTRY_SHAPES = {
+    # shape: (versions with a full record, status records, pinned
+    # version, expected (version, status) or the typed error)
+    "registered": ([1, 2], {}, None, (2, "registered")),
+    "deployed": ([1, 2], {1: "deployed"}, None, (2, "registered")),
+    "newest_rolled_back": ([1, 2], {2: "rolled_back"}, None, (1, "registered")),
+    "all_rolled_back": (
+        [1, 2], {1: "rolled_back", 2: "rolled_back"}, None, "rolled back"
+    ),
+    "ensemble": ("ensemble", {}, None, "ENSEMBLE"),
+    "pinned_rolled_back": ([1, 2], {2: "rolled_back"}, 2, (2, "rolled_back")),
+    "pinned_missing": ([1], {}, 5, "no stored artifacts"),
+    "orphan": ([], {}, None, "No registered model"),
+}
+
+
+@pytest.fixture(scope="module")
+def shape_artifact(engine):
+    return engine.execute(
+        "TRAIN MODEL shape_src USING logistic_regression(max_iter=3) "
+        "FROM orders_labeled PREDICT expensive WITH FEATURES(o_totalprice)"
+    ).path
+
+
+@pytest.mark.parametrize("shape", sorted(_REGISTRY_SHAPES))
+def test_registry_meta_and_load_pick_one_version(spark, shape_artifact, tmp_path, shape):
+    """Every registry shape resolves to the same version through
+    registry_meta and registry_load, or to the existing typed error. An
+    orphan ``v<N>`` directory (a save killed before its registry
+    append) is never served, by registry_load or by PREDICT."""
+    import shutil
+
+    from declarativeml_spark.ml.models import (
+        append_registry_record,
+        mark_version_status,
+        registry_load,
+        registry_meta,
+    )
+
+    versions, statuses, pinned, expected = _REGISTRY_SHAPES[shape]
+    base = str(tmp_path / "reg")
+    name = "m"
+    if versions == "ensemble":
+        append_registry_record(
+            base,
+            {"name": name, "version": 1, "algorithm": "ensemble",
+             "ensemble_members": [{"model": "x", "weight": 1.0}]},
+        )
+    for v in versions if versions != "ensemble" else ():
+        shutil.copytree(shape_artifact, f"{base}/{name}/v{v}")
+        append_registry_record(
+            base,
+            {"name": name, "version": v, "algorithm": "logistic_regression",
+             "features": ["o_totalprice"], "target": "expensive",
+             "status": "registered"},
+        )
+    for v, status in statuses.items():
+        mark_version_status(name, v, status, base=base)
+    if shape == "orphan":
+        shutil.copytree(shape_artifact, f"{base}/{name}/v1")
+
+    meta = registry_meta(name, version=pinned, base=base)
+    if isinstance(expected, str):
+        with pytest.raises(ValueError, match=expected):
+            registry_load(spark, name, version=pinned, base=base)
+        assert meta.get("version") == (1 if shape == "ensemble" else None)
+        if shape == "orphan":
+            with pytest.raises(ValueError, match="No registered model named"):
+                Engine(spark, model_dir=base).execute(
+                    f"PREDICT USING MODEL {name} FROM orders_labeled"
+                ).collect()
+        return
+    assert (meta["version"], meta["status"]) == expected
+    # same artifact directory → the same cached handle
+    assert registry_load(spark, name, version=pinned, base=base) is registry_load(
+        spark, name, version=meta["version"], base=base
+    )
+
+
+def test_workflow_previous_metric_skips_rolled_back_version(spark, engine):
+    """``previous_<metric>`` in a workflow block reads the newest OLDER
+    live version — the baseline RETRAIN's own guard compares against —
+    not ``version - 1`` when that version was rolled back."""
+    from declarativeml_spark.dsl.parser import parse_workflow_block_text
+    from declarativeml_spark.ml.models import mark_version_status
+
+    def label(expr: str) -> None:
+        spark.sql(
+            f"SELECT o_orderkey, o_totalprice, CAST({expr} AS INT) AS expensive"
+            " FROM orders"
+        ).createOrReplaceTempView("prev_metric_src")
+
+    train = (
+        "TRAIN MODEL prev_metric USING logistic_regression(max_iter=5) "
+        "FROM prev_metric_src PREDICT expensive WITH FEATURES(o_totalprice)"
+    )
+    label("o_totalprice > 150000")
+    v1 = engine.execute(train)
+    assert v1.metrics["accuracy"] >= 0.9
+    label("o_orderkey % 2")  # unrelated to the feature
+    v2 = engine.execute(train)
+    assert v2.metrics["accuracy"] < 0.9
+    mark_version_status("prev_metric", 2, "rolled_back", engine.model_dir)
+    label("o_totalprice > 150000")
+    log = engine._run_workflow(
+        parse_workflow_block_text(
+            "BEGIN RETRAIN MODEL prev_metric;"
+            " IF previous_accuracy < 0.9 THEN ALERT ml_team('stale baseline');"
+            " END IF; END"
+        )
+    )
+    assert log["conditions"] == [
+        {"condition": "previous_accuracy < 0.9", "fired": False}
+    ]
+
+
+def test_evaluate_empty_regression_set_is_a_typed_error(spark, engine):
+    """An empty evaluation set names itself instead of reporting every
+    requested metric as unavailable; a constant label follows MLlib's
+    r2 = 1 − SSerr/SStot (−∞ when the model errs)."""
+    engine.execute(
+        "TRAIN MODEL empty_eval_reg USING linear_regression(max_iter=5) "
+        "FROM orders_labeled PREDICT o_totalprice WITH FEATURES(o_custkey)"
+    )
+    spark.sql(
+        "SELECT * FROM orders_labeled WHERE o_totalprice < 0"
+    ).createOrReplaceTempView("orders_none")
+    with pytest.raises(ValueError, match="empty evaluation set"):
+        engine.execute("EVALUATE MODEL empty_eval_reg ON orders_none METRICS (rmse)")
+    spark.sql(
+        "SELECT o_orderkey, o_custkey, 1000.0 AS o_totalprice FROM orders_labeled"
+    ).createOrReplaceTempView("orders_flat")
+    out = engine.execute("EVALUATE MODEL empty_eval_reg ON orders_flat METRICS (r2)")
+    assert out["r2"] == float("-inf")
+
+
+def test_monitor_empty_regression_set_is_a_typed_error(spark, engine):
+    """MONITOR on an empty batch raises instead of reporting an
+    unhealthy model with no metrics (which alerted WHEN rules)."""
+    from declarativeml_spark.dsl import parse
+
+    engine.execute(
+        "TRAIN MODEL empty_mon_reg USING linear_regression(max_iter=5) "
+        "FROM orders_labeled PREDICT o_totalprice WITH FEATURES(o_custkey)"
+    )
+    spark.sql(
+        "SELECT * FROM orders_labeled WHERE o_totalprice < 0"
+    ).createOrReplaceTempView("orders_none_mon")
+    alerts = []
+    engine.bus.when("model.alert", "TRUE", lambda df: alerts.append(1))
+    with pytest.raises(ValueError, match="empty evaluation set"):
+        engine._monitor(
+            parse("MONITOR MODEL empty_mon_reg ON orders_none_mon CHECK (r2 > -1)"),
+            bus=engine.bus,
+        )
+    engine.bus.dispatch_batch()
+    assert alerts == []

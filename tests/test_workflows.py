@@ -289,3 +289,38 @@ def test_if_step_keyword_named_column_not_split():
     assert len(stmt_actions) == 1
     assert "AND SCORE > 2" in stmt_actions[0][1]
     assert ("alert", "ml_team", "fired") in step.actions
+
+
+def test_workflow_rollback_binds_to_the_version_the_block_trained(engine, spark):
+    """The reference block (DSL.md:131-144) after a regressing RETRAIN:
+    RETRAIN's own 0.95 guard rolls the new version back, and the
+    block's ROLLBACK TO previous_version then finds that version
+    already rolled back — it must not roll back the still-serving v1
+    too, which would leave no version able to serve."""
+    from declarativeml_spark.ml.models import version_statuses
+
+    spark.sql(
+        "SELECT *, CAST(o_totalprice > 150000 AS INT) AS expensive FROM orders"
+    ).createOrReplaceTempView("wf_rb_src")
+    engine.execute(
+        "TRAIN MODEL wf_rb USING logistic_regression(max_iter=5) "
+        "FROM wf_rb_src PREDICT expensive WITH FEATURES(o_totalprice)"
+    )
+    # labels unrelated to the feature: the retrain regresses
+    spark.sql(
+        "SELECT *, CAST(o_orderkey % 2 AS INT) AS expensive FROM orders"
+    ).createOrReplaceTempView("wf_rb_src")
+    engine.execute("""WHEN EVENT 'wf.rb_drift' THEN BEGIN
+    RETRAIN MODEL wf_rb;
+
+    IF retraining_accuracy < previous_accuracy * 0.95 THEN
+      ROLLBACK TO previous_version
+      AND ALERT ml_team('Retraining failed - manual review needed');
+    END IF;
+  END""")
+    engine.bus.publish("wf.rb_drift", {})
+    engine.bus.dispatch_batch()
+    statuses = version_statuses("wf_rb", engine.model_dir)
+    assert statuses[2] == "rolled_back"
+    assert statuses[1] != "rolled_back"
+    assert engine._model_meta("wf_rb")["version"] == 1
