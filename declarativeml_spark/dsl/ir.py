@@ -17,6 +17,13 @@ from math import isclose
 from typing import Any, Dict, List, Optional, Tuple
 
 
+def _require_positive(what: str, v: Any, noun: str = "integer") -> None:
+    """The one positive-count check: ``v`` must be an ``int`` (not a
+    ``bool``) above zero, else ``{what} must be a positive {noun}``."""
+    if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
+        raise ValueError(f"{what} must be a positive {noun}")
+
+
 @dataclass
 class DataSplit:
     """Named split ratios; each in [0,1], summing to 1.0 (±1e-6)."""
@@ -613,12 +620,8 @@ class SimilaritySearch:
             raise ValueError(
                 "USING INDEX requires an index name (and only then)"
             )
-        if self.k is not None and (
-            not isinstance(self.k, int)
-            or isinstance(self.k, bool)
-            or self.k <= 0
-        ):
-            raise ValueError("TOP must be a positive integer")
+        if self.k is not None:
+            _require_positive("TOP", self.k)
 
 
 @dataclass
@@ -641,12 +644,7 @@ class Decontaminate:
     benchmark_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        if (
-            not isinstance(self.threshold, int)
-            or isinstance(self.threshold, bool)
-            or self.threshold <= 0
-        ):
-            raise ValueError("THRESHOLD must be a positive integer")
+        _require_positive("THRESHOLD", self.threshold)
 
 
 @dataclass
@@ -668,9 +666,8 @@ class PackSequences:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        for what, v in (("INTO", self.context), ("BUCKETS", self.buckets)):
-            if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
-                raise ValueError(f"{what} must be a positive integer")
+        _require_positive("INTO", self.context)
+        _require_positive("BUCKETS", self.buckets)
 
 
 @dataclass
@@ -708,12 +705,7 @@ class SampleCorpus:
             if not (0.0 < float(self.rate) <= 1.0):
                 raise ValueError("RATE must be in (0, 1]")
         if self.top_n is not None:
-            if (
-                not isinstance(self.top_n, int)
-                or isinstance(self.top_n, bool)
-                or self.top_n <= 0
-            ):
-                raise ValueError("TOP must be a positive integer")
+            _require_positive("TOP", self.top_n)
             if not self.weight_column:
                 raise ValueError("SAMPLE … TOP requires WEIGHT BY <column>")
 
@@ -749,14 +741,16 @@ class ChunkWindows:
 
     source: str
     win: int = 32
-    stride: int = 24
+    #: None = no STRIDE clause: windows abut (stride = win)
+    stride: Optional[int] = None
     column: Optional[str] = None
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        for what, v in (("INTO", self.win), ("STRIDE", self.stride)):
-            if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
-                raise ValueError(f"{what} must be a positive integer")
+        if self.stride is None:
+            self.stride = self.win
+        _require_positive("INTO", self.win)
+        _require_positive("STRIDE", self.stride)
         if self.stride > self.win:
             raise ValueError("STRIDE must be <= the window size")
 
@@ -782,12 +776,7 @@ class Sessionize:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        if (
-            not isinstance(self.gap_value, int)
-            or isinstance(self.gap_value, bool)
-            or self.gap_value <= 0
-        ):
-            raise ValueError("GAP must be a positive integer")
+        _require_positive("GAP", self.gap_value)
         if self.gap_unit not in ("MINUTES", "HOURS", "SECONDS"):
             raise ValueError("GAP unit must be SECONDS, MINUTES or HOURS")
 
@@ -877,12 +866,7 @@ class DetectAnomalies:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        if (
-            not isinstance(self.window, int)
-            or isinstance(self.window, bool)
-            or self.window <= 0
-        ):
-            raise ValueError("WINDOW must be a positive integer")
+        _require_positive("WINDOW", self.window)
 
 
 @dataclass
@@ -904,12 +888,7 @@ class ShardCorpus:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        if (
-            not isinstance(self.n_shards, int)
-            or isinstance(self.n_shards, bool)
-            or self.n_shards <= 0
-        ):
-            raise ValueError("INTO must be a positive shard count")
+        _require_positive("INTO", self.n_shards, "shard count")
 
 
 @dataclass
@@ -933,12 +912,7 @@ class CompactTable:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        if (
-            not isinstance(self.target_bytes, int)
-            or isinstance(self.target_bytes, bool)
-            or self.target_bytes <= 0
-        ):
-            raise ValueError("TARGET must be a positive byte count")
+        _require_positive("TARGET", self.target_bytes, "byte count")
 
 
 @dataclass
@@ -961,12 +935,8 @@ class ShuffleCorpus:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        for name, v, kw in (
-            ("EPOCHS", self.epochs, "epoch count"),
-            ("SHARDS", self.n_shards, "shard count"),
-        ):
-            if not isinstance(v, int) or isinstance(v, bool) or v <= 0:
-                raise ValueError(f"{name} must be a positive {kw}")
+        _require_positive("EPOCHS", self.epochs, "epoch count")
+        _require_positive("SHARDS", self.n_shards, "shard count")
 
 
 @dataclass
@@ -987,12 +957,7 @@ class ScoreQuality:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        if (
-            not isinstance(self.buckets, int)
-            or isinstance(self.buckets, bool)
-            or self.buckets <= 0
-        ):
-            raise ValueError("BUCKETS must be a positive bucket count")
+        _require_positive("BUCKETS", self.buckets, "bucket count")
 
 
 @dataclass
@@ -1016,12 +981,7 @@ class WeighCorpus:
     def __post_init__(self) -> None:
         if not self.target_value:
             raise ValueError("AGAINST must name a non-empty target value")
-        if (
-            not isinstance(self.buckets, int)
-            or isinstance(self.buckets, bool)
-            or self.buckets <= 0
-        ):
-            raise ValueError("BUCKETS must be a positive bucket count")
+        _require_positive("BUCKETS", self.buckets, "bucket count")
 
 
 @dataclass
@@ -1045,12 +1005,7 @@ class AuditAnonymity:
             raise ValueError(
                 "AUDIT ANONYMITY needs at least one ON column"
             )
-        if (
-            not isinstance(self.risk, int)
-            or isinstance(self.risk, bool)
-            or self.risk <= 0
-        ):
-            raise ValueError("RISK must be a positive class-size threshold")
+        _require_positive("RISK", self.risk, "class-size threshold")
 
 
 @dataclass
@@ -1171,14 +1126,8 @@ class DecodeMedia:
     windows: Optional[int] = None
 
     def __post_init__(self) -> None:
-        if self.windows is not None and (
-            not isinstance(self.windows, int)
-            or isinstance(self.windows, bool)
-            or self.windows < 1
-        ):
-            raise ValueError(
-                "WINDOWS must be a positive integer sample count"
-            )
+        if self.windows is not None:
+            _require_positive("WINDOWS", self.windows, "integer sample count")
 
 
 @dataclass
@@ -1198,12 +1147,7 @@ class SampleFrames:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        if (
-            not isinstance(self.every, int)
-            or isinstance(self.every, bool)
-            or self.every < 1
-        ):
-            raise ValueError("EVERY must be a positive integer frame stride")
+        _require_positive("EVERY", self.every, "integer frame stride")
 
 
 @dataclass
@@ -1224,9 +1168,8 @@ class ResizeMedia:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
-        for label, v in (("width", self.width), ("height", self.height)):
-            if not isinstance(v, int) or isinstance(v, bool) or v < 1:
-                raise ValueError(f"RESIZE {label} must be a positive integer")
+        _require_positive("RESIZE width", self.width)
+        _require_positive("RESIZE height", self.height)
 
 
 @dataclass

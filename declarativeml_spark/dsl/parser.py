@@ -25,11 +25,30 @@ the reference does with position-propagating parse metadata
 quoted identifiers, and punctuated names like ``user-events`` intact.
 Option value validation matches the reference bit-for-bit
 (dsl/parser.py:418-499), including error messages.
+
+A statement that is a source plus clauses is one syntax line in
+``_STATEMENTS`` (``_Syntax``), not a method, e.g.
+
+    PACK <source:source> INTO <context:int> TOKEN CHUNKS
+        [BUCKETS <buckets:int>] [ON <column:name>]
+
+UPPERCASE words are literal keywords; ``<field:kind>`` fills the IR
+field ``field``; ``[…]`` clauses are optional, in any order, the last
+occurrence winning. Slot kinds: ``source`` (raw text slice; also sets
+``<field>_is_identifier``), ``name``, ``names`` (comma list), ``int``
+(an integral float such as ``5.0`` becomes an int), ``floats`` (comma
+list), ``quoted`` (single-quoted, ``''`` unescaped) and ``unit`` (an
+upper-cased NAME). A source stops at the literal keyword that follows
+it, or, when only optional clauses follow, at each clause's first
+keyword — so ``d JOIN m ON d.id = m.id`` before ``INTO`` stays whole.
+Clauses left out take the IR dataclass's default, and its
+``__post_init__`` holds every value check.
 """
 
 from __future__ import annotations
 
 import json
+from itertools import takewhile
 from typing import Any, List, Optional, Tuple, Union
 
 from declarativeml_spark.dsl import ir
@@ -153,6 +172,15 @@ class _Parser:
         if tok.kind != "EOF":
             raise DSLSyntaxError(f"Unexpected input {tok.value!r} at {tok.pos}")
 
+    def expect_quoted(self, what: str) -> str:
+        """A single-quoted literal, unescaped (``''`` → ``'``)."""
+        tok = self.advance()
+        if tok.kind != "SQSTRING":
+            raise DSLSyntaxError(
+                f"Expected quoted {what} at {tok.pos}, got {tok.value!r}"
+            )
+        return _unquote(tok)
+
     # -- shared value grammar (params, dict/list literals) -------------
     def parse_value(self) -> Any:
         tok = self.peek()
@@ -175,7 +203,7 @@ class _Parser:
             # reference DSL.md:62 writes config values single-quoted
             # ('50ms'); '' unescapes to ' (reference: dsl/parser.py:135)
             self.advance()
-            return tok.value[1:-1].replace("''", "'")
+            return _unquote(tok)
         if tok.kind == "OP" and tok.value == "[":
             return self.parse_list_literal()
         if tok.kind == "OP" and tok.value == "{":
@@ -209,7 +237,7 @@ class _Parser:
                 elif key_tok.kind == "SQSTRING":
                     # the reference writes config keys single-quoted
                     # (DSL.md:61 'max_latency': '50ms')
-                    key = key_tok.value[1:-1].replace("''", "'")
+                    key = _unquote(key_tok)
                 else:
                     raise DSLSyntaxError(
                         f"Expected dict key at {key_tok.pos}, got {key_tok.value!r}"
@@ -257,13 +285,9 @@ class _Parser:
     def parse_quoted_message(self) -> str:
         """``('single-quoted message')`` — NOTIFY/ALERT argument."""
         self.expect_op("(")
-        tok = self.advance()
-        if tok.kind != "SQSTRING":
-            raise DSLSyntaxError(
-                f"Expected quoted message at {tok.pos}, got {tok.value!r}"
-            )
+        message = self.expect_quoted("message")
         self.expect_op(")")
-        return tok.value[1:-1].replace("''", "'")
+        return message
 
     def expect_keyword_ci(self, word: str) -> None:
         """Case-insensitive keyword (clauses the reference docs spell
@@ -1232,13 +1256,7 @@ class _Parser:
         an alias of SUBSCRIBE TO … EXECUTE PROCEDURE."""
         self.expect_keyword("ON")
         self.expect_keyword("EVENT")
-        tok = self.advance()
-        if tok.kind != "SQSTRING":
-            raise DSLSyntaxError(
-                f"Expected quoted event pattern at {tok.pos}, got"
-                f" {tok.value!r}"
-            )
-        pattern = tok.value[1:-1].replace("''", "'")
+        pattern = self.expect_quoted("event pattern")
         self.expect_keyword("EXECUTE")
         name = self.parse_dotted_call_name()
         self.expect_eof()
@@ -1324,12 +1342,7 @@ class _Parser:
             return self.parse_when_model()
         if self.at_keyword("EVENT"):
             self.advance()
-            tok = self.advance()
-            if tok.kind != "SQSTRING":
-                raise DSLSyntaxError(
-                    f"Expected quoted event pattern at {tok.pos}, got {tok.value!r}"
-                )
-            pattern = tok.value[1:-1].replace("''", "'")
+            pattern = self.expect_quoted("event pattern")
             predicate = None
             if self.at_keyword("WHERE"):
                 self.advance()
@@ -1727,7 +1740,7 @@ class _Parser:
             if key_tok.kind == "NAME":
                 key = key_tok.value
             elif key_tok.kind == "SQSTRING":
-                key = key_tok.value[1:-1].replace("''", "'")
+                key = _unquote(key_tok)
             elif key_tok.kind == "DSTRING":
                 key = json.loads(key_tok.value)
             else:
@@ -1972,12 +1985,7 @@ class _Parser:
     def parse_subscribe(self) -> ir.WhenRule:
         self.expect_keyword("SUBSCRIBE")
         self.expect_keyword("TO")
-        tok = self.advance()
-        if tok.kind != "SQSTRING":
-            raise DSLSyntaxError(
-                f"Expected quoted event pattern at {tok.pos}, got {tok.value!r}"
-            )
-        pattern = tok.value[1:-1].replace("''", "'")
+        pattern = self.expect_quoted("event pattern")
         self.expect_keyword("EXECUTE")
         if self._at_procedure_call():
             # the reference's handler form (AGENTS.md:49-51):
@@ -2018,7 +2026,7 @@ class _Parser:
         self.expect_keyword("EVENT")
         tok = self.advance()
         if tok.kind == "SQSTRING":
-            event_type = tok.value[1:-1].replace("''", "'")
+            event_type = _unquote(tok)
         elif tok.kind == "NAME":
             event_type = tok.value
             while self.accept_op("."):
@@ -2075,13 +2083,7 @@ class _Parser:
                 if self.peek().kind == "OP" and self.peek().value == "[":
                     subscribe_to = string_list()
                 else:
-                    tok = self.advance()
-                    if tok.kind != "SQSTRING":
-                        raise DSLSyntaxError(
-                            f"Expected quoted pattern at {tok.pos},"
-                            f" got {tok.value!r}"
-                        )
-                    subscribe_to = tok.value[1:-1].replace("''", "'")
+                    subscribe_to = self.expect_quoted("pattern")
             elif self.at_keyword("PUBLISH"):
                 self.advance()
                 self.expect_keyword("TO")
@@ -2311,7 +2313,7 @@ class _Parser:
                 f"LOAD MEDIA path must be a single-quoted string,"
                 f" got {tok.value!r} at {tok.pos}"
             )
-        path = tok.value[1:-1].replace("''", "'")
+        path = _unquote(tok)
         glob = None
         recursive = False
         partitioned = False
@@ -2325,7 +2327,7 @@ class _Parser:
                         f"GLOB pattern must be a single-quoted string,"
                         f" got {g.value!r} at {g.pos}"
                     )
-                glob = g.value[1:-1].replace("''", "'")
+                glob = _unquote(g)
             elif self.at_keyword("RECURSIVE") and not recursive:
                 self.advance()
                 recursive = True
@@ -2486,493 +2488,6 @@ class _Parser:
             source_is_identifier=is_identifier_source(source),
         )
 
-    # -- DECONTAMINATE (beyond-parity: SURVEY §2.11) ----------------------
-    def parse_decontaminate(self) -> "ir.Decontaminate":
-        self.expect_keyword("DECONTAMINATE")
-        source = self.capture_source_until("AGAINST")
-        if not source:
-            raise ValueError("DECONTAMINATE source cannot be empty")
-        self.expect_keyword("AGAINST")
-        benchmark = self.capture_source_until("ON", "THRESHOLD")
-        if not benchmark:
-            raise ValueError("DECONTAMINATE benchmark cannot be empty")
-        column = None
-        threshold = 3
-        while True:
-            if self.at_keyword("ON"):
-                self.advance()
-                column = self.expect_name("column name")
-            elif self.at_keyword("THRESHOLD"):
-                self.advance()
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError("THRESHOLD must be a positive integer")
-                threshold = _require_positive_int(
-                    _to_number(tok.value), "THRESHOLD"
-                )
-            else:
-                break
-        self.expect_eof()
-        return ir.Decontaminate(
-            source=source,
-            benchmark=benchmark,
-            column=column,
-            threshold=threshold,
-            source_is_identifier=is_identifier_source(source),
-            benchmark_is_identifier=is_identifier_source(benchmark),
-        )
-
-    # -- PACK (beyond-parity: SURVEY §2.11) -------------------------------
-    def parse_pack(self) -> "ir.PackSequences":
-        self.expect_keyword("PACK")
-        source = self.capture_source_until("INTO")
-        if not source:
-            raise ValueError("PACK source cannot be empty")
-        self.expect_keyword("INTO")
-        tok = self.advance()
-        if tok.kind != "NUMBER":
-            raise ValueError("INTO must be a positive integer")
-        context = _require_positive_int(_to_number(tok.value), "INTO")
-        self.expect_keyword("TOKEN")
-        self.expect_keyword("CHUNKS")
-        buckets = 8
-        column = None
-        while True:
-            if self.at_keyword("BUCKETS"):
-                self.advance()
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError("BUCKETS must be a positive integer")
-                buckets = _require_positive_int(_to_number(tok.value), "BUCKETS")
-            elif self.at_keyword("ON"):
-                self.advance()
-                column = self.expect_name("column name")
-            else:
-                break
-        self.expect_eof()
-        return ir.PackSequences(
-            source=source,
-            context=context,
-            buckets=buckets,
-            column=column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- REDACT (beyond-parity: SURVEY §2.11) -----------------------------
-    def parse_redact(self) -> "ir.RedactPII":
-        self.expect_keyword("REDACT")
-        source = self.capture_source_until("ON")
-        if not source:
-            raise ValueError("REDACT source cannot be empty")
-        column = None
-        if self.at_keyword("ON"):
-            self.advance()
-            column = self.expect_name("column name")
-        self.expect_eof()
-        return ir.RedactPII(
-            source=source,
-            column=column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- CHUNK (beyond-parity: SURVEY §2.11) ------------------------------
-    def parse_chunk(self) -> "ir.ChunkWindows":
-        self.expect_keyword("CHUNK")
-        source = self.capture_source_until("INTO")
-        if not source:
-            raise ValueError("CHUNK source cannot be empty")
-        self.expect_keyword("INTO")
-        tok = self.advance()
-        if tok.kind != "NUMBER":
-            raise ValueError("INTO must be a positive integer")
-        win = _require_positive_int(_to_number(tok.value), "INTO")
-        self.expect_keyword("TOKEN")
-        self.expect_keyword("WINDOWS")
-        stride = None
-        column = None
-        while True:
-            if self.at_keyword("STRIDE"):
-                self.advance()
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError("STRIDE must be a positive integer")
-                stride = _require_positive_int(_to_number(tok.value), "STRIDE")
-            elif self.at_keyword("ON"):
-                self.advance()
-                column = self.expect_name("column name")
-            else:
-                break
-        self.expect_eof()
-        return ir.ChunkWindows(
-            source=source,
-            win=win,
-            stride=stride if stride is not None else win,
-            column=column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- SESSIONIZE (beyond-parity: SURVEY §2.9) --------------------------
-    def parse_sessionize(self) -> "ir.Sessionize":
-        self.expect_keyword("SESSIONIZE")
-        source = self.capture_source_until("BY")
-        if not source:
-            raise ValueError("SESSIONIZE source cannot be empty")
-        self.expect_keyword("BY")
-        key = self.expect_name("key column")
-        gap_value, gap_unit = 30, "MINUTES"
-        ts_column = None
-        value_column = None
-        while True:
-            if self.at_keyword("GAP"):
-                self.advance()
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError("GAP must be a positive integer")
-                gap_value = _require_positive_int(_to_number(tok.value), "GAP")
-                unit_tok = self.advance()
-                unit = unit_tok.value.upper() if unit_tok.kind == "NAME" else ""
-                if unit not in ("SECONDS", "MINUTES", "HOURS"):
-                    raise ValueError("GAP unit must be SECONDS, MINUTES or HOURS")
-                gap_unit = unit
-            elif self.at_keyword("ON"):
-                self.advance()
-                ts_column = self.expect_name("timestamp column")
-            elif self.at_keyword("VALUE"):
-                self.advance()
-                value_column = self.expect_name("value column")
-            else:
-                break
-        self.expect_eof()
-        return ir.Sessionize(
-            source=source,
-            key=key,
-            gap_value=gap_value,
-            gap_unit=gap_unit,
-            ts_column=ts_column,
-            value_column=value_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- QUANTIZE EMBEDDINGS (beyond-parity: SURVEY §2.11) ----------------
-    def parse_quantize(self) -> "ir.QuantizeEmbeddings":
-        self.expect_keyword("QUANTIZE")
-        self.expect_keyword("EMBEDDINGS")
-        source = self.capture_source_until("ON", "ID")
-        if not source:
-            raise ValueError("QUANTIZE EMBEDDINGS source cannot be empty")
-        column = None
-        id_column = None
-        while True:
-            if self.at_keyword("ON"):
-                self.advance()
-                column = self.expect_name("embedding column")
-            elif self.at_keyword("ID"):
-                self.advance()
-                id_column = self.expect_name("id column")
-            else:
-                break
-        self.expect_eof()
-        return ir.QuantizeEmbeddings(
-            source=source,
-            column=column,
-            id_column=id_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- MIX (beyond-parity: SURVEY §2.11) --------------------------------
-    def parse_mix(self) -> "ir.MixCorpus":
-        self.expect_keyword("MIX")
-        source = self.capture_source_until("BY", "TEMPERATURE")
-        if not source:
-            raise ValueError("MIX source cannot be empty")
-        by = "source"
-        temperature = 2
-        while True:
-            if self.at_keyword("BY"):
-                self.advance()
-                by = self.expect_name("group column")
-            elif self.at_keyword("TEMPERATURE"):
-                self.advance()
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError("TEMPERATURE must be a positive integer")
-                temperature = _require_positive_int(
-                    _to_number(tok.value), "TEMPERATURE"
-                )
-            else:
-                break
-        self.expect_eof()
-        return ir.MixCorpus(
-            source=source,
-            by=by,
-            temperature=temperature,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- SHARD (beyond-parity: SURVEY §2.11) ------------------------------
-    def parse_shard(self) -> "ir.ShardCorpus":
-        self.expect_keyword("SHARD")
-        source = self.capture_source_until("INTO")
-        if not source:
-            raise ValueError("SHARD source cannot be empty")
-        self.expect_keyword("INTO")
-        tok = self.advance()
-        if tok.kind != "NUMBER":
-            raise ValueError("INTO must be a positive shard count")
-        n_shards = _require_positive_int(_to_number(tok.value), "INTO")
-        self.expect_keyword("SHARDS")
-        id_column = "doc_id"
-        if self.at_keyword("BY"):
-            self.advance()
-            id_column = self.expect_name("id column")
-        self.expect_eof()
-        return ir.ShardCorpus(
-            source=source,
-            n_shards=n_shards,
-            id_column=id_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- COMPACT (beyond-parity: SURVEY §2.11) ----------------------------
-    def parse_compact(self) -> "ir.CompactTable":
-        self.expect_keyword("COMPACT")
-        source = self.capture_source_until("TARGET")
-        if not source:
-            raise ValueError("COMPACT source cannot be empty")
-        self.expect_keyword("TARGET")
-        tok = self.advance()
-        if tok.kind != "NUMBER":
-            raise ValueError("TARGET must be a positive byte count")
-        target_bytes = _require_positive_int(_to_number(tok.value), "TARGET")
-        self.expect_keyword("BYTES")
-        part_column, file_column, bytes_column = "part", "file_id", "bytes"
-        while True:
-            if self.at_keyword("PARTITION"):
-                self.advance()
-                self.expect_keyword("BY")
-                part_column = self.expect_name("partition column")
-            elif self.at_keyword("FILE"):
-                self.advance()
-                self.expect_keyword("BY")
-                file_column = self.expect_name("file column")
-            elif self.at_keyword("SIZE"):
-                self.advance()
-                self.expect_keyword("BY")
-                bytes_column = self.expect_name("size column")
-            else:
-                break
-        self.expect_eof()
-        return ir.CompactTable(
-            source=source,
-            target_bytes=target_bytes,
-            part_column=part_column,
-            file_column=file_column,
-            bytes_column=bytes_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- SHUFFLE (beyond-parity: SURVEY §2.11) ----------------------------
-    def parse_shuffle(self) -> "ir.ShuffleCorpus":
-        self.expect_keyword("SHUFFLE")
-        source = self.capture_source_until("EPOCHS")
-        if not source:
-            raise ValueError("SHUFFLE source cannot be empty")
-        self.expect_keyword("EPOCHS")
-        tok = self.advance()
-        if tok.kind != "NUMBER":
-            raise ValueError("EPOCHS must be a positive epoch count")
-        epochs = _require_positive_int(_to_number(tok.value), "EPOCHS")
-        n_shards = 8
-        if self.at_keyword("SHARDS"):
-            self.advance()
-            tok = self.advance()
-            if tok.kind != "NUMBER":
-                raise ValueError("SHARDS must be a positive shard count")
-            n_shards = _require_positive_int(_to_number(tok.value), "SHARDS")
-        id_column = "doc_id"
-        if self.at_keyword("BY"):
-            self.advance()
-            id_column = self.expect_name("id column")
-        self.expect_eof()
-        return ir.ShuffleCorpus(
-            source=source,
-            epochs=epochs,
-            n_shards=n_shards,
-            id_column=id_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- WEIGH (beyond-parity: SURVEY §2.11, DSIR selection) --------------
-    def parse_weigh(self) -> "ir.WeighCorpus":
-        self.expect_keyword("WEIGH")
-        source = self.capture_source_until("AGAINST")
-        if not source:
-            raise ValueError("WEIGH source cannot be empty")
-        self.expect_keyword("AGAINST")
-        tok = self.advance()
-        if tok.kind != "SQSTRING":
-            raise DSLSyntaxError(
-                f"Expected quoted target value at {tok.pos}, got {tok.value!r}"
-            )
-        target_value = tok.value[1:-1].replace("''", "'")
-        target_column = "source"
-        if self.at_keyword("ON"):
-            self.advance()
-            target_column = self.expect_name("target column")
-        buckets = 512
-        if self.at_keyword("BUCKETS"):
-            self.advance()
-            tok = self.advance()
-            if tok.kind != "NUMBER":
-                raise ValueError("BUCKETS must be a positive bucket count")
-            buckets = _require_positive_int(_to_number(tok.value), "BUCKETS")
-        self.expect_eof()
-        return ir.WeighCorpus(
-            source=source,
-            target_value=target_value,
-            target_column=target_column,
-            buckets=buckets,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- AUDIT ANONYMITY (beyond-parity: SURVEY §2.11) --------------------
-    def parse_audit(self) -> "ir.AuditAnonymity":
-        self.expect_keyword("AUDIT")
-        self.expect_keyword("ANONYMITY")
-        source = self.capture_source_until("ON")
-        if not source:
-            raise ValueError("AUDIT ANONYMITY source cannot be empty")
-        self.expect_keyword("ON")
-        columns = [self.expect_name("quasi-identifier column")]
-        while self.accept_op(","):
-            columns.append(self.expect_name("quasi-identifier column"))
-        risk = 5
-        if self.at_keyword("RISK"):
-            self.advance()
-            tok = self.advance()
-            if tok.kind != "NUMBER":
-                raise ValueError("RISK must be a positive class-size threshold")
-            risk = _require_positive_int(
-                _to_number(tok.value), "RISK class-size threshold"
-            )
-        self.expect_eof()
-        return ir.AuditAnonymity(
-            source=source,
-            columns=columns,
-            risk=risk,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- CALIBRATE DEDUP (beyond-parity: SURVEY §2.11) --------------------
-    def parse_calibrate(self) -> "ir.CalibrateDedup":
-        self.expect_keyword("CALIBRATE")
-        self.expect_keyword("DEDUP")
-        source = self.capture_source_until("THRESHOLDS", "ON")
-        if not source:
-            raise ValueError("CALIBRATE DEDUP source cannot be empty")
-        thresholds: list[float] | None = None
-        if self.at_keyword("THRESHOLDS"):
-            self.advance()
-            thresholds = []
-            while True:
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError(
-                        "THRESHOLDS must be numeric cutoffs in (0, 1]"
-                    )
-                thresholds.append(float(_to_number(tok.value)))
-                if not self.accept_op(","):
-                    break
-        text_column = "text"
-        if self.at_keyword("ON"):
-            self.advance()
-            text_column = self.expect_name("text column")
-        self.expect_eof()
-        kwargs = {} if thresholds is None else {"thresholds": thresholds}
-        return ir.CalibrateDedup(
-            source=source,
-            text_column=text_column,
-            source_is_identifier=is_identifier_source(source),
-            **kwargs,
-        )
-
-    # -- SCORE QUALITY (beyond-parity: SURVEY §2.11) ----------------------
-    def parse_score(self) -> "ir.ScoreQuality":
-        self.expect_keyword("SCORE")
-        self.expect_keyword("QUALITY")
-        source = self.capture_source_until("BUCKETS", "ON")
-        if not source:
-            raise ValueError("SCORE QUALITY source cannot be empty")
-        buckets = 512
-        if self.at_keyword("BUCKETS"):
-            self.advance()
-            tok = self.advance()
-            if tok.kind != "NUMBER":
-                raise ValueError("BUCKETS must be a positive bucket count")
-            buckets = _require_positive_int(_to_number(tok.value), "BUCKETS")
-        text_column = "text"
-        if self.at_keyword("ON"):
-            self.advance()
-            text_column = self.expect_name("text column")
-        self.expect_eof()
-        return ir.ScoreQuality(
-            source=source,
-            buckets=buckets,
-            text_column=text_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- PROFILE (beyond-parity: SURVEY §2.11) ----------------------------
-    def parse_profile(self) -> "ir.ProfileTable":
-        self.expect_keyword("PROFILE")
-        source = self.capture_source_until("ON")
-        if not source:
-            raise ValueError("PROFILE source cannot be empty")
-        self.expect_keyword("ON")
-        columns = [self.expect_name("column")]
-        while self.accept_op(","):
-            columns.append(self.expect_name("column"))
-        self.expect_eof()
-        return ir.ProfileTable(
-            source=source,
-            columns=columns,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- DETECT ANOMALIES (beyond-parity: SURVEY §2.11) -------------------
-    def parse_detect(self) -> "ir.DetectAnomalies":
-        self.expect_keyword("DETECT")
-        self.expect_keyword("ANOMALIES")
-        source = self.capture_source_until("BY", "ON", "WINDOW")
-        if not source:
-            raise ValueError("DETECT ANOMALIES source cannot be empty")
-        key = "event_type"
-        ts_column = None
-        window = 24
-        while True:
-            if self.at_keyword("BY"):
-                self.advance()
-                key = self.expect_name("key column")
-            elif self.at_keyword("ON"):
-                self.advance()
-                ts_column = self.expect_name("timestamp column")
-            elif self.at_keyword("WINDOW"):
-                self.advance()
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError("WINDOW must be a positive integer")
-                window = _require_positive_int(_to_number(tok.value), "WINDOW")
-            else:
-                break
-        self.expect_eof()
-        return ir.DetectAnomalies(
-            source=source,
-            key=key,
-            ts_column=ts_column,
-            window=window,
-            source_is_identifier=is_identifier_source(source),
-        )
-
     # -- SEARCH SIMILAR (beyond-parity: SURVEY §7.5) ----------------------
     def parse_search(self) -> "ir.SimilaritySearch":
         self.expect_keyword("SEARCH")
@@ -3015,6 +2530,12 @@ class _Parser:
         )
 
 
+def _unquote(tok: Token) -> str:
+    """A SQSTRING token's text: quotes stripped, ``''`` → ``'``
+    (reference: dsl/parser.py:135)."""
+    return tok.value[1:-1].replace("''", "'")
+
+
 def _to_number(text: str) -> Union[int, float]:
     return float(text) if ("." in text or "e" in text or "E" in text) else int(text)
 
@@ -3036,15 +2557,75 @@ def _require_positive_int(value: Any, what: str) -> int:
     return value
 
 
-_CTE_HOST_KEYWORDS = frozenset(
-    {
-        "TRAIN", "PREDICT", "EVALUATE", "DEPLOY", "MONITOR", "RETRAIN",
-        "EXPLAIN", "DEDUPLICATE", "SEARCH", "SAMPLE", "DECONTAMINATE",
-        "PACK", "REDACT", "CHUNK", "SESSIONIZE", "QUANTIZE", "MIX",
-        "PROFILE", "DETECT", "SHARD", "COMPACT", "SHUFFLE", "SCORE",
-        "WEIGH", "AUDIT", "CALIBRATE", "TOKENIZE", "DECODE", "RESIZE",
-    }
-)
+class _Syntax:
+    """A statement read from one syntax line (see the module
+    docstring): UPPERCASE literal keywords, ``<field:kind>`` slots,
+    then ``[optional clauses]`` in any order, the last occurrence
+    winning. Only the fields the statement names reach ``cls``, so
+    the IR dataclass holds every default and every value check."""
+
+    def __init__(self, cls: type, line: str):
+        required, *clauses = [
+            [tuple(w[1:-1].split(":")) if w[0] == "<" else w for w in part.split()]
+            for part in _re.split(r"\s*[\[\]]\s*", line)
+            if part.strip()
+        ]
+        self.cls = cls
+        self.required = required
+        self.clauses = {clause[0]: clause for clause in clauses}
+        self.head = " ".join(takewhile(lambda w: isinstance(w, str), required))
+
+    def __call__(self, parser: _Parser) -> Statement:
+        fields: dict[str, Any] = {}
+        self._read(parser, self.required, fields)
+        while parser.peek().kind == "NAME" and parser.peek().value in self.clauses:
+            self._read(parser, self.clauses[parser.peek().value], fields)
+        parser.expect_eof()
+        return self.cls(**fields)
+
+    def _read(self, p: _Parser, items: list, fields: dict) -> None:
+        keyword = ""
+        for j, item in enumerate(items):
+            if isinstance(item, str):
+                keyword = p.expect_keyword(item).value
+                continue
+            name, kind = item
+            what = name.replace("_", " ")
+            if kind == "source":
+                # up to the next literal keyword, else to any clause
+                stops = items[j + 1 : j + 2] or self.clauses
+                value = p.capture_source_until(*stops)
+                if not value:
+                    raise ValueError(f"{self.head} {name} cannot be empty")
+                fields[f"{name}_is_identifier"] = is_identifier_source(value)
+            elif kind == "name":
+                value = p.expect_name(what)
+            elif kind == "names":
+                value = [p.expect_name(what)]
+                while p.accept_op(","):
+                    value.append(p.expect_name(what))
+            elif kind == "quoted":
+                value = p.expect_quoted(what)
+            elif kind == "unit":
+                tok = p.advance()
+                value = tok.value.upper() if tok.kind == "NAME" else ""
+            elif kind == "int":
+                tok = p.advance()
+                if tok.kind != "NUMBER":
+                    raise ValueError(f"{keyword} must be a positive integer")
+                value = _to_number(tok.value)
+                if isinstance(value, float) and value.is_integer():
+                    value = int(value)
+            else:  # floats
+                value = []
+                while True:
+                    tok = p.advance()
+                    if tok.kind != "NUMBER":
+                        raise ValueError(f"{keyword} must be a list of numbers")
+                    value.append(float(_to_number(tok.value)))
+                    if not p.accept_op(","):
+                        break
+            fields[name] = value
 
 
 def parse_workflow_block_text(text: str) -> "ir.WorkflowBlock":
@@ -3124,9 +2705,10 @@ def _parse_cte_prefixed(parser: "_Parser") -> Statement:
     return stmt
 
 
-# The statement set, held once: leading keyword → parse method. Each
-# method consumes its own keyword(s); parse() dispatches here, and
-# _STATEMENT_STARTS and the unknown-statement error derive from it.
+# The statement set, held once: leading keyword → parse method or
+# syntax line. Each consumes its own keyword(s); parse() dispatches
+# here, and _STATEMENT_STARTS, _CTE_HOST_KEYWORDS and the
+# unknown-statement error derive from it.
 _STATEMENTS = {
     "TRAIN": _Parser.parse_train,
     "COMPUTE": _Parser.parse_compute,
@@ -3147,22 +2729,84 @@ _STATEMENTS = {
     "DECODE": _Parser.parse_decode,
     "RESIZE": _Parser.parse_resize,
     "LOAD": _Parser.parse_load_media,
-    "DECONTAMINATE": _Parser.parse_decontaminate,
-    "PACK": _Parser.parse_pack,
-    "REDACT": _Parser.parse_redact,
-    "CHUNK": _Parser.parse_chunk,
-    "SESSIONIZE": _Parser.parse_sessionize,
-    "QUANTIZE": _Parser.parse_quantize,
-    "MIX": _Parser.parse_mix,
-    "PROFILE": _Parser.parse_profile,
-    "DETECT": _Parser.parse_detect,
-    "SHARD": _Parser.parse_shard,
-    "COMPACT": _Parser.parse_compact,
-    "SHUFFLE": _Parser.parse_shuffle,
-    "SCORE": _Parser.parse_score,
-    "WEIGH": _Parser.parse_weigh,
-    "AUDIT": _Parser.parse_audit,
-    "CALIBRATE": _Parser.parse_calibrate,
+    "DECONTAMINATE": _Syntax(
+        ir.Decontaminate,
+        "DECONTAMINATE <source:source> AGAINST <benchmark:source>"
+        " [ON <column:name>] [THRESHOLD <threshold:int>]",
+    ),
+    "PACK": _Syntax(
+        ir.PackSequences,
+        "PACK <source:source> INTO <context:int> TOKEN CHUNKS"
+        " [BUCKETS <buckets:int>] [ON <column:name>]",
+    ),
+    "REDACT": _Syntax(
+        ir.RedactPII,
+        "REDACT <source:source> [ON <column:name>]",
+    ),
+    "CHUNK": _Syntax(
+        ir.ChunkWindows,
+        "CHUNK <source:source> INTO <win:int> TOKEN WINDOWS"
+        " [STRIDE <stride:int>] [ON <column:name>]",
+    ),
+    "SESSIONIZE": _Syntax(
+        ir.Sessionize,
+        "SESSIONIZE <source:source> BY <key:name>"
+        " [GAP <gap_value:int> <gap_unit:unit>] [ON <ts_column:name>]"
+        " [VALUE <value_column:name>]",
+    ),
+    "QUANTIZE": _Syntax(
+        ir.QuantizeEmbeddings,
+        "QUANTIZE EMBEDDINGS <source:source> [ON <column:name>]"
+        " [ID <id_column:name>]",
+    ),
+    "MIX": _Syntax(
+        ir.MixCorpus,
+        "MIX <source:source> [BY <by:name>] [TEMPERATURE <temperature:int>]",
+    ),
+    "PROFILE": _Syntax(
+        ir.ProfileTable,
+        "PROFILE <source:source> ON <columns:names>",
+    ),
+    "DETECT": _Syntax(
+        ir.DetectAnomalies,
+        "DETECT ANOMALIES <source:source> [BY <key:name>]"
+        " [ON <ts_column:name>] [WINDOW <window:int>]",
+    ),
+    "SHARD": _Syntax(
+        ir.ShardCorpus,
+        "SHARD <source:source> INTO <n_shards:int> SHARDS"
+        " [BY <id_column:name>]",
+    ),
+    "COMPACT": _Syntax(
+        ir.CompactTable,
+        "COMPACT <source:source> TARGET <target_bytes:int> BYTES"
+        " [PARTITION BY <part_column:name>] [FILE BY <file_column:name>]"
+        " [SIZE BY <bytes_column:name>]",
+    ),
+    "SHUFFLE": _Syntax(
+        ir.ShuffleCorpus,
+        "SHUFFLE <source:source> EPOCHS <epochs:int> [SHARDS <n_shards:int>]"
+        " [BY <id_column:name>]",
+    ),
+    "SCORE": _Syntax(
+        ir.ScoreQuality,
+        "SCORE QUALITY <source:source> [BUCKETS <buckets:int>]"
+        " [ON <text_column:name>]",
+    ),
+    "WEIGH": _Syntax(
+        ir.WeighCorpus,
+        "WEIGH <source:source> AGAINST <target_value:quoted>"
+        " [ON <target_column:name>] [BUCKETS <buckets:int>]",
+    ),
+    "AUDIT": _Syntax(
+        ir.AuditAnonymity,
+        "AUDIT ANONYMITY <source:source> ON <columns:names> [RISK <risk:int>]",
+    ),
+    "CALIBRATE": _Syntax(
+        ir.CalibrateDedup,
+        "CALIBRATE DEDUP <source:source> [THRESHOLDS <thresholds:floats>]"
+        " [ON <text_column:name>]",
+    ),
     "DROP": _Parser.parse_drop,
     "REFRESH": _Parser.parse_refresh,
     "SELECT": _Parser.parse_select_function,
@@ -3182,6 +2826,15 @@ _STATEMENTS = {
 # chain-AND splitter consults this so a statement's own conjunctions
 # never split the chain. ROLLBACK and BEGIN only open chain actions.
 _STATEMENT_STARTS = frozenset(_STATEMENTS) | {"ROLLBACK", "BEGIN"}
+
+# The statements a WITH prefix can feed: every syntax line, plus the
+# hand-written statements that read a source.
+_CTE_HOST_KEYWORDS = frozenset(
+    k for k, v in _STATEMENTS.items() if isinstance(v, _Syntax)
+) | {
+    "TRAIN", "PREDICT", "EVALUATE", "DEPLOY", "MONITOR", "RETRAIN", "EXPLAIN",
+    "DEDUPLICATE", "SEARCH", "SAMPLE", "TOKENIZE", "DECODE", "RESIZE",
+}
 
 
 def parse(text: str) -> Statement:

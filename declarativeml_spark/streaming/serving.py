@@ -23,7 +23,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from declarativeml_spark.ml.models import registry_load
+from declarativeml_spark.ml.models import registry_load, registry_meta
 
 
 def serve_model_stream(
@@ -50,15 +50,18 @@ def serve_model_stream(
     """
     if not stream_df.isStreaming:
         raise ValueError("serve_model_stream needs a streaming DataFrame")
-    model = registry_load(spark, model_name, base=base)
+    version = None
     if features is None:
         # models trained with derived expressions assemble from
         # materialized __feat_i columns (plans/builder.py) — without
         # rebuilding them here the VectorAssembler's inputs are
-        # missing from the stream and the query fails at start
-        from declarativeml_spark.ml.models import registry_meta
-
-        features = registry_meta(model_name, base=base).get("features")
+        # missing from the stream and the query fails at start. The
+        # model loads pinned to the record read here, so a TRAIN in
+        # between cannot pair one version's model with another's
+        # features.
+        meta = registry_meta(model_name, base=base)
+        features, version = meta.get("features"), meta.get("version")
+    model = registry_load(spark, model_name, version=version, base=base)
     if features:
         from declarativeml_spark.plans.builder import build_features
 
@@ -123,10 +126,9 @@ def measure_serving_latency(
 
     from pyspark.sql import functions as F
 
-    model = registry_load(spark, model_name, base=base)
-    from declarativeml_spark.ml.models import registry_meta
-
-    features = registry_meta(model_name, base=base).get("features")
+    meta = registry_meta(model_name, base=base)
+    model = registry_load(spark, model_name, version=meta.get("version"), base=base)
+    features = meta.get("features")
 
     stream = (
         spark.readStream.format("rate")

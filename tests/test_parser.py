@@ -3,12 +3,14 @@
 cases, option validation, injection blocking, Hypothesis round-trip).
 """
 
+import dataclasses
+
 import pytest
 from hypothesis import given
 from hypothesis import strategies as st
 
 from declarativeml_spark import ComputeKernel, DataSplit, TrainModel, parse
-from declarativeml_spark.dsl import DSLSyntaxError
+from declarativeml_spark.dsl import DSLSyntaxError, ir
 from declarativeml_spark.dsl.features import feature_to_spark_sql
 from declarativeml_spark.dsl.ir import EvaluateModel, PredictModel
 from declarativeml_spark.dsl.source import validate_source_fragment
@@ -310,7 +312,9 @@ _STATEMENT_HEADS = [
     "RETRAIN", "REGISTER AGENT", "PUBLISH EVENT", "SUBSCRIBE TO",
     "WAIT FOR EVENT", "SHARD", "COMPACT", "DEDUPLICATE", "WEIGH",
     "SCORE QUALITY", "SEARCH SIMILAR", "QUANTIZE EMBEDDINGS",
-    "DECONTAMINATE", "PACK", "SAMPLE",
+    "DECONTAMINATE", "PACK", "SAMPLE", "REDACT", "CHUNK", "SESSIONIZE",
+    "MIX", "PROFILE", "DETECT ANOMALIES", "SHUFFLE", "AUDIT ANONYMITY",
+    "CALIBRATE DEDUP",
 ]
 
 
@@ -580,3 +584,200 @@ def test_every_statement_kind_has_one_engine_handler():
     from declarativeml_spark.engine import Engine
 
     assert set(Engine._HANDLERS) == set(typing.get_args(Statement))
+
+
+# -- syntax-line statements ------------------------------------------------
+# The source-plus-clauses statements are read from one syntax line each
+# (parser._Syntax). The golden IRs pin the minimal and the full form of
+# every one of them.
+
+_SYNTAX_GOLDEN = [
+    ("DECONTAMINATE documents AGAINST eval_set",
+     ir.Decontaminate(source="documents", benchmark="eval_set", column=None,
+                      threshold=3, source_is_identifier=True,
+                      benchmark_is_identifier=True)),
+    ("DECONTAMINATE documents AGAINST eval_set ON body THRESHOLD 5",
+     ir.Decontaminate(source="documents", benchmark="eval_set", column="body",
+                      threshold=5, source_is_identifier=True,
+                      benchmark_is_identifier=True)),
+    ("PACK documents INTO 512 TOKEN CHUNKS",
+     ir.PackSequences(source="documents", context=512, buckets=8, column=None,
+                      source_is_identifier=True)),
+    ("PACK documents INTO 2048 TOKEN CHUNKS BUCKETS 16 ON body",
+     ir.PackSequences(source="documents", context=2048, buckets=16,
+                      column="body", source_is_identifier=True)),
+    ("REDACT documents",
+     ir.RedactPII(source="documents", column=None, source_is_identifier=True)),
+    ("REDACT documents ON body",
+     ir.RedactPII(source="documents", column="body",
+                  source_is_identifier=True)),
+    ("CHUNK documents INTO 32 TOKEN WINDOWS",
+     ir.ChunkWindows(source="documents", win=32, stride=32, column=None,
+                     source_is_identifier=True)),
+    ("CHUNK documents INTO 32 TOKEN WINDOWS STRIDE 24 ON body",
+     ir.ChunkWindows(source="documents", win=32, stride=24, column="body",
+                     source_is_identifier=True)),
+    ("SESSIONIZE events BY user_id",
+     ir.Sessionize(source="events", key="user_id", gap_value=30,
+                   gap_unit="MINUTES", ts_column=None, value_column=None,
+                   source_is_identifier=True)),
+    ("SESSIONIZE events BY user_id GAP 2 hours ON ts VALUE value",
+     ir.Sessionize(source="events", key="user_id", gap_value=2,
+                   gap_unit="HOURS", ts_column="ts", value_column="value",
+                   source_is_identifier=True)),
+    ("QUANTIZE EMBEDDINGS embeddings",
+     ir.QuantizeEmbeddings(source="embeddings", column=None, id_column=None,
+                           source_is_identifier=True)),
+    ("QUANTIZE EMBEDDINGS embeddings ON embedding ID vec_id",
+     ir.QuantizeEmbeddings(source="embeddings", column="embedding",
+                           id_column="vec_id", source_is_identifier=True)),
+    ("MIX documents",
+     ir.MixCorpus(source="documents", by="source", temperature=2,
+                  source_is_identifier=True)),
+    ("MIX documents BY lang TEMPERATURE 2.0",
+     ir.MixCorpus(source="documents", by="lang", temperature=2,
+                  source_is_identifier=True)),
+    ("PROFILE lineitem ON l_quantity",
+     ir.ProfileTable(source="lineitem", columns=["l_quantity"],
+                     source_is_identifier=True)),
+    ("PROFILE lineitem ON l_quantity, l_extendedprice",
+     ir.ProfileTable(source="lineitem",
+                     columns=["l_quantity", "l_extendedprice"],
+                     source_is_identifier=True)),
+    ("DETECT ANOMALIES events",
+     ir.DetectAnomalies(source="events", key="event_type", ts_column=None,
+                        window=24, source_is_identifier=True)),
+    ("DETECT ANOMALIES events BY event_type ON ts WINDOW 12",
+     ir.DetectAnomalies(source="events", key="event_type", ts_column="ts",
+                        window=12, source_is_identifier=True)),
+    ("SHARD documents INTO 16 SHARDS",
+     ir.ShardCorpus(source="documents", n_shards=16, id_column="doc_id",
+                    source_is_identifier=True)),
+    ("SHARD embeddings INTO 4 SHARDS BY vec_id",
+     ir.ShardCorpus(source="embeddings", n_shards=4, id_column="vec_id",
+                    source_is_identifier=True)),
+    ("COMPACT manifest TARGET 262144 BYTES",
+     ir.CompactTable(source="manifest", target_bytes=262144,
+                     part_column="part", file_column="file_id",
+                     bytes_column="bytes", source_is_identifier=True)),
+    ("COMPACT manifest TARGET 1048576 BYTES PARTITION BY dt FILE BY path"
+     " SIZE BY sz",
+     ir.CompactTable(source="manifest", target_bytes=1048576,
+                     part_column="dt", file_column="path", bytes_column="sz",
+                     source_is_identifier=True)),
+    ("SHUFFLE documents EPOCHS 3",
+     ir.ShuffleCorpus(source="documents", epochs=3, n_shards=8,
+                      id_column="doc_id", source_is_identifier=True)),
+    ("SHUFFLE documents EPOCHS 2 SHARDS 4 BY doc_id",
+     ir.ShuffleCorpus(source="documents", epochs=2, n_shards=4,
+                      id_column="doc_id", source_is_identifier=True)),
+    ("SCORE QUALITY documents",
+     ir.ScoreQuality(source="documents", buckets=512, text_column="text",
+                     source_is_identifier=True)),
+    ("SCORE QUALITY documents BUCKETS 256 ON body",
+     ir.ScoreQuality(source="documents", buckets=256, text_column="body",
+                     source_is_identifier=True)),
+    ("WEIGH documents AGAINST 'src0'",
+     ir.WeighCorpus(source="documents", target_value="src0",
+                    target_column="source", buckets=512,
+                    source_is_identifier=True)),
+    ("WEIGH documents AGAINST 'it''s' ON source BUCKETS 64",
+     ir.WeighCorpus(source="documents", target_value="it's",
+                    target_column="source", buckets=64,
+                    source_is_identifier=True)),
+    ("AUDIT ANONYMITY events ON event_type",
+     ir.AuditAnonymity(source="events", columns=["event_type"], risk=5,
+                       source_is_identifier=True)),
+    ("AUDIT ANONYMITY events ON event_type, user_id RISK 3",
+     ir.AuditAnonymity(source="events", columns=["event_type", "user_id"],
+                       risk=3, source_is_identifier=True)),
+    ("CALIBRATE DEDUP documents",
+     ir.CalibrateDedup(source="documents",
+                       thresholds=[0.05, 0.1, 0.15, 0.2, 0.3, 0.4, 0.5, 0.75],
+                       text_column="text", source_is_identifier=True)),
+    ("CALIBRATE DEDUP documents THRESHOLDS 0.1, 0.5, 1 ON body",
+     ir.CalibrateDedup(source="documents", thresholds=[0.1, 0.5, 1.0],
+                       text_column="body", source_is_identifier=True)),
+]
+
+
+def _typed_fields(stmt):
+    return [(f.name, getattr(stmt, f.name), type(getattr(stmt, f.name)))
+            for f in dataclasses.fields(stmt)]
+
+
+@pytest.mark.parametrize(
+    "text,want", _SYNTAX_GOLDEN, ids=[t for t, _ in _SYNTAX_GOLDEN]
+)
+def test_syntax_line_golden_ir(text, want):
+    """Minimal and full form of every syntax-line statement: same IR,
+    field types included (``2.0`` reads as the int 2)."""
+    got = parse(text)
+    assert got == want
+    assert _typed_fields(got) == _typed_fields(want)
+
+
+def test_syntax_golden_covers_every_syntax_line():
+    from declarativeml_spark.dsl.parser import _STATEMENTS, _Syntax
+
+    syntax_kinds = {s.cls for s in _STATEMENTS.values() if isinstance(s, _Syntax)}
+    assert syntax_kinds == {type(want) for _, want in _SYNTAX_GOLDEN}
+    assert len(syntax_kinds) == 16
+
+
+@pytest.mark.parametrize(
+    "text,field,value",
+    [
+        ("PACK d JOIN m ON d.id = m.id INTO 512 TOKEN CHUNKS ON body",
+         "context", 512),
+        ("SHARD d JOIN m ON d.id = m.id INTO 4 SHARDS BY id", "n_shards", 4),
+        ("DECONTAMINATE d JOIN m ON d.id = m.id AGAINST b ON body",
+         "benchmark", "b"),
+    ],
+)
+def test_syntax_line_join_source_keeps_its_on(text, field, value):
+    """A source stops only at the keyword that follows it, so the
+    join's own ON stays inside the source."""
+    stmt = parse(text)
+    assert stmt.source == "d JOIN m ON d.id = m.id"
+    assert stmt.source_is_identifier is False
+    assert getattr(stmt, field) == value
+
+
+@pytest.mark.parametrize(
+    "text,want",
+    [
+        ("SHUFFLE documents EPOCHS 2 BY id SHARDS 4",
+         ir.ShuffleCorpus(source="documents", epochs=2, n_shards=4,
+                          id_column="id")),
+        ("SCORE QUALITY documents ON body BUCKETS 256",
+         ir.ScoreQuality(source="documents", buckets=256, text_column="body")),
+        ("WEIGH documents AGAINST 'src0' BUCKETS 64 ON lang",
+         ir.WeighCorpus(source="documents", target_value="src0",
+                        target_column="lang", buckets=64)),
+        ("CALIBRATE DEDUP documents ON body THRESHOLDS 0.2, 0.4",
+         ir.CalibrateDedup(source="documents", thresholds=[0.2, 0.4],
+                           text_column="body")),
+    ],
+)
+def test_syntax_line_optional_clauses_in_any_order(text, want):
+    assert parse(text) == want
+
+
+def test_syntax_line_slots_name_every_ir_field():
+    """Each field of a syntax line's IR class is filled by a slot, or
+    is the ``<slot>_is_identifier`` flag of a source slot — a field
+    the line cannot reach would silently keep its default."""
+    from declarativeml_spark.dsl.parser import _STATEMENTS, _Syntax
+
+    for keyword, syntax in _STATEMENTS.items():
+        if not isinstance(syntax, _Syntax):
+            continue
+        items = syntax.required + [w for c in syntax.clauses.values() for w in c]
+        slots = {w for w in items if isinstance(w, tuple)}
+        named = {name for name, _ in slots} | {
+            f"{name}_is_identifier" for name, kind in slots if kind == "source"
+        }
+        fields = {f.name for f in dataclasses.fields(syntax.cls)}
+        assert fields == named, keyword
+        assert syntax.required[0] == keyword

@@ -8,7 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from declarativeml_spark.engine import Engine
+from declarativeml_spark.ml.models import registry_load, registry_meta
 from declarativeml_spark.sources.catalog import load_table, register_views
+from declarativeml_spark.streaming import serving
 from declarativeml_spark.streaming.serving import serve_model_stream
 
 
@@ -72,7 +74,7 @@ def test_serve_requires_streaming_df(spark, smoke_dir, served):
 
 
 def test_serve_derived_features_from_registry_meta(
-    spark, smoke_dir, served, tmp_path
+    spark, smoke_dir, served, tmp_path, monkeypatch
 ):
     """With ``features`` omitted, serving must rebuild the model's
     feature expressions from registry metadata — a model trained on a
@@ -91,6 +93,16 @@ def test_serve_derived_features_from_registry_meta(
     src.write.parquet(stream_dir)
     stream_df = spark.readStream.schema(src.schema).parquet(stream_dir)
 
+    # the model loads pinned to the version of the record whose
+    # features it serves — an unpinned load could pick up a version a
+    # TRAIN registered after the record was read
+    loaded_versions = []
+
+    def recording_load(*args, version=None, **kwargs):
+        loaded_versions.append(version)
+        return registry_load(*args, version=version, **kwargs)
+
+    monkeypatch.setattr(serving, "registry_load", recording_load)
     q = serve_model_stream(
         spark,
         "serve_derived",
@@ -101,6 +113,8 @@ def test_serve_derived_features_from_registry_meta(
     )
     q.awaitTermination(120)
     assert spark.table("served_derived").count() == src.count()
+    record = registry_meta("serve_derived", base=model_dir)
+    assert loaded_versions == [record["version"]]
 
 
 def test_registry_load_refuses_fully_rolled_back(spark, served):
