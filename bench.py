@@ -50,6 +50,13 @@ def calibration_probe(spark) -> dict:
     return probes
 
 
+def codegen_compiles(spark) -> int:
+    """Generated classes compiled in this JVM so far: each is a miss
+    of Spark's generated-code cache (session.py sizes it)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument(
@@ -128,6 +135,7 @@ def main() -> int:
     probe_before = calibration_probe(spark)
     print(f"# probe before: {probe_before}", file=sys.stderr)
 
+    compiles_before = codegen_compiles(spark)
     timings: dict[str, float] = {name: run_once(name) for name in names}
 
     # The host's wall clock is bursty (IO/steal spikes inflate a query
@@ -141,6 +149,7 @@ def main() -> int:
         for name in [n for n, t in timings.items() if t > cutoff]:
             print(f"# re-measuring outlier {name}", file=sys.stderr)
             timings[name] = min(timings[name], run_once(name))
+    compiles = codegen_compiles(spark) - compiles_before
 
     probe_after = calibration_probe(spark)
     print(f"# probe after: {probe_after}", file=sys.stderr)
@@ -158,6 +167,10 @@ def main() -> int:
     full = {
         **summary,
         "queries": timings,
+        # generated classes the sweep compiled; above the distinct
+        # count in docs/BENCH_NOTES.md, the codegen cache evicted
+        # classes the sweep needed again
+        "codegen_compiles": compiles,
         # host-state calibration (see calibration_probe): compare a
         # flagged query's round-over-round ratio against these probes'
         # ratio before calling it a code regression

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from typing import TYPE_CHECKING, Optional
 
@@ -69,18 +70,30 @@ def _install_fast_params_writer() -> None:
                 path[len("file://"):] if path.startswith("file://") else None
             )
             if local is not None:
+                mdir = os.path.join(local, "metadata")
                 try:
-                    mdir = os.path.join(local, "metadata")
-                    os.makedirs(mdir, exist_ok=True)
-                    tmp = os.path.join(mdir, "part-00000.tmp")
-                    with open(tmp, "w", encoding="utf-8") as mf:
-                        mf.write(metadata_json + "\n")
-                    os.replace(tmp, os.path.join(mdir, "part-00000"))
-                    with open(os.path.join(mdir, "_SUCCESS"), "w"):
-                        pass
-                    return
+                    # no exist_ok: an existing metadata/ (a non-overwrite
+                    # save onto a saved model; an overwrite save has
+                    # deleted it already) falls through to Spark's
+                    # writer, which refuses it as the stock writer does
+                    os.makedirs(mdir)
                 except OSError:
-                    pass  # unwritable locally: fall through to Spark
+                    pass
+                else:
+                    # dot-prefixed, so textFile never reads a torn
+                    # staging file back as metadata
+                    tmp = os.path.join(mdir, ".part-00000.tmp")
+                    try:
+                        with open(tmp, "w", encoding="utf-8") as mf:
+                            mf.write(metadata_json + "\n")
+                        os.replace(tmp, os.path.join(mdir, "part-00000"))
+                        with open(os.path.join(mdir, "_SUCCESS"), "w"):
+                            pass
+                        return
+                    except OSError:
+                        # unwritable locally: drop the directory this
+                        # call created and let Spark write it
+                        shutil.rmtree(mdir, ignore_errors=True)
             try:
                 # parallelize raises before any output exists, so the
                 # fallback never collides with partial metadata files
@@ -236,8 +249,6 @@ def registry_save(
     except BaseException:
         # release the claim: an empty orphan dir would otherwise make
         # next_version skip this slot forever
-        import shutil
-
         shutil.rmtree(path, ignore_errors=True)
         raise
     record = {
@@ -263,8 +274,6 @@ def registry_save(
         # an unregistered artifact is an invisible orphan that
         # next_version skips forever and previous_<metric> lookups
         # silently resolve past — remove it and surface the failure
-        import shutil
-
         shutil.rmtree(path, ignore_errors=True)
         raise
     # mutate the caller's handle only once version+record BOTH exist

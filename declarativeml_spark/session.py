@@ -58,6 +58,12 @@ def get_spark(app_name: str = "declarativeml_spark", cpus: str | None = None) ->
             ),
         )
         .config("spark.ui.enabled", "false")
+        # generated-code cache, sized to the engine's working set (see
+        # "Warm-session caches" in docs/BENCH_NOTES.md). At Spark's
+        # default of 100 a warm pass over a cyclic working set larger
+        # than the LRU recompiles every class it needs. A static conf:
+        # it holds for the JVM whose first session this builder starts.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.parquet.filterPushdown", "true")
         # testdata events.ts is TIMESTAMP(NANOS); Spark has no ns type —
         # read as long and convert in the catalog (catalog.py).

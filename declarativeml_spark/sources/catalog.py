@@ -15,6 +15,7 @@ eagerly.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +34,56 @@ TABLES = (
 )
 
 
+#: Raw parquet schemas read in one application: ``{"app": application
+#: id, "schemas": {path: (fingerprint, StructType)}}``. A different
+#: application id empties it, so entries never outlive their
+#: SparkContext.
+_SCHEMA_MEMO: dict = {"app": None, "schemas": {}}
+
+
+def _fingerprint(path: str):
+    """What the bytes under ``path`` look like to ``os.stat``: a
+    file's ``(size, mtime_ns)``, or a directory tree's sorted
+    ``(relative name, size, mtime_ns)`` listing. ``None`` when the
+    path cannot be seen locally (missing, a non-local URI, or a file
+    that vanished mid-listing)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        listing = []
+        for d, _, files in os.walk(path):
+            for n in files:
+                f = os.path.join(d, n)
+                fst = os.stat(f)
+                rel = os.path.relpath(f, path)
+                listing.append((rel, fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(listing))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job
+    on a warm read: the schema the first read inferred is supplied to
+    the reader for as long as the application and the bytes on disk
+    are the same. A supplied schema equal to the inferred one gives
+    the same plan, so results do not change."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return spark.read.parquet(path)
+    app = spark.conf.get("spark.app.id")  # no sparkContext under Connect
+    if _SCHEMA_MEMO["app"] != app:
+        _SCHEMA_MEMO["app"], _SCHEMA_MEMO["schemas"] = app, {}
+    schemas = _SCHEMA_MEMO["schemas"]
+    hit = schemas.get(path)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[path] = (fp, df.schema)
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
@@ -49,6 +100,15 @@ def load_table(
     textops.spread documents; never for plans that depend on
     partition placement or row order.
 
+    The raw parquet schema is memoized per application (see
+    ``_read_parquet``): the first read of a file infers it with a
+    one-task Spark job, and every later read of the same bytes passes
+    it to ``spark.read.schema(...)`` and runs no job at all. A
+    rewritten file (new size, mtime or, for a directory, listing), a
+    new SparkContext, or a path ``os.stat`` cannot see (missing, or a
+    non-local URI) all read with inference exactly as before, so a
+    missing table still raises the reader's PATH_NOT_FOUND.
+
     ``events.ts`` is parquet TIMESTAMP(NANOS). On the current runtime
     (verified on Spark 4.1.2) that type is UNREADABLE without
     ``spark.sql.legacy.parquet.nanosAsLong`` — the scan throws
@@ -57,14 +117,15 @@ def load_table(
     therefore load-bearing for every session not built by
     session.py, not merely defensive. Note the set is session-wide
     and deliberately NOT restored: Spark captures SQLConf at query
-    EXECUTION, so restoring it after the eager schema read would
-    break this very DataFrame's later jobs — the trade is that other
+    EXECUTION, so restoring it after the read would break this very
+    DataFrame's later jobs — the trade is that other
     TIMESTAMP(NANOS) sources read in the same session also arrive as
     bigint (loudly typed, never silently shifted). Either way ``ts``
     normalizes to TIMESTAMP_NTZ — the tz-independent type whose
     wall-clock values match DuckDB's reading of the same file — so
     every downstream query sees one canonical ``ts`` regardless of
-    who built the session or what its timezone is.
+    who built the session, what its timezone is, or whether the
+    schema came from the memo.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -83,7 +144,7 @@ def load_table(
                 RuntimeWarning,
                 stacklevel=2,
             )
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -1,5 +1,6 @@
 """sources/catalog.py contracts: nanos normalization, tz
-independence, view registration (round-10 review sweep)."""
+independence, view registration (round-10 review sweep), and the
+per-application parquet schema memo."""
 
 import warnings
 
@@ -78,5 +79,68 @@ def test_register_views_warns_on_missing_tables(spark, tmp_path, smoke_dir):
     msgs = [str(x.message) for x in w if "register_views" in str(x.message)]
     assert msgs and "nation" in msgs[0]
     assert spark.table("region").count() > 0
+    # again, with region's schema memoized: the missing table still
+    # reaches the reader's PATH_NOT_FOUND and still warns
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        register_views(spark, d, tables=("region", "nation"))
+    msgs = [str(x.message) for x in w if "register_views" in str(x.message)]
+    assert msgs and "nation" in msgs[0] and "region" not in msgs[0]
     # restore the real views for other modules sharing the session
     register_views(spark, smoke_dir)
+
+
+def _jobs(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _sorted_rows(df):
+    return sorted(df.collect(), key=repr)
+
+
+def test_warm_load_table_runs_no_job_and_matches_inferred_read(spark, smoke_dir):
+    load_table(spark, smoke_dir, "orders")  # first touch may infer
+    j0 = _jobs(spark)
+    warm = load_table(spark, smoke_dir, "orders")
+    assert _jobs(spark) - j0 == 0
+    inferred = spark.read.parquet(f"{smoke_dir}/orders.parquet")
+    assert warm.schema == inferred.schema
+    assert _sorted_rows(warm) == _sorted_rows(inferred)
+
+
+def test_rewritten_parquet_is_seen_on_next_load(spark, tmp_path):
+    """A table rewritten mid-session with other columns is read with
+    its new schema: the memo key carries the bytes' size and mtime
+    (a file) or listing (a directory)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path)
+    f = f"{d}/t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), f)
+    assert load_table(spark, d, "t").columns == ["a"]
+    assert load_table(spark, d, "t").columns == ["a"]  # a memo hit
+    pq.write_table(pa.table({"b": [4, 5], "c": ["x", "y"]}), f)
+    assert load_table(spark, d, "t").collect() == [(4, "x"), (5, "y")]
+
+    spark.range(3).toDF("a").write.parquet(f"{d}/u.parquet")
+    assert load_table(spark, d, "u").columns == ["a"]
+    spark.range(2).selectExpr("id AS b", "'z' AS c").write.mode(
+        "overwrite"
+    ).parquet(f"{d}/u.parquet")
+    got = load_table(spark, d, "u")
+    assert got.columns == ["b", "c"]
+    assert sorted(got.collect()) == [(0, "z"), (1, "z")]
+
+
+def test_memo_hit_on_events_keeps_ts_ntz(spark, smoke_dir):
+    first = load_table(spark, smoke_dir, "events")
+    j0 = _jobs(spark)
+    hit = load_table(spark, smoke_dir, "events")
+    assert _jobs(spark) - j0 == 0
+    assert dict(hit.dtypes)["ts"] == "timestamp_ntz"
+
+    def us(df):
+        return sorted(r.e for r in df.select(epoch_us("ts").alias("e")).collect())
+
+    assert us(hit) == us(first)

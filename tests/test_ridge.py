@@ -94,3 +94,49 @@ def test_ridge_through_engine_train_predict(spark, sf_dir, tmp_path):
     scored = eng.execute("PREDICT USING MODEL ridge_t FROM li_ridge_test")
     assert "prediction" in scored.columns
     assert scored.filter(F.col("prediction").isNull()).count() == 0
+
+
+def test_torn_metadata_write_leaves_no_visible_part_file(spark, tmp_path, monkeypatch):
+    """The local metadata writer stages under a name Hadoop's textFile
+    hides, and a failed rename leaves only what Spark's writer wrote:
+    one complete part file the model loads back from."""
+    import declarativeml_spark.ml.models  # noqa: F401 — installs the writer
+
+    real_replace = os.replace
+    staged = []
+
+    def torn(src, dst):
+        staged.append(os.path.basename(src))
+        raise OSError("simulated crash before the rename")
+
+    model = RidgeClosedFormModel(intercept=1.5, coefficients=[2.0, -0.5])
+    path = os.path.join(str(tmp_path), "torn")
+    monkeypatch.setattr(os, "replace", torn)
+    model.write().save(path)
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    assert staged and all(n.startswith(".") for n in staged)
+    mdir = os.path.join(path, "metadata")
+    visible = [n for n in os.listdir(mdir) if not n.startswith((".", "_"))]
+    assert not [n for n in visible if n.endswith(".tmp")]
+    back = RidgeClosedFormModel.load(path)
+    assert back.getCoefficients() == [2.0, -0.5]
+    assert back.getIntercept() == 1.5
+
+
+def test_second_non_overwrite_save_raises(spark, tmp_path):
+    """A non-overwrite save onto a saved Python-stage model fails as
+    Spark's own writer does, instead of silently replacing it."""
+    from pyspark.errors.exceptions.captured import AnalysisException
+
+    import declarativeml_spark.ml.models  # noqa: F401 — installs the writer
+
+    path = os.path.join(str(tmp_path), "twice")
+    RidgeClosedFormModel(intercept=1.0, coefficients=[1.0]).write().save(path)
+    again = RidgeClosedFormModel(intercept=9.0, coefficients=[9.0])
+    with pytest.raises(AnalysisException, match="PATH_ALREADY_EXISTS"):
+        again.write().save(path)
+    assert RidgeClosedFormModel.load(path).getIntercept() == 1.0
+    # an overwrite save still replaces it
+    again.write().overwrite().save(path)
+    assert RidgeClosedFormModel.load(path).getIntercept() == 9.0
