@@ -855,8 +855,7 @@ class DetectAnomalies:
     Per (key, hour) z-scores against the preceding ``window`` hourly
     buckets (see operators/anomaly.py::rate_anomalies;
     queries/pipeline5.py::events_rate_anomalies is the oracle-checked
-    twin, streaming/stateful.py::streaming_rate_anomalies the
-    streaming one).
+    twin).
     """
 
     source: str

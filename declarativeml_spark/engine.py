@@ -420,10 +420,7 @@ class Engine:
                 self._release_index(old)
             for target in storage_targets:
                 if target in self._created_storage:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {target}")
-                    loc = os.path.join(wh, target.lower())
-                    if os.path.isdir(loc):
-                        shutil.rmtree(loc, ignore_errors=True)
+                    self._drop_storage(target)
             self._created_storage.update(storage_targets)
         mark = caching.scope_mark()
         try:
@@ -750,13 +747,7 @@ class Engine:
         for f in rec.get("checkpointed", ()):  # refresh generations
             release_checkpoint(f)
         for t in rec.get("tables", ()):
-            try:
-                self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
-            # the name is free again — a table the USER creates under
-            # it later must not be silently cleanable on rebuild
-            self._created_storage.discard(t)
+            self._drop_storage(t)
 
     def _drop_index(self, stmt: "ir.DropIndex") -> dict:
         rec = self.indexes.pop(stmt.name, None)
@@ -880,6 +871,13 @@ class Engine:
             ignore_errors=True,
         )
 
+    def _drop_storage(self, t: str) -> None:
+        """Drop an engine-written storage table (best effort) and forget
+        it: the name is free again, so a table the USER creates under it
+        later must not be silently cleanable on rebuild."""
+        self._clean_table(t)
+        self._created_storage.discard(t)
+
     def _swap_write(self, frame: DataFrame, t: str) -> None:
         """Replace existing table ``t`` with ``frame`` so that a failed
         write leaves the good copy intact: save ``<t>__swap`` first,
@@ -933,48 +931,6 @@ class Engine:
             f"ALTER TABLE {table} SET TBLPROPERTIES"
             f" ('{self._INDEX_STORAGE_PROP}'='1')"
         )
-
-    def mark_legacy_index_storage(self, name: str) -> list:
-        """One-time migration for stored indexes persisted BEFORE the
-        ownership mark existed: stamp the registry row's storage
-        tables so adoption/reclaim accept them again.
-
-        Deliberately an EXPLICIT operator action, never automatic —
-        auto-marking anything a registry row points at would reopen
-        the squatting hole the mark closes (a user table reusing a
-        recorded name would get claimed). The caller asserts "these
-        tables really are index storage"; the shape subset is still
-        required. Returns the tables marked.
-        """
-        rows = [
-            r
-            for r in (self._read_index_registry() or [])
-            if r["index_name"] == name
-        ]
-        if not rows:
-            raise ValueError(f"Unknown index {name!r}: no registry row")
-        row = rows[0]
-        marked = []
-        for t, required in self._index_table_shapes(
-            row["method"], list(row["tables"])
-        ).items():
-            if not self.spark.catalog.tableExists(t):
-                # a silent skip here would report a no-op migration as
-                # success; mirror _adopt_stored_index's missing-storage
-                # error instead
-                raise ValueError(
-                    f"Cannot mark index {name!r}: its storage table"
-                    f" {t!r} is gone (dropped out of band?) — CREATE"
-                    " INDEX to rebuild instead"
-                )
-            if not required <= set(self.spark.table(t).columns):
-                raise ValueError(
-                    f"Refusing to mark {t!r}: it does not have index"
-                    f" {name!r}'s storage columns {sorted(required)}"
-                )
-            self._mark_index_storage(t)
-            marked.append(t)
-        return marked
 
     def _has_table_prop(self, table: str, prop: str) -> bool:
         from pyspark.errors import AnalysisException
@@ -1034,8 +990,7 @@ class Engine:
             ):
                 skipped.append(t)
                 continue
-            self._clean_table(t)
-            self._created_storage.discard(t)
+            self._drop_storage(t)
         return skipped
 
     def _reclaim_registry_row(
@@ -1138,9 +1093,6 @@ class Engine:
                     " not look like its index storage (columns"
                     f" {sorted(have)}, ownership mark {marked}) — the"
                     " name was likely reused; CREATE INDEX to rebuild"
-                    " (or, for storage written before the ownership"
-                    " mark existed, run"
-                    f" Engine.mark_legacy_index_storage({name!r}) once)"
                 )
         if row["method"] == "ivf":
             frames = {
@@ -1247,11 +1199,7 @@ class Engine:
             old_table = self.tokenizer_tables.get(stmt.name)
             if old_table and old_table != t:
                 # retrained under a new table: release the old one
-                try:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {old_table}")
-                except Exception:  # noqa: BLE001 — best-effort cleanup
-                    pass
-                self._created_storage.discard(old_table)
+                self._drop_storage(old_table)
             self.tokenizer_tables[stmt.name] = t
             merges = self.spark.table(t)  # serve from the durable form
         self.tokenizers[stmt.name] = merges
@@ -1291,8 +1239,7 @@ class Engine:
                 merges.write.saveAsTable(t)
             except BaseException:
                 # no prior table to protect: unmark and clean partials
-                self._clean_table(t)
-                self._created_storage.discard(t)
+                self._drop_storage(t)
                 raise
         self._created_storage.add(t)
 
@@ -1378,11 +1325,7 @@ class Engine:
         self.tokenizers.pop(stmt.name, None)
         t = self.tokenizer_tables.pop(stmt.name, None)
         if t:
-            try:
-                self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
-            self._created_storage.discard(t)
+            self._drop_storage(t)
         return {"dropped": stmt.name}
 
     # -- DECODE / SAMPLE FRAMES / RESIZE (multimodal DSL twins) ------------

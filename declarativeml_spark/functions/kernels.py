@@ -191,8 +191,8 @@ COMPUTATIONS: Dict[str, ComputeRegistration] = {}
 
 def execute_compute(stmt: ComputeKernel) -> ComputeRegistration:
     """Register a COMPUTE statement (validates the kernel AND its
-    input arity NOW — deferring an arity mismatch to tick time would
-    surface it as a bare IndexError inside the streaming loop).
+    input arity NOW — deferring an arity mismatch to apply time would
+    surface it as a bare IndexError inside a running job).
     Re-registering a name is a catalog upsert (module docstring)."""
     spec = get_kernel(stmt.kernel)
     n_inputs = len(stmt.inputs or [])
@@ -238,7 +238,7 @@ def apply_compute(df: DataFrame, name: str) -> DataFrame:
     if spec.arity is None and not inputs:
         # mirror the registration-time variadic check: a registration
         # that bypassed execute_compute must not surface as a bare
-        # IndexError inside the tick loop
+        # IndexError inside a running job
         raise ValueError(
             f"Kernel {spec.name!r} is variadic but the registration"
             " names no input columns"

@@ -1,13 +1,13 @@
-"""Ensembles, deployment records, A/B traffic routing, monitoring.
+"""Ensembles, deployment records, monitoring.
 
 Reference semantics implemented Spark-first:
 * ``CREATE ENSEMBLE`` (DSL.md:320-327) — weighted average of member
   model predictions: score with each PipelineModel, combine with
   ``Σ wᵢ·predᵢ / Σ wᵢ`` (plain column arithmetic — one pass, no UDF).
 * ``DEPLOY MODEL`` (DSL.md:57-66) — registry status flip + config.
-* ``DEPLOY MODELS ... TRAFFIC SPLIT`` (DSL.md:330-334) — router that
-  assigns rows to models by a *deterministic* hash bucket of a key
-  column (crc32 % 100 — reproducible across runs, unlike rand()).
+* ``DEPLOY MODELS ... TRAFFIC SPLIT`` (DSL.md:330-334) — records the
+  A/B deployment (models, split, promotion rule) in the registry; no
+  statement routes rows on it.
 * ``MONITOR MODEL`` (DSL.md:347-351) — score + metric checks + drift
   statistics; failed checks publish ``model.alert`` events.
 """
@@ -204,77 +204,6 @@ def deploy_model(
     }
     _append_record(base, record)
     return record
-
-
-def ab_route(
-    spark: SparkSession,
-    models: List[str],
-    split: List[float],
-    df: DataFrame,
-    key_col: str,
-    base: Optional[str] = None,
-    prediction_col: str = "prediction",
-) -> DataFrame:
-    """Score rows, routing each to a model by deterministic hash bucket.
-
-    ``crc32(key) % 100`` into cumulative split boundaries — stable
-    across runs and executors (rand() would not be), so A/B cohorts
-    are reproducible. All models score all rows in one pass; the
-    router picks per-row — at 100 TB this trades |models|× compute in
-    exchange for zero shuffles and no data splitting, the right trade
-    for ≤ a handful of variants.
-    """
-    if len(models) != len(split):
-        raise ValueError("traffic split must have one percentage per model")
-    total = sum(split)
-    if abs(total - 1.0) < 0.01:
-        # fractions: silently routing [0.5, 0.5] against integer
-        # buckets 0..99 would turn a 50/50 test into 1/99
-        split = [s * 100.0 for s in split]
-        total = 100.0
-    if abs(total - 100.0) > 0.5:
-        raise ValueError(
-            f"traffic split must sum to 100 (percent) or 1.0"
-            f" (fractions); got {total!r}"
-        )
-    if any(not 0.0 <= s_ <= 100.0 for s_ in split):
-        # [150, -50] sums to 100 but routes 100% to the first model
-        raise ValueError(
-            f"each traffic split entry must be in [0, 100]; got {split!r}"
-        )
-    # NULL keys hash as the empty string: crc32(NULL) is NULL, which
-    # fails every boundary comparison and silently dumped ALL
-    # null-key rows on the LAST variant. Folding to '' keeps routing
-    # deterministic; all null-key rows share one bucket, which is the
-    # honest best available for an unkeyed row (documented cohort
-    # caveat rather than silent last-variant skew).
-    bucket = (
-        F.crc32(F.coalesce(F.col(key_col).cast("string"), F.lit(""))) % 100
-    )
-    out = df.withColumn("__bucket", bucket)
-    preds = []
-    for i, mname in enumerate(models):
-        model = registry_load(spark, mname, base=base)
-        col = f"__ab_{i}"
-        scored = model.transform(out)
-        keep = [c for c in scored.columns if c in out.columns] + [prediction_col]
-        out = scored.select(*keep).withColumnRenamed(prediction_col, col)
-        preds.append(col)
-    # forward WHEN chain on cumulative upper boundaries: first match wins
-    boundaries = []
-    acc = 0.0
-    for pct in split:
-        acc += pct
-        boundaries.append(acc)
-    result = F.when(F.col("__bucket") < boundaries[0], F.col(preds[0]))
-    served_by = F.when(F.col("__bucket") < boundaries[0], F.lit(models[0]))
-    for i in range(1, len(models)):
-        result = result.when(F.col("__bucket") < boundaries[i], F.col(preds[i]))
-        served_by = served_by.when(F.col("__bucket") < boundaries[i], F.lit(models[i]))
-    result = result.otherwise(F.col(preds[-1]))
-    served_by = served_by.otherwise(F.lit(models[-1]))
-    out = out.withColumn(prediction_col, result).withColumn("served_by", served_by)
-    return out.drop("__bucket", *preds)
 
 
 def _prediction_drift_psi(spec, label_col: str, scored) -> float:

@@ -1,11 +1,11 @@
-"""Model registry: versioned PipelineModel persistence + metadata table.
+"""Model registry: versioned PipelineModel persistence + metadata records.
 
 The reference specifies an ``ml_model`` composite + ``model_registry``
 table (reference: DSL.md:179-188; DISTRIBUTED.md:76-95). Here the
 registry is a directory of versioned MLlib models plus a JSON-lines
-metadata file readable as a DataFrame — the Spark-native equivalent
-(a Delta table on a real deployment; JSONL locally since Delta jars
-aren't in this environment).
+metadata file — the Spark-native equivalent (a Delta table on a real
+deployment; JSONL locally since Delta jars aren't in this
+environment).
 
 Layout:  $DML_MODEL_DIR/<name>/v<N>/   (PipelineModel.save)
          $DML_MODEL_DIR/registry.jsonl (one record per version)
@@ -114,7 +114,7 @@ def _install_fast_params_writer() -> None:
 
 
 _install_fast_params_writer()
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 if TYPE_CHECKING:
     from declarativeml_spark.ml.training import TrainedModel
@@ -347,16 +347,6 @@ def rollback_version(name: str, version: int, base: Optional[str] = None) -> boo
     return True
 
 
-def version_statuses(name: str, base: Optional[str] = None) -> dict[int, str]:
-    """Latest status per version of a model."""
-    base = base or _default_base()
-    out: dict[int, str] = {}
-    for rec in _iter_registry(base):
-        if rec.get("name") == name and rec.get("version") is not None:
-            out[rec["version"]] = rec.get("status", "registered")
-    return out
-
-
 def _model_versions(name: str, base: str) -> tuple[dict[int, dict], dict[int, str]]:
     """One registry pass: each version's full record (the one carrying
     ``algorithm``) and its latest status. Status-only records (deploy,
@@ -484,30 +474,3 @@ def stored_train_statement(meta: dict):
     return stmt
 
 
-def registry_table(spark: SparkSession, base: Optional[str] = None) -> DataFrame:
-    """The model registry as a DataFrame (ml_model analogue)."""
-    path = _registry_path(base)
-    if not os.path.exists(path):
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        # cover the columns callers actually select so an EMPTY
-        # registry yields zero rows, not AnalysisException on
-        # 'version'/'status'
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("name", StringType(), True),
-                    StructField("version", LongType(), True),
-                    StructField("status", StringType(), True),
-                    StructField("algorithm", StringType(), True),
-                    StructField("path", StringType(), True),
-                ]
-            ),
-        )
-    return spark.read.json(path)

@@ -1,11 +1,10 @@
 """Trailing-window rate-anomaly detection over an event log.
 
-Shared by the ``DETECT ANOMALIES`` DSL statement (engine.py), the
-oracle-checked ``events_rate_anomalies`` query
-(queries/pipeline5.py), and the stateful streaming twin
-(streaming/stateful.py::streaming_rate_anomalies) so all three paths
-compute the identical arithmetic: exact integer sum/sum-of-squares
-over the trailing window, IEEE division for mean/variance/z.
+Shared by the ``DETECT ANOMALIES`` DSL statement (engine.py) and the
+oracle-checked ``events_rate_anomalies`` query (queries/pipeline5.py)
+so both paths compute the identical arithmetic: exact integer
+sum/sum-of-squares over the trailing window, IEEE division for
+mean/variance/z.
 
 Scale: the window function runs over the AGGREGATED bucket series
 (key-values x buckets rows), never over raw events — raw volume only

@@ -17,14 +17,6 @@ from pyspark.sql import functions as F
 from declarativeml_spark.operators import textops as T
 
 
-def grams4_spark(text: str) -> str:
-    """Word 4-grams of ``text`` (Spark SQL) — same construction the
-    winnowing fingerprints use (relational3.py), hash-checked.
-    Delegates to the toks-input form so the gram shape has exactly
-    one definition per engine."""
-    return grams4_from_toks_spark(rf"split(trim({text}), '\\s+')")
-
-
 def grams4_duck(text: str) -> str:
     toks = rf"string_split_regex(trim({text}), '\s+')"
     return (
@@ -38,8 +30,8 @@ def grams4_duck(text: str) -> str:
 def fp_sample_spark(text: str) -> str:
     """Deterministic 1/2 sample of a doc's distinct 4-gram md5
     fingerprints (hex < '8') — bounds decontamination join volume the
-    same way winnowing bounds copy-detection. Delegates like
-    ``grams4_spark``."""
+    same way winnowing bounds copy-detection. Delegates to the
+    toks-input form so the sample has one definition per engine."""
     return fp_sample_from_toks_spark(rf"split(trim({text}), '\\s+')")
 
 
@@ -369,9 +361,7 @@ def semantic_overlap(
     benchmark id (ties to the smaller id), and a contamination flag.
     The paraphrase-robust complement of ``benchmark_overlap``; the
     oracle-checked twin is
-    queries/pipeline8.py::decontam_semantic_overlap, and
-    streaming/pipeline.py::streaming_semantic_decontam is the
-    stateless ingest-time form (asserted equal in tests).
+    queries/pipeline8.py::decontam_semantic_overlap.
 
     Scale: the benchmark is an eval suite — small by contract — so it
     broadcasts and the corpus never shuffles for scoring; the argmax

@@ -51,9 +51,7 @@ _PART = "__range_pid"
 
 def _check_dir(d: str) -> str:
     """Directions are the exact literals 'asc'/'desc' — anything else
-    (e.g. 'DESC') previously fell silently into a default, and
-    INCONSISTENTLY across functions (ntile_assign treated non-'asc'
-    as desc, ntile_assign_multi treated non-'desc' as asc): silently
+    (e.g. 'DESC') previously fell silently into a default: silently
     inverted buckets, never an error."""
     if d not in ("asc", "desc"):
         raise ValueError(
@@ -237,11 +235,8 @@ def _boundary_offsets(counts: list, n: int, k: int) -> dict:
     """Map NTILE(k) interior boundary ranks to per-partition local
     offsets: ``counts`` is the sorted [(pid, row_count)] of a frozen
     range partitioning of n rows. ONE definition of the sizes/bounds
-    arithmetic and the rank→(pid, local-offset) walk — previously
-    near-verbatim duplicated in ntile_boundary_keys and
-    ntile_assign_multi, where a fix to one copy would silently miss
-    the other. Returns {} when there are no interior boundaries
-    (k=1 or n<=1)."""
+    arithmetic and the rank→(pid, local-offset) walk. Returns {} when
+    there are no interior boundaries (k=1 or n<=1)."""
     q, rem = divmod(n, k)
     sizes = [q + 1] * rem + [q] * (k - rem)
     acc = 0
@@ -262,111 +257,6 @@ def _boundary_offsets(counts: list, n: int, k: int) -> dict:
             pid, cnt = next(it)
         out.setdefault(pid, set()).add(r - lo)
     return out
-
-
-def ntile_boundary_keys(
-    df: DataFrame,
-    order_spec: List[Tuple[str, str]],
-    k: int,
-    num_partitions: int = 32,
-) -> Tuple[int, List[tuple]]:
-    """Exact NTILE(k) *boundary keys*: the order-key tuples of the last
-    row of each of the first k-1 buckets (fewer when n < k), plus the
-    total row count.
-
-    ``order_spec`` is ``[(column_name, 'asc'|'desc'), ...]`` — the
-    composite key MUST be unique and non-null per row (end it on a key
-    column), exactly the discipline every NTILE call site here already
-    follows for cross-engine determinism.
-
-    Two tiny jobs over a narrow projection: (1) freeze a range
-    partitioning of just the key columns and collect one count per
-    partition; (2) pull the k-1 rows sitting at the exact boundary
-    ranks. Driver-side state is one row per partition plus k-1 key
-    tuples — bounded by configuration, never by data size. Combined
-    with :func:`ntile_assign` this replaces a full two-phase rank
-    (shuffle + window + join) with a collected-constant comparison,
-    the same trick a 1000-executor cluster wants: the data-plane
-    never reshuffles for bucket assignment.
-    """
-    if k < 1:
-        raise ValueError(f"NTILE bucket count must be >= 1, got {k}")
-    cols = [
-        F.col(c).asc() if _check_dir(d) == "asc" else F.col(c).desc()
-        for c, d in order_spec
-    ]
-    names = [c for c, _ in order_spec]
-    ranged, src = _ranged_frozen(df.select(*names), cols, num_partitions)
-
-    totals = (
-        ranged.groupBy(_PART).agg(F.count(F.lit(1)).alias("__n")).collect()
-    )
-    src.unpersist()  # the collect materialized the checkpoint
-    counts = sorted((r[_PART], r["__n"]) for r in totals)
-    n = sum(c for _, c in counts)
-    if n == 0:
-        return 0, []
-
-    targets = _boundary_offsets(counts, n, k)
-    if not targets:
-        # k=1 (or n=1): no interior boundaries — NTILE is all-ones
-        return n, []
-
-    cond = None
-    for p, offs in targets.items():
-        c = (F.col(_PART) == p) & F.col("__lrk").isin(*offs)
-        cond = c if cond is None else (cond | c)
-    w = Window.partitionBy(_PART).orderBy(*cols)
-    rows = (
-        ranged.filter(F.col(_PART).isin(*targets))
-        .withColumn("__lrk", F.row_number().over(w))
-        .filter(cond)
-        .select(*names)
-        .collect()
-    )
-    return n, [tuple(r) for r in rows]
-
-
-def ntile_assign(
-    df: DataFrame,
-    order_spec: List[Tuple[str, str]],
-    k: int,
-    out_col: str,
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Exact ``NTILE(k) OVER (ORDER BY ...)`` as a SHUFFLE-FREE map
-    expression over collected boundary keys (see
-    :func:`ntile_boundary_keys` for the key-uniqueness contract).
-
-    A row's bucket is ``1 + #{boundaries strictly before it in sort
-    order}`` — with unique composite keys this telescopes to exactly
-    the remainder-aware NTILE bucket, bit-identical to Spark's and
-    DuckDB's, including the n < k case (every rank its own bucket).
-    Unlike :func:`global_ntile` the input frame itself is never
-    re-partitioned: the boundary scan runs on a narrow key projection
-    and the assignment is pure column arithmetic, so chaining several
-    NTILEs over different orderings (the RFM shape) costs no extra
-    shuffles of the data plane.
-    """
-    n, keys = ntile_boundary_keys(df, order_spec, k, num_partitions)
-    if not keys:
-        return df.withColumn(out_col, F.lit(1).cast("int"))
-
-    def after(key: tuple):
-        # strictly-after-boundary in lexicographic (spec-directed) order
-        expr = F.lit(False)
-        eq = F.lit(True)
-        for (c, d), v in zip(order_spec, key):
-            col = F.col(c)
-            gt = col > F.lit(v) if _check_dir(d) == "asc" else col < F.lit(v)
-            expr = expr | (eq & gt)
-            eq = eq & (col == F.lit(v))
-        return expr
-
-    bucket = F.lit(1)
-    for key in keys:
-        bucket = bucket + F.when(after(key), 1).otherwise(0)
-    return df.withColumn(out_col, bucket.cast("int"))
 
 
 def global_rank_multi(
@@ -473,8 +363,10 @@ def ntile_assign_multi(
     per-(partition, tag) count pass + one boundary-row pull recovers
     every ordering's exact NTILE boundary keys at once. Buckets are
     then pure column arithmetic over the k-1 collected keys per
-    metric (see :func:`ntile_assign` for why that telescopes to the
-    remainder-aware NTILE exactly).
+    metric: a row's bucket is ``1 + #{boundaries strictly before it}``,
+    which with unique composite keys telescopes to exactly the
+    remainder-aware NTILE bucket, bit-identical to Spark's and
+    DuckDB's, including n < k (every rank its own bucket).
 
     Contract: ``metric`` and ``tie`` are non-null numerics exactly
     representable as doubles (|value| <= 2^53), and ``(metric, tie)``

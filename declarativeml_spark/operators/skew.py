@@ -1,66 +1,14 @@
-"""Skew-mitigation primitives: key salting for hot-key aggs and joins.
+"""Skew mitigation for pairwise self-joins: spread a narrow input over
+the cluster's configured shuffle width.
 
-At 100 TB a handful of hot keys (the empty document, a bot user, a
-default category) can pin one reducer while 999 executors idle. AQE's
-skew-join splitting handles the join case at runtime; these helpers
-cover the cases AQE doesn't: hot-key *aggregation* (two-phase salted
-agg) and broadcast-resistant skewed joins (explicit salt + replicate).
+AQE's skew-join splitting handles hot join keys at runtime; the
+salted-join queries (queries/pipeline10.py::salted_skew_join) salt in
+their own plans.
 """
 
 from __future__ import annotations
 
-from typing import List
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: List[str],
-    aggs: List[Column],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation with a salt on the shuffle key.
-
-    Phase 1 groups on (keys..., salt) — the hot key's rows spread
-    over ``salt_buckets`` reducers; phase 2 merges the partials on the
-    true keys (tiny input: |groups| × buckets rows). Only works for
-    decomposable aggregates — the caller passes phase-1 aggs; phase 2
-    re-aggregates every non-key column by SUM (counts and sums merge
-    by sum; pass pre-summed forms for avg: sum+count).
-    """
-    salted = df.withColumn("__salt", (F.rand(seed=42) * salt_buckets).cast("int"))
-    phase1 = salted.groupBy(*keys, "__salt").agg(*aggs)
-    value_cols = [c for c in phase1.columns if c not in set(keys) | {"__salt"}]
-    phase2 = phase1.groupBy(*keys).agg(
-        *[F.sum(c).alias(c) for c in value_cols]
-    )
-    return phase2
-
-
-def replicate_join_skewed(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Salted equi-join for a skewed big side when the small side is
-    too large to broadcast: salt the big side's key, replicate every
-    small-side row across all salt values, join on (key, salt).
-
-    Cost: small side ×``salt_buckets`` (still far below the big side);
-    benefit: the hot key's rows hash to ``salt_buckets`` reducers.
-    """
-    big_salted = big.withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    salts = big.sparkSession.range(salt_buckets).select(
-        F.col("id").cast("int").alias("__salt")
-    )
-    small_replicated = small.crossJoin(salts)
-    out = big_salted.join(small_replicated, [key, "__salt"])
-    return out.drop("__salt")
+from pyspark.sql import DataFrame
 
 
 def spread_partitions(df: DataFrame) -> DataFrame:

@@ -20,6 +20,8 @@ from collections.abc import Callable
 
 from pyspark.sql import functions as F
 
+from declarativeml_spark.sources.catalog import read_parquet
+
 # A directory at the served path without its _COMPLETE marker is only
 # claimable (treated as a stale partial from a crashed legacy writer)
 # once it is older than this — a younger marker-less dir is far more
@@ -197,7 +199,7 @@ def _register_external_bucketed(
             return table
         spark.sql(f"DROP TABLE IF EXISTS {table}")  # external: files stay
     # schema from the finished files themselves (one footer read)
-    schema_ddl = spark.read.parquet(location)._jdf.schema().toDDL()
+    schema_ddl = read_parquet(spark, location)._jdf.schema().toDDL()
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {table} ({schema_ddl}) USING PARQUET"
         f" CLUSTERED BY ({bucket_col}) SORTED BY ({sort_col})"

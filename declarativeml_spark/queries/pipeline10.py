@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from declarativeml_spark.queries.fixtures import fixture_dir
 from declarativeml_spark.queries.registry import dsum, query
-from declarativeml_spark.sources.catalog import load_table
+from declarativeml_spark.sources.catalog import load_table, read_parquet
 
 # bounded, deterministic subsets so the fixture writes stay cheap at
 # any SF while still exercising a multi-task write
@@ -182,7 +182,7 @@ def connector_partitioned_sink_pruning(
         )
 
     d = fixture_dir("part", f"{sf_dir}|by_o_year|all_orders", write)
-    back = spark.read.parquet(d).filter(F.col("o_year") == _PART_YEAR)
+    back = read_parquet(spark, d).filter(F.col("o_year") == _PART_YEAR)
     return back.groupBy(
         F.month("o_orderdate").cast("long").alias("o_month")
     ).agg(

@@ -784,8 +784,8 @@ def join_key_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-key counts are map-side-combinable aggregates; the
     share/rank windows run over the already-aggregated (key, cnt)
     frame — distinct key values, not rows — partitioned by key name.
-    This is the monitoring twin of operators/skew.py's salting
-    helpers.
+    It finds the keys that queries/pipeline10.py::salted_skew_join's
+    salting rewrite is for.
     """
     parts = []
     for t, c in _HOT_KEYS:

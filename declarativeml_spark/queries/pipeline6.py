@@ -1079,9 +1079,10 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the per-customer RFM pass is one map-side-combinable
     aggregation. The three quartile scores use ordered.py's
-    ``ntile_assign`` — exact NTILE via collected boundary keys (two
-    bounded jobs per ordering over a narrow key projection) and a
-    shuffle-free comparison expression. No partition-less WindowExec
+    ``ntile_assign_multi`` — exact NTILE via collected boundary keys
+    (two bounded jobs for all three orderings, over one tagged union
+    of narrow key projections) and a shuffle-free comparison
+    expression. No partition-less WindowExec
     anywhere, and the customer plane itself is never re-shuffled for
     bucket assignment: three NTILEs over three different orderings
     cost zero data-plane exchanges. The segment matrix is 4×4×4.

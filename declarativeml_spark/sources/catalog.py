@@ -63,7 +63,7 @@ def _fingerprint(path: str):
         return None
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without the schema-inference job
     on a warm read: the schema the first read inferred is supplied to
     the reader for as long as the application and the bytes on disk
@@ -101,7 +101,7 @@ def load_table(
     partition placement or row order.
 
     The raw parquet schema is memoized per application (see
-    ``_read_parquet``): the first read of a file infers it with a
+    ``read_parquet``): the first read of a file infers it with a
     one-task Spark job, and every later read of the same bytes passes
     it to ``spark.read.schema(...)`` and runs no job at all. A
     rewritten file (new size, mtime or, for a directory, listing), a
@@ -144,7 +144,7 @@ def load_table(
                 RuntimeWarning,
                 stacklevel=2,
             )
-    df = _read_parquet(spark, path)
+    df = read_parquet(spark, path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

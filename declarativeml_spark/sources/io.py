@@ -10,9 +10,7 @@ options that matter at scale:
 * partitioned parquet writes (``partitionBy``) for downstream
   partition pruning;
 * bucketed saves (``bucketBy``) so repeated joins on the bucket key
-  skip their shuffle;
-* Delta/Iceberg are import-gated: not in this environment, loud
-  error instead of silent fallback.
+  skip their shuffle.
 """
 
 from __future__ import annotations
@@ -43,27 +41,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """ORC sink (predicate pushdown + column pruning on re-read)."""
     df.write.mode(mode).orc(path)
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    """Delta Lake (requires delta jars — not in this environment)."""
-    try:
-        return spark.read.format("delta").load(path)
-    except Exception as e:  # pragma: no cover - environment-dependent
-        msg = str(e)
-        if (
-            "Failed to find data source" in msg
-            or "DATA_SOURCE_NOT_FOUND" in msg
-            or "ClassNotFoundException" in msg
-        ):
-            raise NotImplementedError(
-                "Delta Lake needs delta-spark jars on the classpath;"
-                " not available in this environment"
-            ) from e
-        # with the jars present, a PATH_NOT_FOUND / corrupt-table
-        # error is the caller's real problem — rebranding it as a
-        # classpath issue sent users debugging a nonexistent jar gap
-        raise
 
 
 def write_partitioned_parquet(
@@ -295,8 +272,7 @@ def _media_width(spark: SparkSession, raw: DataFrame) -> "Optional[int]":
 
 def _media_frame(raw: DataFrame) -> DataFrame:
     """Shape a binaryFile scan (path/modificationTime/length/content)
-    into the standard media frame — shared by the batch and streaming
-    readers so both produce bit-identical rows for the same file.
+    into the standard media frame.
     Partition-discovery columns (a ``partitioned=True`` lake layout)
     ride along after ``meta``, so downstream filters on them keep
     pruning the scan."""
@@ -334,45 +310,6 @@ def _media_frame(raw: DataFrame) -> DataFrame:
         ).alias("meta"),
         *[F.col(c) for c in extras],
     )
-
-
-def read_media_stream(
-    spark: SparkSession,
-    path: str,
-    glob: Optional[str] = None,
-    recursive: bool = False,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
-    """Streaming twin of :func:`read_media`: watch a directory for
-    NEW media files and emit each as one standard media-frame row.
-
-    Same binaryFile columns, same projection (``_media_frame``), so a
-    streaming DECODE over this source is asserted bit-equal to the
-    batch decode of the same directory (tests/test_media_ingest.py).
-    A streaming source requires an explicit schema; binaryFile's is
-    fixed, so it is pinned here rather than asked of the caller.
-
-    ``max_files_per_trigger`` bounds micro-batch size (ingest
-    backpressure at real scale: a directory landing thousands of
-    clips per minute should decode in bounded batches, not one giant
-    catch-up batch).
-    """
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    reader = spark.readStream.format("binaryFile").schema(schema)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return _media_frame(reader.load(path))
 
 
 def warehouse_path(spark: SparkSession) -> str:

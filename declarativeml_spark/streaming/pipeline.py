@@ -1,31 +1,19 @@
-"""Streaming training-data-pipeline operators: continuous dedup and
-incremental time-bucket rollups.
+"""Streaming session aggregation: ``session_window_stats``, the
+operator behind the SESSIONIZE statement and the oracle-checked
+``events_user_sessions`` query, runs unchanged on a batch or a
+streaming frame.
 
 The reference's streaming surface is spec-only (events + agents,
-reference: EXTENSIONS.md:186-224, DISTRIBUTED.md:87-195); these are
-the beyond-parity pipeline operators (SURVEY.md §7.5) lifted onto
-Structured Streaming so a 100 TB corpus ingested continuously gets
-the same semantics as the batch operators in ``operators/dedup.py``.
-
-Scale notes:
-* Streaming dedup state is keyed by the 16-byte fingerprint, never
-  the document text; the watermark bounds state size to the late-data
-  horizon (without it, state grows with the corpus — refuse rather
-  than default).
-* The rollup is the hypertable continuous-aggregate analogue: a
-  watermarked tumbling-window agg in update mode. Partial aggregation
-  happens map-side per micro-batch; state per (window, key) only.
+reference: EXTENSIONS.md:186-224, DISTRIBUTED.md:87-195); this is the
+beyond-parity session aggregation (SURVEY.md §7.5) lifted onto
+Structured Streaming, so events ingested continuously get the same
+sessions as the batch statement.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from declarativeml_spark.operators import textops as T
-from declarativeml_spark.operators.caching import track_persist
 
 
 def _ensure_event_time(stream: DataFrame, ts_col: str) -> DataFrame:
@@ -36,15 +24,14 @@ def _ensure_event_time(stream: DataFrame, ts_col: str) -> DataFrame:
     converted to NTZ there; there is no native NTZ read).
 
     The NTZ wall-clock is interpreted AS UTC (not as session-local
-    time): a bare ``cast(ntz AS timestamp)`` would make tumbling
-    ``window()`` buckets — which align to the UTC epoch — land on
-    HH:30 wall-clock boundaries under a fractional-offset session
-    timezone (Asia/Kolkata), diverging from the batch twins'
-    ``date_trunc`` on the NTZ wall clock. Pinning through UTC makes
-    every instant's UTC rendering equal the original wall clock, so
-    bucket boundaries and ``_wall_label`` renderings are
-    session-timezone-independent (identity under a UTC session —
-    the same foreign-session hazard catalog.py:118 guards)."""
+    time): a bare ``cast(ntz AS timestamp)`` would shift every
+    instant by the session offset, so session boundaries rendered
+    under a fractional-offset session timezone (Asia/Kolkata) would
+    diverge from the NTZ wall clock. Pinning through UTC makes every
+    instant's UTC rendering equal the original wall clock, so
+    ``_wall_label`` renderings are session-timezone-independent
+    (identity under a UTC session — the same foreign-session hazard
+    catalog.py:118 guards)."""
     if dict(stream.dtypes).get(ts_col) == "timestamp_ntz":
         stream = stream.withColumn(
             ts_col,
@@ -69,207 +56,6 @@ def _wall_label(col, fmt: str):
     )
 
 
-def streaming_dedup(
-    stream: DataFrame,
-    ts_col: str,
-    text_col: str = "text",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Continuous exact dedup: emit only the first document seen per
-    normalized-text fingerprint, with state bounded by ``watermark``.
-
-    ``dropDuplicatesWithinWatermark`` is what makes the bound REAL:
-    plain ``dropDuplicates(['fingerprint'])`` only uses a watermark
-    to evict state when the event-time column is part of the dedup
-    subset, so keyed-only dedup state would grow with total distinct
-    documents forever. The trade is the documented one — duplicates
-    arriving farther apart than ``watermark`` are re-admitted; dedup
-    across the whole corpus history belongs to the batch operator.
-
-    Same fingerprint expression as the batch operator
-    (``operators/dedup.py::exact_duplicates``), so a doc admitted by
-    the stream is exactly the doc the batch path would canonicalize.
-    """
-    fp = F.expr(T.FINGERPRINT_SPARK.format(text=text_col))
-    return (
-        _ensure_event_time(stream, ts_col)
-        .withColumn("fingerprint", fp)
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["fingerprint"])
-    )
-
-
-def streaming_rollup(
-    stream: DataFrame,
-    ts_col: str,
-    key_col: Optional[str],
-    value_col: str,
-    bucket: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Incremental time-bucket rollup (continuous aggregate): count /
-    exact-decimal sum / min / max of ``value_col`` per tumbling
-    ``bucket`` (and optional key).
-
-    Late rows within ``watermark`` revise their bucket; older ones
-    are dropped deterministically. The bucket boundary is emitted as
-    an ISO string so downstream consumers (and the batch
-    ``events_hourly_stats`` oracle-checked query) compare cleanly.
-    """
-    stream = _ensure_event_time(stream, ts_col)
-    win = F.window(F.col(ts_col), bucket)
-    keys = [win] + ([F.col(key_col)] if key_col else [])
-    from declarativeml_spark.queries.registry import dsum
-
-    agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .agg(
-            F.count("*").alias("n_rows"),
-            dsum(value_col, "value_sum"),
-            F.min(value_col).alias("value_min"),
-            F.max(value_col).alias("value_max"),
-        )
-    )
-    cols = [
-        _wall_label(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-            "bucket_start"
-        )
-    ]
-    if key_col:
-        cols.append(F.col(key_col))
-    cols += ["n_rows", "value_sum", "value_min", "value_max"]
-    return agg.select(*cols)
-
-
-def streaming_decontam(
-    stream: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_overlap: int = 3,
-) -> DataFrame:
-    """Continuous benchmark decontamination: flag each arriving
-    document whose word-4-gram fingerprints overlap a STATIC
-    held-out benchmark set — the ingest-time twin of
-    ``operators/corpus.py::benchmark_overlap`` (same fingerprint
-    expression, same flag semantics, asserted equal in tests).
-
-    Stateless by construction, so it runs in append mode with no
-    watermark: the benchmark collapses to ONE sorted fingerprint
-    array (eval sets are MBs — this is the operator's contract, not
-    an accident), joined in via a broadcast single-row equi-join, and
-    the per-document overlap is a per-row ``array_intersect`` — no
-    streaming aggregation state at all. At 100 TB/day ingest this is
-    a map-only stage.
-    """
-    from declarativeml_spark.operators.corpus import fp_sample_spark
-
-    fp = F.expr(fp_sample_spark(text_col))
-    # persisted: the static side of a stream-static join re-executes
-    # on EVERY micro-batch — without the persist a 1s-trigger ingest
-    # re-tokenizes and re-hashes the whole benchmark forever.
-    # collect_set already deduplicates, so no .distinct() pre-pass.
-    # track_persist gives the plane an owner when a tracking scope is
-    # active (engine statement / bench capture); standalone callers
-    # own it themselves — unpersist it when the streaming query stops,
-    # or repeated builds in one long session pin a plane each
-    # (unpersist mid-stream is safe: the next micro-batch recomputes).
-    bench_row = (
-        benchmark.withColumn("hs", fp)
-        .select(F.explode("hs").alias("h"))
-        .agg(F.array_sort(F.collect_set("h")).alias("bench_hs"))
-        .withColumn("j", F.lit(1))
-        .transform(track_persist)
-    )
-    # NULL text → NULL hs; coalesce like the batch twin
-    # (corpus.py benchmark_overlap) so the flag is false, not NULL —
-    # a NOT contaminated filter must admit the row on both paths
-    overlap = F.coalesce(
-        F.size(F.array_intersect("hs", "bench_hs")).cast("bigint"),
-        F.lit(0),
-    )
-    return (
-        stream.withColumn("hs", fp)
-        .withColumn("j", F.lit(1))
-        .join(F.broadcast(bench_row), "j")
-        .select(
-            F.col(id_col),
-            # n_grams stays NULL for NULL text — identical to the
-            # batch twin's un-coalesced size(hs)
-            F.size("hs").cast("bigint").alias("n_grams"),
-            overlap.alias("overlap_grams"),
-            (overlap >= min_overlap).alias("contaminated"),
-        )
-    )
-
-
-def streaming_redact(
-    stream: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
-    """Continuous PII scrubbing: mask emails / IPv4s / SSNs /
-    phone-shaped runs in each arriving document and append per-class
-    match counts — the ingest-time twin of
-    ``operators/pii.py::pii_redact`` (same patterns, asserted equal
-    to the batch scrubber in tests).
-
-    Stateless per-row regexes: append mode, no watermark, no
-    streaming state — at sustained ingest this is a map-only stage
-    that scrubs before anything else persists the raw text (the
-    ordering a privacy pipeline actually requires: redact at the
-    edge, not after the data lake already has copies).
-    """
-    from declarativeml_spark.operators.pii import pii_counts, pii_redact
-
-    return stream.select(
-        *[c for c in stream.columns if c != text_col],
-        *pii_counts(text_col),
-        pii_redact(text_col).alias(text_col),
-    )
-
-
-def streaming_decode(
-    stream: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    codec: str = "fake",
-    windows: "int | None" = None,
-) -> DataFrame:
-    """Continuous media decode: run the registered codec over each
-    arriving payload row — the ingest-time twin of
-    ``operators/multimodal.py::decode_features`` (or, with
-    ``windows``, ``window_energy``), completing the streaming-twin
-    pattern for the multimodal family (round-7 verdict ask #5).
-
-    Stateless by construction: the decode is an Arrow ``mapInPandas``
-    stage, which Structured Streaming runs per micro-batch with no
-    state store, no watermark, append mode. The SAME operator
-    function builds the plan, so stream and batch results are
-    bit-equal on the same files (asserted in
-    tests/test_media_ingest.py). Pair with
-    ``sources/io.py::read_media_stream`` to decode files as they land
-    — at 100 TB/day ingest this is a map-only stage whose parallelism
-    follows maxFilesPerTrigger × file packing.
-    """
-    from declarativeml_spark.operators.multimodal import (
-        decode_features,
-        window_energy,
-    )
-
-    if windows is not None:
-        return window_energy(
-            stream,
-            payload_col=payload_col,
-            id_col=id_col,
-            codec=codec,
-            window_samples=windows,
-        )
-    return decode_features(
-        stream, payload_col=payload_col, id_col=id_col, codec=codec
-    )
-
-
 def session_window_stats(
     df: DataFrame,
     ts_col: str,
@@ -281,10 +67,7 @@ def session_window_stats(
 ) -> DataFrame:
     """Per-key session aggregation with Spark's native
     ``session_window`` (dynamic-gap windows that close ``gap`` after
-    the last event) — the built-in complement to the custom
-    ``applyInPandasWithState`` sessionizer in ``stateful.py`` (which
-    exists for semantics session_window can't express: ordered
-    event-type paths within the session).
+    the last event).
 
     Works identically on a batch frame (``streaming=False``) so tests
     assert stream == batch on the same rows.
@@ -319,215 +102,3 @@ def session_window_stats(
     )
 
 
-def stream_stream_attribution_join(
-    views: DataFrame,
-    purchases: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    horizon: str = "30 minutes",
-    watermark: str = "30 minutes",
-    streaming: bool = True,
-) -> DataFrame:
-    """Watermarked stream-stream join: attribute each purchase to the
-    views by the same user within ``horizon`` before it (the
-    attribution shape of events_conversion_funnel, continuous).
-
-    Both sides carry watermarks and the join condition carries the
-    time-range bound — the two things Structured Streaming needs to
-    know when a buffered row can never match again and evict it.
-    Without the range condition the join state grows with the stream;
-    with it, state per side is bounded by watermark + horizon.
-
-    Works on batch frames (``streaming=False``) with identical
-    semantics, so tests assert stream == batch.
-
-    Scale: the shuffle is an equi-join on user_id; the range bound is
-    evaluated post-shuffle. Hot users (bots) are the skew risk —
-    AQE handles the batch twin, and for streams the standard fix is
-    salting the user key into (user, hash(ts) % k).
-    """
-    v = _ensure_event_time(views, ts_col).select(
-        F.col(user_col).alias("v_user"),
-        F.col(ts_col).alias("view_ts"),
-        F.col("event_id").alias("view_id"),
-    )
-    p = _ensure_event_time(purchases, ts_col).select(
-        F.col(user_col).alias("p_user"),
-        F.col(ts_col).alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    if streaming:
-        v = v.withWatermark("view_ts", watermark)
-        p = p.withWatermark("purchase_ts", watermark)
-    cond = (
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr(f"interval {horizon}"))
-    )
-    return v.join(p, cond, "inner").select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "view_id",
-        _wall_label("purchase_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
-            "purchase_time"
-        ),
-        _wall_label("view_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("view_time"),
-        "purchase_value",
-    )
-
-
-def streaming_new_users(stream: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Continuous growth accounting: first-seen users per day from
-    the event stream — the streaming twin of the batch
-    ``events_new_users_cumulative`` new-user leg.
-
-    The first-seen step is the stateful MIN operator
-    (streaming/stateful.py::streaming_first_seen): a user is emitted
-    exactly once, in the first micro-batch they appear, carrying
-    MIN(ts) *within* that batch — deterministic regardless of how
-    the batch's rows are partitioned. A bare
-    ``dropDuplicates(['user_id'])`` would instead keep whichever of
-    a user's rows won the shuffle race, so multi-day micro-batches
-    or multi-partition input could attribute the user to the wrong
-    day. Cross-batch late data (a user's true min arriving after
-    their first batch) remains outside any append-mode operator —
-    micro-batch boundaries are the attribution horizon, matching
-    the batch MIN exactly whenever each user's first-day rows arrive
-    in one batch.
-
-    Scale: state is one long per seen user — O(distinct users), the
-    same bound the batch MIN-aggregation carries; deliberately never
-    evicted (a first appearance is forever), sized like any user
-    dimension.
-    """
-    from declarativeml_spark.sources.catalog import epoch_us
-    from declarativeml_spark.streaming.stateful import streaming_first_seen
-
-    # wall-clock micros from an NTZ view of ts (no-op for NTZ input;
-    # session-tz wall clock for LTZ input): the stateful operator
-    # needs no event-time column, and keeping the attribution
-    # arithmetic tz-free matches the batch twin's NTZ cast-to-date —
-    # to_date(timestamp_micros(...)) would instead reinterpret wall
-    # micros as a UTC instant and shift near-midnight users to the
-    # wrong day under any non-UTC session timezone
-    ev = stream.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        epoch_us(f"CAST({ts_col} AS TIMESTAMP_NTZ)").alias("ts_us"),
-    )
-    firsts = streaming_first_seen(ev)
-    day = F.expr(
-        "date_add(DATE'1970-01-01',"
-        " CAST(FLOOR(first_ts_us / 86400000000.0) AS INT))"
-    )
-    return firsts.groupBy(day.alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_new")
-    )
-
-
-def streaming_semantic_decontam(
-    stream: DataFrame,
-    benchmark: DataFrame,
-    threshold: float = 0.30,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bench_id_col: str = "vec_id",
-    bench_vec_col: str = "embedding",
-) -> DataFrame:
-    """Continuous embedding-space decontamination: score each arriving
-    vector against a STATIC benchmark set and flag max-cosine >=
-    threshold — the ingest-time twin of
-    ``operators/corpus.py::semantic_overlap`` (asserted equal in
-    tests).
-
-    Stateless by construction, so it runs in append mode with no
-    watermark: the benchmark collapses to ONE qid-sorted
-    array<struct> row (eval sets are small — the operator's contract,
-    as with streaming_decontam), joined in via a broadcast single-row
-    equi-join; the per-vector argmax is a left fold over that array
-    that reproduces the batch window's (cos DESC NULLS LAST, qid ASC)
-    winner exactly: the array is sorted by qid, the fold keeps the
-    first element until a strictly greater non-NULL cosine appears,
-    so ties and NULL cosines (zero-norm vectors) resolve identically
-    to the window — and an EMPTY benchmark emits no rows at all,
-    like the batch join. At 100 TB/day ingest this is a map-only
-    stage.
-    """
-    from declarativeml_spark.queries.pipeline import _DOT_S, _NORM_S
-
-    # the benchmark-side norm is static — precompute it into the
-    # struct (LAST field, so array_sort still orders by qid) instead
-    # of re-deriving an O(d) fold per arriving corpus row
-    bench_row = (
-        benchmark.select(
-            F.col(bench_id_col).cast("long").alias("qid"),
-            F.col(bench_vec_col).cast("array<double>").alias("qe"),
-        )
-        .select(
-            F.struct(
-                "qid",
-                "qe",
-                F.expr(_NORM_S.format(a="qe")).alias("qnorm"),
-            ).alias("s")
-        )
-        .agg(F.array_sort(F.collect_list("s")).alias("bench"))
-        # batch semantics: an empty benchmark yields an EMPTY result
-        # (the cross join has nothing to pair) — without this filter
-        # the fold's init would leak sentinel rows instead
-        .filter(F.size("bench") > 0)
-        .withColumn("j", F.lit(1))
-        # persisted: the static side re-executes every micro-batch
-        # otherwise (same reason as streaming_decontam's bench_row,
-        # same ownership contract: scope-tracked when one is active,
-        # else the caller unpersists on query stop)
-        .transform(track_persist)
-    )
-    # ce_norm is projected ONCE per arriving row (below) and qnorm is
-    # precomputed in the broadcast structs — inlining _NORM_S here
-    # would re-run the O(d) fold |benchmark| times per row for the
-    # corpus side and once per row for the static side. Same ops in
-    # the same order (sqrt each, then multiply), so the cosine stays
-    # bit-identical to the batch twin's.
-    cos = (
-        f"({_DOT_S.format(a='ce', b='b.qe')}"
-        " / nullif(ce_norm * b.qnorm, 0))"
-    )
-    # score each benchmark element ONCE via transform, then fold over
-    # the slim (cos, qid) structs — inlining the O(d) cosine fragment
-    # into the CASE would re-evaluate it up to 3x per element on the
-    # map-only hot path. Init is a STRUCT-level NULL and the fold
-    # tests "acc IS NULL" for nothing-taken-yet — a field-level
-    # "acc.qid IS NULL" sentinel would conflate it with a legitimate
-    # NULL benchmark id and let the next element steal the argmax
-    # regardless of cosine. A non-NULL cosine beats a NULL acc cos
-    # (the window's NULLS LAST); when every cosine is NULL the first
-    # (smallest-qid) element survives with cos NULL — exactly the
-    # batch row.
-    best = (
-        f"aggregate(transform(bench, b -> struct(CAST({cos} AS DOUBLE)"
-        " AS cos, b.qid AS qid)),"
-        " CAST(NULL AS struct<cos: DOUBLE, qid: BIGINT>),"
-        " (acc, s) -> CASE"
-        " WHEN acc IS NULL THEN s"
-        " WHEN s.cos IS NOT NULL AND (acc.cos IS NULL OR s.cos > acc.cos)"
-        " THEN s"
-        " ELSE acc END)"
-    )
-    from declarativeml_spark.queries.registry import sround
-
-    return (
-        stream.select(
-            F.col(id_col).cast("long").alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("ce"),
-        )
-        .withColumn("ce_norm", F.expr(_NORM_S.format(a="ce")))
-        .withColumn("j", F.lit(1))
-        .join(F.broadcast(bench_row), "j")
-        .withColumn("best", F.expr(best))
-        .select(
-            "vec_id",
-            F.col("best.qid").alias("nearest_benchmark"),
-            sround(F.col("best.cos"), 8).alias("max_cosine"),
-            (F.col("best.cos") >= threshold).alias("contaminated"),
-        )
-    )

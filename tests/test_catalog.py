@@ -144,3 +144,23 @@ def test_memo_hit_on_events_keeps_ts_ntz(spark, smoke_dir):
         return sorted(r.e for r in df.select(epoch_us("ts").alias("e")).collect())
 
     assert us(hit) == us(first)
+
+
+def test_partitioned_fixture_rebuild_runs_no_job_and_still_prunes(
+    spark, smoke_dir
+):
+    """A second build of connector_partitioned_sink_pruning re-reads
+    its cached partitioned fixture with the memoized schema: no
+    schema-inference job, and the scan still prunes on the partition
+    column."""
+    import re
+
+    from declarativeml_spark.queries import QUERIES
+
+    build = QUERIES["connector_partitioned_sink_pruning"]
+    build(spark, smoke_dir)  # writes the fixture, infers its schema once
+    j0 = _jobs(spark)
+    df = build(spark, smoke_dir)
+    assert _jobs(spark) - j0 == 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*o_year", plan), plan

@@ -480,17 +480,18 @@ def test_nonstored_rebuild_skips_compatible_shape_user_table(
         spark.sql("DROP TABLE IF EXISTS cold_compat2_tbl")
 
 
-def test_mark_legacy_index_storage_migration(warm, spark, smoke_dir):
-    """Storage persisted before the ownership mark existed (simulated
-    by stripping the property): adoption refuses with the migration
-    hint, the EXPLICIT helper re-marks it, adoption then serves."""
+def test_unmarked_index_storage_is_refused(warm, spark, smoke_dir):
+    """Real index storage without the ownership mark (the property
+    stripped) is never adopted: a fresh session refuses to serve it,
+    and serves it again once the mark is back."""
     rows = [
         r
         for r in (warm._read_index_registry() or [])
         if r["index_name"] == "cold_idx"
     ]
     assert rows, "warm fixture registers cold_idx"
-    for t in rows[0]["tables"]:
+    tables = rows[0]["tables"]
+    for t in tables:
         spark.sql(
             f"ALTER TABLE {t} UNSET TBLPROPERTIES IF EXISTS"
             f" ('{warm._INDEX_STORAGE_PROP}')"
@@ -498,13 +499,13 @@ def test_mark_legacy_index_storage_migration(warm, spark, smoke_dir):
     s2 = spark.newSession()
     register_views(s2, smoke_dir)
     e2 = Engine(s2)
-    with pytest.raises(ValueError, match="mark_legacy_index_storage"):
-        e2.execute("SEARCH SIMILAR USING INDEX cold_idx")
-    marked = e2.mark_legacy_index_storage("cold_idx")
-    assert marked == list(rows[0]["tables"])
+    try:
+        with pytest.raises(ValueError, match="ownership mark False"):
+            e2.execute("SEARCH SIMILAR USING INDEX cold_idx")
+    finally:
+        for t in tables:
+            warm._mark_index_storage(t)
     assert e2.execute("SEARCH SIMILAR USING INDEX cold_idx").count() >= 0
-    with pytest.raises(ValueError, match="Unknown index"):
-        e2.mark_legacy_index_storage("never_registered")
 
 
 def test_cold_recreate_same_stored_index_rebuilds(spark, smoke_dir, warm):

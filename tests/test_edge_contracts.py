@@ -238,3 +238,20 @@ def test_cli_plan_only_flag(tmp_path):
     )
     assert r.returncode == 0, r.stderr
     assert '"name": "m"' in r.stdout
+
+
+def test_semantic_overlap_empty_benchmark_and_zero_norm_vector(spark):
+    """An EMPTY benchmark yields no rows (not sentinel rows); an
+    all-zero corpus vector keeps the smallest benchmark id with a NULL
+    cosine and a NULL flag (the window's NULLS LAST order)."""
+    from declarativeml_spark.operators.corpus import semantic_overlap
+
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame([(1, [0.0, 0.0]), (2, [1.0, 0.0])], schema)
+    empty = spark.createDataFrame([], schema)
+    assert semantic_overlap(corpus, empty).count() == 0
+
+    bench = spark.createDataFrame([(10, [0.0, 1.0]), (20, [1.0, 1.0])], schema)
+    by_id = {r[0]: tuple(r) for r in semantic_overlap(corpus, bench, 0.5).collect()}
+    assert by_id[1][1:] == (10, None, None)
+    assert by_id[2][3] is not None

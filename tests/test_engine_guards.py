@@ -128,8 +128,8 @@ def test_archive_skips_rolled_back_version(engine, spark):
     """ARCHIVE previous_version must not stamp 'archived' over a
     rolled_back version (that would make it servable again)."""
     from declarativeml_spark.ml.models import (
+        _model_versions,
         mark_version_status,
-        version_statuses,
     )
 
     for _ in range(3):  # v1, v2, v3
@@ -142,6 +142,6 @@ def test_archive_skips_rolled_back_version(engine, spark):
     out = engine.execute("ARCHIVE previous_version OF guard_arch")
     # v2 is rolled back → the previous LIVE version is v1
     assert out["archived"] == 1
-    statuses = version_statuses("guard_arch", engine.model_dir)
+    statuses = _model_versions("guard_arch", engine.model_dir)[1]
     assert statuses[2] == "rolled_back"  # untouched
     assert statuses[1] == "archived"

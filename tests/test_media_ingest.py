@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from declarativeml_spark.operators import multimodal as M
 from declarativeml_spark.sources.catalog import load_table
-from declarativeml_spark.sources.io import read_media, read_media_stream
+from declarativeml_spark.sources.io import read_media
 
 N_DOCS = 8
 
@@ -202,73 +202,6 @@ def test_load_media_dsl_rejects_bare_identifier():
         parse("LOAD MEDIA FROM some_table")
 
 
-def test_streaming_decode_matches_batch(spark, media_dir):
-    """Round-7 verdict ask #5: the stateless streaming multimodal twin.
-
-    A binaryFile STREAM over the wav directory, decoded by the same
-    operator, must produce exactly the batch rows.
-    """
-    from declarativeml_spark.streaming.pipeline import streaming_decode
-
-    M.register_wav_codec()
-    wav_dir = os.path.join(media_dir, "wav")
-    stream = read_media_stream(
-        spark, wav_dir, glob="*.wav", max_files_per_trigger=3
-    )
-    assert stream.isStreaming
-    out = streaming_decode(stream, codec="wav")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("media_decode_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    streamed = {
-        r.media_id: r.features
-        for r in spark.sql("SELECT * FROM media_decode_sink").collect()
-    }
-    media = read_media(spark, wav_dir, glob="*.wav")
-    batch = {
-        r.media_id: r.features
-        for r in M.decode_features(media, codec="wav").collect()
-    }
-    assert streamed == batch
-    assert len(streamed) == N_DOCS
-
-
-def test_streaming_windowed_decode_matches_batch(spark, media_dir):
-    from declarativeml_spark.streaming.pipeline import streaming_decode
-
-    M.register_wav_codec()
-    wav_dir = os.path.join(media_dir, "wav")
-    stream = read_media_stream(spark, wav_dir, glob="*.wav")
-    out = streaming_decode(stream, codec="wav", windows=64)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("media_window_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    streamed = {
-        (r.media_id, r.window_id): r.energy
-        for r in spark.sql("SELECT * FROM media_window_sink").collect()
-    }
-    media = read_media(spark, wav_dir, glob="*.wav")
-    batch = {
-        (r.media_id, r.window_id): r.energy
-        for r in M.window_energy(
-            media, codec="wav", window_samples=64
-        ).collect()
-    }
-    assert streamed == batch
-
-
 def test_directory_glob_is_not_folded(spark, media_dir):
     """A basename glob that matches DIRECTORIES must keep Hadoop glob
     semantics (expand into the matched dirs), not become a
@@ -449,10 +382,3 @@ def test_warehouse_path_percent_decodes(spark, monkeypatch):
         io_mod.warehouse_path(FakeSession())
         == "/root/my repo/spark-warehouse"
     )
-
-
-def test_read_delta_jarless_message(spark, tmp_path):
-    from declarativeml_spark.sources.io import read_delta
-
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        read_delta(spark, str(tmp_path / "no_table"))

@@ -57,10 +57,13 @@ def test_sample_frames_rejects_real_codec(spark):
         sample.sample_frames(df, codec="h264")
 
 
-@pytest.mark.parametrize("n,k", [(6, 4), (500, 4), (3, 4), (100, 7), (10, 1)])
+@pytest.mark.parametrize(
+    "n,k", [(6, 4), (500, 4), (3, 4), (100, 7), (10, 1), (0, 4)]
+)
 def test_global_ntile_matches_naive_window(spark, n, k):
     """Exact NTILE parity including the remainder cases where the
-    uniform 1+floor(k*(rank-1)/n) formula diverges (n=6, k=4)."""
+    uniform 1+floor(k*(rank-1)/n) formula diverges (n=6, k=4), n<k,
+    k=1 and empty input."""
     from declarativeml_spark.operators.ordered import global_ntile
 
     rows = [(i, (i * 7919) % 101) for i in range(n)]
@@ -94,40 +97,6 @@ def test_global_rank_stable_across_runs(spark):
     first = sorted((r["g"], r["b"]) for r in out.collect())
     for _ in range(3):
         assert sorted((r["g"], r["b"]) for r in out.collect()) == first
-
-
-@pytest.mark.parametrize("n,k", [(6, 4), (500, 4), (3, 4), (100, 7), (0, 4), (10, 1)])
-def test_ntile_assign_matches_naive_window(spark, n, k):
-    """Boundary-key NTILE parity with the real window, including
-    remainder (n=6,k=4), n<k (every rank its own bucket), and empty
-    input; desc direction + tiebreak column exercised."""
-    from declarativeml_spark.operators.ordered import ntile_assign
-
-    rows = [(i, (i * 7919) % 11) for i in range(n)]  # heavy ties
-    df = spark.createDataFrame(rows, "id long, v long")
-    spec = [("v", "desc"), ("id", "asc")]
-
-    got = ntile_assign(df, spec, k, "b", num_partitions=5)
-    order = [F.col("v").desc(), F.col("id").asc()]
-    want = df.withColumn("b", F.ntile(k).over(Window.orderBy(*order)))
-
-    got_rows = {r["id"]: r["b"] for r in got.collect()}
-    want_rows = {r["id"]: r["b"] for r in want.collect()}
-    assert got_rows == want_rows
-
-
-def test_ntile_assign_adds_no_exchange_to_data_plane(spark):
-    """The assignment itself must be a pure map expression: the output
-    plan over the input frame contains no Exchange beyond what the
-    input already had."""
-    from declarativeml_spark.operators.ordered import ntile_assign
-
-    df = spark.createDataFrame(
-        [(i, float(i % 13)) for i in range(200)], "id long, v double"
-    )
-    out = ntile_assign(df, [("v", "asc"), ("id", "asc")], 4, "b")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 @pytest.mark.parametrize("n,k", [(6, 4), (500, 4), (3, 4), (100, 7), (10, 1)])
@@ -174,7 +143,7 @@ def test_ntile_assign_property_random_shapes(spark):
     import random
 
     rnd = random.Random(20260814)
-    from declarativeml_spark.operators.ordered import ntile_assign
+    from declarativeml_spark.operators.ordered import ntile_assign_multi
 
     for trial in range(6):
         n = rnd.choice([1, 2, 7, 63, 256])
@@ -183,8 +152,8 @@ def test_ntile_assign_property_random_shapes(spark):
         d = rnd.choice(["asc", "desc"])
         rows = [(i, (i * 2654435761) % mod) for i in range(n)]
         df = spark.createDataFrame(rows, "id long, v long")
-        got = ntile_assign(df, [("v", d), ("id", "asc")], k, "b",
-                           num_partitions=3)
+        got = ntile_assign_multi(df, [("v", d, "b")], "id", k,
+                                 num_partitions=3)
         order = [
             F.col("v").asc() if d == "asc" else F.col("v").desc(),
             F.col("id").asc(),
@@ -202,15 +171,12 @@ def test_ntile_rejects_nonpositive_k(spark, k):
     crash (boundary keys)."""
     from declarativeml_spark.operators.ordered import (
         global_ntile,
-        ntile_assign,
         ntile_assign_multi,
     )
 
     df = spark.createDataFrame([(1, 1)], "id long, v long")
     with pytest.raises(ValueError, match=">= 1"):
         global_ntile(df, [F.col("v").asc(), F.col("id").asc()], k, "b")
-    with pytest.raises(ValueError, match=">= 1"):
-        ntile_assign(df, [("v", "asc"), ("id", "asc")], k, "b")
     with pytest.raises(ValueError, match=">= 1"):
         ntile_assign_multi(df, [("v", "asc", "b")], "id", k)
 
@@ -246,14 +212,11 @@ def test_global_cumsum_double_values(spark):
 
 
 def test_ntile_direction_validation(spark):
-    from declarativeml_spark.operators.ordered import (
-        ntile_assign,
-        ntile_assign_multi,
-    )
+    from declarativeml_spark.operators.ordered import ntile_assign_multi
 
     df = spark.createDataFrame([(1, 2.0)], "id long, v double")
     with pytest.raises(ValueError, match="asc.*desc|desc.*asc"):
-        ntile_assign(df, [("v", "DESC"), ("id", "asc")], 2, "b")
+        ntile_assign_multi(df, [("v", "DESC", "b")], "id", 2)
     with pytest.raises(ValueError, match="asc.*desc|desc.*asc"):
         ntile_assign_multi(df, [("v", "Descending", "b")], "id", 2)
     with pytest.raises(ValueError, match="non-empty"):

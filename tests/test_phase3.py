@@ -128,63 +128,22 @@ def test_deploy_updates_status(engine):
     assert meta["status"] == "deployed"
 
 
-def test_ab_routing_deterministic(engine, spark):
-    engine.execute("DEPLOY MODELS (base_a, base_b) TO ab_ep WITH TRAFFIC SPLIT (50%, 50%)")
-    from declarativeml_spark.ml.ensemble import ab_route
+def test_deploy_ab_test_writes_its_record(engine):
+    """DEPLOY MODELS … TRAFFIC SPLIT records the A/B deployment under
+    its endpoint name; no statement routes rows on it."""
+    from declarativeml_spark.ml.models import _model_versions
 
-    df = spark.table("orders_labeled")
-    out1 = ab_route(
-        spark, ["base_a", "base_b"], [50.0, 50.0], df, "o_orderkey",
-        base=engine.model_dir,
+    rec = engine.execute(
+        "DEPLOY MODELS (base_a, base_b) TO ab_ep WITH TRAFFIC SPLIT (50%, 50%)"
     )
-    served = out1.groupBy("served_by").count().collect()
-    counts = {r.served_by: r["count"] for r in served}
-    assert set(counts) == {"base_a", "base_b"}
-    # ~50/50 split, deterministic across runs
-    out2 = ab_route(
-        spark, ["base_a", "base_b"], [50.0, 50.0], df, "o_orderkey",
-        base=engine.model_dir,
-    )
-    assert (
-        out1.select("o_orderkey", "served_by").exceptAll(
-            out2.select("o_orderkey", "served_by")
-        ).count()
-        == 0
-    )
-
-
-def test_ab_routing_fraction_and_bad_splits(engine, spark):
-    """Fractions summing to 1.0 must scale to percentages (buckets
-    are integers 0..99 — [0.5, 0.5] raw would silently route 1/99),
-    and anything summing elsewhere is a typed error."""
-    from declarativeml_spark.ml.ensemble import ab_route
-
-    df = spark.table("orders_labeled")
-    frac = ab_route(
-        spark, ["base_a", "base_b"], [0.5, 0.5], df, "o_orderkey",
-        base=engine.model_dir,
-    )
-    counts = {
-        r.served_by: r["count"]
-        for r in frac.groupBy("served_by").count().collect()
-    }
-    total = sum(counts.values())
-    assert counts.get("base_a", 0) / total > 0.3  # ~50%, not ~1%
-    pct = ab_route(
-        spark, ["base_a", "base_b"], [50.0, 50.0], df, "o_orderkey",
-        base=engine.model_dir,
-    )
-    assert (
-        frac.select("o_orderkey", "served_by")
-        .exceptAll(pct.select("o_orderkey", "served_by"))
-        .count()
-        == 0
-    )
-    with pytest.raises(ValueError, match="sum to 100"):
-        ab_route(
-            spark, ["base_a", "base_b"], [30.0, 30.0], df, "o_orderkey",
-            base=engine.model_dir,
-        )
+    assert rec["name"] == "ab_ep" and rec["algorithm"] == "ab_test"
+    assert rec["ab_models"] == ["base_a", "base_b"]
+    assert rec["traffic_split"] == [50.0, 50.0]
+    full, status = _model_versions("ab_ep", engine.model_dir)
+    assert full[1]["ab_models"] == ["base_a", "base_b"]
+    assert status == {1: "deployed"}
+    with pytest.raises(ValueError, match="No registered model"):
+        engine.execute("DEPLOY MODELS (base_a, ghost) WITH TRAFFIC SPLIT (50%, 50%)")
 
 
 def test_monitor_checks(engine):
@@ -227,9 +186,9 @@ def test_deploy_records_resolved_version(engine):
     )  # v2
     rec = engine.execute("DEPLOY MODEL versioned_m")
     assert rec["version"] == 2
-    from declarativeml_spark.ml.models import version_statuses
+    from declarativeml_spark.ml.models import _model_versions
 
-    statuses = version_statuses("versioned_m", engine.model_dir)
+    statuses = _model_versions("versioned_m", engine.model_dir)[1]
     assert statuses[2] == "deployed"
     assert statuses.get(1, "registered") != "deployed"
 
@@ -254,44 +213,6 @@ def test_ensemble_zero_weight_sum_rejected(engine):
         engine.execute(
             "CREATE ENSEMBLE zero_w FROM COMBINE MODELS"
             " (base_a WEIGHT 1.0, base_b WEIGHT -1.0)"
-        )
-
-
-def test_ab_route_null_keys_deterministic(engine, spark):
-    """NULL routing keys fold to the empty string instead of silently
-    landing every null-key row on the LAST variant."""
-    from pyspark.sql import functions as F
-
-    from declarativeml_spark.ml.ensemble import ab_route
-
-    df = spark.table("orders_labeled").limit(50).withColumn(
-        "nkey",
-        F.when(F.col("o_orderkey") % 5 == 0, None).otherwise(
-            F.col("o_orderkey")
-        ),
-    )
-    out = ab_route(
-        spark, ["base_a", "base_b"], [50.0, 50.0], df, "nkey",
-        base=engine.model_dir,
-    )
-    null_served = {
-        r.served_by
-        for r in out.filter(F.col("nkey").isNull()).select("served_by").collect()
-    }
-    # all null-key rows share ONE deterministic cohort (crc32(''))
-    assert len(null_served) == 1
-    # crc32('') % 100 == 0 -> first variant, not the silent last-model dump
-    assert null_served == {"base_a"}
-
-
-def test_ab_route_out_of_range_split_rejected(engine, spark):
-    from declarativeml_spark.ml.ensemble import ab_route
-
-    df = spark.table("orders_labeled").limit(5)
-    with pytest.raises(ValueError, match="\\[0, 100\\]"):
-        ab_route(
-            spark, ["base_a", "base_b"], [150.0, -50.0], df, "o_orderkey",
-            base=engine.model_dir,
         )
 
 

@@ -94,7 +94,7 @@ def test_workflow_block_end_to_end(engine):
     """The block executes with a result context: RETRAIN fills
     retraining_/previous_ metrics; a false IF leaves versions alone; a
     true IF rolls back and alerts."""
-    from declarativeml_spark.ml.models import version_statuses
+    from declarativeml_spark.ml.models import _model_versions
 
     notes = []
     engine.bus.when("notification", "TRUE", lambda df: notes.append(1))
@@ -111,7 +111,7 @@ def test_workflow_block_end_to_end(engine):
     engine.bus.dispatch_batch()
     v = engine._model_meta("rp_clf")["version"]
     assert v == 2  # retrained
-    assert version_statuses("rp_clf", engine.model_dir).get(2) != "rolled_back"
+    assert _model_versions("rp_clf", engine.model_dir)[1].get(2) != "rolled_back"
     assert notes == []
     # IF guard that always fires (accuracy < 2x previous)
     engine.execute("""WHEN EVENT 'rp.drift_b' THEN BEGIN
@@ -124,7 +124,7 @@ def test_workflow_block_end_to_end(engine):
       END""")
     engine.bus.publish("rp.drift_b", {})
     engine.bus.dispatch_batch()
-    statuses = version_statuses("rp_clf", engine.model_dir)
+    statuses = _model_versions("rp_clf", engine.model_dir)[1]
     assert statuses.get(3) == "rolled_back"
     assert notes  # the alert arrived as a notification event
     # the rolled-back version no longer serves
@@ -135,7 +135,7 @@ def test_when_model_chain_end_to_end(engine):
     """WHEN MODEL … AND MODEL … THEN DEPLOY TO … AND ARCHIVE … AND
     NOTIFY … (DSL.md:125-130 shape): the AND-chained actions all run
     when a matching model.metrics event arrives."""
-    from declarativeml_spark.ml.models import version_statuses
+    from declarativeml_spark.ml.models import _model_versions
 
     engine.execute(
         "WHEN MODEL rp_clf ACCURACY > 0.5"
@@ -157,7 +157,7 @@ def test_when_model_chain_end_to_end(engine):
     engine.bus.dispatch_batch()
     assert notes
     cur = engine._model_meta("rp_clf")["version"]
-    assert version_statuses("rp_clf", engine.model_dir).get(cur - 1) == "archived"
+    assert _model_versions("rp_clf", engine.model_dir)[1].get(cur - 1) == "archived"
     # sub-threshold metrics must NOT fire
     notes.clear()
     engine.bus.publish(

@@ -1,12 +1,12 @@
-"""Streaming layer: tick-scheduled COMPUTE, event bus, windowed aggs."""
+"""Streaming layer: COMPUTE on a stream, event bus, windowed aggs."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from declarativeml_spark.engine import Engine
+from declarativeml_spark.functions.kernels import apply_compute
 from declarativeml_spark.sources.catalog import load_table
 from declarativeml_spark.streaming.events import EVENT_SCHEMA, EventBus
-from declarativeml_spark.streaming.ticks import start_compute_stream
 
 
 def test_compute_stream(spark, smoke_dir, tmp_path):
@@ -19,7 +19,14 @@ def test_compute_stream(spark, smoke_dir, tmp_path):
         "COMPUTE vstream FROM table(value) INTO column(v_sig) EVERY 2 TICKS USING sigmoid"
     )
     stream = spark.readStream.schema(schema).parquet(src)
-    q = start_compute_stream(stream, "vstream", output_table="vstream_sink", once=True)
+    q = (
+        apply_compute(stream, "vstream")
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("vstream_sink")
+        .trigger(availableNow=True)
+        .start()
+    )
     q.processAllAvailable()
     q.stop()
     out = spark.sql("SELECT * FROM vstream_sink")

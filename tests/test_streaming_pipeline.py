@@ -1,257 +1,12 @@
-"""Streaming pipeline operators: continuous dedup + incremental
-rollup, each cross-checked against its batch counterpart on the same
-staged data (the batch semantics are the oracle-checked ones)."""
+"""Streaming frames through the batch operators: the same operator
+on a stream and on a batch frame of the same rows gives the same
+answer (the batch semantics are the oracle-checked ones)."""
 
-from pyspark.sql import functions as F
-
-from declarativeml_spark.operators.dedup import exact_duplicates
 from declarativeml_spark.sources.catalog import load_table
-from declarativeml_spark.streaming.pipeline import streaming_dedup, streaming_rollup
-
-
-def test_streaming_dedup_matches_batch_fingerprints(spark, smoke_dir, tmp_path):
-    src = str(tmp_path / "docs_src")
-    docs = (
-        load_table(spark, smoke_dir, "documents")
-        .limit(300)
-        .withColumn("ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id")))
-    )
-    docs.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_dedup(stream, ts_col="ts", text_col="text")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    streamed = spark.sql("SELECT fingerprint FROM dedup_sink")
-    batch = exact_duplicates(spark.read.parquet(src))
-    # one survivor per distinct fingerprint, same fingerprint universe
-    assert streamed.count() == batch.count()
-    got = {r.fingerprint for r in streamed.collect()}
-    want = {r.fingerprint for r in batch.collect()}
-    assert got == want
-
-
-def test_streaming_rollup_matches_batch(spark, smoke_dir, tmp_path):
-    src = str(tmp_path / "events_src")
-    load_table(spark, smoke_dir, "events").limit(500).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_rollup(
-        stream, ts_col="ts", key_col="event_type", value_col="value", bucket="1 hour"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rollup_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    streamed = spark.sql(
-        "SELECT bucket_start, event_type, n_rows, value_sum FROM rollup_sink"
-    )
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(
-            F.date_format(
-                F.window("ts", "1 hour").start, "yyyy-MM-dd HH:mm:ss"
-            ).alias("bucket_start"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("value_sum"),
-        )
-    )
-    got = sorted(tuple(r) for r in streamed.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-
-
-def test_streaming_decontam_matches_batch(spark, smoke_dir, tmp_path):
-    """The streaming flag must equal the batch operator's on the same
-    corpus/benchmark split (the batch form is the oracle-checked one)."""
-    from declarativeml_spark.operators.corpus import benchmark_overlap
-    from declarativeml_spark.streaming.pipeline import streaming_decontam
-
-    docs = load_table(spark, smoke_dir, "documents")
-    bench = docs.filter("doc_id % 23 = 5")
-    corpus = docs.filter("doc_id % 23 <> 5").limit(200)
-
-    src = str(tmp_path / "corpus_src")
-    corpus.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_decontam(stream, bench, min_overlap=3)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("decontam_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    streamed = spark.sql(
-        "SELECT doc_id, n_grams, overlap_grams, contaminated FROM decontam_sink"
-    )
-    batch = benchmark_overlap(spark.read.parquet(src), bench, min_overlap=3)
-    got = sorted(tuple(r) for r in streamed.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-
-
-def test_streaming_pack_continues_across_batches(spark, smoke_dir, tmp_path):
-    """Chunk positions must continue across micro-batches: two files
-    processed one per trigger must reproduce the batch operator's
-    layout for the same (doc_id) order."""
-    from declarativeml_spark.operators.corpus import pack_chunks
-    from declarativeml_spark.streaming.stateful import streaming_pack
-
-    docs = load_table(spark, smoke_dir, "documents").select("doc_id", "text")
-    lo = docs.filter("doc_id < 200")
-    hi = docs.filter("doc_id >= 200 AND doc_id < 400")
-    src = tmp_path / "pack_src"
-    src.mkdir()
-    # two lexicographically ordered files -> two deterministic batches
-    lo.coalesce(1).write.parquet(str(src / "a_first"))
-    hi.coalesce(1).write.parquet(str(src / "b_second"))
-    schema = spark.read.parquet(str(src / "a_first")).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_pack(stream, context=256, buckets=4)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("pack_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    streamed = spark.sql(
-        "SELECT doc_id, bucket, n_tokens, chunk_id, chunk_offset,"
-        " chunks_spanned FROM pack_sink"
-    )
-    batch = pack_chunks(
-        docs.filter("doc_id < 400"), context=256, buckets=4
-    )
-    got = sorted(tuple(r) for r in streamed.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-
-
-def test_streaming_pack_restart_from_checkpoint(spark, smoke_dir, tmp_path):
-    """State must survive a query restart: pack batch 1, stop, start a
-    NEW query on the same checkpoint, pack batch 2 — positions continue
-    exactly where the first run left off."""
-    from declarativeml_spark.operators.corpus import pack_chunks
-    from declarativeml_spark.streaming.stateful import streaming_pack
-
-    docs = load_table(spark, smoke_dir, "documents").select("doc_id", "text")
-    src = tmp_path / "pack_restart_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "pack_ckpt")
-    out = str(tmp_path / "pack_out")
-    docs.filter("doc_id < 150").coalesce(1).write.parquet(str(src / "a_first"))
-    schema = spark.read.parquet(str(src / "a_first")).schema
-
-    # memory sinks cannot recover from a checkpoint; a parquet sink can
-    def run_once():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "*"))
-        )
-        q = (
-            streaming_pack(stream, context=256, buckets=4)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_once()  # processes batch 1, persists state in the checkpoint
-    assert spark.read.parquet(out).count() == 150
-    docs.filter("doc_id >= 150 AND doc_id < 300").coalesce(1).write.parquet(
-        str(src / "b_second")
-    )
-    run_once()  # NEW query, same checkpoint: resumes state + source offset
-
-    # batch 2's positions can only match the batch layout's tail if the
-    # running counts carried across the restart
-    streamed = spark.read.parquet(out).select(
-        "doc_id", "bucket", "n_tokens", "chunk_id", "chunk_offset",
-        "chunks_spanned",
-    )
-    batch = pack_chunks(docs.filter("doc_id < 300"), context=256, buckets=4)
-    got = sorted(tuple(r) for r in streamed.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-
-
-def test_streaming_redact_matches_batch(spark, smoke_dir, tmp_path):
-    """The streamed scrub must equal the batch REDACT result on the
-    same corpus (the batch form is the oracle-checked machinery)."""
-    from declarativeml_spark.operators.pii import pii_counts, pii_redact
-    from declarativeml_spark.streaming.pipeline import streaming_redact
-
-    docs = load_table(spark, smoke_dir, "documents").limit(100)
-    src = str(tmp_path / "redact_src")
-    docs.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_redact(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("redact_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    streamed = spark.sql(
-        "SELECT doc_id, n_email, n_ipv4, n_ssn, n_phone, text FROM redact_sink"
-    )
-    batch = spark.read.parquet(src).select(
-        "doc_id", *pii_counts("text"), pii_redact("text").alias("text")
-    )
-    got = sorted(tuple(r) for r in streamed.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
+from declarativeml_spark.streaming.pipeline import session_window_stats
 
 
 def test_session_window_stream_matches_batch(spark, smoke_dir, tmp_path):
-    from declarativeml_spark.streaming.pipeline import session_window_stats
-
     src = str(tmp_path / "sess_src")
     load_table(spark, smoke_dir, "events").limit(800).write.parquet(src)
     schema = spark.read.parquet(src).schema
@@ -293,324 +48,10 @@ def test_session_window_stream_matches_batch(spark, smoke_dir, tmp_path):
     assert len(want) > 10
 
 
-def test_stream_stream_join_matches_batch(spark, smoke_dir, tmp_path):
-    from declarativeml_spark.streaming.pipeline import stream_stream_attribution_join
-
-    ev = load_table(spark, smoke_dir, "events").limit(2000)
-    src_v = str(tmp_path / "views_src")
-    src_p = str(tmp_path / "purch_src")
-    ev.filter(F.col("event_type") == "view").write.parquet(src_v)
-    ev.filter(F.col("event_type") == "purchase").write.parquet(src_p)
-    vschema = spark.read.parquet(src_v).schema
-    pschema = spark.read.parquet(src_p).schema
-
-    out = stream_stream_attribution_join(
-        spark.readStream.schema(vschema).parquet(src_v),
-        spark.readStream.schema(pschema).parquet(src_p),
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("attr_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    streamed = {
-        (r.user_id, r.purchase_id, r.view_id)
-        for r in spark.sql("SELECT * FROM attr_sink").collect()
-    }
-
-    batch = stream_stream_attribution_join(
-        spark.read.parquet(src_v),
-        spark.read.parquet(src_p),
-        streaming=False,
-    )
-    want = {(r.user_id, r.purchase_id, r.view_id) for r in batch.collect()}
-    assert streamed == want
-    assert len(want) > 0
-
-
-def test_streaming_rate_anomalies_matches_batch(spark, smoke_dir, tmp_path):
-    """The stateful streaming anomaly detector, fed the finalized
-    hourly series split across two micro-batches, must reproduce the
-    batch events_rate_anomalies query exactly (same z, same flags —
-    trailing state continues across the batch boundary)."""
-    from pyspark.sql import functions as F
-
-    from declarativeml_spark.queries import QUERIES
-    from declarativeml_spark.streaming.stateful import streaming_rate_anomalies
-
-    ev = load_table(spark, smoke_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count("*").cast("long").alias("n"))
-    cut = hourly.agg(F.expr("percentile(unix_seconds(hour), 0.5)")).first()[0]
-
-    src = tmp_path / "anom_src"
-    src.mkdir()
-    hourly.filter(F.unix_seconds("hour") <= cut).coalesce(1).write.parquet(
-        str(src / "a_first")
-    )
-    hourly.filter(F.unix_seconds("hour") > cut).coalesce(1).write.parquet(
-        str(src / "b_second")
-    )
-    schema = spark.read.parquet(str(src / "a_first")).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_rate_anomalies(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("anom_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    # the operator itself emits sround(z, 4) like the batch query —
-    # no re-rounding here, the raw sink values must already match
-    streamed = spark.sql(
-        "SELECT event_type, hour, n, z, is_anomaly FROM anom_sink"
-    )
-    want = QUERIES["events_rate_anomalies"](spark, smoke_dir)
-    skey = lambda r: (r[0], r[1])  # noqa: E731
-    got_rows = sorted((tuple(r) for r in streamed.collect()), key=skey)
-    want_rows = sorted((tuple(r) for r in want.collect()), key=skey)
-    assert got_rows == want_rows
-
-
-def test_streaming_compaction_matches_batch(spark, smoke_dir, tmp_path):
-    """The stateful latest-per-user compactor, after consuming the
-    whole event log across two micro-batches, must hold exactly the
-    batch events_latest_per_user state for every user (update mode:
-    keep each user's LAST emitted row)."""
-    from pyspark.sql import functions as F
-
-    from declarativeml_spark.queries import QUERIES
-    from declarativeml_spark.streaming.stateful import streaming_latest_per_user
-
-    ev = load_table(spark, smoke_dir, "events").select(
-        "user_id", "event_id", "event_type", "ts"
-    )
-    cut = ev.agg(F.expr("percentile(event_id, 0.5)")).first()[0]
-
-    src = tmp_path / "compact_src"
-    src.mkdir()
-    ev.filter(F.col("event_id") <= cut).coalesce(1).write.parquet(
-        str(src / "a_first")
-    )
-    ev.filter(F.col("event_id") > cut).coalesce(1).write.parquet(
-        str(src / "b_second")
-    )
-    schema = spark.read.parquet(str(src / "a_first")).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_latest_per_user(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("compact_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    # update-mode memory sink appends each emission; the CURRENT state
-    # per user is the row from the latest batch that touched it
-    streamed = spark.sql(
-        """
-        SELECT user_id, event_id, event_type, last_ts FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-                                         ORDER BY last_ts DESC, event_id DESC)
-                      AS rn
-            FROM compact_sink
-        ) WHERE rn = 1
-        """
-    )
-    want = QUERIES["events_latest_per_user"](spark, smoke_dir)
-    got_rows = sorted(tuple(r) for r in streamed.collect())
-    want_rows = sorted(tuple(r) for r in want.collect())
-    assert got_rows == want_rows
-
-
-def test_streaming_twa_matches_batch(spark, smoke_dir, tmp_path):
-    """The stateful time-weighted-average operator, fed the event log
-    in time order across two micro-batches, must hold exactly the
-    batch events_time_weighted_value aggregate for every user
-    (update mode: keep each user's LAST emitted row)."""
-    from pyspark.sql import functions as F
-
-    from declarativeml_spark.operators.textops import stable_round
-    from declarativeml_spark.queries import QUERIES
-    from declarativeml_spark.streaming.stateful import (
-        streaming_time_weighted_value,
-    )
-
-    from declarativeml_spark.sources.catalog import epoch_us
-
-    ev = load_table(spark, smoke_dir, "events").select(
-        "user_id", "event_id", "value", "ts", epoch_us("ts").alias("ts_us")
-    )
-    cut = ev.agg(F.expr("percentile(ts_us, 0.5)")).first()[0]
-
-    src = tmp_path / "twa_src"
-    src.mkdir()
-    ev.filter(F.col("ts_us") <= cut).drop("ts_us").coalesce(1).write.parquet(
-        str(src / "a_first")
-    )
-    ev.filter(F.col("ts_us") > cut).drop("ts_us").coalesce(1).write.parquet(
-        str(src / "b_second")
-    )
-    schema = spark.read.parquet(str(src / "a_first")).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_time_weighted_value(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("twa_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    # update mode re-emits a user's row each batch; keep the newest
-    # (largest n_segments) per user, then round like the batch query
-    streamed = spark.sql(
-        "SELECT user_id, n_segments, span_us,"
-        f" {stable_round('twa_raw')} AS twa_value FROM ("
-        "  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id"
-        "           ORDER BY n_segments DESC) AS rn FROM twa_sink"
-        ") WHERE rn = 1 AND n_segments > 0"
-    )
-    want = QUERIES["events_time_weighted_value"](spark, smoke_dir)
-    skey = lambda r: r[0]  # noqa: E731
-    got_rows = sorted((tuple(r) for r in streamed.collect()), key=skey)
-    want_rows = sorted((tuple(r) for r in want.collect()), key=skey)
-    assert got_rows == want_rows
-
-
-def test_streaming_new_users_matches_batch(spark, smoke_dir, tmp_path):
-    """Stateful dropDuplicates growth accounting: fed the log in time
-    order, the per-day first-seen counts must equal the batch
-    new-user leg of events_new_users_cumulative."""
-    from pyspark.sql import functions as F
-
-    from declarativeml_spark.sources.catalog import epoch_us
-    from declarativeml_spark.streaming.pipeline import streaming_new_users
-
-    ev = load_table(spark, smoke_dir, "events").select(
-        "user_id", "ts", epoch_us("ts").alias("ts_us")
-    )
-    cut = ev.agg(F.expr("percentile(ts_us, 0.5)")).first()[0]
-    src = tmp_path / "nu_src"
-    src.mkdir()
-    ev.filter(F.col("ts_us") <= cut).drop("ts_us").coalesce(1).write.parquet(
-        str(src / "a_first")
-    )
-    ev.filter(F.col("ts_us") > cut).drop("ts_us").coalesce(1).write.parquet(
-        str(src / "b_second")
-    )
-    schema = spark.read.parquet(str(src / "a_first")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_new_users(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("nu_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        (str(r["day"]), r["n_new"])
-        for r in spark.sql("SELECT * FROM nu_sink").collect()
-    )
-    want = sorted(
-        (str(r["day"]), r["n_new"])
-        for r in load_table(spark, smoke_dir, "events")
-        .groupBy("user_id")
-        .agg(F.min(F.col("ts").cast("date")).alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_new"))
-        .collect()
-    )
-    assert got == want
-
-
-def test_streaming_new_users_multipartition_batch(spark, smoke_dir, tmp_path):
-    """Day attribution must not depend on shuffle arrival order: one
-    micro-batch made of MANY unordered partitions (users' rows spread
-    arbitrarily) must still credit every user to their MIN(ts) day —
-    the case a bare dropDuplicates gets wrong (it keeps whichever row
-    of a user wins the shuffle race)."""
-    from pyspark.sql import functions as F
-
-    from declarativeml_spark.streaming.pipeline import streaming_new_users
-
-    ev = load_table(spark, smoke_dir, "events").select("user_id", "ts")
-    src = tmp_path / "nu_mp_src"
-    # 8 hash-shuffled part files consumed in a single trigger: within
-    # the micro-batch, a user's rows arrive in arbitrary order across
-    # partitions.
-    ev.repartition(8, F.col("ts")).write.parquet(str(src))
-    schema = spark.read.parquet(str(src)).schema
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    out = streaming_new_users(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("nu_mp_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        (str(r["day"]), r["n_new"])
-        for r in spark.sql("SELECT * FROM nu_mp_sink").collect()
-    )
-    want = sorted(
-        (str(r["day"]), r["n_new"])
-        for r in ev.groupBy("user_id")
-        .agg(F.min(F.col("ts").cast("date")).alias("day"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_new"))
-        .collect()
-    )
-    assert got == want
-
-
 def test_score_quality_on_stream(spark, smoke_dir, tmp_path):
     """quality_margin is a stateless per-row HOF fold, so the SAME
     operator must run unchanged on a streaming frame and produce
     exactly the batch margins."""
-    from pyspark.sql import functions as F
-
     from declarativeml_spark.operators.textops import quality_margin
 
     docs = load_table(spark, smoke_dir, "documents").select("doc_id", "text")
@@ -641,411 +82,28 @@ def test_score_quality_on_stream(spark, smoke_dir, tmp_path):
     assert got == want
 
 
-def test_streaming_stratified_quota_matches_batch(spark, smoke_dir, tmp_path):
-    """Fed the whole table as ONE micro-batch, the streaming quota
-    admitter must reproduce the batch corpus_stratified_quota exactly
-    (same Lehmer-hash order, same ranks); across batches the admitted
-    count per stratum must never exceed the quota."""
-    from pyspark.sql import functions as F
 
-    from declarativeml_spark.queries import QUERIES
-    from declarativeml_spark.queries.pipeline2 import _LEHMER2, _QUOTA
-    from declarativeml_spark.streaming.stateful import (
-        streaming_stratified_quota,
-    )
-
-    docs = load_table(spark, smoke_dir, "documents").select(
-        "lang", "doc_id", F.expr(_LEHMER2).alias("h")
-    )
-    src = tmp_path / "quota_src"
-    docs.repartition(4).write.parquet(str(src))
-    schema = spark.read.parquet(str(src)).schema
-    stream = spark.readStream.schema(schema).parquet(str(src))
-
-    out = streaming_stratified_quota(stream, quota=_QUOTA)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("quota_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        (r["lang"], r["doc_id"], r["rnk"])
-        for r in spark.sql("SELECT * FROM quota_sink").collect()
-    )
-    want = sorted(
-        (r["lang"], r["doc_id"], r["rnk"])
-        for r in QUERIES["corpus_stratified_quota"](spark, smoke_dir).collect()
-    )
-    assert got == want
-
-
-def test_streaming_semantic_decontam_matches_batch(spark, smoke_dir, tmp_path):
-    """The streaming fold's (max cos, nearest id, flag) must equal the
-    batch window operator's on the same corpus/benchmark split (the
-    batch form is the oracle-checked one)."""
-    from declarativeml_spark.operators.corpus import semantic_overlap
-    from declarativeml_spark.streaming.pipeline import (
-        streaming_semantic_decontam,
-    )
-
-    emb = load_table(spark, smoke_dir, "embeddings")
-    bench = emb.filter("vec_id % 97 = 0")
-    corpus = emb.filter("vec_id % 97 <> 0")
-
-    src = str(tmp_path / "emb_src")
-    corpus.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_semantic_decontam(stream, bench, threshold=0.30)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sem_decontam_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    streamed = spark.sql(
-        "SELECT vec_id, nearest_benchmark, max_cosine, contaminated"
-        " FROM sem_decontam_sink"
-    )
-    batch = semantic_overlap(spark.read.parquet(src), bench, threshold=0.30)
-    got = sorted(tuple(r) for r in streamed.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-    assert any(r[3] for r in got)  # the threshold actually fires
-
-
-def test_streaming_semantic_decontam_edge_parity(spark, tmp_path):
-    """The stream fold must match the batch window on the edge cases
-    the happy-path test can't reach: an EMPTY benchmark (no rows, not
-    sentinel rows) and an all-NULL cosine corpus vector (zero-norm:
-    smallest qid survives with NULL score/flag, the window's
-    NULLS LAST order)."""
-    from declarativeml_spark.operators.corpus import semantic_overlap
-    from declarativeml_spark.streaming.pipeline import (
-        streaming_semantic_decontam,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    src = str(tmp_path / "edge_src")
-    corpus.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def run_stream(bench):
-        stream = spark.readStream.schema(schema).parquet(src)
-        out = streaming_semantic_decontam(stream, bench, threshold=0.5)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("sem_edge_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return sorted(
-            tuple(r)
-            for r in spark.sql("SELECT * FROM sem_edge_sink").collect()
-        )
-
-    empty_bench = spark.createDataFrame(
-        [], "vec_id long, embedding array<double>"
-    )
-    assert run_stream(empty_bench) == []
-    assert semantic_overlap(corpus, empty_bench).count() == 0
-
-    bench = spark.createDataFrame(
-        [(10, [0.0, 1.0]), (20, [1.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    got = run_stream(bench)
-    want = sorted(
-        tuple(r) for r in semantic_overlap(corpus, bench, 0.5).collect()
-    )
-    assert got == want
-    by_id = {r[0]: r for r in got}
-    # zero-norm vector: smallest qid, NULL cosine, NULL flag
-    assert by_id[1][1] == 10 and by_id[1][2] is None and by_id[1][3] is None
-    assert by_id[2][3] is not None
-
-
-def test_streaming_scd2_matches_batch_closed_intervals(
-    spark, smoke_dir, tmp_path
-):
-    """The stateful SCD2 twin, fed the event log in time order across
-    two micro-batches, must emit exactly the batch
-    events_scd2_intervals CLOSED subset (open intervals live in state
-    — the batch backfill publishes the is_current tails)."""
-    from pyspark.sql import functions as F
-
-    from declarativeml_spark.queries import QUERIES
-    from declarativeml_spark.sources.catalog import epoch_us
-    from declarativeml_spark.streaming.stateful import (
-        streaming_scd2_intervals,
-    )
-
-    ev = load_table(spark, smoke_dir, "events").select(
-        "user_id", "event_id", "event_type", "ts",
-        epoch_us("ts").alias("ts_us"),
-    )
-    cut = ev.agg(F.expr("percentile(ts_us, 0.5)")).first()[0]
-    src = tmp_path / "scd2_src"
-    src.mkdir()
-    ev.filter(F.col("ts_us") <= cut).drop("ts_us").coalesce(1).write.parquet(
-        str(src / "a_first")
-    )
-    ev.filter(F.col("ts_us") > cut).drop("ts_us").coalesce(1).write.parquet(
-        str(src / "b_second")
-    )
-    schema = spark.read.parquet(str(src / "a_first")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_scd2_intervals(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("scd2_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        tuple(r)
-        for r in spark.sql(
-            "SELECT user_id, event_type, valid_from, valid_to"
-            " FROM scd2_sink"
-        ).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in QUERIES["events_scd2_intervals"](spark, smoke_dir)
-        .filter("valid_to IS NOT NULL")
-        .select("user_id", "event_type", "valid_from", "valid_to")
-        .collect()
-    )
-    assert got and got == want
-
-
-def test_streaming_pack_null_text_matches_batch(spark, tmp_path):
-    """A NULL-text document must not kill the stream (int(NaN) did):
-    parity with pack_chunks — NULL n_tokens/chunks_spanned, chunk
-    position still emitted, the running count NOT advanced."""
-    from declarativeml_spark.operators.corpus import pack_chunks
-    from declarativeml_spark.streaming.stateful import streaming_pack
-
-    docs = spark.createDataFrame(
-        [(1, "a b c"), (2, None), (3, "d e f g")],
-        "doc_id long, text string",
-    )
-    src = tmp_path / "pack_null_src"
-    src.mkdir()
-    docs.coalesce(1).write.parquet(str(src / "a"))
-    schema = spark.read.parquet(str(src / "a")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_pack(stream, context=4, buckets=1)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("pack_null_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(
-        tuple(r)
-        for r in spark.sql(
-            "SELECT doc_id, bucket, n_tokens, chunk_id, chunk_offset,"
-            " chunks_spanned FROM pack_null_sink"
-        ).collect()
-    )
-    want = sorted(
-        tuple(r) for r in pack_chunks(docs, context=4, buckets=1).collect()
-    )
-    assert got == want
-    null_row = [r for r in got if r[0] == 2][0]
-    assert null_row[2] is None and null_row[5] is None
-
-
-def test_streaming_compaction_preserves_null_event_type(spark, tmp_path):
-    """A NULL event_type winning the compaction must stay NULL (the
-    batch max_by-struct keeps it NULL; str(NaN) minted 'nan')."""
-    from declarativeml_spark.streaming.stateful import streaming_latest_per_user
-
+def test_session_window_stats_is_session_tz_independent(spark):
+    """Session boundaries render on the NTZ wall clock in ANY session
+    timezone — a bare NTZ->LTZ cast shifted them by the session offset
+    under Asia/Kolkata (+5:30)."""
     ev = spark.createDataFrame(
-        [
-            (7, 1, "click", "2024-01-01 10:00:00"),
-            (7, 2, None, "2024-01-01 11:00:00"),
-        ],
-        "user_id long, event_id long, event_type string, ts string",
-    ).selectExpr(
-        "user_id", "event_id", "event_type",
-        "CAST(ts AS TIMESTAMP_NTZ) AS ts",
-    )
-    src = tmp_path / "compact_null_src"
-    src.mkdir()
-    ev.coalesce(1).write.parquet(str(src / "a"))
-    schema = spark.read.parquet(str(src / "a")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_latest_per_user(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("compact_null_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(
-        "SELECT user_id, event_id, event_type FROM compact_null_sink"
-    ).collect()
-    assert len(rows) == 1
-    assert rows[0].event_id == 2 and rows[0].event_type is None
-
-
-def test_streaming_twa_survives_large_values_and_replay(spark, tmp_path):
-    """Two regressions: (a) value*gap products needing >28 significant
-    digits raised decimal.InvalidOperation under Python's default
-    context; (b) a replayed micro-batch (at-least-once source) added
-    negative/duplicate segments and corrupted the sum forever. The
-    operator must survive both and match the exact closed form."""
-    from declarativeml_spark.streaming.stateful import (
-        streaming_time_weighted_value,
-    )
-
-    rows = [
-        (1, 1, 1.0e9, "2023-01-01 00:00:00"),
-        (1, 2, 2.0e9, "2024-01-01 00:00:00"),  # ~1-year gap at 1e9
-        (1, 3, 3.0e9, "2024-06-01 00:00:00"),
+        [(1, 10.0, "2024-01-01 10:45:00"), (1, 20.0, "2024-01-01 10:50:00")],
+        "user_id long, value double, ts string",
+    ).selectExpr("user_id", "value", "CAST(ts AS TIMESTAMP_NTZ) AS ts")
+    tz_key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(tz_key)
+    results = {}
+    try:
+        for tz in ("UTC", "Asia/Kolkata"):
+            spark.conf.set(tz_key, tz)
+            rows = session_window_stats(
+                ev, "ts", "user_id", "value", streaming=False
+            ).collect()
+            results[tz] = [tuple(r) for r in rows]
+    finally:
+        spark.conf.set(tz_key, prev)
+    assert results["UTC"] == results["Asia/Kolkata"]
+    assert results["UTC"] == [
+        (1, "2024-01-01 10:45:00", "2024-01-01 11:20:00", 2, 30.0)
     ]
-    ev = spark.createDataFrame(
-        rows, "user_id long, event_id long, value double, ts string"
-    ).selectExpr(
-        "user_id", "event_id", "value", "CAST(ts AS TIMESTAMP_NTZ) AS ts"
-    )
-    src = tmp_path / "twa_big_src"
-    src.mkdir()
-    ev.coalesce(1).write.parquet(str(src / "a_first"))
-    # the SAME rows again: an at-least-once replay — the monotonicity
-    # guard must drop every one of them
-    ev.coalesce(1).write.parquet(str(src / "b_replay"))
-    schema = spark.read.parquet(str(src / "a_first")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    out = streaming_time_weighted_value(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("twa_big_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = spark.sql(
-        "SELECT * FROM twa_big_sink ORDER BY n_segments DESC LIMIT 1"
-    ).collect()[0]
-    # exact closed form over the 3 unique rows (replay contributes 0)
-    import datetime
-
-    t1 = datetime.datetime(2023, 1, 1)
-    t2 = datetime.datetime(2024, 1, 1)
-    t3 = datetime.datetime(2024, 6, 1)
-    g1 = int((t2 - t1).total_seconds() * 1e6)
-    g2 = int((t3 - t2).total_seconds() * 1e6)
-    expected_span = g1 + g2
-    expected_twa = (1.0e9 * g1 + 2.0e9 * g2) / expected_span
-    assert final.n_segments == 2
-    assert final.span_us == expected_span
-    assert abs(final.twa_raw - expected_twa) / expected_twa < 1e-12
-
-
-def test_streaming_decontam_null_text_matches_batch(spark, smoke_dir, tmp_path):
-    """A NULL-text document must flag contaminated=false (not NULL) on
-    the stream exactly as the batch twin's coalesce does — a
-    NOT-contaminated admission filter must treat both paths the same."""
-    from declarativeml_spark.operators.corpus import benchmark_overlap
-    from declarativeml_spark.streaming.pipeline import streaming_decontam
-
-    docs = load_table(spark, smoke_dir, "documents").limit(50)
-    bench = docs.filter("doc_id % 7 = 0")
-    corpus = docs.filter("doc_id % 7 <> 0").select("doc_id", "text").union(
-        spark.createDataFrame([(999_999, None)], "doc_id long, text string")
-    )
-    src = str(tmp_path / "null_corpus_src")
-    corpus.write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    out = streaming_decontam(stream, bench, min_overlap=3)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("decontam_null_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    streamed = spark.sql(
-        "SELECT doc_id, n_grams, overlap_grams, contaminated"
-        " FROM decontam_null_sink"
-    )
-    batch = benchmark_overlap(spark.read.parquet(src), bench, min_overlap=3)
-    got = sorted(tuple(r) for r in streamed.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-    null_rows = [r for r in got if r[0] == 999_999]
-    assert null_rows and null_rows[0][3] is False
-    assert null_rows[0][2] == 0
-
-
-def test_decontam_static_planes_are_scope_tracked(spark, smoke_dir):
-    """The persisted static benchmark planes must be OWNED when a
-    tracking scope is active (engine statement / bench capture) —
-    repeated builds in a long-lived session otherwise pin a
-    broadcast-side plane each (round-9 advice)."""
-    from declarativeml_spark.operators.caching import capture, release_all
-    from declarativeml_spark.streaming.pipeline import (
-        streaming_decontam,
-        streaming_semantic_decontam,
-    )
-
-    docs = load_table(spark, smoke_dir, "documents")
-    emb = load_table(spark, smoke_dir, "embeddings")
-    with capture() as frames:
-        streaming_decontam(docs.limit(10), docs.limit(5))
-        streaming_semantic_decontam(emb.limit(10), emb.limit(5))
-    # one persisted benchmark plane per builder
-    assert len(frames) == 2
-    assert all(f.storageLevel.useMemory for f in frames)
-    release_all(frames)
-    assert all(not f.storageLevel.useMemory for f in frames)

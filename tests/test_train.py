@@ -9,7 +9,7 @@ external fixtures — the reference has no end-to-end ML tests at all
 import pytest
 
 from declarativeml_spark.engine import Engine
-from declarativeml_spark.ml.models import registry_table
+from declarativeml_spark.ml.models import _model_versions
 from declarativeml_spark.sources.catalog import register_views
 
 
@@ -101,10 +101,7 @@ def test_model_registry_versioning(engine, spark):
             "TRAIN MODEL ver_clf USING logistic_regression(max_iter=5) "
             "FROM orders_labeled PREDICT expensive WITH FEATURES(o_totalprice)"
         )
-    reg = registry_table(spark, engine.model_dir)
-    versions = [
-        r["version"] for r in reg.filter("name = 'ver_clf'").collect()
-    ]
+    versions, _ = _model_versions("ver_clf", engine.model_dir)
     assert sorted(versions) == [1, 2]
 
 
@@ -397,7 +394,6 @@ def test_registry_survives_corrupt_line(spark, tmp_path, engine):
     from declarativeml_spark.ml.models import (
         append_registry_record,
         registry_meta,
-        version_statuses,
     )
 
     base = str(tmp_path / "reg_corrupt")
@@ -411,7 +407,7 @@ def test_registry_survives_corrupt_line(spark, tmp_path, engine):
         warnings.simplefilter("always")
         meta = registry_meta("good", base=base)
     assert meta["status"] == "deployed"
-    assert version_statuses("good", base=base) == {1: "deployed"}
+    assert _model_versions("good", base)[1] == {1: "deployed"}
     assert any("corrupt line" in str(x.message) for x in w)
 
 
@@ -445,21 +441,11 @@ def test_registry_load_pinned_missing_version(spark, engine):
 
 
 def test_mark_version_status_creates_base_dir(tmp_path):
-    from declarativeml_spark.ml.models import (
-        mark_version_status,
-        version_statuses,
-    )
+    from declarativeml_spark.ml.models import mark_version_status
 
     base = str(tmp_path / "fresh" / "nested")
     mark_version_status("m", 1, "rolled_back", base=base)
-    assert version_statuses("m", base=base) == {1: "rolled_back"}
-
-
-def test_registry_table_empty_has_selectable_columns(spark, tmp_path):
-    from declarativeml_spark.ml.models import registry_table
-
-    reg = registry_table(spark, base=str(tmp_path / "empty_reg"))
-    assert reg.filter("name = 'x'").select("version", "status").count() == 0
+    assert _model_versions("m", base)[1] == {1: "rolled_back"}
 
 
 def test_model_dir_env_read_at_call_time(tmp_path, monkeypatch):

@@ -297,7 +297,7 @@ def test_workflow_rollback_binds_to_the_version_the_block_trained(engine, spark)
     block's ROLLBACK TO previous_version then finds that version
     already rolled back — it must not roll back the still-serving v1
     too, which would leave no version able to serve."""
-    from declarativeml_spark.ml.models import version_statuses
+    from declarativeml_spark.ml.models import _model_versions
 
     spark.sql(
         "SELECT *, CAST(o_totalprice > 150000 AS INT) AS expensive FROM orders"
@@ -320,7 +320,7 @@ def test_workflow_rollback_binds_to_the_version_the_block_trained(engine, spark)
   END""")
     engine.bus.publish("wf.rb_drift", {})
     engine.bus.dispatch_batch()
-    statuses = version_statuses("wf_rb", engine.model_dir)
+    statuses = _model_versions("wf_rb", engine.model_dir)[1]
     assert statuses[2] == "rolled_back"
     assert statuses[1] != "rolled_back"
     assert engine._model_meta("wf_rb")["version"] == 1
