@@ -813,6 +813,35 @@ def test_refresh_index_stored_bucketed_append(engine, spark, smoke_dir):
     assert not spark.catalog.tableExists("emb_gs_tbl")
 
 
+def test_refresh_index_stored_ivf_append(engine, spark, smoke_dir):
+    """A STORED AS ivf index refreshed after its source grew: the new
+    rows append to the bucketed corpus table, the centroid table is
+    unchanged, and the appended ids are searchable."""
+    spark.sql(
+        "SELECT * FROM embeddings WHERE vec_id % 2 = 0"
+    ).createOrReplaceTempView("emb_growing_sivf")
+    out0 = engine.execute(
+        "CREATE INDEX emb_gsi ON emb_growing_sivf USING ivf(n_cells=8)"
+        " STORED AS emb_gsi_tbl"
+    ).collect()[0]
+    cents_before = _rows(spark.table("emb_gsi_tbl_centroids"))
+    spark.sql("SELECT * FROM embeddings").createOrReplaceTempView(
+        "emb_growing_sivf"
+    )
+    out = engine.execute("REFRESH INDEX emb_gsi").collect()[0]
+    assert out.new_rows > 0
+    assert out.indexed_rows == out0.indexed_rows + out.new_rows
+    assert _rows(spark.table("emb_gsi_tbl_centroids")) == cents_before
+    got = engine.execute(
+        "SEARCH SIMILAR USING INDEX emb_gsi(n_probe=8, query_mod=97) TOP 20"
+    ).collect()
+    ids = {r.qid for r in got} | {r.nid for r in got}
+    assert any(i % 2 == 1 for i in ids), sorted(ids)[:10]
+    engine.execute("DROP INDEX emb_gsi")
+    assert not spark.catalog.tableExists("emb_gsi_tbl")
+    assert not spark.catalog.tableExists("emb_gsi_tbl_centroids")
+
+
 def test_tokenize_large_vocab_map_path(engine, spark, smoke_dir):
     """Past MAX_CODEGEN_RULES the nested-aggregate expression exceeds
     Catalyst's parser limit — the engine must route through the Arrow
