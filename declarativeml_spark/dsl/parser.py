@@ -2143,7 +2143,7 @@ class _Parser:
     # -- CREATE INDEX / DROP INDEX (beyond-parity: SURVEY §7.5) ------------
     def parse_create_index(self) -> "ir.CreateIndex":
         """``CREATE INDEX <name> ON <source> USING <method>[(params)]``
-        — build-once similarity index (engine.py::_create_index)."""
+        — build-once similarity index (indexes.py::IndexStore.create)."""
         self.expect_keyword("INDEX")
         name = self.expect_name("index name")
         self.expect_keyword("ON")

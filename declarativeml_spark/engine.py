@@ -9,8 +9,6 @@ one ``execute`` entry point, statement-type dispatch.
 from __future__ import annotations
 
 import importlib
-import os
-import shutil
 from typing import Any, Callable, NamedTuple, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,6 +16,12 @@ from pyspark.sql import functions as F
 
 from declarativeml_spark.dsl import ir
 from declarativeml_spark.dsl.parser import parse
+from declarativeml_spark.indexes import (
+    MERGE_TABLE_COLUMNS,
+    IndexStore,
+    is_merge_table,
+    top_pairs,
+)
 from declarativeml_spark.ml.models import (
     registry_load,
     registry_meta,
@@ -27,13 +31,6 @@ from declarativeml_spark.ml.models import (
 )
 from declarativeml_spark.ml.training import TrainedModel, train
 from declarativeml_spark.plans.builder import resolve_source
-
-
-class ForeignRegistryTableError(ValueError):
-    """A table occupies the index-registry name but is not the
-    registry (wrong schema). Raised instead of reading or overwriting
-    it; paths that merely WOULD have consulted the registry (session
-    -only drops/rebuilds) treat it as 'no registry exists'."""
 
 
 class _SourceOp(NamedTuple):
@@ -72,8 +69,6 @@ class Engine:
         self.tuners: dict[str, ir.TunerAgent] = {}
         # learned BPE merge tables by tokenizer name (TRAIN TOKENIZER)
         self.tokenizers: dict[str, DataFrame] = {}
-        # tokenizer name → its STORED AS merge table (durable form)
-        self.tokenizer_tables: dict[str, str] = {}
         # named composite types (CREATE TYPE) → Spark StructType
         self.types: dict[str, Any] = {}
         # host-registered procedures for CALL / SUBSCRIBE … EXECUTE
@@ -83,14 +78,9 @@ class Engine:
         self._trend_history: dict[str, list] = {}
         # advisory retraining schedules (SCHEDULE retraining IN n unit)
         self.retrain_schedules: dict[str, dict] = {}
-        # persisted similarity indexes by name (CREATE INDEX) — each a
-        # dict of {method, source, params, frames, owned, tables}; the
-        # owned frames outlive statement scopes until DROP INDEX
-        self.indexes: dict[str, dict] = {}
-        # storage tables THIS session's CREATE INDEX wrote: only these
-        # may be silently cleaned on rebuild — anything else of the
-        # same name is presumed user data and errors instead
-        self._created_storage: set[str] = set()
+        # similarity indexes (CREATE INDEX) and every table the engine
+        # writes: index storage, the index registry, tokenizer tables
+        self.store = IndexStore(spark)
         # DataFrames persisted by the PREVIOUS statement's operators
         # (dedup/ANN cache LSH tables, normed bases, …). Released when
         # the next statement starts, or explicitly via release() — so a
@@ -226,899 +216,7 @@ class Engine:
             )
         return fn(self)
 
-    def _search_from_index(
-        self, stmt: "ir.SimilaritySearch", p: dict, k: int
-    ) -> DataFrame:
-        """``SEARCH SIMILAR [source] USING INDEX name[(params)]`` —
-        serve from a CREATE INDEX snapshot: only the probe stages run
-        (no Lloyd's / no bucket-key build). Search-time knobs only:
-        ivf takes query_mod/n_probe, lsh takes threshold."""
-        from declarativeml_spark.operators import dedup as D
-
-        rec = self.indexes.get(stmt.index) or self._adopt_stored_index(
-            stmt.index
-        )
-        if rec is None:
-            raise ValueError(
-                f"Unknown index {stmt.index!r}; build it first with"
-                " CREATE INDEX"
-            )
-        if stmt.source and stmt.source != rec["source"]:
-            raise ValueError(
-                f"Index {stmt.index!r} was built on {rec['source']!r},"
-                f" not {stmt.source!r} — the index serves its own"
-                " snapshot; CREATE INDEX on the new source instead"
-            )
-        if rec["method"] == "ivf":
-            allowed = {"query_mod", "n_probe"}
-            unknown = sorted(set(p) - allowed)
-            if unknown:
-                raise ValueError(
-                    "SEARCH SIMILAR USING INDEX (ivf) does not accept"
-                    f" option(s) {', '.join(unknown)}; accepted:"
-                    f" {', '.join(sorted(allowed))} (build-time options"
-                    " belong on CREATE INDEX)"
-                )
-            return D.ivf_probe_topk(
-                rec["frames"]["corpus"], rec["frames"]["cents"], k=k, **p
-            )
-        allowed = {"threshold"}
-        unknown = sorted(set(p) - allowed)
-        if unknown:
-            raise ValueError(
-                "SEARCH SIMILAR USING INDEX (lsh) does not accept"
-                f" option(s) {', '.join(unknown)}; accepted: threshold"
-                " (build-time options belong on CREATE INDEX)"
-            )
-        out = D.lsh_pairs_from_index(rec["frames"]["keyed"], **p)
-        if stmt.k is not None:
-            # honor an explicit TOP exactly like the direct lsh path:
-            # the k closest pairs, deterministic tiebreak
-            out = out.orderBy(
-                F.col("euclidean_dist").asc(),
-                F.col("id_a").asc(),
-                F.col("id_b").asc(),
-            ).limit(stmt.k)
-        return out
-
-    # -- CREATE INDEX / DROP INDEX (beyond-parity, SURVEY §7.5) --------------
-    def _create_index(self, stmt: "ir.CreateIndex") -> DataFrame:
-        """Build a similarity index once, materialize it, and keep it
-        across statements so repeated ``SEARCH SIMILAR … USING INDEX``
-        runs only the probe stages.
-
-        * ``ivf``: the pinned-Lloyd cell assignment (persisted corpus,
-          checkpointed centroids — operators/dedup.py::native_cells).
-        * ``lsh``: the banded bucket table (persisted, materialized —
-          operators/dedup.py::lsh_keyed_index).
-
-        The built frames are adopted OUT of the per-statement cache
-        scope (caching.adopt_since), so the engine's next-statement
-        release leaves them cached; DROP INDEX (or a rebuilding
-        CREATE INDEX of the same name) frees them. The index is a
-        snapshot of the source at build time — rebuild after the
-        source changes.
-        """
-        from declarativeml_spark.operators import caching
-
-        df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
-        p = dict(stmt.params)
-        id_col = p.pop("id_col", "vec_id")
-        vec_col = p.pop("vec_col", "embedding")
-        # Validate the method's option surface FIRST: a CREATE INDEX
-        # that is going to fail must leave an existing same-name index
-        # (and its durable storage tables) untouched.
-        if stmt.method == "ivf":
-            allowed = {"n_cells", "n_iters", "dim"}
-        else:  # lsh (ir validates the method set)
-            allowed = {
-                "bucket_length",
-                "num_hash_tables",
-                "projs_per_table",
-                "seed",
-                "dim",
-            }
-        unknown = sorted(set(p) - allowed)
-        if unknown:
-            raise ValueError(
-                f"CREATE INDEX USING {stmt.method} does not accept option(s)"
-                f" {', '.join(unknown)}; accepted:"
-                f" {', '.join(sorted(allowed | {'id_col', 'vec_col'}))}"
-            )
-        storage_targets: list[str] = []
-        wh = ""
-        if stmt.stored_as is not None:
-            t = stmt.stored_as
-            if t == self.INDEX_REGISTRY_TABLE:
-                raise ValueError(
-                    f"STORED AS target {t!r} is the engine's index"
-                    " registry table — pick another name"
-                )
-            storage_targets = [t] + (
-                [f"{t}_centroids"] if stmt.method == "ivf" else []
-            )
-            wh = self._warehouse_path()
-            # Availability checks run BEFORE the same-name index is
-            # released, so a failing statement never destroys the
-            # working one. A pre-existing table we don't own is NEVER
-            # silently dropped: it could be user data, the index's own
-            # source, another live index's storage — or a live
-            # tokenizer's merge table (both artifact kinds share
-            # _created_storage, so session ownership alone is NOT
-            # permission to clean).
-            if stmt.name not in self.indexes:
-                # an idempotent re-run in a FRESH session: a prior
-                # session's registry row plus ownership marks prove an
-                # existing STORED AS target is this index's OWN
-                # storage, adoptable for rebuild rather than refused
-                # as a squatter. Adoption failures fall through to the
-                # availability checks below (missing storage → plain
-                # rebuild; unmarked/misshapen table → refused, never
-                # dropped).
-                try:
-                    self._adopt_stored_index(stmt.name)
-                except ValueError:
-                    pass
-            old_tables = frozenset(
-                (self.indexes.get(stmt.name) or {}).get("tables", ())
-            )
-            other_tables = {
-                tbl: nm
-                for nm, rec in self.indexes.items()
-                if nm != stmt.name
-                for tbl in rec.get("tables", ())
-            }
-            tokenizer_owned = {
-                tbl: nm for nm, tbl in self.tokenizer_tables.items()
-            }
-            for target in storage_targets:
-                loc = os.path.join(wh, target.lower())
-                if target in other_tables:
-                    raise ValueError(
-                        f"STORED AS target {target!r} belongs to live"
-                        f" index {other_tables[target]!r} — pick another"
-                        " name or drop that index first"
-                    )
-                if target in tokenizer_owned:
-                    raise ValueError(
-                        f"STORED AS target {target!r} belongs to tokenizer"
-                        f" {tokenizer_owned[target]!r} — pick another name"
-                        " or drop that tokenizer first"
-                    )
-                if target in old_tables or target in self._created_storage:
-                    # the same-name index's own storage (released just
-                    # below) or a leftover from this session's earlier
-                    # failed build: safe to clean
-                    continue
-                if self.spark.catalog.tableExists(target):
-                    raise ValueError(
-                        f"STORED AS target {target!r} already exists and"
-                        f" does not belong to index {stmt.name!r} — pick"
-                        " another name or drop the table first"
-                    )
-                if os.path.isdir(loc):
-                    raise ValueError(
-                        f"STORED AS target location {loc!r} already"
-                        " exists (orphaned by a previous session?) —"
-                        " remove it or pick another name"
-                    )
-            # Registry writability is an availability check too: the
-            # closing _upsert_index_registry must not be the FIRST
-            # place a foreign-shaped squatter on the registry name
-            # surfaces — by then the old index and its tables are
-            # gone and the except-path tears the new build down with
-            # them. _read_index_registry raises
-            # ForeignRegistryTableError on a foreign shape and is
-            # cheap otherwise (no-op table miss or a handful of rows).
-            self._read_index_registry()
-            # All checks passed. Release the same-name index NOW — its
-            # DROP of the shared storage tables must run before, never
-            # after, the new write (releasing afterwards would delete
-            # the tables just written) — then clean session leftovers.
-            old = self.indexes.pop(stmt.name, None)
-            if old is not None:
-                self._release_index(old)
-            for target in storage_targets:
-                if target in self._created_storage:
-                    self._drop_storage(target)
-            self._created_storage.update(storage_targets)
-        mark = caching.scope_mark()
-        try:
-            frames, tables, n_rows, owned = self._build_index_frames(
-                stmt, df, p, id_col, vec_col, mark
-            )
-        except BaseException:
-            # a failed build must not leave the STORED AS names marked
-            # session-owned (a user table created under the name later
-            # would be silently dropped by the next same-target CREATE
-            # INDEX) nor leak partially-written storage or adopted
-            # caches
-            caching.release_all(caching.adopt_since(mark))
-            # empty shape sets: these names are this statement's own
-            # (validated above), reclaim unconditionally
-            self._reclaim_storage({t: set() for t in storage_targets})
-            if stmt.stored_as is not None:
-                # the same-name index (and its tables) was released
-                # before the build — a surviving registry row would
-                # point at dropped tables and poison later adoption
-                try:
-                    self._remove_index_registry(stmt.name)
-                except Exception:  # noqa: BLE001 — keep the build error
-                    pass
-            raise
-        old = self.indexes.pop(stmt.name, None)
-        if old is not None:
-            self._release_index(old)
-        self.indexes[stmt.name] = {
-            "method": stmt.method,
-            "source": stmt.source,
-            "source_is_identifier": stmt.source_is_identifier,
-            "params": dict(stmt.params),
-            "frames": frames,
-            "owned": owned,
-            "tables": tables,
-        }
-        # keep the cross-session registry in step: a STORED AS index
-        # records itself (so a fresh Engine can adopt it); a rebuild
-        # that dropped a previously-stored same-name index must not
-        # leave a stale row pointing at dropped tables
-        try:
-            if stmt.stored_as is not None:
-                self._upsert_index_registry(stmt.name, stmt, tables)
-            else:
-                # a non-stored rebuild must clear ANY same-name row —
-                # including a prior SESSION's (old is None then): the
-                # in-memory index shadows it now, and leaving the row
-                # would resurrect the stale stored snapshot after the
-                # next restart. The row's now-ownerless stored tables
-                # are reclaimed with it (shape-guarded), or they would
-                # leak in the warehouse with no DSL path left to free
-                # them. No-op when no row (or no real registry) exists.
-                # One exception: never drop a reclaimed table the NEW
-                # index was just built FROM (CREATE INDEX i ON idx_t
-                # where idx_t is i's prior stored storage) — the fresh
-                # frames' lineage roots at that table, and reclaiming
-                # it would fail every later search on the first cache
-                # eviction. The row still goes; the table survives as
-                # an ordinary user-visible table.
-                keep = (
-                    frozenset({stmt.source.lower()})
-                    if stmt.source_is_identifier
-                    else frozenset()
-                )
-                self._reclaim_registry_row(stmt.name, keep=keep)
-        except BaseException:
-            self._release_index(self.indexes.pop(stmt.name))
-            raise
-        return self.spark.createDataFrame(
-            [(stmt.name, stmt.method, stmt.source, int(n_rows))],
-            "index_name string, method string, source string, indexed_rows long",
-        )
-
-    # -- REFRESH INDEX (incremental maintenance, SURVEY §7.5) ----------------
-    def _refresh_index(self, stmt: "ir.RefreshIndex") -> DataFrame:
-        """Incremental index maintenance (the dedup_incremental_delta
-        pattern applied to the index): re-read the source, anti-join
-        out already-indexed ids, assign ONLY the new rows to the
-        existing structure, and append.
-
-        * ``lsh``: bucket keys are a deterministic function of the
-          vector (seeded projections), so refresh == cold rebuild on
-          the unioned source, exactly.
-        * ``ivf``: new vectors assign to the FROZEN centroids
-          (operators/dedup.py::assign_cells — one broadcast argmin,
-          no shuffle); the quantizer never moves. Centroid drift
-          warrants CREATE INDEX, not REFRESH (documented trade).
-        * ``STORED AS`` indexes append to the bucketed table with the
-          same bucket spec, so the candidate join stays co-located —
-          no exchange creeps in as the index grows.
-        """
-        from declarativeml_spark.operators import caching
-        from declarativeml_spark.operators import dedup as D
-        from declarativeml_spark.sources.io import save_bucketed_table
-
-        rec = self.indexes.get(stmt.name) or self._adopt_stored_index(
-            stmt.name
-        )
-        if rec is None:
-            raise ValueError(
-                f"Unknown index {stmt.name!r}; build it first with"
-                " CREATE INDEX"
-            )
-        df = resolve_source(
-            self.spark, rec["source"], rec.get("source_is_identifier", True)
-        )
-        p = dict(rec["params"])
-        id_col = p.pop("id_col", "vec_id")
-        vec_col = p.pop("vec_col", "embedding")
-        mark = caching.scope_mark()
-        if rec["method"] == "ivf":
-            corpus, cents = rec["frames"]["corpus"], rec["frames"]["cents"]
-            indexed = corpus.select("vec_id")
-            new = df.join(
-                indexed, df[id_col] == indexed["vec_id"], "left_anti"
-            )
-            assigned = D.assign_cells(
-                new, cents, id_col, vec_col, dim=int(p.get("dim", 64))
-            )
-            if rec["tables"]:
-                t = rec["tables"][0]
-                # persist the delta: the count below and the bucketed
-                # write would otherwise each run the source re-read +
-                # anti-join + assignment end to end (scope-released
-                # after the statement)
-                assigned = caching.track_persist(assigned)
-                n_new = assigned.count()
-                if n_new:
-                    save_bucketed_table(assigned, t, "cell", mode="append")
-                rec["frames"] = {
-                    "corpus": self.spark.table(t),
-                    "cents": cents,
-                }
-            else:
-                n_old = corpus.count()  # BEFORE the old generation's
-                # checkpoint blocks are released by the union swap
-                union = self._checkpoint_refresh_union(
-                    rec, corpus.unionByName(assigned)
-                )
-                n_new = union.count() - n_old
-                caching.release_all(rec["owned"])
-                rec["owned"] = caching.adopt_since(mark)
-                rec["frames"] = {"corpus": union, "cents": cents}
-            total = rec["frames"]["corpus"].count()
-        else:  # lsh
-            keyed = rec["frames"]["keyed"]
-            indexed = keyed.select("vec_id").distinct()
-            new = df.join(
-                indexed, df[id_col] == indexed["vec_id"], "left_anti"
-            )
-            if "dim" not in p:
-                # infer from the EXISTING index, not from `new` — a
-                # refresh with zero new rows must key an empty frame
-                # (lsh_keyed_index can't infer dim from emptiness)
-                probe = keyed.select(F.size("vec").alias("d")).first()
-                if probe is not None and probe["d"] and probe["d"] > 0:
-                    p["dim"] = int(probe["d"])
-            keyed_new = D.lsh_keyed_index(
-                new, id_col=id_col, vec_col=vec_col, **p
-            )
-            if rec["tables"]:
-                t = rec["tables"][0]
-                # persist the delta (count + write would otherwise
-                # each run the anti-join + keying end to end).
-                # Counts report VECTORS (distinct vec_id), not bucket
-                # rows — keyed is one row per (vector × hash table),
-                # and the ivf branch reports true vector counts; the
-                # two methods must mean the same thing by new_rows.
-                keyed_new = caching.track_persist(keyed_new)
-                n_new = keyed_new.select("vec_id").distinct().count()
-                if n_new:
-                    save_bucketed_table(
-                        keyed_new, t, ["tbl", "bkey"],
-                        sort_col=["tbl", "bkey"], mode="append",
-                    )
-                # append-time operator persists die with the statement
-                # scope; the table serves
-                rec["frames"] = {"keyed": self.spark.table(t)}
-            else:
-                # vector counts, not bucket rows (see above)
-                n_old = keyed.select("vec_id").distinct().count()
-                # counted BEFORE the old generation's checkpoint
-                # blocks are released by the union swap
-                union = self._checkpoint_refresh_union(
-                    rec, keyed.unionByName(keyed_new)
-                )
-                n_new = union.select("vec_id").distinct().count() - n_old
-                caching.release_all(rec["owned"])
-                rec["owned"] = caching.adopt_since(mark)
-                rec["frames"] = {"keyed": union}
-            total = (
-                rec["frames"]["keyed"].select("vec_id").distinct().count()
-            )
-        return self.spark.createDataFrame(
-            [(stmt.name, rec["method"], int(n_new), int(total))],
-            "index_name string, method string, new_rows long,"
-            " indexed_rows long",
-        )
-
-    def _checkpoint_refresh_union(self, rec: dict, union: DataFrame):
-        """Materialize a refreshed in-memory index frame with its
-        LINEAGE TRUNCATED (eager localCheckpoint), not merely cached:
-        the union's recompute path re-reads the index's source, which
-        has GROWN since the snapshot — a cache eviction would silently
-        re-index every new row twice (old branch now includes them +
-        the appended delta). Checkpoint blocks don't survive executor
-        loss; an in-memory index never did — rebuild on loss, as
-        documented. Prior refreshes' checkpoints are released once the
-        new generation is materialized."""
-        from declarativeml_spark.operators.caching import (
-            release_checkpoint,
-        )
-
-        union = union.localCheckpoint(eager=True)
-        for old in rec.get("checkpointed", ()):
-            release_checkpoint(old)
-        rec["checkpointed"] = [union]
-        return union
-
-    def _build_index_frames(
-        self, stmt: "ir.CreateIndex", df, p, id_col, vec_col, mark
-    ):
-        """Build (and, for ``STORED AS``, persist to bucketed tables)
-        the index's serving frames. Options are pre-validated by
-        ``_create_index``; any failure here is cleaned up there."""
-        from declarativeml_spark.operators import caching
-        from declarativeml_spark.operators import dedup as D
-
-        if stmt.method == "ivf":
-            corpus, cents = D.native_cells(
-                df,
-                id_col,
-                vec_col,
-                n_cells=int(p.get("n_cells", 8)),
-                n_iters=int(p.get("n_iters", 2)),
-                dim=int(p.get("dim", 64)),
-            )
-            n_rows = corpus.count()  # materialize the snapshot NOW
-            frames = {"corpus": corpus, "cents": cents}
-        else:  # lsh (options validated by _create_index)
-            # persist_base=False: this caller persists (or stores) the
-            # exploded keyed frame itself — the operator's internal
-            # vector-plane cache would be a second copy of every
-            # vector (r11 advice #2)
-            keyed = caching.track_persist(
-                D.lsh_keyed_index(
-                    df, id_col=id_col, vec_col=vec_col,
-                    persist_base=False, **p,
-                )
-            )
-            # materializes the persisted snapshot AND reports VECTORS
-            # (keyed is one row per vector × hash table; indexed_rows
-            # must mean the same thing for lsh and ivf)
-            n_rows = keyed.select("vec_id").distinct().count()
-            frames = {"keyed": keyed}
-        owned = caching.adopt_since(mark)
-        try:
-            tables, frames, owned = self._store_index_tables(
-                stmt, frames, owned
-            )
-        except BaseException:
-            # adopted frames are outside the statement scope now — a
-            # failed write must release them here (the caller's cleanup
-            # only sees frames still in the scope)
-            caching.release_all(owned)
-            raise
-        return frames, tables, n_rows, owned
-
-    def _store_index_tables(self, stmt: "ir.CreateIndex", frames, owned):
-        from declarativeml_spark.operators import caching
-
-        tables: list[str] = []
-        if stmt.stored_as is not None:
-            # durable variant: write BUCKETED managed tables and serve
-            # from them — the lsh bucket table is bucketed by bkey, so
-            # the candidate self-join is co-located (HashPartitioning
-            # on a subset of the join keys satisfies the clustering
-            # requirement: no exchange); survives executor loss, which
-            # in-memory checkpoint blocks do not
-            from declarativeml_spark.operators.caching import (
-                release_checkpoint,
-            )
-            from declarativeml_spark.sources.io import save_bucketed_table
-
-            t = stmt.stored_as
-            if stmt.method == "ivf":
-                save_bucketed_table(frames["corpus"], t, "cell")
-                frames["cents"].write.mode("overwrite").saveAsTable(
-                    f"{t}_centroids"
-                )
-                release_checkpoint(frames["cents"])
-                tables = [t, f"{t}_centroids"]
-                frames = {
-                    "corpus": self.spark.table(t),
-                    "cents": self.spark.table(f"{t}_centroids"),
-                }
-            else:
-                # both candidate-join keys — Spark's co-partition check
-                # rejects a bucket-key subset of the join keys
-                save_bucketed_table(
-                    frames["keyed"], t, ["tbl", "bkey"],
-                    sort_col=["tbl", "bkey"],
-                )
-                tables = [t]
-                frames = {"keyed": self.spark.table(t)}
-            for tbl in tables:
-                self._mark_index_storage(tbl)
-            caching.release_all(owned)  # the tables serve now
-            owned = []
-        return tables, frames, owned
-
-    def _release_index(self, rec: dict) -> None:
-        from declarativeml_spark.operators.caching import (
-            release_all,
-            release_checkpoint,
-        )
-
-        release_all(rec["owned"])
-        if not rec.get("tables"):
-            cents = rec["frames"].get("cents")
-            if cents is not None:
-                release_checkpoint(cents)
-        for f in rec.get("checkpointed", ()):  # refresh generations
-            release_checkpoint(f)
-        for t in rec.get("tables", ()):
-            self._drop_storage(t)
-
-    def _drop_index(self, stmt: "ir.DropIndex") -> dict:
-        rec = self.indexes.pop(stmt.name, None)
-        if rec is None:
-            # a STORED AS index from another session is droppable too:
-            # adopt it first so its tables and registry row go with it
-            try:
-                rec = self._adopt_stored_index(stmt.name)
-            except ForeignRegistryTableError:
-                raise  # a user table blocks the registry: say so
-            except ValueError:
-                # registered but storage partially gone: DROP reclaims
-                # what survives (shape-guarded — a user table merely
-                # reusing a freed name is never dropped) plus the
-                # stale registry row, so the names are reusable
-                self._reclaim_registry_row(stmt.name)
-                return {"dropped": stmt.name}
-            self.indexes.pop(stmt.name, None)
-        if rec is None:
-            raise ValueError(f"Unknown index {stmt.name!r}")
-        self._release_index(rec)
-        # clear any registry row unconditionally: a session-only index
-        # can shadow a prior session's STORED row of the same name, and
-        # DROP must not let that row resurrect the stale snapshot
-        self._remove_index_registry(stmt.name)
-        return {"dropped": stmt.name}
-
-    # -- cross-session index registry (cold-start serving) -------------------
-    # CREATE INDEX … STORED AS persists the serving frames as bucketed
-    # tables, but the name→{method, params, tables} mapping lived only
-    # on the engine — a driver restart could read the tables yet not
-    # SERVE them. This one-row-per-index managed table closes that gap:
-    # a fresh Engine adopts a stored index on first SEARCH/REFRESH/DROP
-    # … USING INDEX <name>, probe-only, no rebuild.
-    INDEX_REGISTRY_TABLE = "declml_index_registry"
-    _INDEX_REGISTRY_SCHEMA = (
-        "index_name string, method string, source string,"
-        " source_is_identifier boolean, params string,"
-        " tables array<string>"
-    )
-
-    # full dtype map, not just names: a user table with the same six
-    # column NAMES but different types must not pass as the registry
-    _INDEX_REGISTRY_DTYPES = {
-        "index_name": "string",
-        "method": "string",
-        "source": "string",
-        "source_is_identifier": "boolean",
-        "params": "string",
-        "tables": "array<string>",
-    }
-
-    def _read_index_registry(self) -> Optional[list]:
-        """All registry rows, or None when no registry table exists.
-        A same-named table with a FOREIGN shape is never read as (or
-        overwritten by) the registry — same never-clobber-user-data
-        discipline as the STORED AS target checks."""
-        self._recover_swap(self.INDEX_REGISTRY_TABLE, self._is_registry)
-        if not self.spark.catalog.tableExists(self.INDEX_REGISTRY_TABLE):
-            return None
-        # the relation cache is PER SESSION: another live session's
-        # registry rewrite (swap-rename or overwrite) replaces the
-        # part files, and this session's cached listing would fail
-        # FAILED_READ_FILE on the next read. The registry is a
-        # handful of rows — refresh unconditionally before reading.
-        self.spark.sql(f"REFRESH TABLE {self.INDEX_REGISTRY_TABLE}")
-        reg = self.spark.table(self.INDEX_REGISTRY_TABLE)
-        if not self._is_registry(reg):
-            raise ForeignRegistryTableError(
-                f"Table {self.INDEX_REGISTRY_TABLE!r} exists but is not"
-                " the engine's index registry (schema"
-                f" {sorted(reg.dtypes)}) — rename or drop it"
-            )
-        return [r.asDict() for r in reg.collect()]
-
-    def _registry_rows_without(self, name: str) -> list:
-        return [
-            r
-            for r in (self._read_index_registry() or [])
-            if r["index_name"] != name
-        ]
-
-    @classmethod
-    def _is_registry(cls, df: DataFrame) -> bool:
-        return dict(df.dtypes) == cls._INDEX_REGISTRY_DTYPES
-
-    def _write_index_registry(self, rows: list) -> None:
-        # callers have already read (and so shape-validated) the
-        # registry; only the existence check remains
-        self._recover_swap(self.INDEX_REGISTRY_TABLE, self._is_registry)
-        t = self.INDEX_REGISTRY_TABLE
-        frame = self.spark.createDataFrame(
-            rows, schema=self._INDEX_REGISTRY_SCHEMA
-        )
-        if not self.spark.catalog.tableExists(t):
-            # an orphaned warehouse location (a previous catalog's
-            # registry — e.g. a fresh in-memory metastore over a
-            # shared warehouse dir) is stale by construction: nothing
-            # it points to is registered in THIS catalog. Clean it the
-            # way _create_index cleans orphaned index locations.
-            loc = os.path.join(self._warehouse_path(), t)
-            if os.path.isdir(loc):
-                shutil.rmtree(loc, ignore_errors=True)
-            frame.write.saveAsTable(t)
-            return
-        # a plain overwrite drops the table before rewriting, so a
-        # mid-write failure would lose EVERY stored index's row and
-        # leave their bucketed tables orphaned with no DSL path to
-        # reclaim them
-        self._swap_write(frame, t)
-
-    # -- crash-safe replacement of engine-managed tables ---------------------
-    def _clean_table(self, name: str) -> None:
-        """Drop a managed table (best effort) and its warehouse dir."""
-        try:
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        except Exception:  # noqa: BLE001 — best-effort cleanup
-            pass
-        shutil.rmtree(
-            os.path.join(self._warehouse_path(), name.lower()),
-            ignore_errors=True,
-        )
-
-    def _drop_storage(self, t: str) -> None:
-        """Drop an engine-written storage table (best effort) and forget
-        it: the name is free again, so a table the USER creates under it
-        later must not be silently cleanable on rebuild."""
-        self._clean_table(t)
-        self._created_storage.discard(t)
-
-    def _swap_write(self, frame: DataFrame, t: str) -> None:
-        """Replace existing table ``t`` with ``frame`` so that a failed
-        write leaves the good copy intact: save ``<t>__swap`` first,
-        then drop + rename. The swap name is engine-internal by
-        construction, so a leftover from an interrupted swap is always
-        safe to clean; a crash between the drop and the rename is
-        repaired by :meth:`_recover_swap`."""
-        tmp = f"{t}__swap"
-        try:
-            self._clean_table(tmp)  # leftover from an interrupted prior swap
-            frame.write.saveAsTable(tmp)
-        except BaseException:
-            self._clean_table(tmp)
-            raise  # the existing good table is untouched
-        self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
-        # the rename leaves stale cached file listings for the name in
-        # OTHER live sessions sharing this catalog (their next read
-        # fails FAILED_READ_FILE on the swapped-out part files);
-        # refresh invalidates the shared relation cache
-        self.spark.sql(f"REFRESH TABLE {t}")
-
-    def _recover_swap(self, t: str, is_shape: Callable[[DataFrame], bool]) -> None:
-        """Crash recovery for the swap-rename window in
-        :meth:`_swap_write`: a failure between ``DROP TABLE <t>`` and
-        ``ALTER TABLE <t>__swap RENAME`` leaves no table but a COMPLETE
-        swap. Without recovery the data that survived the crash is lost
-        (the next swap-write cleans the swap) or blocks the next write.
-        Adopt an orphan that passes ``is_shape`` by finishing the
-        rename; a foreign-shaped same-named table is left alone (the
-        usual never-clobber discipline)."""
-        tmp = f"{t}__swap"
-        if self.spark.catalog.tableExists(t) or not self.spark.catalog.tableExists(tmp):
-            return
-        self.spark.sql(f"REFRESH TABLE {tmp}")
-        if not is_shape(self.spark.table(tmp)):
-            return
-        self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
-        self.spark.sql(f"REFRESH TABLE {t}")
-
-    # Explicit ownership marker on every stored-index table: the
-    # column-subset shape guard alone cannot tell index storage from a
-    # USER table that happens to have the same column names
-    # (compatible-but-foreign shape, the round-7 verdict's adversarial
-    # case). A table property is an unambiguous claim only the engine
-    # writes, so reclaim/adoption require BOTH the shape and the mark.
-    _INDEX_STORAGE_PROP = "declml.index_storage"
-
-    def _mark_index_storage(self, table: str) -> None:
-        self.spark.sql(
-            f"ALTER TABLE {table} SET TBLPROPERTIES"
-            f" ('{self._INDEX_STORAGE_PROP}'='1')"
-        )
-
-    def _has_table_prop(self, table: str, prop: str) -> bool:
-        from pyspark.errors import AnalysisException
-
-        try:
-            rows = self.spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-        except AnalysisException:  # no such table / view: not ours
-            return False
-        # anything else (transient catalog/metastore failure) must
-        # propagate: swallowing it here would make a flaky metastore
-        # indistinguishable from "not marked", steering
-        # _adopt_stored_index into its destructive rebuild error and
-        # the create-path reclaim into silently skipping a table the
-        # engine actually owns.
-        return any(r.key == prop and r.value == "1" for r in rows)
-
-    def _is_index_storage(self, table: str) -> bool:
-        return self._has_table_prop(table, self._INDEX_STORAGE_PROP)
-
-    @staticmethod
-    def _index_table_shapes(method: str, tables: list) -> dict:
-        """Map each of an index's storage tables to the column subset
-        that marks it as index storage (the reclaim guard: a table
-        whose live shape lacks these is presumed USER data that merely
-        reuses the name, and is never dropped)."""
-        shapes: dict = {}
-        if not tables:
-            return shapes
-        if method == "ivf":
-            shapes[tables[0]] = {"cell"}  # bucketed corpus
-            if len(tables) > 1:
-                shapes[tables[1]] = {"cell"}  # centroid table
-        else:  # lsh keyed bucket table
-            shapes[tables[0]] = {"tbl", "bkey"}
-        return shapes
-
-    def _reclaim_storage(self, shapes: dict) -> list:
-        """DROP tables + their warehouse dirs and release session
-        ownership. ``shapes`` maps table → required column subset; a
-        LIVE table missing those columns is skipped (never clobber
-        presumed user data — an empty set always reclaims, for tables
-        this statement itself just wrote). Returns the skipped names."""
-        skipped = []
-        for t, required in shapes.items():
-            # both guards, not either: the required-column subset AND
-            # the engine's ownership property. A user table with
-            # coincidentally compatible columns is missing the mark;
-            # an empty `required` means the statement itself just
-            # wrote the name (reclaim unconditionally).
-            if (
-                required
-                and self.spark.catalog.tableExists(t)
-                and (
-                    not required <= set(self.spark.table(t).columns)
-                    or not self._is_index_storage(t)
-                )
-            ):
-                skipped.append(t)
-                continue
-            self._drop_storage(t)
-        return skipped
-
-    def _reclaim_registry_row(
-        self, name: str, keep: frozenset = frozenset()
-    ) -> None:
-        """Reclaim a registered index's surviving storage (shape
-        -guarded) and its registry row. Tables named in ``keep``
-        (lower-cased) are left standing — the caller's live lineage
-        depends on them. No-op when no registry — or a foreign-shaped
-        table under the registry name — exists."""
-        try:
-            rows = self._read_index_registry() or []
-        except ForeignRegistryTableError:
-            return  # not a registry: nothing registered to reclaim
-        mine = [r for r in rows if r["index_name"] == name]
-        for row in mine:
-            shapes = self._index_table_shapes(
-                row["method"], list(row["tables"])
-            )
-            shapes = {
-                t: s for t, s in shapes.items() if t.lower() not in keep
-            }
-            self._reclaim_storage(shapes)
-        if mine:
-            self._write_index_registry(
-                [r for r in rows if r["index_name"] != name]
-            )
-
-    def _upsert_index_registry(
-        self, name: str, stmt: "ir.CreateIndex", tables: list
-    ) -> None:
-        import json as _json
-
-        rows = self._registry_rows_without(name)
-        rows.append(
-            {
-                "index_name": name,
-                "method": stmt.method,
-                "source": stmt.source,
-                "source_is_identifier": stmt.source_is_identifier,
-                "params": _json.dumps(dict(stmt.params), sort_keys=True),
-                "tables": list(tables),
-            }
-        )
-        self._write_index_registry(rows)
-
-    def _remove_index_registry(self, name: str) -> None:
-        """Drop a row (only). Session-only operations route here, so a
-        foreign-shaped table under the registry name means 'no
-        registry' — swallow it rather than failing an operation that
-        needs no registry at all; only stored-index paths (which must
-        WRITE) surface the foreign-table error."""
-        try:
-            rows = self._read_index_registry()
-        except ForeignRegistryTableError:
-            return
-        if rows is None:
-            return
-        kept = [r for r in rows if r["index_name"] != name]
-        if len(kept) != len(rows):  # rewrite only when a row existed
-            self._write_index_registry(kept)
-
-    def _adopt_stored_index(self, name: str) -> Optional[dict]:
-        """Reconstruct a STORED AS index record from the registry and
-        its bucketed tables (any session's). Returns None when the
-        registry has no row for ``name``; raises when the row exists
-        but its storage is gone (a failed rebuild or out-of-band drop
-        — CREATE INDEX rebuilds it)."""
-        import json as _json
-
-        rows = [
-            r
-            for r in (self._read_index_registry() or [])
-            if r["index_name"] == name
-        ]
-        if not rows:
-            return None
-        row = rows[0]
-        tables = list(row["tables"])
-        missing = [
-            t for t in tables if not self.spark.catalog.tableExists(t)
-        ]
-        if missing:
-            raise ValueError(
-                f"Index {name!r} is registered but its storage table(s)"
-                f" {', '.join(missing)} are gone (failed rebuild or"
-                " dropped out of band) — CREATE INDEX to rebuild"
-            )
-        # shape-validate BEFORE serving (and before DROP could release
-        # these frames): a user table that merely reuses a recorded
-        # name must neither serve garbage nor ever be dropped
-        for t, required in self._index_table_shapes(
-            row["method"], tables
-        ).items():
-            have = set(self.spark.table(t).columns)
-            marked = self._is_index_storage(t)
-            if not required <= have or not marked:
-                raise ValueError(
-                    f"Index {name!r} is registered but table {t!r} does"
-                    " not look like its index storage (columns"
-                    f" {sorted(have)}, ownership mark {marked}) — the"
-                    " name was likely reused; CREATE INDEX to rebuild"
-                )
-        if row["method"] == "ivf":
-            frames = {
-                "corpus": self.spark.table(tables[0]),
-                "cents": self.spark.table(tables[1]),
-            }
-        else:
-            frames = {"keyed": self.spark.table(tables[0])}
-        rec = {
-            "method": row["method"],
-            "source": row["source"],
-            "source_is_identifier": bool(row["source_is_identifier"]),
-            "params": _json.loads(row["params"]),
-            "frames": frames,
-            "owned": [],  # serves straight from the tables: no caches
-            "tables": tables,
-        }
-        self.indexes[name] = rec
-        return rec
-
     # -- TRAIN TOKENIZER (beyond-parity, SURVEY §2.11) -----------------------
-    def _warehouse_path(self) -> str:
-        from declarativeml_spark.sources.io import warehouse_path
-
-        return warehouse_path(self.spark)
-
     def _train_tokenizer(self, stmt: "ir.TrainTokenizer") -> DataFrame:
         """BPE-merge training (operators/bpe.py): ``VOCAB n`` is the
         target vocabulary size, so the engine learns
@@ -1127,10 +225,10 @@ class Engine:
         exactly once). The learned merge table is kept on the engine
         (``tokenizers[name]``, a handful of rows) for reuse;
         ``STORED AS <t>`` additionally persists it as a managed table
-        (same ownership discipline as CREATE INDEX: a pre-existing
-        table this session didn't write is never silently
-        overwritten), so ``TOKENIZE … USING <t>`` works in a FRESH
-        session — unlike the session dict, the table survives."""
+        (claimed by the same rule as CREATE INDEX … STORED AS:
+        indexes.py::IndexStore.claim), so ``TOKENIZE … USING <t>``
+        works in a FRESH session — unlike the session dict, the table
+        survives."""
         from declarativeml_spark.operators.bpe import bpe_merges
 
         df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
@@ -1143,105 +241,18 @@ class Engine:
         # before anything about the existing same-name tokenizer is
         # touched — a failing statement leaves the working one intact
         if stmt.stored_as is not None:
-            t = stmt.stored_as
-            if t == self.INDEX_REGISTRY_TABLE:
-                raise ValueError(
-                    f"STORED AS target {t!r} is the engine's index"
-                    " registry table — pick another name"
-                )
-            index_owned = {
-                tbl: nm
-                for nm, rec in self.indexes.items()
-                for tbl in rec.get("tables", ())
-            }
-            if t in index_owned:
-                raise ValueError(
-                    f"STORED AS target {t!r} belongs to live index"
-                    f" {index_owned[t]!r} — pick another name"
-                )
-            other = {
-                tbl: nm
-                for nm, tbl in self.tokenizer_tables.items()
-                if nm != stmt.name
-            }
-            if t in other:
-                raise ValueError(
-                    f"STORED AS target {t!r} belongs to tokenizer"
-                    f" {other[t]!r} — pick another name or drop it first"
-                )
-            owned = (
-                t == self.tokenizer_tables.get(stmt.name)
-                or t in self._created_storage
-            )
-            if not owned:
-                if self.spark.catalog.tableExists(t):
-                    raise ValueError(
-                        f"STORED AS target {t!r} already exists and does"
-                        f" not belong to tokenizer {stmt.name!r} — pick"
-                        " another name or drop the table first"
-                    )
-                loc = os.path.join(self._warehouse_path(), t.lower())
-                if os.path.isdir(loc):
-                    raise ValueError(
-                        f"STORED AS target location {loc!r} already"
-                        " exists (orphaned by a previous session?) —"
-                        " remove it or pick another name"
-                    )
+            self.store.claim([stmt.stored_as], ("tokenizer", stmt.name))
         merges = bpe_merges(df, stmt.text_column, vocab=stmt.vocab)
         # Target resolution: an explicit STORED AS wins; a retrain of a
         # tokenizer that already HAS a durable table keeps that table
         # in sync (otherwise the stored form would silently serve the
         # OLD merges to fresh sessions while this session uses the new
         # ones — the name owns the table, so retraining refreshes it).
-        t = stmt.stored_as or self.tokenizer_tables.get(stmt.name)
+        t = stmt.stored_as or self.store.tokenizer_tables.get(stmt.name)
         if t is not None:
-            self._write_tokenizer_table(merges, t)
-            old_table = self.tokenizer_tables.get(stmt.name)
-            if old_table and old_table != t:
-                # retrained under a new table: release the old one
-                self._drop_storage(old_table)
-            self.tokenizer_tables[stmt.name] = t
-            merges = self.spark.table(t)  # serve from the durable form
+            merges = self.store.store_tokenizer(stmt.name, merges, t)
         self.tokenizers[stmt.name] = merges
         return merges
-
-    _TOKENIZER_SHAPE = frozenset({"merge_round", "lhs", "rhs"})
-
-    @classmethod
-    def _is_merge_table(cls, df: DataFrame) -> bool:
-        return cls._TOKENIZER_SHAPE <= set(df.columns)
-
-    def _write_tokenizer_table(self, merges: DataFrame, t: str) -> None:
-        """Persist a merge table ATOMICALLY with respect to an existing
-        good copy (:meth:`_swap_write`): a failed retrain leaves the
-        previous durable table, and the session state pointing at it,
-        fully intact. Fresh targets write directly."""
-        # a prior crash may have stranded the merges in the swap; left
-        # there, the orphan would trip the retrain's ownership guard
-        self._recover_swap(t, self._is_merge_table)
-        if self.spark.catalog.tableExists(t):
-            tmp = f"{t}__swap"
-            if self.spark.catalog.tableExists(tmp):
-                # a crash between the swap save and the DROP of the old
-                # table leaves BOTH standing: the good table t plus an
-                # engine-written merge-shaped swap. That leftover is
-                # safe to clean (and _swap_write does); only a
-                # foreign-shaped squatter on the swap name is refused.
-                self.spark.sql(f"REFRESH TABLE {tmp}")
-                if not self._is_merge_table(self.spark.table(tmp)):
-                    raise ValueError(
-                        f"swap table {tmp!r} exists and is not a merge"
-                        " table — remove it or pick another STORED AS name"
-                    )
-            self._swap_write(merges, t)
-        else:
-            try:
-                merges.write.saveAsTable(t)
-            except BaseException:
-                # no prior table to protect: unmark and clean partials
-                self._drop_storage(t)
-                raise
-        self._created_storage.add(t)
 
     # -- TOKENIZE (apply side, beyond-parity, SURVEY §2.11) ------------------
     def _tokenize(self, stmt: "ir.Tokenize") -> DataFrame:
@@ -1260,13 +271,13 @@ class Engine:
             )
         merges = self.tokenizers.get(stmt.tokenizer)
         if merges is not None:
-            t = self.tokenizer_tables.get(stmt.tokenizer)
+            t = self.store.tokenizer_tables.get(stmt.tokenizer)
             if t is not None and self.spark.catalog.tableExists(t):
                 # the session frame serves from the durable table;
                 # another live session's rewrite replaces its part
                 # files and the bound frame's resolved file listing
                 # goes stale (the relation cache is per session — same
-                # reason _read_index_registry refreshes
+                # reason the index registry read refreshes
                 # unconditionally). REFRESH alone is not enough: the
                 # already-analyzed DataFrame keeps its frozen file
                 # index, so re-bind from the catalog too.
@@ -1275,8 +286,8 @@ class Engine:
                 self.tokenizers[stmt.tokenizer] = merges
         if merges is None:
             # a prior session's crash may have stranded the merges in
-            # the swap (see _recover_swap)
-            self._recover_swap(stmt.tokenizer, self._is_merge_table)
+            # the swap (see indexes.py::IndexStore.recover_swap)
+            self.store.recover_swap(stmt.tokenizer, is_merge_table)
             if not self.spark.catalog.tableExists(stmt.tokenizer):
                 raise ValueError(
                     f"Unknown tokenizer {stmt.tokenizer!r}; train one with"
@@ -1285,7 +296,7 @@ class Engine:
                 )
             self.spark.sql(f"REFRESH TABLE {stmt.tokenizer}")
             merges = self.spark.table(stmt.tokenizer)
-            missing = self._TOKENIZER_SHAPE - set(merges.columns)
+            missing = MERGE_TABLE_COLUMNS - set(merges.columns)
             if missing:
                 raise ValueError(
                     f"Table {stmt.tokenizer!r} is not a tokenizer merge"
@@ -1319,13 +330,13 @@ class Engine:
     def _drop_tokenizer(self, stmt: "ir.DropTokenizer") -> dict:
         if (
             stmt.name not in self.tokenizers
-            and stmt.name not in self.tokenizer_tables
+            and stmt.name not in self.store.tokenizer_tables
         ):
             raise ValueError(f"Unknown tokenizer {stmt.name!r}")
         self.tokenizers.pop(stmt.name, None)
-        t = self.tokenizer_tables.pop(stmt.name, None)
+        t = self.store.tokenizer_tables.pop(stmt.name, None)
         if t:
-            self._drop_storage(t)
+            self.store.drop_storage(t)
         return {"dropped": stmt.name}
 
     # -- DECODE / SAMPLE FRAMES / RESIZE (multimodal DSL twins) ------------
@@ -1602,7 +613,7 @@ class Engine:
             )
         k = stmt.k if stmt.k is not None else 10
         if stmt.method == "index":
-            return self._search_from_index(stmt, p, k)
+            return self.store.search(stmt, p, k)
         df = resolve_source(self.spark, stmt.source, stmt.source_is_identifier)
         if stmt.method == "lsh":
             fn, kw = D.lsh_topk_pairs, p
@@ -1645,11 +656,7 @@ class Engine:
             # honor an explicit TOP for the pair join too: the k
             # closest pairs, deterministic tiebreak — silently
             # returning the full threshold set ignored the clause
-            out = out.orderBy(
-                F.col("euclidean_dist").asc(),
-                F.col("id_a").asc(),
-                F.col("id_b").asc(),
-            ).limit(stmt.k)
+            out = top_pairs(out, stmt.k)
         return out
 
     # -- REGISTER AGENT (catalog row + subscription, AGENTS.md:189-196) -------
@@ -2506,13 +1513,13 @@ class Engine:
 
     def _write_prediction_sink(self, scored: DataFrame, sink: str) -> None:
         """Never-clobber sink write (the same discipline as
-        _create_index/_train_tokenizer): overwrite only a name this
+        CREATE INDEX/TRAIN TOKENIZER … STORED AS): overwrite only a name this
         path itself created (marked ``declml.prediction_sink``) or a
         name that does not exist. An unguarded overwrite-saveAsTable
         could silently destroy the index registry, a live index's
         bucketed storage, a tokenizer merge table, or any user
         table."""
-        if sink == self.INDEX_REGISTRY_TABLE:
+        if sink == self.store.INDEX_REGISTRY_TABLE:
             # refused by NAME, not catalog existence — a fresh
             # catalog over a shared warehouse would otherwise pass
             # the exists check and clobber (or collide with) the
@@ -2522,12 +1529,12 @@ class Engine:
                 " engine's index registry — choose another name"
             )
         if self.spark.catalog.tableExists(sink):
-            if self._is_index_storage(sink):
+            if self.store.is_index_storage(sink):
                 raise ValueError(
                     f"STORE RESULTS IN {sink!r}: that table is engine"
                     " index storage — choose another name"
                 )
-            if not self._has_table_prop(sink, self._PREDICTION_SINK_PROP):
+            if not self.store.has_table_prop(sink, self._PREDICTION_SINK_PROP):
                 raise ValueError(
                     f"STORE RESULTS IN {sink!r}: table exists and was"
                     " not created by a previous STORE RESULTS —"
@@ -2623,9 +1630,9 @@ class Engine:
         ir.SampleFrames: _sample_frames,
         ir.ResizeMedia: _resize_media,
         ir.LoadMedia: _load_media,
-        ir.CreateIndex: _create_index,
-        ir.DropIndex: _drop_index,
-        ir.RefreshIndex: _refresh_index,
+        ir.CreateIndex: lambda self, stmt: self.store.create(stmt),
+        ir.DropIndex: lambda self, stmt: self.store.drop(stmt),
+        ir.RefreshIndex: lambda self, stmt: self.store.refresh(stmt),
         # corpus prep (SURVEY §2.11); a trailing comment names the
         # entry's oracle-checked twin query
         ir.Decontaminate: _SourceOp(

@@ -880,7 +880,7 @@ def lsh_keyed_index(
     """Build stage of the native LSH: the banded bucket table
     (vec_id, vec, tbl, bkey) — one row per (vector, hash table).
     Split out so CREATE INDEX can materialize it once and serve
-    repeat searches (engine.py::_create_index).
+    repeat searches (indexes.py::IndexStore.create).
 
     ``persist_base=False`` skips the internal persist of the
     pre-explode vector plane — pass it when the CALLER persists (or
@@ -1520,7 +1520,7 @@ def ivf_probe_topk(
     ``n_probe`` nearest cells per query and score exact cosine inside
     them. Split out from :func:`ivf_native_topk` so a CREATE INDEX'd
     (corpus, cents) snapshot serves repeat searches without re-running
-    Lloyd's (engine.py::_create_index)."""
+    Lloyd's (indexes.py::IndexStore.create)."""
     from pyspark.sql import Window
 
     # zero-norm vectors cluster fine (L2 distance is defined) but

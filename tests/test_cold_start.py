@@ -93,11 +93,11 @@ def test_cold_predict_serves_without_rebuild(cold, warm):
 
 
 def test_cold_search_lsh_adopts_probe_only(cold, warm):
-    assert "cold_idx" not in cold.indexes  # nothing pre-loaded
+    assert "cold_idx" not in cold.store.indexes  # nothing pre-loaded
     res = cold.execute("SEARCH SIMILAR USING INDEX cold_idx(threshold=1.15)")
     # adoption happened, serving frames are the stored tables
-    assert cold.indexes["cold_idx"]["tables"] == ["cold_idx_tbl"]
-    assert cold.indexes["cold_idx"]["owned"] == []
+    assert cold.store.indexes["cold_idx"]["tables"] == ["cold_idx_tbl"]
+    assert cold.store.indexes["cold_idx"]["owned"] == []
     # probe-only: the executed plan reads the bucketed table — no
     # bucket-key build stage re-keys the source
     plan = res._jdf.queryExecution().executedPlan().toString()
@@ -111,7 +111,7 @@ def test_cold_search_ivf_adopts_probe_only(cold, warm):
     res = cold.execute(
         "SEARCH SIMILAR USING INDEX cold_ivf(n_probe=8, query_mod=97) TOP 10"
     )
-    assert cold.indexes["cold_ivf"]["tables"] == [
+    assert cold.store.indexes["cold_ivf"]["tables"] == [
         "cold_ivf_tbl",
         "cold_ivf_tbl_centroids",
     ]
@@ -157,7 +157,7 @@ def test_cold_drop_adopted_index_clears_registry(warm, spark, smoke_dir):
         e4.execute("SEARCH SIMILAR USING INDEX cold_tmp")
     # the warm engine's in-memory record is now stale by design (the
     # storage was dropped by another session) — clean it up
-    warm.indexes.pop("cold_tmp", None)
+    warm.store.indexes.pop("cold_tmp", None)
 
 
 def test_drop_session_only_index_kills_stale_registry_row(
@@ -181,7 +181,7 @@ def test_drop_session_only_index_kills_stale_registry_row(
     e2.execute("DROP INDEX cold_shadow")
     with pytest.raises(ValueError, match="Unknown index"):
         e2.execute("SEARCH SIMILAR USING INDEX cold_shadow")
-    warm.indexes.pop("cold_shadow", None)
+    warm.store.indexes.pop("cold_shadow", None)
 
 
 def test_nonstored_rebuild_clears_prior_session_registry_row(
@@ -203,7 +203,7 @@ def test_nonstored_rebuild_clears_prior_session_registry_row(
     with pytest.raises(ValueError, match="Unknown index"):
         e3.execute("SEARCH SIMILAR USING INDEX cold_nsr")
     e2.execute("DROP INDEX cold_nsr")
-    warm.indexes.pop("cold_nsr", None)
+    warm.store.indexes.pop("cold_nsr", None)
 
 
 def test_drop_broken_index_reclaims_surviving_storage(
@@ -222,7 +222,7 @@ def test_drop_broken_index_reclaims_surviving_storage(
     e2 = Engine(s2)
     assert e2.execute("DROP INDEX cold_broken") == {"dropped": "cold_broken"}
     assert not s2.catalog.tableExists("cold_broken_tbl")
-    warm.indexes.pop("cold_broken", None)
+    warm.store.indexes.pop("cold_broken", None)
     # the names are reusable right away — this failed before the fix
     # with "already exists and does not belong to index"
     e2.execute(
@@ -240,7 +240,7 @@ def test_foreign_registry_table_is_never_clobbered(warm, spark, smoke_dir):
     s2 = spark.newSession()
     register_views(s2, smoke_dir)
     e2 = Engine(s2)
-    e2.INDEX_REGISTRY_TABLE = "cold_foreign_reg"  # instance shadows class
+    e2.store.INDEX_REGISTRY_TABLE = "cold_foreign_reg"  # instance shadows class
     s2.createDataFrame([(1, "keep")], "a int, b string").write.mode(
         "overwrite"
     ).saveAsTable("cold_foreign_reg")
@@ -261,7 +261,7 @@ def test_foreign_registry_table_is_never_clobbered(warm, spark, smoke_dir):
             (1, "keep")
         ]
     finally:
-        e2.indexes.pop("cold_foreign", None)
+        e2.store.indexes.pop("cold_foreign", None)
         s2.sql("DROP TABLE IF EXISTS cold_foreign_reg")
         s2.sql("DROP TABLE IF EXISTS cold_foreign_tbl")
 
@@ -276,8 +276,8 @@ def test_broken_drop_never_clobbers_user_table_reusing_the_name(
 
     # forge the post-failed-rebuild state directly: a registry row
     # whose tables are gone, then a user table under the freed name
-    warm._write_index_registry(
-        warm._registry_rows_without("cold_user")
+    warm.store._write_registry(
+        warm.store._registry_row("cold_user")[0]
         + [
             {
                 "index_name": "cold_user",
@@ -315,7 +315,7 @@ def test_session_only_ops_survive_foreign_registry_table(
     s2 = spark.newSession()
     register_views(s2, smoke_dir)
     e2 = Engine(s2)
-    e2.INDEX_REGISTRY_TABLE = "cold_foreign_reg2"
+    e2.store.INDEX_REGISTRY_TABLE = "cold_foreign_reg2"
     s2.createDataFrame([(1,)], "a int").write.mode("overwrite").saveAsTable(
         "cold_foreign_reg2"
     )
@@ -343,7 +343,7 @@ def test_combined_squat_registry_and_storage_names(warm, spark, smoke_dir):
     s2 = spark.newSession()
     register_views(s2, smoke_dir)
     e2 = Engine(s2)
-    e2.INDEX_REGISTRY_TABLE = "cold_sq_reg"
+    e2.store.INDEX_REGISTRY_TABLE = "cold_sq_reg"
     s2.createDataFrame([(1, "keep")], "a int, b string").write.mode(
         "overwrite"
     ).saveAsTable("cold_sq_reg")
@@ -386,7 +386,7 @@ def test_combined_squat_registry_and_storage_names(warm, spark, smoke_dir):
             tuple(r) for r in s2.table("cold_sq_tbl").collect()
         ] == user_rows
     finally:
-        e2.indexes.pop("cold_sq", None)
+        e2.store.indexes.pop("cold_sq", None)
         for t in ("cold_sq_reg", "cold_sq_tbl", "cold_sq_free_tbl"):
             s2.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -401,8 +401,8 @@ def test_compatible_shape_user_table_never_served_or_dropped(
     leaving the table intact."""
     import json
 
-    warm._write_index_registry(
-        warm._registry_rows_without("cold_compat")
+    warm.store._write_registry(
+        warm.store._registry_row("cold_compat")[0]
         + [
             {
                 "index_name": "cold_compat",
@@ -447,8 +447,8 @@ def test_nonstored_rebuild_skips_compatible_shape_user_table(
     user table is skipped, only the row is cleared."""
     import json
 
-    warm._write_index_registry(
-        warm._registry_rows_without("cold_compat2")
+    warm.store._write_registry(
+        warm.store._registry_row("cold_compat2")[0]
         + [
             {
                 "index_name": "cold_compat2",
@@ -473,7 +473,7 @@ def test_nonstored_rebuild_skips_compatible_shape_user_table(
         ] == [("w", 3, 9)]
         assert not any(
             r["index_name"] == "cold_compat2"
-            for r in (e2._read_index_registry() or [])
+            for r in (e2.store._registry_rows() or [])
         )
         e2.execute("DROP INDEX cold_compat2")
     finally:
@@ -486,7 +486,7 @@ def test_unmarked_index_storage_is_refused(warm, spark, smoke_dir):
     and serves it again once the mark is back."""
     rows = [
         r
-        for r in (warm._read_index_registry() or [])
+        for r in (warm.store._registry_rows() or [])
         if r["index_name"] == "cold_idx"
     ]
     assert rows, "warm fixture registers cold_idx"
@@ -494,7 +494,7 @@ def test_unmarked_index_storage_is_refused(warm, spark, smoke_dir):
     for t in tables:
         spark.sql(
             f"ALTER TABLE {t} UNSET TBLPROPERTIES IF EXISTS"
-            f" ('{warm._INDEX_STORAGE_PROP}')"
+            f" ('{warm.store._INDEX_STORAGE_PROP}')"
         )
     s2 = spark.newSession()
     register_views(s2, smoke_dir)
@@ -504,7 +504,7 @@ def test_unmarked_index_storage_is_refused(warm, spark, smoke_dir):
             e2.execute("SEARCH SIMILAR USING INDEX cold_idx")
     finally:
         for t in tables:
-            warm._mark_index_storage(t)
+            warm.store._mark_index_storage(t)
     assert e2.execute("SEARCH SIMILAR USING INDEX cold_idx").count() >= 0
 
 
@@ -538,21 +538,21 @@ def test_cold_recreate_same_stored_index_rebuilds(spark, smoke_dir, warm):
 
 
 def test_interrupted_swap_rename_recovers_registry(warm, spark):
-    """Crash recovery for _write_index_registry's swap window: a
+    """Crash recovery for IndexStore._write_registry's swap window: a
     failure between DROP TABLE <registry> and the rename leaves no
     registry but a complete __swap table. The next read must adopt
     the orphan (finish the rename) instead of letting the next
     write's _clean_tmp silently delete every stored-index row."""
     eng = warm
-    rows_before = eng._read_index_registry()
+    rows_before = eng.store._registry_rows()
     assert rows_before  # cold_idx + cold_ivf rows from the fixture
-    t = eng.INDEX_REGISTRY_TABLE
+    t = eng.store.INDEX_REGISTRY_TABLE
     tmp = f"{t}__swap"
     # simulate the crash: swap fully written, registry dropped,
     # rename never ran
     spark.table(t).write.saveAsTable(tmp)
     spark.sql(f"DROP TABLE {t}")
-    rows_after = eng._read_index_registry()
+    rows_after = eng.store._registry_rows()
     assert rows_after is not None
     assert sorted(r["index_name"] for r in rows_after) == sorted(
         r["index_name"] for r in rows_before

@@ -50,11 +50,17 @@ def test_bucketed_join_reads_co_partitioned(spark, sf_dir):
     assert "SelectedBucketsCount: 8 out of 8" in plan
 
 
-def test_csv_fixture_reuses_marker(spark, sf_dir, tmp_path):
+def test_csv_fixture_reuses_marker(spark, sf_dir, tmp_path, monkeypatch):
     """fixture_dir materializes once: a second call with the same key
     must not re-invoke the writer."""
+    import tempfile
+
     from declarativeml_spark.queries.fixtures import fixture_dir
 
+    # the fixture cache lives in the system tempdir and outlives the
+    # run; a later run handed the same tmp_path path (pytest reuses
+    # its numbered dirs) would find this run's markers
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     calls = []
 
     def write(d):

@@ -611,7 +611,7 @@ def test_failed_index_build_unmarks_storage(engine, spark):
             "CREATE INDEX doc_bad ON documents USING lsh"
             " STORED AS doc_bad_tbl"
         )
-    assert "doc_bad_tbl" not in engine._created_storage
+    assert "doc_bad_tbl" not in engine.store._created_storage
     assert not spark.catalog.tableExists("doc_bad_tbl")
     # the name now belongs to the user: the engine refuses to reuse it
     spark.sql("CREATE TABLE doc_bad_tbl (x INT) USING parquet")
@@ -711,7 +711,7 @@ def test_refresh_index_lsh_equals_cold_rebuild(engine, spark, smoke_dir):
     # counts report VECTORS (distinct vec_id), not (vector × table)
     # bucket rows — same meaning as the ivf branch
     half_rows = (
-        engine.indexes["emb_grow"]["frames"]["keyed"]
+        engine.store.indexes["emb_grow"]["frames"]["keyed"]
         .select("vec_id")
         .distinct()
         .count()
@@ -750,14 +750,14 @@ def test_refresh_index_ivf_frozen_centroids(engine, spark, smoke_dir):
     engine.execute(
         "CREATE INDEX emb_gi ON emb_growing_ivf USING ivf(n_cells=8)"
     )
-    cents_before = _rows(engine.indexes["emb_gi"]["frames"]["cents"])
-    n_half = engine.indexes["emb_gi"]["frames"]["corpus"].count()
+    cents_before = _rows(engine.store.indexes["emb_gi"]["frames"]["cents"])
+    n_half = engine.store.indexes["emb_gi"]["frames"]["corpus"].count()
     spark.sql("SELECT * FROM embeddings").createOrReplaceTempView(
         "emb_growing_ivf"
     )
     out = engine.execute("REFRESH INDEX emb_gi").collect()[0]
     assert out.new_rows > 0 and out.indexed_rows == n_half + out.new_rows
-    assert _rows(engine.indexes["emb_gi"]["frames"]["cents"]) == cents_before
+    assert _rows(engine.store.indexes["emb_gi"]["frames"]["cents"]) == cents_before
     # odd (new) ids are now searchable: probe results include them
     got = engine.execute(
         "SEARCH SIMILAR USING INDEX emb_gi(n_probe=8, query_mod=97) TOP 20"

@@ -9,7 +9,8 @@ on non-stored rebuilds, and vector-denominated index row counts.
 
 import pytest
 
-from declarativeml_spark.engine import Engine, ForeignRegistryTableError
+from declarativeml_spark.engine import Engine
+from declarativeml_spark.indexes import ForeignRegistryTableError, IndexStore
 from declarativeml_spark.sources.catalog import register_views
 
 
@@ -31,7 +32,7 @@ def test_stored_rebuild_fails_early_on_foreign_registry(engine, spark):
     """A foreign-shaped squatter on the registry name must surface in
     the AVAILABILITY checks — before the live index and its tables are
     destroyed — not in the closing upsert."""
-    reg = Engine.INDEX_REGISTRY_TABLE
+    reg = IndexStore.INDEX_REGISTRY_TABLE
     _cleanup(spark, "rvw_idx_tbl")
     engine.execute(
         "CREATE INDEX rvw_idx ON embeddings USING lsh STORED AS rvw_idx_tbl"
