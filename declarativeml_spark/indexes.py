@@ -4,11 +4,11 @@
 the statements that write catalog tables. :class:`IndexStore` owns
 every such table: which names a statement may claim (:meth:`claim`),
 how an existing copy is replaced without losing it on a failed write
-(:meth:`_write_table`), and how a table is released (:meth:`_release_tables`).
-It also runs the index lifecycle — CREATE, REFRESH and DROP INDEX and
-``SEARCH SIMILAR … USING INDEX`` — and keeps the cross-session index
-registry through which a fresh session serves a stored index without a
-rebuild.
+(:meth:`_write_table`), and how a table is released
+(:meth:`_release_tables`). It also runs the index lifecycle — CREATE,
+REFRESH and DROP INDEX and ``SEARCH SIMILAR … USING INDEX`` — and
+keeps the cross-session index registry through which a fresh session
+serves a stored index without a rebuild.
 
 What differs between the ivf and lsh methods is one :class:`_Layout`
 row each in :data:`LAYOUTS`; the lifecycle itself never asks which
