@@ -314,7 +314,9 @@ _STATEMENT_HEADS = [
     "SCORE QUALITY", "SEARCH SIMILAR", "QUANTIZE EMBEDDINGS",
     "DECONTAMINATE", "PACK", "SAMPLE", "REDACT", "CHUNK", "SESSIONIZE",
     "MIX", "PROFILE", "DETECT ANOMALIES", "SHUFFLE", "AUDIT ANONYMITY",
-    "CALIBRATE DEDUP",
+    "CALIBRATE DEDUP", "CREATE INDEX", "REFRESH INDEX", "DROP INDEX",
+    "DROP TOKENIZER", "TRAIN TOKENIZER", "TOKENIZE", "DECODE", "LOAD MEDIA",
+    "SAMPLE FRAMES", "RESIZE",
 ]
 
 
