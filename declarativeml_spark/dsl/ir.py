@@ -568,6 +568,7 @@ class Deduplicate:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
+        self.method = self.method.lower()
         allowed = {
             "exact",
             "minhash",
@@ -599,27 +600,28 @@ class SimilaritySearch:
     source may be omitted, it is the index's source).
     """
 
-    source: str
+    source: str = ""
     method: str = "cosine"
     params: Dict[str, Any] = field(default_factory=dict)
     #: None = no TOP clause; top-k methods default to 10, lsh returns
     #: the full threshold-governed pair set
     k: Optional[int] = None
     source_is_identifier: bool = True
-    #: USING INDEX <name> — set iff method == "index"
+    #: USING INDEX <name> — sets method to "index"
     index: Optional[str] = None
 
     def __post_init__(self) -> None:
+        if not self.source and self.index is None:
+            raise ValueError("SEARCH SIMILAR source cannot be empty")
+        self.method = "index" if self.index is not None else self.method.lower()
         if self.method not in {"cosine", "lsh", "ivf", "ivf_mllib", "index"}:
             raise ValueError(
                 f"Unknown similarity method {self.method!r};"
                 " expected 'cosine', 'lsh', 'ivf', 'ivf_mllib'"
                 " or INDEX <name>"
             )
-        if (self.method == "index") != (self.index is not None):
-            raise ValueError(
-                "USING INDEX requires an index name (and only then)"
-            )
+        if self.method == "index" and self.index is None:
+            raise ValueError("USING INDEX requires an index name")
         if self.k is not None:
             _require_positive("TOP", self.k)
 
@@ -696,7 +698,7 @@ class SampleCorpus:
 
     def __post_init__(self) -> None:
         if (self.rate is None) == (self.top_n is None):
-            raise ValueError("SAMPLE needs exactly one of RATE or TOP")
+            raise ValueError("SAMPLE needs RATE f or TOP n WEIGHT BY col")
         if self.rate is not None:
             if not isinstance(self.rate, (int, float)) or isinstance(
                 self.rate, bool
@@ -1125,6 +1127,7 @@ class DecodeMedia:
     windows: Optional[int] = None
 
     def __post_init__(self) -> None:
+        self.codec = self.codec.lower()
         if self.windows is not None:
             _require_positive("WINDOWS", self.windows, "integer sample count")
 
@@ -1146,6 +1149,7 @@ class SampleFrames:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
+        self.codec = self.codec.lower()
         _require_positive("EVERY", self.every, "integer frame stride")
 
 
@@ -1167,6 +1171,7 @@ class ResizeMedia:
     source_is_identifier: bool = True
 
     def __post_init__(self) -> None:
+        self.codec = self.codec.lower()
         _require_positive("RESIZE width", self.width)
         _require_positive("RESIZE height", self.height)
 
@@ -1229,6 +1234,7 @@ class CreateIndex:
     stored_as: Optional[str] = None
 
     def __post_init__(self) -> None:
+        self.method = self.method.lower()
         if self.method not in {"ivf", "lsh"}:
             raise ValueError(
                 f"Unknown index method {self.method!r};"

@@ -34,19 +34,30 @@ A statement that is a source plus clauses is one syntax line in
 
 UPPERCASE words are literal keywords; ``<field:kind>`` fills the IR
 field ``field``; ``[…]`` clauses are optional, in any order, the last
-occurrence winning. Slot kinds: ``source`` (raw text slice; also sets
-``<field>_is_identifier``), ``name``, ``names`` (comma list), ``int``
-(an integral float such as ``5.0`` becomes an int), ``floats`` (comma
-list), ``quoted`` (single-quoted, ``''`` unescaped) and ``unit`` (an
-upper-cased NAME). A source stops at the literal keyword that follows
-it, or, when only optional clauses follow, at each clause's first
-keyword — so ``d JOIN m ON d.id = m.id`` before ``INTO`` stays whole.
-Clauses left out take the IR dataclass's default, and its
-``__post_init__`` holds every value check.
+occurrence winning; a clause that is one keyword alone (``[RECURSIVE]``)
+sets the bool field of that name. Slot kinds: ``source`` (raw text
+slice; also sets ``<field>_is_identifier``; it may be empty only where
+the IR field has a default), ``name``, ``names`` (comma list), ``int``
+(an integral float such as ``5.0`` becomes an int), ``number`` (a
+float), ``floats`` (comma list), ``params`` (an optional ``(k=v, …)``
+list, read into a dict), ``quoted`` (single-quoted, ``''`` unescaped)
+and ``unit`` (an upper-cased NAME). A choice ``{RATE <rate:number> |
+TOP <top_n:int> …}`` reads the branch its next keyword leads, else the
+branch a slot leads, else nothing (the IR then rejects the statement);
+a re-read choice forgets the branch read before. A source stops at the
+literal keyword that follows it (each leading keyword of a choice), or,
+when only optional clauses follow, at each clause's first keyword — so
+``d JOIN m ON d.id = m.id`` before ``INTO`` stays whole. A line is keyed
+by its first word, or its first two where that word leads several
+statements (``SAMPLE FRAMES`` beside ``SAMPLE``, ``DROP INDEX`` beside
+``DROP TOKENIZER``); ``parse()`` tries the two-word key first. Clauses
+left out take the IR dataclass's default, and its ``__post_init__``
+holds every value check and case folding.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 from itertools import takewhile
 from typing import Any, List, Optional, Tuple, Union
@@ -177,7 +188,7 @@ class _Parser:
         tok = self.advance()
         if tok.kind != "SQSTRING":
             raise DSLSyntaxError(
-                f"Expected quoted {what} at {tok.pos}, got {tok.value!r}"
+                f"Expected single-quoted {what} at {tok.pos}, got {tok.value!r}"
             )
         return _unquote(tok)
 
@@ -349,10 +360,7 @@ class _Parser:
         text. ``stop_pairs`` adds two-token stops (e.g. ``("WITH",
         "FEATURES")``) — a single token of the pair inside the source
         does not stop the capture."""
-        start_tok = self.peek()
-        if start_tok.kind == "EOF":
-            raise DSLSyntaxError("Training data source clause cannot be empty")
-        start = start_tok.pos
+        start = self.peek().pos
         end = start
         depth = 0  # stop keywords only bind at paren depth 0: a WITH
         # or STORE inside a parenthesized subquery source is part of
@@ -380,8 +388,6 @@ class _Parser:
     # -- TRAIN MODEL -----------------------------------------------------
     def parse_train(self) -> "Statement":
         self.expect_keyword("TRAIN")
-        if self.at_keyword("TOKENIZER"):
-            return self.parse_train_tokenizer()
         self.expect_keyword("MODEL")
         name = self.expect_name("model name")
         self.expect_keyword("USING")
@@ -883,12 +889,10 @@ class _Parser:
     # -- CREATE FEATURE TRANSFORMER / CREATE ENSEMBLE --------------------------
     def parse_create(
         self,
-    ) -> Union[ir.FeatureTransformer, ir.Ensemble, ir.Agent, ir.CreateIndex]:
+    ) -> Union[ir.FeatureTransformer, ir.Ensemble, ir.Agent, ir.CreateType]:
         self.expect_keyword("CREATE")
         if self.at_keyword("AGENT"):
             return self.parse_agent()
-        if self.at_keyword("INDEX"):
-            return self.parse_create_index()
         if self.at_keyword("TYPE"):
             return self.parse_create_type()
         if self.at_keyword("FEATURE"):
@@ -2140,245 +2144,13 @@ class _Parser:
             source_is_identifier=is_identifier_source(source),
         )
 
-    # -- CREATE INDEX / DROP INDEX (beyond-parity: SURVEY §7.5) ------------
-    def parse_create_index(self) -> "ir.CreateIndex":
-        """``CREATE INDEX <name> ON <source> USING <method>[(params)]``
-        — build-once similarity index (indexes.py::IndexStore.create)."""
-        self.expect_keyword("INDEX")
-        name = self.expect_name("index name")
-        self.expect_keyword("ON")
-        source = self.capture_source_until("USING")
-        if not source:
-            raise ValueError("CREATE INDEX source cannot be empty")
-        self.expect_keyword("USING")
-        method = self.expect_name("index method").lower()
-        params: list[tuple[str, Any]] = []
-        if self.accept_op("("):
-            params = self.parse_param_list()
-            self.expect_op(")")
-        stored_as = None
-        if self.at_keyword("STORED"):
-            self.advance()
-            self.expect_keyword("AS")
-            stored_as = self.expect_name("storage table name")
-        self.expect_eof()
-        return ir.CreateIndex(
-            name=name,
-            source=source,
-            method=method,
-            params=dict(params),
-            source_is_identifier=is_identifier_source(source),
-            stored_as=stored_as,
-        )
-
-    def parse_refresh(self) -> "ir.RefreshIndex":
-        self.expect_keyword("REFRESH")
-        self.expect_keyword("INDEX")
-        name = self.expect_name("index name")
-        self.expect_eof()
-        return ir.RefreshIndex(name=name)
-
-    def parse_drop(self) -> Union["ir.DropIndex", "ir.DropTokenizer"]:
-        self.expect_keyword("DROP")
-        if self.at_keyword("TOKENIZER"):
-            self.advance()
-            name = self.expect_name("tokenizer name")
-            self.expect_eof()
-            return ir.DropTokenizer(name=name)
-        self.expect_keyword("INDEX")
-        name = self.expect_name("index name")
-        self.expect_eof()
-        return ir.DropIndex(name=name)
-
-    # -- TRAIN TOKENIZER (beyond-parity: SURVEY §2.11) --------------------
-    def parse_train_tokenizer(self) -> "ir.TrainTokenizer":
-        """``TRAIN TOKENIZER <name> FROM <source> VOCAB n
-        [TEXT COLUMN col]`` — BPE-merge training (operators/bpe.py)."""
-        self.expect_keyword("TOKENIZER")
-        name = self.expect_name("tokenizer name")
-        self.expect_keyword("FROM")
-        source = self.capture_source_until("VOCAB")
-        if not source:
-            raise ValueError("TRAIN TOKENIZER source cannot be empty")
-        self.expect_keyword("VOCAB")
-        vocab = _require_positive_int(self.parse_value(), "vocabulary size")
-        text_column = "text"
-        if self.at_keyword("TEXT"):
-            self.advance()
-            self.expect_keyword("COLUMN")
-            text_column = self.expect_name("text column")
-        stored_as = None
-        if self.at_keyword("STORED"):
-            self.advance()
-            self.expect_keyword("AS")
-            stored_as = self.expect_name("storage table name")
-        self.expect_eof()
-        return ir.TrainTokenizer(
-            name=name,
-            source=source,
-            vocab=vocab,
-            text_column=text_column,
-            source_is_identifier=is_identifier_source(source),
-            stored_as=stored_as,
-        )
-
-    # -- TOKENIZE (apply side of TRAIN TOKENIZER, SURVEY §2.11) ------------
-    def parse_tokenize(self) -> "ir.Tokenize":
-        """``TOKENIZE <source> USING <tokenizer> [TEXT COLUMN col]`` —
-        encode a corpus with a trained tokenizer's merge rules
-        (session tokenizer name, or a STORED AS merge table from any
-        session)."""
-        self.expect_keyword("TOKENIZE")
-        source = self.capture_source_until("USING")
-        if not source:
-            raise ValueError("TOKENIZE source cannot be empty")
-        self.expect_keyword("USING")
-        tokenizer = self.expect_name("tokenizer name")
-        text_column = "text"
-        if self.at_keyword("TEXT"):
-            self.advance()
-            self.expect_keyword("COLUMN")
-            text_column = self.expect_name("text column")
-        self.expect_eof()
-        return ir.Tokenize(
-            source=source,
-            tokenizer=tokenizer,
-            text_column=text_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- DECODE / SAMPLE FRAMES / RESIZE (multimodal DSL twins, -----------
-    # SURVEY §2.11): route to operators/multimodal.py through the same
-    # grammar family as TOKENIZE/DEDUPLICATE
-    def _parse_media_columns(self) -> tuple:
-        """Shared optional tail: ``[PAYLOAD COLUMN c] [ID COLUMN c]``
-        in either order, each at most once."""
-        payload_column, id_column = "payload", "media_id"
-        seen: set = set()
-        while True:
-            if self.at_keyword("PAYLOAD") and "payload" not in seen:
-                self.advance()
-                self.expect_keyword("COLUMN")
-                payload_column = self.expect_name("payload column")
-                seen.add("payload")
-            elif self.at_keyword("ID") and "id" not in seen:
-                self.advance()
-                self.expect_keyword("COLUMN")
-                id_column = self.expect_name("id column")
-                seen.add("id")
-            else:
-                return payload_column, id_column
-
-    def parse_decode(self) -> "ir.DecodeMedia":
-        """``DECODE <source> USING <codec> [WINDOWS n]
-        [PAYLOAD COLUMN c] [ID COLUMN c]`` — decode media payloads to
-        feature vectors (operators/multimodal.py::decode_features), or
-        with ``WINDOWS n`` to per-window sample energies
-        (window_energy over the codec's decoded samples)."""
-        self.expect_keyword("DECODE")
-        source = self.capture_source_until("USING")
-        if not source:
-            raise ValueError("DECODE source cannot be empty")
-        self.expect_keyword("USING")
-        codec = self.expect_name("codec name")
-        windows = None
-        if self.at_keyword("WINDOWS"):
-            self.advance()
-            windows = _require_positive_int(
-                self.parse_value(), "WINDOWS sample count"
-            )
-        payload_column, id_column = self._parse_media_columns()
-        self.expect_eof()
-        return ir.DecodeMedia(
-            source=source,
-            codec=codec.lower(),
-            payload_column=payload_column,
-            id_column=id_column,
-            source_is_identifier=is_identifier_source(source),
-            windows=windows,
-        )
-
-    def parse_load_media(self) -> "ir.LoadMedia":
-        """``LOAD MEDIA FROM '<path>' [GLOB '<pattern>']
-        [RECURSIVE | PARTITIONED] [AS <view>]`` — binaryFile ingest
-        into the standard media frame (sources/io.py::read_media);
-        PARTITIONED turns Hive-style directory keys (year=/month=)
-        into prunable columns."""
-        self.expect_keyword("LOAD")
-        self.expect_keyword("MEDIA")
-        self.expect_keyword("FROM")
-        tok = self.advance()
-        if tok.kind != "SQSTRING":
-            raise DSLSyntaxError(
-                f"LOAD MEDIA path must be a single-quoted string,"
-                f" got {tok.value!r} at {tok.pos}"
-            )
-        path = _unquote(tok)
-        glob = None
-        recursive = False
-        partitioned = False
-        view = None
-        while self.peek().kind != "EOF":
-            if self.at_keyword("GLOB") and glob is None:
-                self.advance()
-                g = self.advance()
-                if g.kind != "SQSTRING":
-                    raise DSLSyntaxError(
-                        f"GLOB pattern must be a single-quoted string,"
-                        f" got {g.value!r} at {g.pos}"
-                    )
-                glob = _unquote(g)
-            elif self.at_keyword("RECURSIVE") and not recursive:
-                self.advance()
-                recursive = True
-            elif self.at_keyword("PARTITIONED") and not partitioned:
-                self.advance()
-                partitioned = True
-            elif self.at_keyword("AS") and view is None:
-                self.advance()
-                view = self.expect_name("view name")
-            else:
-                break
-        self.expect_eof()
-        return ir.LoadMedia(
-            path=path,
-            glob=glob,
-            recursive=recursive,
-            view=view,
-            partitioned=partitioned,
-        )
-
-    def parse_sample_frames(self) -> "ir.SampleFrames":
-        """``SAMPLE FRAMES FROM <source> EVERY n [USING <codec>]
-        [PAYLOAD COLUMN c] [ID COLUMN c]`` — keyframe sampling
-        (operators/multimodal.py::sample_frames)."""
-        self.expect_keyword("SAMPLE")
-        self.expect_keyword("FRAMES")
-        self.expect_keyword("FROM")
-        source = self.capture_source_until("EVERY")
-        if not source:
-            raise ValueError("SAMPLE FRAMES source cannot be empty")
-        self.expect_keyword("EVERY")
-        every = _require_positive_int(self.parse_value(), "EVERY frame stride")
-        codec = "y4m"
-        if self.at_keyword("USING"):
-            self.advance()
-            codec = self.expect_name("codec name").lower()
-        payload_column, id_column = self._parse_media_columns()
-        self.expect_eof()
-        return ir.SampleFrames(
-            source=source,
-            every=every,
-            codec=codec,
-            payload_column=payload_column,
-            id_column=id_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
+    # -- RESIZE (multimodal DSL twin, SURVEY §2.11) ------------------------
     def parse_resize(self) -> "ir.ResizeMedia":
         """``RESIZE <source> TO <w> x <h> USING <codec>
         [PAYLOAD COLUMN c] [ID COLUMN c]`` — re-encode media at a
-        target geometry (operators/multimodal.py::resize_image)."""
+        target geometry (operators/multimodal.py::resize_image). The
+        ``x``/``BY`` separator is read in any case, which no syntax
+        line slot does."""
         self.expect_keyword("RESIZE")
         source = self.capture_source_until("TO")
         if not source:
@@ -2396,137 +2168,23 @@ class _Parser:
         height = _require_positive_int(self.parse_value(), "RESIZE height")
         self.expect_keyword("USING")
         codec = self.expect_name("codec name")
-        payload_column, id_column = self._parse_media_columns()
+        # [PAYLOAD COLUMN c] [ID COLUMN c] in either order, each at most once
+        columns = {"PAYLOAD": "payload", "ID": "media_id"}
+        seen: set = set()
+        while self.peek().value in columns.keys() - seen:
+            word = self.advance().value
+            self.expect_keyword("COLUMN")
+            columns[word] = self.expect_name(f"{word.lower()} column")
+            seen.add(word)
         self.expect_eof()
         return ir.ResizeMedia(
             source=source,
             width=width,
             height=height,
-            codec=codec.lower(),
-            payload_column=payload_column,
-            id_column=id_column,
+            codec=codec,
+            payload_column=columns["PAYLOAD"],
+            id_column=columns["ID"],
             source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- DEDUPLICATE (beyond-parity: SURVEY §7.5) -------------------------
-    def parse_deduplicate(self) -> "ir.Deduplicate":
-        self.expect_keyword("DEDUPLICATE")
-        source = self.capture_source_until("USING")
-        if not source:
-            raise ValueError("DEDUPLICATE source cannot be empty")
-        self.expect_keyword("USING")
-        method = self.expect_name("dedup method")
-        params: list[tuple[str, Any]] = []
-        if self.accept_op("("):
-            params = self.parse_param_list()
-            self.expect_op(")")
-        column = None
-        threshold = None
-        while True:
-            if self.at_keyword("ON"):
-                self.advance()
-                column = self.expect_name("column name")
-            elif self.at_keyword("THRESHOLD"):
-                self.advance()
-                tok = self.advance()
-                if tok.kind != "NUMBER":
-                    raise ValueError("THRESHOLD must be a number in (0, 1]")
-                threshold = float(_to_number(tok.value))
-            else:
-                break
-        self.expect_eof()
-        return ir.Deduplicate(
-            source=source,
-            method=method.lower(),
-            params=dict(params),
-            column=column,
-            threshold=threshold,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- SAMPLE (beyond-parity: SURVEY §7.5 / §2.11) ----------------------
-    def parse_sample(self) -> Union["ir.SampleCorpus", "ir.SampleFrames"]:
-        # SAMPLE FRAMES FROM ... is the multimodal twin; plain SAMPLE
-        # is corpus sampling
-        if self.at_keyword("FRAMES", offset=1):
-            return self.parse_sample_frames()
-        self.expect_keyword("SAMPLE")
-        source = self.capture_source_until("RATE", "TOP")
-        if not source:
-            raise ValueError("SAMPLE source cannot be empty")
-        rate = None
-        top_n = None
-        weight_column = None
-        if self.at_keyword("RATE"):
-            self.advance()
-            tok = self.advance()
-            if tok.kind != "NUMBER":
-                raise ValueError("RATE must be a number in (0, 1]")
-            rate = float(_to_number(tok.value))
-        elif self.at_keyword("TOP"):
-            self.advance()
-            tok = self.advance()
-            if tok.kind != "NUMBER":
-                raise ValueError("TOP must be a positive integer")
-            top_n = _require_positive_int(_to_number(tok.value), "TOP")
-            self.expect_keyword("WEIGHT")
-            self.expect_keyword("BY")
-            weight_column = self.expect_name("weight column")
-        else:
-            raise ValueError("SAMPLE needs RATE f or TOP n WEIGHT BY col")
-        column = None
-        if self.at_keyword("ON"):
-            self.advance()
-            column = self.expect_name("column name")
-        self.expect_eof()
-        return ir.SampleCorpus(
-            source=source,
-            rate=rate,
-            column=column,
-            top_n=top_n,
-            weight_column=weight_column,
-            source_is_identifier=is_identifier_source(source),
-        )
-
-    # -- SEARCH SIMILAR (beyond-parity: SURVEY §7.5) ----------------------
-    def parse_search(self) -> "ir.SimilaritySearch":
-        self.expect_keyword("SEARCH")
-        self.expect_keyword("SIMILAR")
-        source = self.capture_source_until("USING", "TOP")
-        method = "cosine"
-        index = None
-        params: list[tuple[str, Any]] = []
-        if self.at_keyword("USING"):
-            self.advance()
-            if self.at_keyword("INDEX"):
-                # USING INDEX <name>[(search params)] — serve from a
-                # CREATE INDEX snapshot; source optional (it IS the
-                # index's source, validated by the engine if given)
-                self.advance()
-                method = "index"
-                index = self.expect_name("index name")
-            else:
-                method = self.expect_name("similarity method").lower()
-            if self.accept_op("("):
-                params = self.parse_param_list()
-                self.expect_op(")")
-        if not source and index is None:
-            raise ValueError("SEARCH SIMILAR source cannot be empty")
-        k = None  # None = TOP absent; engine applies per-method default
-        if self.at_keyword("TOP"):
-            self.advance()
-            tok = self.advance()
-            if tok.kind != "NUMBER":
-                raise ValueError("TOP must be a positive integer")
-            k = _require_positive_int(_to_number(tok.value), "TOP")
-        self.expect_eof()
-        return ir.SimilaritySearch(
-            source=source,
-            method=method,
-            params=dict(params),
-            k=k,
-            source_is_identifier=is_identifier_source(source) if source else True,
-            index=index,
         )
 
 
@@ -2557,29 +2215,71 @@ def _require_positive_int(value: Any, what: str) -> int:
     return value
 
 
+def _syntax_items(part: str) -> list:
+    """One part of a syntax line as items: literal keywords (``str``),
+    ``(field, kind)`` slots and choices — ``{leading keyword: branch}``,
+    keyed ``None`` for the branch a slot leads."""
+    items: list = []
+    for words, choice in _re.findall(r"([^{}]+)|\{([^}]*)\}", part):
+        if choice:
+            branches = [_syntax_items(b) for b in choice.split("|")]
+            items.append(
+                {b[0] if isinstance(b[0], str) else None: b for b in branches}
+            )
+        else:
+            items += [
+                tuple(w[1:-1].split(":")) if w[0] == "<" else w
+                for w in words.split()
+            ]
+    return items
+
+
+def _slots(items: list):
+    """Every ``(field, kind)`` slot among ``items``, choices included."""
+    for item in items:
+        if isinstance(item, dict):
+            for branch in item.values():
+                yield from _slots(branch)
+        elif isinstance(item, tuple):
+            yield item
+
+
 class _Syntax:
     """A statement read from one syntax line (see the module
-    docstring): UPPERCASE literal keywords, ``<field:kind>`` slots,
-    then ``[optional clauses]`` in any order, the last occurrence
-    winning. Only the fields the statement names reach ``cls``, so
-    the IR dataclass holds every default and every value check."""
+    docstring): UPPERCASE literal keywords, ``<field:kind>`` slots and
+    ``{…|…}`` choices, then ``[optional clauses]`` in any order, the
+    last occurrence winning. Only the fields the statement names reach
+    ``cls``, so the IR dataclass holds every default and every value
+    check."""
 
     def __init__(self, cls: type, line: str):
         required, *clauses = [
-            [tuple(w[1:-1].split(":")) if w[0] == "<" else w for w in part.split()]
+            _syntax_items(part)
             for part in _re.split(r"\s*[\[\]]\s*", line)
             if part.strip()
         ]
         self.cls = cls
         self.required = required
         self.clauses = {clause[0]: clause for clause in clauses}
-        self.head = " ".join(takewhile(lambda w: isinstance(w, str), required))
+        # the statement's name in errors: its words before a slot or FROM
+        self.head = " ".join(
+            takewhile(lambda w: isinstance(w, str) and w != "FROM", required)
+        )
+        # a source slot may read nothing where the IR field has a default
+        self.defaults = {
+            f.name
+            for f in dataclasses.fields(cls)
+            if f.default is not dataclasses.MISSING
+        }
 
     def __call__(self, parser: _Parser) -> Statement:
         fields: dict[str, Any] = {}
         self._read(parser, self.required, fields)
         while parser.peek().kind == "NAME" and parser.peek().value in self.clauses:
-            self._read(parser, self.clauses[parser.peek().value], fields)
+            clause = self.clauses[parser.peek().value]
+            self._read(parser, clause, fields)
+            if len(clause) == 1:  # a keyword-only clause sets its flag
+                fields[clause[0].lower()] = True
         parser.expect_eof()
         return self.cls(**fields)
 
@@ -2589,13 +2289,26 @@ class _Syntax:
             if isinstance(item, str):
                 keyword = p.expect_keyword(item).value
                 continue
+            if isinstance(item, dict):
+                # the next keyword picks the branch, else the slot-led
+                # one, else none; a re-read choice forgets the last one
+                for name, _ in _slots([item]):
+                    fields.pop(name, None)
+                branch = item.get(p.peek().value) or item.get(None, [])
+                self._read(p, branch, fields)
+                continue
             name, kind = item
             what = name.replace("_", " ")
             if kind == "source":
-                # up to the next literal keyword, else to any clause
-                stops = items[j + 1 : j + 2] or self.clauses
-                value = p.capture_source_until(*stops)
+                # up to the next keyword (a choice's leading keywords),
+                # else to any clause
+                stops = items[j + 1] if j + 1 < len(items) else self.clauses
+                value = p.capture_source_until(
+                    *([stops] if isinstance(stops, str) else filter(None, stops))
+                )
                 if not value:
+                    if name in self.defaults:
+                        continue
                     raise ValueError(f"{self.head} {name} cannot be empty")
                 fields[f"{name}_is_identifier"] = is_identifier_source(value)
             elif kind == "name":
@@ -2609,6 +2322,16 @@ class _Syntax:
             elif kind == "unit":
                 tok = p.advance()
                 value = tok.value.upper() if tok.kind == "NAME" else ""
+            elif kind == "params":
+                value = {}
+                if p.accept_op("("):
+                    value = dict(p.parse_param_list())
+                    p.expect_op(")")
+            elif kind == "number":
+                tok = p.advance()
+                if tok.kind != "NUMBER":
+                    raise ValueError(f"{keyword} must be a number")
+                value = float(_to_number(tok.value))
             elif kind == "int":
                 tok = p.advance()
                 if tok.kind != "NUMBER":
@@ -2683,7 +2406,8 @@ def _parse_cte_prefixed(parser: "_Parser") -> Statement:
         elif (
             depth == 0
             and tok.kind == "NAME"
-            and tok.value in _CTE_HOST_KEYWORDS
+            and {tok.value, f"{tok.value} {parser.tokens[j + 1].value}"}
+            & _CTE_HOST_KEYWORDS
         ):
             split_tok = tok
             break
@@ -2705,16 +2429,26 @@ def _parse_cte_prefixed(parser: "_Parser") -> Statement:
     return stmt
 
 
-# The statement set, held once: leading keyword → parse method or
-# syntax line. Each consumes its own keyword(s); parse() dispatches
-# here, and _STATEMENT_STARTS, _CTE_HOST_KEYWORDS and the
-# unknown-statement error derive from it.
+# The statement set, held once: leading keyword, or two where the first
+# leads several statements → parse method or syntax line. Each consumes
+# its own keyword(s); parse() dispatches here, and _STATEMENT_STARTS,
+# _CTE_HOST_KEYWORDS and the unknown-statement error derive from it.
 _STATEMENTS = {
     "TRAIN": _Parser.parse_train,
+    "TRAIN TOKENIZER": _Syntax(
+        ir.TrainTokenizer,
+        "TRAIN TOKENIZER <name:name> FROM <source:source> VOCAB <vocab:int>"
+        " [TEXT COLUMN <text_column:name>] [STORED AS <stored_as:name>]",
+    ),
     "COMPUTE": _Parser.parse_compute,
     "PREDICT": _Parser.parse_predict,
     "EVALUATE": _Parser.parse_evaluate,
     "CREATE": _Parser.parse_create,
+    "CREATE INDEX": _Syntax(
+        ir.CreateIndex,
+        "CREATE INDEX <name:name> ON <source:source> USING <method:name>"
+        " <params:params> [STORED AS <stored_as:name>]",
+    ),
     "DEPLOY": _Parser.parse_deploy,
     "MONITOR": _Parser.parse_monitor,
     "RETRAIN": _Parser.parse_retrain,
@@ -2723,12 +2457,40 @@ _STATEMENTS = {
     "REGISTER": _Parser.parse_register,
     "PUBLISH": _Parser.parse_publish,
     "SUBSCRIBE": _Parser.parse_subscribe,
-    "DEDUPLICATE": _Parser.parse_deduplicate,
-    "SEARCH": _Parser.parse_search,
-    "SAMPLE": _Parser.parse_sample,
-    "DECODE": _Parser.parse_decode,
+    "DEDUPLICATE": _Syntax(
+        ir.Deduplicate,
+        "DEDUPLICATE <source:source> USING <method:name> <params:params>"
+        " [ON <column:name>] [THRESHOLD <threshold:number>]",
+    ),
+    "SEARCH": _Syntax(
+        ir.SimilaritySearch,
+        "SEARCH SIMILAR <source:source>"
+        " [USING {INDEX <index:name> | <method:name>} <params:params>]"
+        " [TOP <k:int>]",
+    ),
+    "SAMPLE": _Syntax(
+        ir.SampleCorpus,
+        "SAMPLE <source:source>"
+        " {RATE <rate:number> | TOP <top_n:int> WEIGHT BY <weight_column:name>}"
+        " [ON <column:name>]",
+    ),
+    "SAMPLE FRAMES": _Syntax(
+        ir.SampleFrames,
+        "SAMPLE FRAMES FROM <source:source> EVERY <every:int>"
+        " [USING <codec:name>] [PAYLOAD COLUMN <payload_column:name>]"
+        " [ID COLUMN <id_column:name>]",
+    ),
+    "DECODE": _Syntax(
+        ir.DecodeMedia,
+        "DECODE <source:source> USING <codec:name> [WINDOWS <windows:int>]"
+        " [PAYLOAD COLUMN <payload_column:name>] [ID COLUMN <id_column:name>]",
+    ),
     "RESIZE": _Parser.parse_resize,
-    "LOAD": _Parser.parse_load_media,
+    "LOAD": _Syntax(
+        ir.LoadMedia,
+        "LOAD MEDIA FROM <path:quoted> [GLOB <glob:quoted>] [RECURSIVE]"
+        " [PARTITIONED] [AS <view:name>]",
+    ),
     "DECONTAMINATE": _Syntax(
         ir.Decontaminate,
         "DECONTAMINATE <source:source> AGAINST <benchmark:source>"
@@ -2807,8 +2569,9 @@ _STATEMENTS = {
         "CALIBRATE DEDUP <source:source> [THRESHOLDS <thresholds:floats>]"
         " [ON <text_column:name>]",
     ),
-    "DROP": _Parser.parse_drop,
-    "REFRESH": _Parser.parse_refresh,
+    "DROP INDEX": _Syntax(ir.DropIndex, "DROP INDEX <name:name>"),
+    "DROP TOKENIZER": _Syntax(ir.DropTokenizer, "DROP TOKENIZER <name:name>"),
+    "REFRESH": _Syntax(ir.RefreshIndex, "REFRESH INDEX <name:name>"),
     "SELECT": _Parser.parse_select_function,
     "WITH": _parse_cte_prefixed,
     "NOTIFY": _Parser.parse_notify,
@@ -2819,35 +2582,54 @@ _STATEMENTS = {
     "ON": _Parser.parse_on_event,
     "SET": _Parser.parse_set,
     "SCHEDULE": _Parser.parse_schedule,
-    "TOKENIZE": _Parser.parse_tokenize,
+    "TOKENIZE": _Syntax(
+        ir.Tokenize,
+        "TOKENIZE <source:source> USING <tokenizer:name>"
+        " [TEXT COLUMN <text_column:name>]",
+    ),
 }
 
 # Keywords that BEGIN a statement or a THEN-chain action — the
 # chain-AND splitter consults this so a statement's own conjunctions
 # never split the chain. ROLLBACK and BEGIN only open chain actions.
-_STATEMENT_STARTS = frozenset(_STATEMENTS) | {"ROLLBACK", "BEGIN"}
-
-# The statements a WITH prefix can feed: every syntax line, plus the
-# hand-written statements that read a source.
-_CTE_HOST_KEYWORDS = frozenset(
-    k for k, v in _STATEMENTS.items() if isinstance(v, _Syntax)
-) | {
-    "TRAIN", "PREDICT", "EVALUATE", "DEPLOY", "MONITOR", "RETRAIN", "EXPLAIN",
-    "DEDUPLICATE", "SEARCH", "SAMPLE", "TOKENIZE", "DECODE", "RESIZE",
+_STATEMENT_STARTS = frozenset(k.split()[0] for k in _STATEMENTS) | {
+    "ROLLBACK",
+    "BEGIN",
 }
+
+# The statement keys a WITH prefix can feed: every syntax line with a
+# source slot, plus the hand-written statements that read a source.
+_CTE_HOST_KEYWORDS = frozenset(
+    k
+    for k, v in _STATEMENTS.items()
+    if isinstance(v, _Syntax)
+    and any(kind == "source" for _, kind in _slots(v.required))
+) | {"TRAIN", "PREDICT", "EVALUATE", "DEPLOY", "MONITOR", "RETRAIN", "EXPLAIN",
+     "RESIZE"}
 
 
 def parse(text: str) -> Statement:
     """Parse one DSL statement into its IR dataclass."""
     parser = _Parser(text)
-    tok = parser.peek()
+    tok, nxt = parser.peek(), parser.peek(1)
     if tok.kind != "NAME":
         raise DSLSyntaxError(f"Expected statement keyword, got {tok.value!r}")
-    method = _STATEMENTS.get(tok.value)
+    # a two-word head first: SAMPLE FRAMES before SAMPLE
+    method = _STATEMENTS.get(f"{tok.value} {nxt.value}") or _STATEMENTS.get(
+        tok.value
+    )
     if method is None:
+        seconds = [
+            k.split()[1] for k in _STATEMENTS if k.startswith(f"{tok.value} ")
+        ]
+        if seconds:  # DROP leads only two-word heads
+            raise DSLSyntaxError(
+                f"Expected keyword {' or '.join(seconds)}, got {nxt.value!r}"
+                f" at {nxt.pos}"
+            )
         raise DSLSyntaxError(
             f"Unknown statement {tok.value!r}; expected one of:"
-            f" {', '.join(_STATEMENTS)}"
+            f" {', '.join(dict.fromkeys(k.split()[0] for k in _STATEMENTS))}"
         )
     return method(parser)
 

@@ -700,6 +700,81 @@ _SYNTAX_GOLDEN = [
     ("CALIBRATE DEDUP documents THRESHOLDS 0.1, 0.5, 1 ON body",
      ir.CalibrateDedup(source="documents", thresholds=[0.1, 0.5, 1.0],
                        text_column="body", source_is_identifier=True)),
+    ("CREATE INDEX emb_idx ON embeddings USING lsh",
+     ir.CreateIndex(name="emb_idx", source="embeddings", method="lsh",
+                    params={}, source_is_identifier=True, stored_as=None)),
+    ("CREATE INDEX emb_idx ON embeddings USING IVF(n_cells=4, seed=7)"
+     " STORED AS emb_tbl",
+     ir.CreateIndex(name="emb_idx", source="embeddings", method="ivf",
+                    params={"n_cells": 4, "seed": 7},
+                    source_is_identifier=True, stored_as="emb_tbl")),
+    ("REFRESH INDEX emb_idx", ir.RefreshIndex(name="emb_idx")),
+    ("DROP INDEX emb_idx", ir.DropIndex(name="emb_idx")),
+    ("DROP TOKENIZER bpe", ir.DropTokenizer(name="bpe")),
+    ("TRAIN TOKENIZER bpe FROM documents VOCAB 40",
+     ir.TrainTokenizer(name="bpe", source="documents", vocab=40,
+                       text_column="text", source_is_identifier=True,
+                       stored_as=None)),
+    ("TRAIN TOKENIZER bpe FROM documents VOCAB 64.0 TEXT COLUMN body"
+     " STORED AS bpe_tbl",
+     ir.TrainTokenizer(name="bpe", source="documents", vocab=64,
+                       text_column="body", source_is_identifier=True,
+                       stored_as="bpe_tbl")),
+    ("TOKENIZE documents USING bpe",
+     ir.Tokenize(source="documents", tokenizer="bpe", text_column="text",
+                 source_is_identifier=True)),
+    ("TOKENIZE documents USING bpe TEXT COLUMN body",
+     ir.Tokenize(source="documents", tokenizer="bpe", text_column="body",
+                 source_is_identifier=True)),
+    ("DECODE wav_media USING WAV",
+     ir.DecodeMedia(source="wav_media", codec="wav", payload_column="payload",
+                    id_column="media_id", source_is_identifier=True,
+                    windows=None)),
+    ("DECODE wav_media USING wav WINDOWS 256 PAYLOAD COLUMN blob"
+     " ID COLUMN item_id",
+     ir.DecodeMedia(source="wav_media", codec="wav", payload_column="blob",
+                    id_column="item_id", source_is_identifier=True,
+                    windows=256)),
+    ("SAMPLE FRAMES FROM y4m_media EVERY 2",
+     ir.SampleFrames(source="y4m_media", every=2, codec="y4m",
+                     payload_column="payload", id_column="media_id",
+                     source_is_identifier=True)),
+    ("SAMPLE FRAMES FROM media EVERY 4 USING FAKE PAYLOAD COLUMN blob"
+     " ID COLUMN item_id",
+     ir.SampleFrames(source="media", every=4, codec="fake",
+                     payload_column="blob", id_column="item_id",
+                     source_is_identifier=True)),
+    ("LOAD MEDIA FROM '/data/media'",
+     ir.LoadMedia(path="/data/media", glob=None, recursive=False, view=None,
+                  partitioned=False)),
+    ("LOAD MEDIA FROM '/data/media' GLOB '*.wav' RECURSIVE AS clips",
+     ir.LoadMedia(path="/data/media", glob="*.wav", recursive=True,
+                  view="clips", partitioned=False)),
+    ("DEDUPLICATE documents USING exact",
+     ir.Deduplicate(source="documents", method="exact", params={}, column=None,
+                    threshold=None, source_is_identifier=True)),
+    ("DEDUPLICATE documents USING MinHash(bands=4, rows=2) ON body"
+     " THRESHOLD 0.5",
+     ir.Deduplicate(source="documents", method="minhash",
+                    params={"bands": 4, "rows": 2}, column="body",
+                    threshold=0.5, source_is_identifier=True)),
+    ("SAMPLE documents RATE 1",
+     ir.SampleCorpus(source="documents", rate=1.0, column=None, top_n=None,
+                     weight_column=None, source_is_identifier=True)),
+    ("SAMPLE documents TOP 100 WEIGHT BY n_chars ON doc_id",
+     ir.SampleCorpus(source="documents", rate=None, column="doc_id",
+                     top_n=100, weight_column="n_chars",
+                     source_is_identifier=True)),
+    ("SEARCH SIMILAR embeddings",
+     ir.SimilaritySearch(source="embeddings", method="cosine", params={},
+                         k=None, source_is_identifier=True, index=None)),
+    ("SEARCH SIMILAR embeddings USING LSH(threshold=1.15) TOP 5.0",
+     ir.SimilaritySearch(source="embeddings", method="lsh",
+                         params={"threshold": 1.15}, k=5,
+                         source_is_identifier=True, index=None)),
+    ("SEARCH SIMILAR USING INDEX emb_idx(nprobe=2) TOP 5",
+     ir.SimilaritySearch(source="", method="index", params={"nprobe": 2},
+                         k=5, source_is_identifier=True, index="emb_idx")),
 ]
 
 
@@ -724,7 +799,7 @@ def test_syntax_golden_covers_every_syntax_line():
 
     syntax_kinds = {s.cls for s in _STATEMENTS.values() if isinstance(s, _Syntax)}
     assert syntax_kinds == {type(want) for _, want in _SYNTAX_GOLDEN}
-    assert len(syntax_kinds) == 16
+    assert len(syntax_kinds) == 28
 
 
 @pytest.mark.parametrize(
@@ -735,6 +810,12 @@ def test_syntax_golden_covers_every_syntax_line():
         ("SHARD d JOIN m ON d.id = m.id INTO 4 SHARDS BY id", "n_shards", 4),
         ("DECONTAMINATE d JOIN m ON d.id = m.id AGAINST b ON body",
          "benchmark", "b"),
+        ("SAMPLE d JOIN m ON d.id = m.id RATE 0.5 ON body", "rate", 0.5),
+        ("DEDUPLICATE d JOIN m ON d.id = m.id USING exact ON body",
+         "column", "body"),
+        ("CREATE INDEX i ON d JOIN m ON d.id = m.id USING lsh", "method", "lsh"),
+        ("TOKENIZE d JOIN m ON d.id = m.id USING bpe TEXT COLUMN body",
+         "tokenizer", "bpe"),
     ],
 )
 def test_syntax_line_join_source_keeps_its_on(text, field, value):
@@ -767,19 +848,48 @@ def test_syntax_line_optional_clauses_in_any_order(text, want):
 
 
 def test_syntax_line_slots_name_every_ir_field():
-    """Each field of a syntax line's IR class is filled by a slot, or
-    is the ``<slot>_is_identifier`` flag of a source slot — a field
-    the line cannot reach would silently keep its default."""
+    """Each field of a syntax line's IR class is filled by a slot (a
+    choice's branches included), is the ``<slot>_is_identifier`` flag
+    of a source slot, or is the flag a keyword-only clause sets — a
+    field the line cannot reach would silently keep its default. The
+    statement's key is the line's first one or two words."""
     from declarativeml_spark.dsl.parser import _STATEMENTS, _Syntax
 
-    for keyword, syntax in _STATEMENTS.items():
+    def flat(items):
+        for w in items:
+            if isinstance(w, dict):  # a choice: {leading keyword: branch}
+                for branch in w.values():
+                    yield from flat(branch)
+            else:
+                yield w
+
+    for key, syntax in _STATEMENTS.items():
         if not isinstance(syntax, _Syntax):
             continue
         items = syntax.required + [w for c in syntax.clauses.values() for w in c]
-        slots = {w for w in items if isinstance(w, tuple)}
+        slots = {w for w in flat(items) if isinstance(w, tuple)}
         named = {name for name, _ in slots} | {
             f"{name}_is_identifier" for name, kind in slots if kind == "source"
-        }
+        } | {c[0].lower() for c in syntax.clauses.values() if len(c) == 1}
         fields = {f.name for f in dataclasses.fields(syntax.cls)}
-        assert fields == named, keyword
-        assert syntax.required[0] == keyword
+        assert fields == named, key
+        words = key.split()
+        assert len(words) <= 2 and syntax.required[: len(words)] == words, key
+
+
+@pytest.mark.parametrize("text", ["DEDUPLICATE", "PACK", "TOKENIZE", "SEARCH SIMILAR"])
+def test_empty_source_at_end_of_input_names_its_statement(text):
+    with pytest.raises(ValueError, match=f"^{text} source cannot be empty$"):
+        parse(text)
+
+
+def test_with_prefix_feeds_create_index():
+    stmt = parse(
+        "WITH c AS (SELECT * FROM embeddings) CREATE INDEX i ON c USING lsh"
+    )
+    assert isinstance(stmt, ir.CreateIndex)
+    assert stmt.source == (
+        "(WITH c AS (SELECT * FROM embeddings) SELECT * FROM c) __cte_src"
+    )
+    assert stmt.source_is_identifier is False
+    assert (stmt.name, stmt.method) == ("i", "lsh")
