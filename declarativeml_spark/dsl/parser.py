@@ -63,7 +63,7 @@ from itertools import takewhile
 from typing import Any, List, Optional, Tuple, Union
 
 from declarativeml_spark.dsl import ir
-from declarativeml_spark.dsl.features import _ExprParser
+from declarativeml_spark.dsl.features import _ExprParser, _to_number
 from declarativeml_spark.dsl.lexer import DSLSyntaxError, Token, tokenize
 from declarativeml_spark.dsl.source import is_identifier_source
 
@@ -2194,10 +2194,6 @@ def _unquote(tok: Token) -> str:
     return tok.value[1:-1].replace("''", "'")
 
 
-def _to_number(text: str) -> Union[int, float]:
-    return float(text) if ("." in text or "e" in text or "E" in text) else int(text)
-
-
 def _require_positive_int(value: Any, what: str) -> int:
     """Validate positive integers, accepting integral floats (``5.0``).
 
@@ -2397,12 +2393,15 @@ def _parse_cte_prefixed(parser: "_Parser") -> Statement:
     predicate pushdown and column pruning cross the boundary."""
     depth = 0
     split_tok = None
+    last_close = None  # index of the ")" closing the latest CTE
     for j in range(parser.i, len(parser.tokens)):
         tok = parser.tokens[j]
         if tok.kind == "OP" and tok.value == "(":
             depth += 1
         elif tok.kind == "OP" and tok.value == ")":
             depth -= 1
+            if depth == 0:
+                last_close = j
         elif (
             depth == 0
             and tok.kind == "NAME"
@@ -2415,6 +2414,15 @@ def _parse_cte_prefixed(parser: "_Parser") -> Statement:
         raise DSLSyntaxError(
             "Expected a DSL statement after the WITH clause (e.g."
             " WITH features AS (SELECT …) TRAIN MODEL …)"
+        )
+    if last_close != j - 1:
+        # words between the last CTE and the host keyword would
+        # otherwise vanish into the CTE text (or into the host's source)
+        stray = parser.tokens[j - 1 if last_close is None else last_close + 1]
+        raise DSLSyntaxError(
+            f"Unexpected {stray.value!r} at {stray.pos} after the WITH"
+            " clause: the DSL statement must follow the ')' that closes"
+            " the last CTE"
         )
     cte_text = _strip_sql_comments(parser.text[: split_tok.pos]).strip()
     stmt = parse(parser.text[split_tok.pos :])

@@ -52,6 +52,27 @@ _DET3 = (
 )
 
 
+def cramer3(a: list[list[str]], b: list[str]) -> list[str]:
+    """Cramer-rule solve of the 3×3 system ``a · x = b`` as expression
+    text: one ``(det(a with column i replaced by b)) / (det(a))`` per
+    unknown. The same text runs in Spark SQL and DuckDB, so both
+    engines evaluate identical IEEE op sequences."""
+
+    def det(m: list[list[str]]) -> str:
+        return _DET3.format(
+            a00=m[0][0], a01=m[0][1], a02=m[0][2],
+            a10=m[1][0], a11=m[1][1], a12=m[1][2],
+            a20=m[2][0], a21=m[2][1], a22=m[2][2],
+        )
+
+    d = det(a)
+    out = []
+    for col in range(3):
+        m = [[b[r] if c == col else a[r][c] for c in range(3)] for r in range(3)]
+        out.append(f"({det(m)}) / ({d})")
+    return out
+
+
 def lam_text(lam: float) -> str:
     """The penalty as expression text both engines parse to the same
     double (decimal literal → CAST AS DOUBLE is exact in both)."""
@@ -83,27 +104,8 @@ def ridge_exprs(p: int, lam: str) -> dict[str, str]:
             ["s1", f"(s11 + {lam})", "s12"],
             ["s2", "s12", f"(s22 + {lam})"],
         ]
-        b = ["sy", "s1y", "s2y"]
-
-        def det(m: list[list[str]]) -> str:
-            return _DET3.format(
-                a00=m[0][0], a01=m[0][1], a02=m[0][2],
-                a10=m[1][0], a11=m[1][1], a12=m[1][2],
-                a20=m[2][0], a21=m[2][1], a22=m[2][2],
-            )
-
-        def repl(col: int) -> list[list[str]]:
-            return [
-                [b[r] if c == col else a[r][c] for c in range(3)]
-                for r in range(3)
-            ]
-
-        d = det(a)
-        return {
-            "b0": f"({det(repl(0))}) / ({d})",
-            "c1": f"({det(repl(1))}) / ({d})",
-            "c2": f"({det(repl(2))}) / ({d})",
-        }
+        b0, c1, c2 = cramer3(a, ["sy", "s1y", "s2y"])
+        return {"b0": b0, "c1": c1, "c2": c2}
     raise ValueError(
         f"ridge_closed_form supports 1 or 2 features, got {p}; use"
         " linear_regression for wider feature sets"

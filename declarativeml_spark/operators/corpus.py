@@ -94,8 +94,6 @@ def temperature_mix(df: DataFrame, by_col: str = "source") -> DataFrame:
     n_groups-row aggregate crossed with a single broadcast totals
     row.
     """
-    from declarativeml_spark.queries.registry import sround
-
     # the group column keeps its input name: MIX ... BY lang yields a
     # `lang` column, not a misnamed `source`
     s = df.groupBy(F.col(by_col).alias(by_col)).agg(
@@ -112,9 +110,9 @@ def temperature_mix(df: DataFrame, by_col: str = "source") -> DataFrame:
     return s.crossJoin(F.broadcast(t)).select(
         F.col(by_col),
         "n_docs",
-        sround(nat, 6).alias("nat_share"),
-        sround(tw, 6).alias("temp_weight"),
-        sround(tw / nat, 6).alias("boost"),
+        T.sround(nat, 6).alias("nat_share"),
+        T.sround(tw, 6).alias("temp_weight"),
+        T.sround(tw / nat, 6).alias("boost"),
     )
 
 
@@ -387,15 +385,13 @@ def semantic_overlap(
     )
     scored = c.crossJoin(F.broadcast(q)).withColumn("cos", F.expr(cos))
     w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("qid"))
-    p = float(10**8)
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             "vec_id",
             F.col("qid").alias("nearest_benchmark"),
-            (F.floor(F.col("cos") * F.lit(p) + F.lit(0.5)).cast("double") / F.lit(p))
-            .alias("max_cosine"),
+            T.sround("cos", 8).alias("max_cosine"),
             (F.col("cos") >= threshold).alias("contaminated"),
         )
     )

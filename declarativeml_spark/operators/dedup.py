@@ -26,14 +26,7 @@ from declarativeml_spark.operators.caching import (
 )
 
 from declarativeml_spark.operators import textops as T
-
-
-def _sround(c, digits: int = 6):
-    """Half-up round in pure IEEE double ops — bit-identical across
-    engines and with the oracle-checked queries (see
-    ``textops.stable_round``)."""
-    p = float(10**digits)
-    return F.floor(c * F.lit(p) + F.lit(0.5)).cast("double") / F.lit(p)
+from declarativeml_spark.operators.textops import sround as _sround
 
 
 def _toks(text_col: str) -> str:
@@ -44,22 +37,119 @@ def _shingles(text_col: str) -> str:
     return T.SHINGLES_SPARK.format(toks=_toks(text_col))
 
 
-def _shingled(df: DataFrame, id_col: str, text_col: str, out: str) -> DataFrame:
-    """(doc_id, <out>=shingle array) with a CACHE BOUNDARY between
-    tokenize and shingle. Building shingles straight from text lets
-    CollapseProject inline the split() into every element_at inside
-    the shingle lambda, and HOF projections evaluate interpreted (no
-    codegen → no common-subexpression elimination) — the text
-    re-splits 3x per shingle, quadratic per row. Persisting the token
-    arrays first makes element_at an O(1) access into a materialized
-    column. Callers own the returned (persisted) frame's lifecycle
-    via the tracking scope, same as any track_persist frame."""
-    toked = df.select(
-        F.col(id_col).alias("doc_id"), F.expr(_toks(text_col)).alias("toks")
-    ).transform(track_persist)
-    return toked.select(
-        "doc_id", F.expr(T.SHINGLES_SPARK.format(toks="toks")).alias(out)
+def minhash_plane(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n_minhash: int,
+    bands: int,
+    hashed: bool = False,
+    keep: tuple = (),
+) -> DataFrame:
+    """The persisted MinHash signature plane every text near-dup path
+    reads: (doc_id, *keep, shingles, bk0 … bk{bands-1}).
+
+    ``shingles`` is the verify set — the 3-gram strings, or their
+    xxhash64 values when ``hashed`` (Jaccard and containment depend
+    only on set sizes, which hashing preserves). Band key ``bk<b>``
+    concatenates minhash rows ``b·r … b·r + r − 1`` (r = n_minhash //
+    bands; a one-row band is the minhash itself, with no concat).
+
+    The raw (id, text) rows spread first and shingles derive AFTER
+    the shuffle — the shingle arrays are ~3x the text volume and never
+    cross the wire. A CACHE BOUNDARY sits between tokenize and
+    shingle: built straight from text, CollapseProject inlines the
+    split() into every element_at inside the shingle lambda, and HOF
+    projections evaluate interpreted (no codegen → no common-
+    subexpression elimination), so the text re-split 3x per shingle,
+    quadratic per row. Each shingle is md5'd once per GROUP of 4
+    minhash tables (textops.minhash_md5_group_spark), and the
+    per-slice array_min folds and the band keys are computed INTO the
+    persisted plane: persisting the md5 arrays instead re-ran every
+    shingle-proportional fold on EACH side of the band self-join (2x
+    the signature CPU; 1.44 s of the 128-hash query's 3.6 s warm
+    wall), and cached shingle-proportional arrays where
+    doc-proportional band keys suffice. Callers own both persisted
+    frames' lifecycle via the tracking scope."""
+    from declarativeml_spark.operators.skew import spread_partitions
+
+    if n_minhash % bands:
+        raise ValueError("n_minhash must be divisible by bands")
+    rows = n_minhash // bands
+    verify = "transform(sh_str, s -> xxhash64(s))" if hashed else "sh_str"
+    mh = [F.col(f"mh{k}") for k in range(n_minhash)]
+    toked = (
+        spread_partitions(
+            df.select(F.col(id_col).alias("doc_id"), *keep, F.col(text_col))
+        )
+        .select("doc_id", *keep, F.expr(_toks(text_col)).alias("toks"))
+        .transform(track_persist)
     )
+    return (
+        toked.select(
+            "doc_id", *keep, F.expr(T.SHINGLES_SPARK.format(toks="toks")).alias("sh_str")
+        )
+        .select(
+            "doc_id",
+            *keep,
+            F.expr(verify).alias("shingles"),
+            *[
+                F.expr(T.minhash_md5_group_spark("sh_str", g)).alias(f"mhg{g}")
+                for g in range((n_minhash + 3) // 4)
+            ],
+        )
+        .select(
+            "doc_id",
+            *keep,
+            "shingles",
+            *[
+                F.expr(T.minhash_slice_spark(f"mhg{k // 4}", k % 4)).alias(f"mh{k}")
+                for k in range(n_minhash)
+            ],
+        )
+        .select(
+            "doc_id",
+            *keep,
+            "shingles",
+            *[
+                (
+                    F.concat(*mh[b * rows : (b + 1) * rows]) if rows > 1 else mh[b]
+                ).alias(f"bk{b}")
+                for b in range(bands)
+            ],
+        )
+        .transform(track_persist)
+    )
+
+
+def _band_candidates(plane: DataFrame, bands: int) -> DataFrame:
+    """Candidate pairs of a :func:`minhash_plane`: every (id_a, id_b),
+    id_a < id_b, sharing any (band_idx, band_key), DISTINCT, with
+    both verify sets joined back as ``sa`` / ``sb``.
+
+    Scale: the candidate join shuffles (band_idx, band_key, id) only;
+    verify sets join back just for the candidate set. Skewed band keys
+    (boilerplate) are handled by AQE skew-join."""
+    keyed = plane.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[F.col(f"bk{b}") for b in range(bands)])
+        ).alias("band_idx", "band_key"),
+    )
+    a, b = keyed.alias("a"), keyed.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .distinct()
+    )
+    sa = plane.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sa"))
+    sb = plane.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sb"))
+    return cand.join(sa, "id_a").join(sb, "id_b")
 
 
 def exact_duplicates(
@@ -124,105 +214,36 @@ def minhash_pairs(
     bands: int = 4,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: shingle → minhash → band-bucket
-    equi-join → exact Jaccard verify ≥ threshold.
+    equi-join → exact Jaccard verify ≥ threshold (on the ROUNDED
+    Jaccard the pair reports).
 
-    Scale: the candidate join shuffles (band_idx, band_key, id) only;
-    shingle sets join back just for the candidate set. Skewed band
-    keys (boilerplate) are handled by AQE skew-join.
+    Scale: see :func:`minhash_plane` and :func:`_band_candidates`.
     """
-    if n_minhash % bands:
-        raise ValueError("n_minhash must be divisible by bands")
-    rows_per_band = n_minhash // bands
-    from declarativeml_spark.operators.skew import spread_partitions
-
-    # spread the raw (id, text) rows and derive shingles AFTER the
-    # shuffle — the shingle arrays are ~3x the text volume and should
-    # never cross the wire
-    # group md5 arrays feed the slice folds so each shingle is md5'd
-    # once per GROUP of 4 minhash tables, not once per table.
-    # r11: the n_minhash per-slice array_min FOLDS (shingle-
-    # proportional) and the band concats are computed INTO the
-    # persisted plane — the former shape persisted the raw md5
-    # arrays and re-ran all n_minhash folds on EACH side of the band
-    # self-join (2x the signature CPU; measured 1.44s of the 128-hash
-    # query's 3.6s warm wall), and cached shingle-proportional hash
-    # arrays where doc-proportional band keys suffice
-    n_groups = (n_minhash + 3) // 4
-    sh = (
-        _shingled(
-            spread_partitions(
-                df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-            ),
-            "doc_id",
-            text_col,
-            "shingles",
-        )
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                F.expr(T.minhash_md5_group_spark("shingles", g)).alias(f"mhg{g}")
-                for g in range(n_groups)
-            ],
-        )
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                F.expr(T.minhash_slice_spark(f"mhg{k // 4}", k % 4)).alias(f"mh{k}")
-                for k in range(n_minhash)
-            ],
-        )
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                F.concat(
-                    *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias(f"bk{b}")
-                for b in range(bands)
-            ],
-        )
-        .transform(track_persist)
-    )
-    bands_df = sh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"bk{b}") for b in range(bands)])
-        ).alias("band_idx", "band_key"),
-    )
-    a, b = bands_df.alias("a"), bands_df.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sb"))
+    plane = minhash_plane(df, id_col, text_col, n_minhash, bands)
     inter = F.size(F.array_intersect("sa", "sb"))
     jac = _sround(inter.cast("double") / (F.size("sa") + F.size("sb") - inter))
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        _band_candidates(plane, bands)
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
 
+_MAX_BLOCK_ROWS = 20_000
+
+
 def _guard_block_sizes(
-    df: DataFrame, block_cols: list[str], max_block_rows: int
+    df: DataFrame, block_cols: list[str], max_block_rows: int | None
 ) -> None:
-    """Refuse all-pairs blocks that would explode quadratically.
+    """Refuse all-pairs blocks that would explode quadratically
+    (``max_block_rows`` None means 20 000).
 
     Driver-side read of per-block counts (one row per block — bounded
     by block-key cardinality, not data size). Raising beats silently
     launching an O(block²) stage that would never finish at scale.
     """
+    if max_block_rows is None:
+        max_block_rows = _MAX_BLOCK_ROWS
     top = (
         df.groupBy(*block_cols)
         .count()
@@ -240,6 +261,18 @@ def _guard_block_sizes(
         )
 
 
+def _refuse_block_options(method: str, **options) -> None:
+    """The blocking options shape only ``method='block'``; a candidate
+    path that silently dropped them would answer a different question
+    than the one asked."""
+    given = [name for name, value in options.items() if value is not None]
+    if given:
+        raise ValueError(
+            f"{', '.join(given)} applies only to method='block', not"
+            f" method={method!r}"
+        )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -248,7 +281,7 @@ def ngram_jaccard_pairs(
     method: str = "minhash",
     n_minhash: int = 8,
     block_by: list[str] | None = None,
-    max_block_rows: int = 20_000,
+    max_block_rows: int | None = None,
 ) -> DataFrame:
     """N-gram Jaccard pairs ≥ threshold, with exact Jaccard as the
     VERIFY step over candidate pairs — never an unbounded all-pairs.
@@ -266,7 +299,9 @@ def ngram_jaccard_pairs(
 
     ``method='block'``: the legacy all-pairs within ``block_by``
     (default (source, lang)) — O(block²), refuses blocks over
-    ``max_block_rows`` so it stays an explicitly small-block tool.
+    ``max_block_rows`` (default 20 000) so it stays an explicitly
+    small-block tool. The two blocking options raise on the minhash
+    path.
     """
     from declarativeml_spark.operators.skew import spread_partitions
 
@@ -302,70 +337,15 @@ def ngram_jaccard_pairs(
         )
     if method != "minhash":
         raise ValueError(f"unknown ngram_jaccard method: {method!r}")
+    _refuse_block_options(method, block_by=block_by, max_block_rows=max_block_rows)
 
-    # candidate-gated default: spread raw text, shingle AFTER the
-    # shuffle (see minhash_pairs), derive both the string shingles
-    # (minhash input) and the hashed sets (verify input) in one pass
-    n_groups = (n_minhash + 3) // 4
-    sh = (
-        _shingled(
-            spread_partitions(
-                df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-            ),
-            "doc_id",
-            text_col,
-            "sh_str",
-        )
-        .select(
-            "doc_id",
-            F.expr("transform(sh_str, s -> xxhash64(s))").alias("shingles"),
-            # one salted md5 per shingle per GROUP of 4 minhash tables
-            *[
-                F.expr(T.minhash_md5_group_spark("sh_str", g)).alias(f"mhg{g}")
-                for g in range(n_groups)
-            ],
-        )
-        # r11: the per-slice array_min folds (shingle-proportional)
-        # are computed INTO the persisted plane — the former shape
-        # cached the raw md5 arrays and re-ran every fold on EACH
-        # side of the band self-join (the minhash_pairs fix, applied
-        # to the single-hash-bucket gate identically)
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                F.expr(T.minhash_slice_spark(f"mhg{k // 4}", k % 4)).alias(
-                    f"mh{k}"
-                )
-                for k in range(n_minhash)
-            ],
-        )
-        .transform(track_persist)
-    )
-    sigs = sh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"mh{k}") for k in range(n_minhash)])
-        ).alias("band_idx", "band_key"),
-    )
-    a, b = sigs.alias("a"), sigs.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sb"))
+    # candidate-gated default: one minhash per band, hashed verify
+    # sets, filtered on the unrounded Jaccard
+    plane = minhash_plane(df, id_col, text_col, n_minhash, n_minhash, hashed=True)
     inter = F.size(F.array_intersect("sa", "sb"))
     jac = inter.cast("double") / (F.size("sa") + F.size("sb") - inter)
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        _band_candidates(plane, n_minhash)
         .filter(jac >= threshold)
         .select("id_a", "id_b", _sround(jac).alias("jaccard"))
     )
@@ -381,19 +361,30 @@ _NORM = (
 )
 
 
+def _probe_dim(df: DataFrame, vec_col: str) -> int:
+    """Vector dim from the first row, for callers given no ``dim=``."""
+    probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    if probe is None or probe["d"] is None or probe["d"] < 0:
+        raise ValueError(
+            f"cannot infer vector dim from {vec_col!r} (empty input or"
+            " NULL first vector); pass dim= explicitly"
+        )
+    return int(probe["d"])
+
+
 def embedding_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.35,
     method: str = "lsh",
-    block_by: str = "label",
+    block_by: str | None = None,
     bucket_length: float = 0.25,
     num_hash_tables: int = 6,
     projs_per_table: int = 6,
     seed: int = 42,
     dim: int | None = None,
-    max_block_rows: int = 20_000,
+    max_block_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: exact cosine ≥ threshold as the
     VERIFY step over candidate pairs.
@@ -409,9 +400,10 @@ def embedding_pairs(
     Deterministic (seeded driver-side projections, left-assoc folds),
     so the result is hash-checkable cross-engine.
 
-    ``method='block'``: the legacy all-pairs within ``block_by`` —
-    O(block²), refuses blocks over ``max_block_rows`` so it stays an
-    explicitly small-block tool.
+    ``method='block'``: the legacy all-pairs within ``block_by``
+    (default ``label``) — O(block²), refuses blocks over
+    ``max_block_rows`` (default 20 000) so it stays an explicitly
+    small-block tool. The two blocking options raise on the lsh path.
     """
     from declarativeml_spark.operators.skew import spread_partitions
 
@@ -420,7 +412,7 @@ def embedding_pairs(
             spread_partitions(
                 df.select(
                     F.col(id_col).alias("vec_id"),
-                    F.col(block_by).alias("blk"),
+                    F.col(block_by or "label").alias("blk"),
                     F.col(vec_col).alias("vec"),
                 )
             )
@@ -454,15 +446,10 @@ def embedding_pairs(
         )
     if method != "lsh":
         raise ValueError(f"unknown embedding_pairs method: {method!r}")
+    _refuse_block_options(method, block_by=block_by, max_block_rows=max_block_rows)
 
     if dim is None:
-        probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        if probe is None or probe["d"] is None or probe["d"] < 0:
-            raise ValueError(
-                f"cannot infer vector dim from {vec_col!r} (empty input or"
-                " NULL first vector); pass dim= explicitly"
-            )
-        dim = int(probe["d"])
+        dim = _probe_dim(df, vec_col)
     key_cols = _lsh_key_columns(
         dim, bucket_length, num_hash_tables, projs_per_table, seed
     )
@@ -521,6 +508,54 @@ def embedding_pairs(
     )
 
 
+def _lsh_pairs_oracle(
+    where: str,
+    score: str,
+    out: str,
+    keep: str,
+    bucket_length: float,
+    num_hash_tables: int,
+    projs_per_table: int,
+    seed: int,
+    dim: int,
+    table: str,
+    id_col: str,
+    vec_col: str,
+) -> str:
+    """The DuckDB twin of the native LSH candidate path: the same
+    projection constants and left-assoc fold order as the Spark plan,
+    so buckets and candidates are bit-identical. ``where`` filters the
+    base rows, ``score`` is the scored CTE's extra column, ``out`` the
+    reported column and ``keep`` the threshold predicate."""
+    proj = _lsh_proj_matrix(dim, num_hash_tables * projs_per_table, seed)
+    key_exprs = _lsh_compound_keys(
+        "vec", proj, bucket_length, num_hash_tables, projs_per_table, "duck"
+    )
+    keys = ",\n           ".join(
+        f"{key_exprs[t]} AS k{t}" for t in range(num_hash_tables)
+    )
+    case = " ".join(f"WHEN {t} THEN k{t}" for t in range(num_hash_tables))
+    values = ",".join(f"({t})" for t in range(num_hash_tables))
+    return f"""
+    WITH base AS (SELECT {id_col} AS vec_id, CAST({vec_col} AS DOUBLE[]) AS vec
+                  FROM {table} WHERE {where}),
+    keyed AS (SELECT vec_id, vec,
+           {keys}
+           FROM base),
+    expl AS (SELECT vec_id, t.tbl, CASE t.tbl {case} END AS bkey
+             FROM keyed, (VALUES {values}) AS t(tbl)),
+    cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
+             FROM expl x JOIN expl y
+               ON x.tbl = y.tbl AND x.bkey = y.bkey AND x.vec_id < y.vec_id),
+    scored AS (SELECT c.id_a, c.id_b, {score}
+               FROM cand c
+               JOIN base a ON a.vec_id = c.id_a
+               JOIN base b ON b.vec_id = c.id_b)
+    SELECT id_a, id_b, {out}
+    FROM scored WHERE {keep}
+    """
+
+
 def embedding_pairs_oracle_sql(
     threshold: float = 0.35,
     bucket_length: float = 0.25,
@@ -532,46 +567,24 @@ def embedding_pairs_oracle_sql(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """DuckDB oracle for ``embedding_pairs(method='lsh')`` — same
-    projection constants and left-assoc fold order as the Spark plan,
-    so buckets, candidates and cosines are bit-identical."""
-    from declarativeml_spark.operators.textops import stable_round
-
-    proj = _lsh_proj_matrix(dim, num_hash_tables * projs_per_table, seed)
-    key_exprs = _lsh_compound_keys(
-        "vec", proj, bucket_length, num_hash_tables, projs_per_table, "duck"
-    )
-    keys = ",\n           ".join(
-        f"{key_exprs[t]} AS k{t}" for t in range(num_hash_tables)
-    )
-    case = " ".join(f"WHEN {t} THEN k{t}" for t in range(num_hash_tables))
-    values = ",".join(f"({t})" for t in range(num_hash_tables))
+    """DuckDB oracle for ``embedding_pairs(method='lsh')``: zero-norm
+    vectors excluded, exact cosine verify."""
     dot = (
         "list_sum(list_transform(list_zip(a.vec, b.vec),"
         " p -> p[1] * p[2]))"
     )
     nrm = "sqrt(list_sum(list_transform({v}, x -> x * x)))"
     cos = f"{dot} / ({nrm.format(v='a.vec')} * {nrm.format(v='b.vec')})"
-    return f"""
-    WITH base AS (SELECT {id_col} AS vec_id, CAST({vec_col} AS DOUBLE[]) AS vec
-                  FROM {table} WHERE len({vec_col}) = {dim}
-                    AND list_sum(list_transform(CAST({vec_col} AS DOUBLE[]),
-                                                x -> x * x)) > 0),
-    keyed AS (SELECT vec_id, vec,
-           {keys}
-           FROM base),
-    expl AS (SELECT vec_id, t.tbl, CASE t.tbl {case} END AS bkey
-             FROM keyed, (VALUES {values}) AS t(tbl)),
-    cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-             FROM expl x JOIN expl y
-               ON x.tbl = y.tbl AND x.bkey = y.bkey AND x.vec_id < y.vec_id),
-    scored AS (SELECT c.id_a, c.id_b, {cos} AS cos
-               FROM cand c
-               JOIN base a ON a.vec_id = c.id_a
-               JOIN base b ON b.vec_id = c.id_b)
-    SELECT id_a, id_b, {stable_round('cos', 6)} AS cosine
-    FROM scored WHERE cos >= {threshold!r}
-    """
+    return _lsh_pairs_oracle(
+        f"len({vec_col}) = {dim}\n"
+        f"                    AND list_sum(list_transform(CAST({vec_col} AS DOUBLE[]),\n"
+        "                                                x -> x * x)) > 0",
+        f"{cos} AS cos",
+        f"{T.stable_round('cos', 6)} AS cosine",
+        f"cos >= {threshold!r}",
+        bucket_length, num_hash_tables, projs_per_table, seed, dim,
+        table, id_col, vec_col,
+    )
 
 
 def cosine_topk(
@@ -889,13 +902,7 @@ def lsh_keyed_index(
     materialization, and the inner cache would only hold a second
     copy of every vector (the r11 advice's double-cache)."""
     if dim is None:
-        probe = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        if probe is None or probe["d"] is None or probe["d"] < 0:
-            raise ValueError(
-                f"cannot infer vector dim from {vec_col!r} (empty input or"
-                " NULL first vector); pass dim= explicitly"
-            )
-        dim = int(probe["d"])
+        dim = _probe_dim(df, vec_col)
     key_cols = _lsh_key_columns(
         dim, bucket_length, num_hash_tables, projs_per_table, seed
     )
@@ -979,42 +986,19 @@ def lsh_pairs_oracle_sql(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """DuckDB oracle for ``lsh_topk_pairs`` — same projection
-    constants, same left-assoc fold order, so buckets, candidates and
-    distances are bit-identical."""
-    from declarativeml_spark.operators.textops import stable_round
-
-    proj = _lsh_proj_matrix(dim, num_hash_tables * projs_per_table, seed)
-    key_exprs = _lsh_compound_keys(
-        "vec", proj, bucket_length, num_hash_tables, projs_per_table, "duck"
-    )
-    keys = ",\n           ".join(
-        f"{key_exprs[t]} AS k{t}" for t in range(num_hash_tables)
-    )
-    case = " ".join(f"WHEN {t} THEN k{t}" for t in range(num_hash_tables))
-    values = ",".join(f"({t})" for t in range(num_hash_tables))
+    """DuckDB oracle for ``lsh_topk_pairs``: exact euclidean verify."""
     dist = (
         "SQRT(list_sum(list_transform(list_zip(a.vec, b.vec),"
         " p -> (p[1] - p[2]) * (p[1] - p[2]))))"
     )
-    return f"""
-    WITH base AS (SELECT {id_col} AS vec_id, CAST({vec_col} AS DOUBLE[]) AS vec
-                  FROM {table} WHERE len({vec_col}) = {dim}),
-    keyed AS (SELECT vec_id, vec,
-           {keys}
-           FROM base),
-    expl AS (SELECT vec_id, t.tbl, CASE t.tbl {case} END AS bkey
-             FROM keyed, (VALUES {values}) AS t(tbl)),
-    cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-             FROM expl x JOIN expl y
-               ON x.tbl = y.tbl AND x.bkey = y.bkey AND x.vec_id < y.vec_id),
-    scored AS (SELECT c.id_a, c.id_b, {dist} AS dist
-               FROM cand c
-               JOIN base a ON a.vec_id = c.id_a
-               JOIN base b ON b.vec_id = c.id_b)
-    SELECT id_a, id_b, {stable_round('dist', 4)} AS euclidean_dist
-    FROM scored WHERE dist <= {threshold!r}
-    """
+    return _lsh_pairs_oracle(
+        f"len({vec_col}) = {dim}",
+        f"{dist} AS dist",
+        f"{T.stable_round('dist', 4)} AS euclidean_dist",
+        f"dist <= {threshold!r}",
+        bucket_length, num_hash_tables, projs_per_table, seed, dim,
+        table, id_col, vec_col,
+    )
 
 
 def connected_components(
@@ -1641,66 +1625,12 @@ def ngram_containment_pairs(
     Σ bucket² over shingle-locality buckets, only (id, id) tuples and
     hashed sets move, exact verify inside the join stage.
     """
-    from declarativeml_spark.operators.skew import spread_partitions
-
-    n_groups = (n_minhash + 3) // 4
-    sh = (
-        _shingled(
-            spread_partitions(
-                df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-            ),
-            "doc_id",
-            text_col,
-            "sh_str",
-        )
-        .select(
-            "doc_id",
-            F.expr("transform(sh_str, s -> xxhash64(s))").alias("shingles"),
-            *[
-                F.expr(T.minhash_md5_group_spark("sh_str", g)).alias(f"mhg{g}")
-                for g in range(n_groups)
-            ],
-        )
-        # r11: slice folds computed INTO the persisted plane (the
-        # minhash_pairs fix — the former shape re-ran every
-        # shingle-proportional fold on each band-join side)
-        .select(
-            "doc_id",
-            "shingles",
-            *[
-                F.expr(T.minhash_slice_spark(f"mhg{k // 4}", k % 4)).alias(
-                    f"mh{k}"
-                )
-                for k in range(n_minhash)
-            ],
-        )
-        .transform(track_persist)
-    )
-    sigs = sh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"mh{k}") for k in range(n_minhash)])
-        ).alias("band_idx", "band_key"),
-    )
-    a, b = sigs.alias("a"), sigs.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sb"))
+    plane = minhash_plane(df, id_col, text_col, n_minhash, n_minhash, hashed=True)
     inter = F.size(F.array_intersect("sa", "sb")).cast("double")
     c_ab = inter / F.size("sa")
     c_ba = inter / F.size("sb")
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+        _band_candidates(plane, n_minhash)
         .filter(F.greatest(c_ab, c_ba) >= threshold)
         .select(
             "id_a",
@@ -1790,8 +1720,8 @@ def hamming64_quarter_pairs(
     """Near-dup pairs over 64-bit signatures stored as four 16-bit
     quarter columns ``q0``…``q3``: pigeonhole band candidates + exact
     Hamming verify — the machinery behind ``dedup_simhash64_hamming``
-    (queries/pipeline10.py), factored out so the media aHash query
-    reuses it VERBATIM (round-9 verdict ask #3).
+    (queries/pipeline10.py) and, through pipeline11.py's
+    ``_hamming_histogram``, every media near-dup query.
 
     With 4 disjoint 16-bit bands, two signatures within Hamming
     distance r must agree on at least one band only when ``r < 4`` —

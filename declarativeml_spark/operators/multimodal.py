@@ -581,6 +581,65 @@ def register_wav_codec() -> None:
         )
 
 
+def _synth_from_text(
+    df: DataFrame, text_col: str, id_col: str, one
+) -> DataFrame:
+    """(media_id, payload) from a per-row container builder ``one(text)
+    → bytes`` — the one Arrow scaffold behind every ``synth_*_from_text``
+    fixture. Payloads build executor-side in the Arrow batch
+    (mapInPandas, no shuffle)."""
+    out_schema = T.StructType(
+        [
+            T.StructField("media_id", T.LongType(), False),
+            T.StructField("payload", T.BinaryType(), True),
+        ]
+    )
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "media_id": pd.array(pdf[id_col], dtype="int64"),
+                    "payload": pd.Series(
+                        [one(t) for t in pdf[text_col]], dtype=object
+                    ),
+                }
+            )
+
+    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+
+
+def _wav_synth_builder(sample_rate: int):
+    """Per-row RIFF/PCM builder behind :func:`synth_wav_from_text`."""
+    import numpy as np
+
+    def one(text: Optional[str]) -> bytes:
+        raw = (text or "").encode("utf-8")
+        samples = (
+            (np.frombuffer(raw, dtype=np.uint8).astype(np.int16) - 128)
+            * 256
+        ).astype("<i2").tobytes()
+        fmt = (
+            (1).to_bytes(2, "little")            # PCM
+            + (1).to_bytes(2, "little")          # mono
+            + sample_rate.to_bytes(4, "little")
+            + (sample_rate * 2).to_bytes(4, "little")  # byte rate
+            + (2).to_bytes(2, "little")          # block align
+            + (16).to_bytes(2, "little")         # bits
+        )
+        body = (
+            b"fmt " + len(fmt).to_bytes(4, "little") + fmt
+            + b"data" + len(samples).to_bytes(4, "little") + samples
+            + (b"\x00" if len(samples) & 1 else b"")
+        )
+        return (
+            b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE"
+            + body
+        )
+
+    return one
+
+
 def synth_wav_from_text(
     df: DataFrame,
     text_col: str = "text",
@@ -593,51 +652,7 @@ def synth_wav_from_text(
     compute the decoder's expected output from the text alone while
     the Spark side must actually parse the container. Payloads build
     executor-side in the Arrow batch (mapInPandas, no shuffle)."""
-    import numpy as np
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(text: Optional[str]) -> bytes:
-            raw = (text or "").encode("utf-8")
-            samples = (
-                (np.frombuffer(raw, dtype=np.uint8).astype(np.int16) - 128)
-                * 256
-            ).astype("<i2").tobytes()
-            fmt = (
-                (1).to_bytes(2, "little")            # PCM
-                + (1).to_bytes(2, "little")          # mono
-                + sample_rate.to_bytes(4, "little")
-                + (sample_rate * 2).to_bytes(4, "little")  # byte rate
-                + (2).to_bytes(2, "little")          # block align
-                + (16).to_bytes(2, "little")         # bits
-            )
-            body = (
-                b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-                + b"data" + len(samples).to_bytes(4, "little") + samples
-                + (b"\x00" if len(samples) & 1 else b"")
-            )
-            return (
-                b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE"
-                + body
-            )
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(pdf[id_col], dtype="int64"),
-                    "payload": pd.Series(
-                        [one(t) for t in pdf[text_col]], dtype=object
-                    ),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+    return _synth_from_text(df, text_col, id_col, _wav_synth_builder(sample_rate))
 
 
 # ---------------------------------------------------------------------------
@@ -810,26 +825,7 @@ def synth_ppm_from_text(
     SQL oracle computes the decoder's expected channel sums from the
     text alone. Includes a header comment line, which the parser must
     skip. Builds executor-side in the Arrow batch (mapInPandas)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    one = _ppm_synth_builder(width)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(pdf[id_col], dtype="int64"),
-                    "payload": pd.Series(
-                        [one(t) for t in pdf[text_col]], dtype=object
-                    ),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
+    return _synth_from_text(df, text_col, id_col, _ppm_synth_builder(width))
 
 
 # ---------------------------------------------------------------------------
@@ -1105,26 +1101,9 @@ def synth_y4m_from_text(
     Payloads build executor-side in the Arrow batch (mapInPandas)."""
     if width % 2 or height % 2:
         raise ValueError(f"C420 synth needs even dims, got {width}x{height}")
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
+    return _synth_from_text(
+        df, text_col, id_col, _y4m_synth_builder(width, height)
     )
-    one = _y4m_synth_builder(width, height)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(pdf[id_col], dtype="int64"),
-                    "payload": pd.Series(
-                        [one(t) for t in pdf[text_col]], dtype=object
-                    ),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema=out_schema)
 
 
 def resize_y4m(payload: bytes, width: int, height: int) -> bytes:
@@ -1311,6 +1290,44 @@ def synth_resize_decode_features(
 _AHASH_SIDE = 8  # 8x8 grid -> 64 bits
 
 
+def _quarters64(
+    df: DataFrame, payload_col: str, id_col: str, bits
+) -> DataFrame:
+    """The one Arrow scaffold behind every 64-bit media signature:
+    ``bits(payload)`` returns the 64 signature bits (a NULL payload
+    arrives as ``b""``), and quarter ``q`` packs bits ``16q … 16q+15``
+    with weight ``1 << j`` (j the in-quarter offset) into the int
+    column ``q<q>`` — the layout ``hamming64_quarter_pairs`` consumes.
+    Map-only; 4 ints per file cross the Python boundary."""
+    import numpy as np
+
+    out_schema = T.StructType(
+        [T.StructField("media_id", T.LongType(), False)]
+        + [T.StructField(f"q{q}", T.IntegerType(), True) for q in range(4)]
+    )
+    weights = 1 << np.arange(16, dtype=np.int64)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = {"media_id": pd.array(pdf[id_col], dtype="int64")}
+            qcols: list[list[int]] = [[] for _ in range(4)]
+            for b in pdf[payload_col]:
+                sig = np.asarray(
+                    bits(bytes(b) if b is not None else b""), dtype=np.int64
+                )
+                for q in range(4):
+                    qcols[q].append(
+                        int((sig[16 * q : 16 * q + 16] * weights).sum())
+                    )
+            for q in range(4):
+                rows[f"q{q}"] = pd.array(qcols[q], dtype="int32")
+            yield pd.DataFrame(rows)
+
+    return df.select(
+        F.col(id_col).alias(id_col), payload_col
+    ).mapInPandas(batches, schema=out_schema)
+
+
 def ahash64_quarters(
     df: DataFrame,
     payload_col: str = "payload",
@@ -1339,49 +1356,30 @@ def ahash64_quarters(
     """
     import numpy as np
 
-    out_schema = T.StructType(
-        [T.StructField("media_id", T.LongType(), False)]
-        + [T.StructField(f"q{q}", T.IntegerType(), True) for q in range(4)]
-    )
     side = _AHASH_SIDE
-    weights = 1 << np.arange(16, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_id": pd.array(pdf[id_col], dtype="int64")}
-            qcols: list[list[int]] = [[] for _ in range(4)]
-            for b in pdf[payload_col]:
-                payload = bytes(b) if b is not None else b""
-                w0, h0, maxval, pos = _parse_ppm_header(payload)
-                dt = ">u2" if maxval > 255 else np.uint8
-                need = w0 * h0 * 3 * (2 if maxval > 255 else 1)
-                if len(payload) - pos < need:
-                    raise ValueError(
-                        f"truncated PPM pixel data"
-                        f" ({len(payload) - pos}/{need}B)"
-                    )
-                px = np.frombuffer(
-                    payload, dtype=dt, count=w0 * h0 * 3, offset=pos
-                ).reshape(h0, w0, 3)
-                ys, xs = _nn_index(side, h0), _nn_index(side, w0)
-                g = px[ys][:, xs].astype(np.int64)
-                luma = (
-                    299 * g[..., 0] + 587 * g[..., 1] + 114 * g[..., 2]
-                ) // 1000
-                flat = luma.reshape(side * side)
-                mean = int(flat.sum()) // (side * side)
-                bits = (flat > mean).astype(np.int64)
-                for q in range(4):
-                    qcols[q].append(
-                        int((bits[16 * q : 16 * q + 16] * weights).sum())
-                    )
-            for q in range(4):
-                rows[f"q{q}"] = pd.array(qcols[q], dtype="int32")
-            yield pd.DataFrame(rows)
+    def bits(payload: bytes):
+        w0, h0, maxval, pos = _parse_ppm_header(payload)
+        dt = ">u2" if maxval > 255 else np.uint8
+        need = w0 * h0 * 3 * (2 if maxval > 255 else 1)
+        if len(payload) - pos < need:
+            raise ValueError(
+                f"truncated PPM pixel data"
+                f" ({len(payload) - pos}/{need}B)"
+            )
+        px = np.frombuffer(
+            payload, dtype=dt, count=w0 * h0 * 3, offset=pos
+        ).reshape(h0, w0, 3)
+        ys, xs = _nn_index(side, h0), _nn_index(side, w0)
+        g = px[ys][:, xs].astype(np.int64)
+        luma = (
+            299 * g[..., 0] + 587 * g[..., 1] + 114 * g[..., 2]
+        ) // 1000
+        flat = luma.reshape(side * side)
+        mean = int(flat.sum()) // (side * side)
+        return flat > mean
 
-    return df.select(
-        F.col(id_col).alias(id_col), payload_col
-    ).mapInPandas(batches, schema=out_schema)
+    return _quarters64(df, payload_col, id_col, bits)
 
 
 # ---------------------------------------------------------------------------
@@ -1431,40 +1429,18 @@ def audio_bandenergy64_quarters(
     """
     import numpy as np
 
-    out_schema = T.StructType(
-        [T.StructField("media_id", T.LongType(), False)]
-        + [T.StructField(f"q{q}", T.IntegerType(), True) for q in range(4)]
-    )
     nb = _AUDIO_BANDS
-    weights = 1 << np.arange(16, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_id": pd.array(pdf[id_col], dtype="int64")}
-            qcols: list[list[int]] = [[] for _ in range(4)]
-            for b in pdf[payload_col]:
-                payload = bytes(b) if b is not None else b""
-                samples = _parse_wav(payload)[4]
-                n = samples.size
-                es = samples * samples
-                cum = np.concatenate(
-                    ([0], np.cumsum(es, dtype=np.int64))
-                )
-                edges = (np.arange(nb + 1, dtype=np.int64) * n) // nb
-                be = cum[edges[1:]] - cum[edges[:-1]]
-                total = int(cum[-1])
-                bits = (nb * be > total).astype(np.int64)
-                for q in range(4):
-                    qcols[q].append(
-                        int((bits[16 * q : 16 * q + 16] * weights).sum())
-                    )
-            for q in range(4):
-                rows[f"q{q}"] = pd.array(qcols[q], dtype="int32")
-            yield pd.DataFrame(rows)
+    def bits(payload: bytes):
+        samples = _parse_wav(payload)[4]
+        n = samples.size
+        es = samples * samples
+        cum = np.concatenate(([0], np.cumsum(es, dtype=np.int64)))
+        edges = (np.arange(nb + 1, dtype=np.int64) * n) // nb
+        be = cum[edges[1:]] - cum[edges[:-1]]
+        return nb * be > int(cum[-1])
 
-    return df.select(
-        F.col(id_col).alias(id_col), payload_col
-    ).mapInPandas(batches, schema=out_schema)
+    return _quarters64(df, payload_col, id_col, bits)
 
 
 def video_ahash64_quarters(
@@ -1506,41 +1482,20 @@ def video_ahash64_quarters(
 
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    out_schema = T.StructType(
-        [T.StructField("media_id", T.LongType(), False)]
-        + [T.StructField(f"q{q}", T.IntegerType(), True) for q in range(4)]
-    )
     side = _AHASH_SIDE
-    weights = 1 << np.arange(16, dtype=np.int64)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_id": pd.array(pdf[id_col], dtype="int64")}
-            qcols: list[list[int]] = [[] for _ in range(4)]
-            for b in pdf[payload_col]:
-                payload = bytes(b) if b is not None else b""
-                w0, h0, _fn, _fd, y_size, _cs, _pos, _tag = (
-                    _parse_y4m_header(payload)
-                )
-                acc = np.zeros(y_size, dtype=np.int64)
-                for f, frame in enumerate(_iter_y4m_frames(payload)):
-                    if f % every_n == 0:
-                        acc += np.frombuffer(
-                            frame, dtype=np.uint8, count=y_size
-                        ).astype(np.int64)
-                plane = acc.reshape(h0, w0)
-                ys, xs = _nn_index(side, h0), _nn_index(side, w0)
-                flat = plane[ys][:, xs].reshape(side * side)
-                mean = int(flat.sum()) // (side * side)
-                bits = (flat > mean).astype(np.int64)
-                for q in range(4):
-                    qcols[q].append(
-                        int((bits[16 * q : 16 * q + 16] * weights).sum())
-                    )
-            for q in range(4):
-                rows[f"q{q}"] = pd.array(qcols[q], dtype="int32")
-            yield pd.DataFrame(rows)
+    def bits(payload: bytes):
+        w0, h0, _fn, _fd, y_size, _cs, _pos, _tag = _parse_y4m_header(payload)
+        acc = np.zeros(y_size, dtype=np.int64)
+        for f, frame in enumerate(_iter_y4m_frames(payload)):
+            if f % every_n == 0:
+                acc += np.frombuffer(
+                    frame, dtype=np.uint8, count=y_size
+                ).astype(np.int64)
+        plane = acc.reshape(h0, w0)
+        ys, xs = _nn_index(side, h0), _nn_index(side, w0)
+        flat = plane[ys][:, xs].reshape(side * side)
+        mean = int(flat.sum()) // (side * side)
+        return flat > mean
 
-    return df.select(
-        F.col(id_col).alias(id_col), payload_col
-    ).mapInPandas(batches, schema=out_schema)
+    return _quarters64(df, payload_col, id_col, bits)

@@ -321,6 +321,15 @@ def stable_round(expr: str, digits: int = 6) -> str:
     return f"(CAST(floor(({expr}) * {p}.0 + 0.5) AS DOUBLE) / {p}.0)"
 
 
+def sround(col: Column | str, digits: int = 6) -> Column:
+    """Column twin of :func:`stable_round` — the same half-up IEEE
+    rounding, so Spark results hash identically with the oracle SQL
+    (native round() disagrees on last-ulp half boundaries)."""
+    c = F.col(col) if isinstance(col, str) else col
+    p = float(10**digits)
+    return F.floor(c * F.lit(p) + F.lit(0.5)).cast("double") / F.lit(p)
+
+
 # --- quality score -----------------------------------------------------------------
 # 0.4·min(1, tokens/100) + 0.3·(1 − min(1, |avg_len − 5|/10)) + 0.3·stopword_ratio
 def quality_spark(toks: str, text: str, en_hits: str) -> str:

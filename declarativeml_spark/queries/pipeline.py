@@ -20,15 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from declarativeml_spark.operators.caching import track_persist
-
 from declarativeml_spark.operators import textops as T
 from declarativeml_spark.queries.registry import QUERIES, query, sql_sround, sround
 from declarativeml_spark.sources.catalog import load_table
 
 _TOKS_S = T.TOKENS_SPARK.format(text="text")
 _TOKS_D = T.TOKENS_DUCK.format(text="text")
-_SHINGLES_S = T.SHINGLES_SPARK.format(toks="toks")
 _SHINGLES_D = T.SHINGLES_DUCK.format(toks="toks")
 
 
@@ -396,81 +393,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id); actual shingle sets are joined back only for the
     (small) candidate set. Hot band keys (boilerplate docs) are the
     classic skew source — AQE skew-join handles it; salting the band
-    key is the manual fallback. This is the canonical 100 TB dedup.
+    key is the manual fallback. This is the canonical 100 TB dedup,
+    run by the ``DEDUPLICATE … USING minhash`` operator
+    (operators/dedup.py::minhash_pairs).
     """
-    from declarativeml_spark.operators.skew import spread_partitions
+    from declarativeml_spark.operators.dedup import minhash_pairs
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    # shingle sets appear on 4 plan branches (both band-join sides +
-    # both verify joins); persist so tokenize+shingle+minhash runs
-    # once per doc, not 4× (at 100 TB: materialize a signatures table).
-    # spread the raw text first (a single-file input would otherwise
-    # pin the pairwise verify stage to one task), tokenize + shingle
-    # AFTER the shuffle so only raw text crosses the wire
-    sh = (
-        spread_partitions(docs.select("doc_id", "text"))
-        .select("doc_id", F.expr(_TOKS_S).alias("toks"))
-        # cache boundary: without it CollapseProject re-inlines the
-        # split() into every element_at of the shingle lambda and the
-        # interpreted HOF evaluation re-splits the text 3x per shingle
-        # (quadratic per row; see operators/dedup.py::_shingled)
-        .transform(track_persist)
-        .select("doc_id", F.expr(_SHINGLES_S).alias("shingles"))
-        .select(
-            "doc_id",
-            "shingles",
-            # one salted md5 array per GROUP of 4 minhash tables —
-            # md5 dominates this query's cost (textops.py)
-            *[
-                F.expr(T.minhash_md5_group_spark("shingles", g)).alias(f"mhg{g}")
-                for g in range((_N_MINHASH + 3) // 4)
-            ],
-        )
-        .transform(track_persist)
-    )
-    sigs = sh.select(
-        "doc_id",
-        "shingles",
-        *[
-            F.expr(T.minhash_slice_spark(f"mhg{k // 4}", k % 4)).alias(f"mh{k}")
-            for k in range(_N_MINHASH)
-        ],
-    )
-    sigs = sigs.transform(track_persist)
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sb"))
-    inter = F.size(F.array_intersect("sa", "sb"))
-    jac = sround(
-        inter.cast("double") / (F.size("sa") + F.size("sb") - inter)
-    ).alias("jaccard")
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", jac)
-        .filter(F.col("jaccard") >= 0.5)
-    )
+    return minhash_pairs(docs, threshold=0.5, n_minhash=_N_MINHASH, bands=_BANDS)
 
 
 # ---------------------------------------------------------------------------

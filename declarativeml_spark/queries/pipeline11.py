@@ -41,45 +41,101 @@ from declarativeml_spark.queries.registry import query
 from declarativeml_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
-# Media-payload dedup over a REAL file lake: the lowest <_N_MEDIA_PPM>
-# documents become P6 files on disk (the synth_ppm_from_text contract:
-# channels (b, 255-b, 7b mod 256) per text byte, 8-wide rows), and
-# every doc_id % <_PPM_COPY_MOD> == 0 file is ALSO written under a
-# second name — the re-ingested duplicate asset a real lake dedups.
+# Media lakes of REAL files on disk, one writer for every kind: the
+# lowest <n> documents become files ``<prefix><fid>.<ext>`` with
+# fid = 2·doc_id, and every doc_id % <copy_mod> == 0 document ALSO
+# becomes a second file (fid = 2·doc_id + 1) built from a perturbed
+# copy of its text — the re-ingested or lightly edited asset a real
+# lake dedups. Payloads come from the per-row builders behind
+# operators/multimodal.py's synth_*_from_text fixtures, so the files
+# hold exactly the bytes those fixtures emit.
 
+
+def _media_lake_dir(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    ext: str,
+    n: int,
+    copy_mod: int,
+    build,
+    perturb,
+    tag: str,
+) -> str:
+    """Content-addressed fixture dir holding one media lake (see the
+    block comment above); ``tag`` names the builder geometry and the
+    perturbation in the fixture key."""
+    import os
+
+    from declarativeml_spark.queries.fixtures import fixture_dir
+
+    def write(d: str) -> None:
+        rows = (
+            load_table(spark, sf_dir, "documents")
+            .orderBy("doc_id")
+            .limit(n)
+            .select("doc_id", "text")
+            .collect()  # bounded: n rows, fixture-side
+        )
+        for r in rows:
+            t = r.text or ""
+            variants = [(r.doc_id * 2, t)]
+            if r.doc_id % copy_mod == 0:
+                variants.append((r.doc_id * 2 + 1, perturb(t)))
+            for fid, vt in variants:
+                with open(os.path.join(d, f"{prefix}{fid:08d}.{ext}"), "wb") as f:
+                    f.write(build(vt))
+
+    return fixture_dir(
+        f"media_{ext}_lake", f"{sf_dir}|{ext}|{n}|c{copy_mod}|{tag}", write
+    )
+
+
+def _lake_files(spark: SparkSession, lake_dir: str, ext: str) -> DataFrame:
+    """(file_id, payload) for every file of a media lake, the fid read
+    back from the file name."""
+    from declarativeml_spark.sources.io import read_media
+
+    media = read_media(spark, lake_dir, glob=f"*.{ext}")
+    return media.select(
+        F.regexp_extract("media_path", rf"(\d+)\.{ext}$", 1)
+        .cast("long")
+        .alias("file_id"),
+        "payload",
+    )
+
+
+def _hamming_histogram(sigs: DataFrame, radius: int) -> DataFrame:
+    """Per-distance pair counts of a 64-bit quarter-signature plane:
+    the candidate + exact-Hamming verify join of
+    operators/dedup.py::hamming64_quarter_pairs, then (hamming,
+    n_pairs, min_id_a). The plane persists: both sides of the band
+    self-join read it."""
+    from declarativeml_spark.operators.caching import track_persist
+    from declarativeml_spark.operators.dedup import hamming64_quarter_pairs
+
+    pairs = hamming64_quarter_pairs(
+        track_persist(sigs), id_col="media_id", radius=radius
+    )
+    return pairs.groupBy("hamming").agg(
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.min("id_a").cast("long").alias("min_id_a"),
+    )
+
+
+# The PPM lake (the synth_ppm_from_text contract: channels (b, 255-b,
+# 7b mod 256) per text byte, 8-wide rows); its copies are unperturbed
+# byte duplicates.
 _N_MEDIA_PPM = 48
 _PPM_COPY_MOD = 3
 
 
 def _media_ppm_lake_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Content-addressed fixture dir holding the PPM lake (with the
-    planted duplicate copies ``d<id>.ppm``)."""
-    import os
+    from declarativeml_spark.operators.multimodal import _ppm_synth_builder
 
-    from declarativeml_spark.operators.multimodal import synth_ppm_from_text
-    from declarativeml_spark.queries.fixtures import fixture_dir
-
-    def write(d: str) -> None:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .orderBy("doc_id")
-            .limit(_N_MEDIA_PPM)
-        )
-        ppm = synth_ppm_from_text(docs, "text", "doc_id", width=8)
-        for r in ppm.select("media_id", "payload").collect():
-            data = bytes(r.payload)
-            with open(os.path.join(d, f"m{r.media_id:08d}.ppm"), "wb") as f:
-                f.write(data)
-            if r.media_id % _PPM_COPY_MOD == 0:
-                with open(
-                    os.path.join(d, f"d{r.media_id:08d}.ppm"), "wb"
-                ) as f:
-                    f.write(data)
-
-    return fixture_dir(
-        "media_ppm_lake",
-        f"{sf_dir}|ppm|{_N_MEDIA_PPM}|c{_PPM_COPY_MOD}",
-        write,
+    return _media_lake_dir(
+        spark, sf_dir, "m", "ppm", _N_MEDIA_PPM, _PPM_COPY_MOD,
+        _ppm_synth_builder(8), lambda t: t, "w8|exact_copy",
     )
 
 
@@ -123,15 +179,9 @@ def media_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake (identical assets ingested twice), before any perceptual
     pass runs.
     """
-    from declarativeml_spark.sources.io import read_media
-
-    d = _media_ppm_lake_dir(spark, sf_dir)
-    media = read_media(spark, d, glob="*.ppm")
-    files = media.select(
+    files = _lake_files(spark, _media_ppm_lake_dir(spark, sf_dir), "ppm").select(
         F.md5("payload").alias("fp"),
-        F.regexp_extract("media_path", r"[md](\d+)\.ppm$", 1)
-        .cast("long")
-        .alias("doc_id"),
+        F.floor(F.col("file_id") / 2).alias("doc_id"),
         F.length("payload").cast("long").alias("nb"),
     )
     return files.groupBy("fp").agg(
@@ -218,8 +268,10 @@ def media_phash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     luma, floor-mean threshold — operators/multimodal.py::
     ahash64_quarters); the quarter columns ARE the radius-3
     pigeonhole bands, and the candidate + exact-Hamming verify join
-    is ``hamming64_quarter_pairs`` — byte-for-byte the machinery
-    behind ``dedup_simhash64_hamming``. The brute-force oracle
+    and histogram are :func:`_hamming_histogram`, the tail every
+    media near-dup query shares (its join is
+    ``hamming64_quarter_pairs``, also behind
+    ``dedup_simhash64_hamming``). The brute-force oracle
     recomputes every signature from the text closed form and counts
     ALL in-radius pairs, so the hash gate proves both the decode
     arithmetic and banding completeness.
@@ -231,32 +283,11 @@ def media_phash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     what this pass exists to catch after exact dedup misses
     re-encoded assets.
     """
-    from declarativeml_spark.operators.caching import track_persist
-    from declarativeml_spark.operators.dedup import hamming64_quarter_pairs
     from declarativeml_spark.operators.multimodal import ahash64_quarters
-    from declarativeml_spark.sources.io import read_media
 
-    d = _media_ppm_lake_dir(spark, sf_dir)
-    media = read_media(spark, d, glob="*.ppm")
-    ext = r"([md])(\d+)\.ppm$"
-    files = media.select(
-        (
-            F.regexp_extract("media_path", ext, 2).cast("long") * 2
-            + F.when(
-                F.regexp_extract("media_path", ext, 1) == "d", 1
-            ).otherwise(0)
-        ).alias("file_id"),
-        "payload",
-    )
-    # persist the signature plane: both sides of the band self-join
-    # read it (same reason as dedup_simhash64_hamming)
-    sigs = track_persist(ahash64_quarters(files, id_col="file_id"))
-    pairs = hamming64_quarter_pairs(
-        sigs, id_col="media_id", radius=_PHASH_RADIUS
-    )
-    return pairs.groupBy("hamming").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.min("id_a").cast("long").alias("min_id_a"),
+    files = _lake_files(spark, _media_ppm_lake_dir(spark, sf_dir), "ppm")
+    return _hamming_histogram(
+        ahash64_quarters(files, id_col="file_id"), _PHASH_RADIUS
     )
 
 
@@ -402,7 +433,8 @@ def dedup_minhash128_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair Spark's banding missed would surface in the oracle set) and
     soundness (an extra pair hash-fails).
 
-    Scale: identical movement profile to dedup_minhash_lsh — raw
+    Scale: the operators/dedup.py::minhash_plane path that
+    dedup_minhash_lsh runs too — raw
     text shuffles once (spread), shingle/signature arrays never
     cross the wire, the candidate join moves (band_idx, 64-byte key,
     doc_id) slivers; r=8 banding keeps weak-pair false fires at the
@@ -449,41 +481,13 @@ def _perturb_audio_text(t: str) -> str:
 
 
 def _media_wav_lake_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Content-addressed fixture dir holding the WAV lake: the lowest
-    <_N_MEDIA_WAV> documents as REAL RIFF/PCM files ``w<fid>.wav``
-    (fid = 2·doc_id), plus the perturbed near-duplicate copies
-    (fid = 2·doc_id + 1) for every doc_id % <_WAV_COPY_MOD> == 0."""
-    import os
+    """The WAV lake: REAL RIFF/PCM files ``w<fid>.wav``, the copies
+    perturbed by :func:`_perturb_audio_text`."""
+    from declarativeml_spark.operators.multimodal import _wav_synth_builder
 
-    from declarativeml_spark.operators.multimodal import (
-        synth_wav_from_text,
-    )
-    from declarativeml_spark.queries.fixtures import fixture_dir
-
-    def write(d: str) -> None:
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .orderBy("doc_id")
-            .limit(_N_MEDIA_WAV)
-            .select("doc_id", "text")
-            .collect()  # bounded: 48 rows, fixture-side
-        )
-        variants = []
-        for r in rows:
-            t = r.text or ""
-            variants.append((r.doc_id * 2, t))
-            if r.doc_id % _WAV_COPY_MOD == 0:
-                variants.append((r.doc_id * 2 + 1, _perturb_audio_text(t)))
-        vdf = spark.createDataFrame(variants, "fid long, text string")
-        wav = synth_wav_from_text(vdf, "text", "fid", sample_rate=8000)
-        for r in wav.select("media_id", "payload").collect():
-            with open(os.path.join(d, f"w{r.media_id:08d}.wav"), "wb") as f:
-                f.write(bytes(r.payload))
-
-    return fixture_dir(
-        "media_wav_lake",
-        f"{sf_dir}|wav|{_N_MEDIA_WAV}|c{_WAV_COPY_MOD}|perturb_mid",
-        write,
+    return _media_lake_dir(
+        spark, sf_dir, "w", "wav", _N_MEDIA_WAV, _WAV_COPY_MOD,
+        _wav_synth_builder(8000), _perturb_audio_text, "perturb_mid",
     )
 
 
@@ -553,9 +557,8 @@ def media_audio_fingerprint_hamming(
     band-energy signature (64 time bands, mean-energy threshold —
     operators/multimodal.py::audio_bandenergy64_quarters, the audio
     sibling of the image aHash), and the quarter columns feed
-    ``hamming64_quarter_pairs`` — byte-for-byte the machinery behind
-    ``dedup_simhash64_hamming`` and ``media_phash_hamming``. The
-    brute-force oracle recomputes every signature from the text
+    :func:`_hamming_histogram`, the Hamming tail shared with
+    ``media_phash_hamming``. The brute-force oracle recomputes every signature from the text
     closed form and counts ALL in-radius pairs, so the hash gate
     proves the decode arithmetic, the band-boundary integer rule, AND
     banding completeness at the radius.
@@ -572,34 +575,13 @@ def media_audio_fingerprint_hamming(
     never leave the executor; 4 ints per file exit Python); the pair
     join shuffles (band, value, id, quarters) slivers only.
     """
-    from declarativeml_spark.operators.caching import track_persist
-    from declarativeml_spark.operators.dedup import (
-        hamming64_quarter_pairs,
-    )
     from declarativeml_spark.operators.multimodal import (
         audio_bandenergy64_quarters,
     )
-    from declarativeml_spark.sources.io import read_media
 
-    d = _media_wav_lake_dir(spark, sf_dir)
-    media = read_media(spark, d, glob="*.wav")
-    files = media.select(
-        F.regexp_extract("media_path", r"w(\d+)\.wav$", 1)
-        .cast("long")
-        .alias("file_id"),
-        "payload",
-    )
-    # persist the signature plane: both sides of the band self-join
-    # read it (same reason as media_phash_hamming)
-    sigs = track_persist(
-        audio_bandenergy64_quarters(files, id_col="file_id")
-    )
-    pairs = hamming64_quarter_pairs(
-        sigs, id_col="media_id", radius=_AUDIO_RADIUS
-    )
-    return pairs.groupBy("hamming").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.min("id_a").cast("long").alias("min_id_a"),
+    files = _lake_files(spark, _media_wav_lake_dir(spark, sf_dir), "wav")
+    return _hamming_histogram(
+        audio_bandenergy64_quarters(files, id_col="file_id"), _AUDIO_RADIUS
     )
 
 
@@ -629,45 +611,15 @@ def _perturb_video_text(t: str) -> str:
 
 
 def _media_y4m_lake_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Content-addressed fixture dir holding the Y4M lake: the lowest
-    <_N_MEDIA_Y4M> documents as REAL YUV4MPEG2 containers
-    ``v<fid>.y4m`` (fid = 2·doc_id, 8×8 C420 frames), plus the
-    brightened near-duplicate copies (fid = 2·doc_id + 1) for every
-    doc_id % <_Y4M_COPY_MOD> == 0."""
-    import os
+    """The Y4M lake: REAL YUV4MPEG2 containers ``v<fid>.y4m`` (8×8
+    C420 frames), the copies brightened by
+    :func:`_perturb_video_text`."""
+    from declarativeml_spark.operators.multimodal import _y4m_synth_builder
 
-    from declarativeml_spark.operators.multimodal import (
-        synth_y4m_from_text,
-    )
-    from declarativeml_spark.queries.fixtures import fixture_dir
-
-    def write(d: str) -> None:
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .orderBy("doc_id")
-            .limit(_N_MEDIA_Y4M)
-            .select("doc_id", "text")
-            .collect()  # bounded: 48 rows, fixture-side
-        )
-        variants = []
-        for r in rows:
-            t = r.text or ""
-            variants.append((r.doc_id * 2, t))
-            if r.doc_id % _Y4M_COPY_MOD == 0:
-                variants.append((r.doc_id * 2 + 1, _perturb_video_text(t)))
-        vdf = spark.createDataFrame(variants, "fid long, text string")
-        y4m = synth_y4m_from_text(
-            vdf, "text", "fid", width=_Y4M_SIDE, height=_Y4M_SIDE
-        )
-        for r in y4m.select("media_id", "payload").collect():
-            with open(os.path.join(d, f"v{r.media_id:08d}.y4m"), "wb") as f:
-                f.write(bytes(r.payload))
-
-    return fixture_dir(
-        "media_y4m_lake",
-        f"{sf_dir}|y4m|{_N_MEDIA_Y4M}|c{_Y4M_COPY_MOD}|{_Y4M_SIDE}x"
-        f"{_Y4M_SIDE}|brighten2",
-        write,
+    return _media_lake_dir(
+        spark, sf_dir, "v", "y4m", _N_MEDIA_Y4M, _Y4M_COPY_MOD,
+        _y4m_synth_builder(_Y4M_SIDE, _Y4M_SIDE), _perturb_video_text,
+        f"{_Y4M_SIDE}x{_Y4M_SIDE}|brighten2",
     )
 
 
@@ -739,10 +691,9 @@ def media_video_ahash_hamming(
     video r11): every container decodes through the REAL FRAME-marker
     walk, every 4th frame's luma plane sums into a temporal
     signature plane, and the 8×8 aHash (operators/multimodal.py::
-    video_ahash64_quarters) feeds ``hamming64_quarter_pairs`` —
-    byte-for-byte the machinery behind ``dedup_simhash64_hamming``,
-    ``media_phash_hamming``, and ``media_audio_fingerprint_hamming``.
-    The brute-force oracle recomputes every signature from the text
+    video_ahash64_quarters) feeds :func:`_hamming_histogram`, the
+    Hamming tail shared with ``media_phash_hamming`` and
+    ``media_audio_fingerprint_hamming``. The brute-force oracle recomputes every signature from the text
     closed form and counts ALL in-radius pairs, so the hash gate
     proves the frame walk, the sampling rule, the temporal sum, AND
     banding completeness at the radius.
@@ -756,34 +707,14 @@ def media_video_ahash_hamming(
     Python); the pair join shuffles (band, value, id, quarters)
     slivers only.
     """
-    from declarativeml_spark.operators.caching import track_persist
-    from declarativeml_spark.operators.dedup import (
-        hamming64_quarter_pairs,
-    )
     from declarativeml_spark.operators.multimodal import (
         video_ahash64_quarters,
     )
-    from declarativeml_spark.sources.io import read_media
 
-    d = _media_y4m_lake_dir(spark, sf_dir)
-    media = read_media(spark, d, glob="*.y4m")
-    files = media.select(
-        F.regexp_extract("media_path", r"v(\d+)\.y4m$", 1)
-        .cast("long")
-        .alias("file_id"),
-        "payload",
-    )
-    sigs = track_persist(
-        video_ahash64_quarters(
-            files, id_col="file_id", every_n=_VIDEO_EVERY_N
-        )
-    )
-    pairs = hamming64_quarter_pairs(
-        sigs, id_col="media_id", radius=_VIDEO_RADIUS
-    )
-    return pairs.groupBy("hamming").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.min("id_a").cast("long").alias("min_id_a"),
+    files = _lake_files(spark, _media_y4m_lake_dir(spark, sf_dir), "y4m")
+    return _hamming_histogram(
+        video_ahash64_quarters(files, id_col="file_id", every_n=_VIDEO_EVERY_N),
+        _VIDEO_RADIUS,
     )
 
 

@@ -37,7 +37,6 @@ from declarativeml_spark.sources.catalog import load_table
 
 _TOKS_S = T.TOKENS_SPARK.format(text="text")
 _TOKS_D = T.TOKENS_DUCK.format(text="text")
-_SHINGLES_S = T.SHINGLES_SPARK.format(toks="toks")
 _SHINGLES_D = T.SHINGLES_DUCK.format(toks="toks")
 
 
@@ -251,7 +250,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the delta, not the corpus. Shingle verify touches only the
     candidate set.
     """
-    from declarativeml_spark.operators.skew import spread_partitions
+    from declarativeml_spark.operators.dedup import minhash_plane
 
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "is_new", F.expr(_DELTA_NEW)
@@ -274,44 +273,20 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("o.doc_id").alias("ex_match"))
     )
 
-    # signatures once for all docs (cache boundary between tokenize
-    # and shingle — see pipeline.py::dedup_minhash_lsh)
-    sh = (
-        spread_partitions(docs.select("doc_id", "is_new", "text"))
-        .select("doc_id", "is_new", F.expr(_TOKS_S).alias("toks"))
-        .transform(track_persist)
-        .select("doc_id", "is_new", F.expr(_SHINGLES_S).alias("shingles"))
-        .select(
-            "doc_id",
-            "is_new",
-            "shingles",
-            *[
-                F.expr(T.minhash_md5_group_spark("shingles", g)).alias(f"mhg{g}")
-                for g in range((_N_MINHASH + 3) // 4)
-            ],
-        )
-        .transform(track_persist)
+    # signatures once for all docs, through the shared minhash plane
+    # (operators/dedup.py::minhash_plane) with the batch flag carried
+    sh = minhash_plane(
+        docs, "doc_id", "text", _N_MINHASH, _BANDS, keep=("is_new",)
     )
-    sigs = sh.select(
-        "doc_id",
-        "is_new",
-        *[
-            F.expr(T.minhash_slice_spark(f"mhg{k // 4}", k % 4)).alias(f"mh{k}")
-            for k in range(_N_MINHASH)
-        ],
-    )
-    bands = sigs.select(
+    bands = sh.select(
         "doc_id",
         "is_new",
         F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-                    for b in range(_BANDS)
-                ]
-            )
+            F.array(*[F.col(f"bk{b}") for b in range(_BANDS)])
         ).alias("band_idx", "band_key"),
     )
+    # new-vs-old only: old-vs-old never re-pairs, so this join is not
+    # the symmetric id_a < id_b candidate join of dedup.py
     cand = (
         bands.filter("is_new")
         .alias("n")

@@ -2135,38 +2135,17 @@ def key_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Deterministic multivariate OLS: price ~ quantity + discount,
 # trained from exact moments via shared-text Cramer expressions.
 
-# The closed-form solve is emitted from ONE set of expression strings
-# used verbatim by both engines, so every IEEE op sequence is
-# identical by construction (not by convention).
+# The closed-form solve is ml/ridge.py's Cramer text, used verbatim by
+# both engines, so every IEEE op sequence is identical by construction
+# (not by convention).
 _OLS_NF = "CAST(n AS DOUBLE)"
-_OLS_DET = (
-    "({a00})*(({a11})*({a22})-({a12})*({a21}))"
-    " - ({a01})*(({a10})*({a22})-({a12})*({a20}))"
-    " + ({a02})*(({a10})*({a21})-({a11})*({a20}))"
-)
 
 
 def _ols_exprs() -> dict[str, str]:
+    from declarativeml_spark.ml.ridge import cramer3
+
     A = [[_OLS_NF, "sq", "sd"], ["sq", "sqq", "sqd"], ["sd", "sqd", "sdd"]]
-    b = ["sy", "sqy", "sdy"]
-
-    def det(m):
-        return _OLS_DET.format(
-            a00=m[0][0], a01=m[0][1], a02=m[0][2],
-            a10=m[1][0], a11=m[1][1], a12=m[1][2],
-            a20=m[2][0], a21=m[2][1], a22=m[2][2],
-        )
-
-    def repl(col):
-        return [
-            [b[r] if c == col else A[r][c] for c in range(3)]
-            for r in range(3)
-        ]
-
-    dA = det(A)
-    b0 = f"({det(repl(0))}) / ({dA})"
-    b1 = f"({det(repl(1))}) / ({dA})"
-    b2 = f"({det(repl(2))}) / ({dA})"
+    b0, b1, b2 = cramer3(A, ["sy", "sqy", "sdy"])
     sse = f"syy - (({b0})*sy + ({b1})*sqy + ({b2})*sdy)"
     sst = f"syy - sy*sy/{_OLS_NF}"
     return {

@@ -23,6 +23,9 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# re-exported: the queries and the operators round through one definition
+from declarativeml_spark.operators.textops import sround  # noqa: F401
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -51,15 +54,6 @@ def davg(col: Column | str, alias: str) -> Column:
     return (
         F.sum(c.cast("decimal(38,6)")).cast("double") / F.count(c)
     ).alias(alias)
-
-
-def sround(col: Column | str, digits: int = 6) -> Column:
-    """Half-up round in pure IEEE double ops — bit-identical across
-    Spark and DuckDB (see ``operators.textops.stable_round``; native
-    round() disagrees on last-ulp half boundaries)."""
-    c = F.col(col) if isinstance(col, str) else col
-    p = float(10**digits)
-    return F.floor(c * F.lit(p) + F.lit(0.5)).cast("double") / F.lit(p)
 
 
 # SQL-side equivalents for oracle strings.

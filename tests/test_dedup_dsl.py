@@ -56,13 +56,49 @@ def test_dedup_minhash_matches_query(engine, spark, smoke_dir):
     assert _rows(dsl) == _rows(ref)
 
 
-def test_dedup_ngram_matches_query(engine, spark, smoke_dir):
+def test_dedup_minhash_banding_matches_query(engine, spark, smoke_dir):
+    """Non-default banding forwards through the statement: 8-row bands
+    over 128 minhashes equal the deployment-width query. THRESHOLD
+    must be positive, so the unthresholded query is cut at the same
+    floor (a candidate sharing an 8-row band never scores 0)."""
     dsl = engine.execute(
-        'DEDUPLICATE documents USING ngram(block_by=["source", "lang"])'
-        " THRESHOLD 0.15"
+        "DEDUPLICATE documents USING minhash(n_minhash=128, bands=16)"
+        " THRESHOLD 0.000001"
     )
+    ref = QUERIES["dedup_minhash128_pairs"](spark, smoke_dir)
+    assert _rows(dsl) == _rows(ref.filter("jaccard >= 0.000001"))
+    assert _rows(dsl)
+
+
+def test_dedup_ngram_matches_query(engine, spark, smoke_dir):
+    dsl = engine.execute("DEDUPLICATE documents USING ngram THRESHOLD 0.15")
     ref = QUERIES["dedup_ngram_jaccard"](spark, smoke_dir)
     assert _rows(dsl) == _rows(ref)
+
+
+@pytest.mark.parametrize("opts", ['block_by=["source", "lang"]', "max_block_rows=5"])
+def test_dedup_ngram_refuses_block_options_on_minhash_path(engine, opts):
+    with pytest.raises(ValueError, match=r"only to method='block', not method='minhash'"):
+        engine.execute(f"DEDUPLICATE documents USING ngram({opts}) THRESHOLD 0.15")
+
+
+def test_block_options_shape_only_the_block_path(spark, smoke_dir):
+    from declarativeml_spark.operators.dedup import (
+        embedding_pairs,
+        ngram_jaccard_pairs,
+    )
+    from declarativeml_spark.sources.catalog import load_table
+
+    emb = load_table(spark, smoke_dir, "embeddings")
+    for opts in ({"block_by": "label"}, {"max_block_rows": 5}):
+        with pytest.raises(ValueError, match=r"only to method='block', not method='lsh'"):
+            embedding_pairs(emb, **opts)
+    # the block path still takes them, and defaults block_by to label
+    embedding_pairs(emb, method="block").count()
+    docs = load_table(spark, smoke_dir, "documents")
+    ngram_jaccard_pairs(
+        docs, method="block", block_by=["source", "lang"], max_block_rows=20_000
+    ).count()
 
 
 def test_dedup_embedding_matches_query(engine, spark, smoke_dir):

@@ -883,6 +883,26 @@ def test_empty_source_at_end_of_input_names_its_statement(text):
         parse(text)
 
 
+@pytest.mark.parametrize(
+    "text, stray",
+    [
+        (
+            "WITH c AS (SELECT * FROM documents) CREATE AGENT g MONITOR MODEL m"
+            " ON t CHECK (accuracy > 0.0) EVERY 1 hours",
+            "CREATE",
+        ),
+        (
+            "WITH c AS (SELECT * FROM documents) junk words PACK c INTO 512"
+            " TOKEN CHUNKS",
+            "junk",
+        ),
+    ],
+)
+def test_with_prefix_refuses_words_before_its_statement(text, stray):
+    with pytest.raises(DSLSyntaxError, match=f"^Unexpected '{stray}' at "):
+        parse(text)
+
+
 def test_with_prefix_feeds_create_index():
     stmt = parse(
         "WITH c AS (SELECT * FROM embeddings) CREATE INDEX i ON c USING lsh"
